@@ -17,6 +17,10 @@ import graft.functions.GraftFunctions._
   *    (any pair within hamming distance 3 shares at least one of 4 chunks).
   *  - n-gram Jaccard: exact verification applied only to LSH candidates.
   *  - embedding near-dup: quantized-cosine over hyperplane-LSH buckets.
+  *
+  * Every near-dup operator is the same three steps: id-only candidate
+  * pairs ([[bucketPairs]] in a batch, [[deltaPairs]] for an incremental
+  * delta), then [[hydrateVerify]] to score each candidate on its payload.
   */
 object Dedup {
 
@@ -39,9 +43,9 @@ object Dedup {
     *    otherwise. Output is IDENTICAL either way (parity-tested); only
     *    the execution shape differs.
     *
-    * CACHE LIFECYCLE (shared by nearDupJaccard / embeddingNearDup /
-    * audioNearDupShift / the incremental variants): the SemiJoin path
-    * persists the candidate pair set (referenced three times — without
+    * CACHE LIFECYCLE (of [[hydrateVerify]], which every near-dup operator
+    * verifies through): the SemiJoin path persists the candidate pair set
+    * (referenced three times — without
     * the stage boundary each reference would re-run the whole
     * signature/DSP scan). By default the persist's lifetime is the
     * caller's — MEMORY_AND_DISK entries are LRU-evicted and recompute
@@ -107,37 +111,141 @@ object Dedup {
     df.groupBy(digest(col(textCol)).as("digest"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash-LSH candidate pairs: k-minhash signature split into `bands`
-    * bands of r rows; same band-hash => candidate. Returns (id_a, id_b)
-    * with id_a < id_b, plus the estimated and exact similarities. */
-  def minhashLsh(df: DataFrame, textCol: String, idCol: String,
-                 k: Int = 32, bands: Int = 16): DataFrame = {
+  /** The candidate stage of every BATCH near-dup operator: rows sharing a
+    * bucket (`keys`; null keys never pair) are paired INSIDE each bucket
+    * group. Returns the pairs as structs x, y of `fields` (which include
+    * `id`) plus the normalized ids id_a < id_b, kept where `keep(x, y)`.
+    *
+    * GroupBy-bucket pairing, NOT a bucket self-join (ADVICE r3): a
+    * self-join evaluates whatever produced the keys (a signature or DSP
+    * kernel, the dominant per-row cost) once per side, and its equi-keys
+    * make Catalyst infer IsNotNull constraints that re-evaluate the
+    * kernel a second time per row INSIDE a filter below each side
+    * (measured 4x total kernel cost on audio). The groupBy form scans
+    * once, shuffles only the tiny bucket rows with no inferred constraint
+    * filters, and has the same per-bucket pair semantics; group sizes
+    * carry the bucket key's skew bound.
+    *
+    * `salts` > 1 engages hot-bucket CELL pairing (the Salting
+    * discipline): each row (salt s = hash(id) mod S) is replicated into
+    * the S cells {(s, j): j >= s} ∪ {(i, s): i < s}, the group key gains
+    * the cell (a, b), and within a cell x comes from salt a and y from
+    * salt b (triangular by id when a == b). Every unordered pair lands in
+    * EXACTLY one cell — (min(sa, sb), max(sa, sb)) — so the pair set is
+    * IDENTICAL to the unsalted plan (SaltingSpec, AudioSkewSpec) while a
+    * hot group of m rows spreads over S(S+1)/2 tasks of ~2m/S rows each,
+    * at S× the (tiny) bucket shuffle volume; the payload never rides it. */
+  private def bucketPairs(rows: DataFrame, keys: Seq[String], fields: Seq[String],
+      salts: Int = 1, keep: (Column, Column) => Column = (_, _) => lit(true)): DataFrame = {
+    require(salts >= 1, s"salts must be >= 1, got $salts")
+    val salted = salts > 1
+    val cells = if (!salted) rows else rows
+      .withColumn("_s", pmod(hash(col("id")), lit(salts)).cast("int"))
+      .withColumn("_cell", explode(concat(
+        transform(sequence(col("_s"), lit(salts - 1)),
+          j => struct(col("_s").as("a"), j.as("b"))),
+        transform(
+          when(col("_s") > 0, sequence(lit(0), col("_s") - 1))
+            .otherwise(array().cast("array<int>")),
+          i => struct(i.as("a"), col("_s").as("b"))))))
+      .withColumn("_ca", col("_cell.a"))
+      .withColumn("_cb", col("_cell.b"))
+    val group = (if (salted) keys ++ Seq("_ca", "_cb") else keys).map(col)
+    val x = col("x")
+    val xs = cells.groupBy(group: _*)
+      .agg(collect_list(struct((if (salted) fields :+ "_s" else fields).map(col): _*)).as("xs"))
+      .select(group :+ explode(col("xs")).as("x") :+ col("xs"): _*)
+    // salted: x takes the left role of its cell, y the right one
+    val left = if (salted) xs.filter(x("_s") === col("_ca")) else xs
+    def inCell(y: Column) =
+      if (salted) y("_s") === col("_cb") && (col("_ca") =!= col("_cb") || x("id") < y("id"))
+      else x("id") < y("id")
+    left.select(x, explode(filter(col("xs"), y =>
+        keys.map(col(_).isNotNull).reduce(_ && _) && inCell(y) && keep(x, y))).as("y"))
+      .withColumn("id_a", least(x("id"), col("y.id")))
+      .withColumn("id_b", greatest(x("id"), col("y.id")))
+  }
+
+  /** The candidate stage of every INCREMENTAL near-dup operator: the
+    * pairs a DELTA introduces. The candidate keys of corpus ∪ delta
+    * (`corpusKeys`, `deltaKeys`: id, key columns, fields) are equi-joined
+    * on `on` to the BROADCAST `probeKeys` — the delta's rows again, or a
+    * wider bucket emission of them — whose non-key columns arrive
+    * suffixed `_d`. Corpus-corpus pairs cannot form, while corpus-delta
+    * AND delta-delta pairs both come out of the one join (a delta-delta
+    * pair forms in both join orders: normalized + distinct). `keep`
+    * filters the joined rows; `extra` adds output columns. */
+  private def deltaPairs(corpusKeys: DataFrame, deltaKeys: DataFrame,
+      probeKeys: DataFrame, on: Seq[String], keep: Column = lit(true),
+      extra: Seq[Column] = Nil): DataFrame =
+    corpusKeys.unionByName(deltaKeys)
+      .join(broadcast(probeKeys.select(probeKeys.columns.toSeq.map(c =>
+        if (on.contains(c)) col(c) else col(c).as(c + "_d")): _*)), on)
+      .filter(col("id") =!= col("id_d") && keep)
+      .select(Seq(least(col("id"), col("id_d")).as("id_a"),
+        greatest(col("id"), col("id_d")).as("id_b")) ++ extra: _*)
+      .distinct()
+
+  /** The verify stage of every near-dup operator: hydrate each candidate
+    * pair (id_a, id_b) with its `payload` rows (id plus payload columns
+    * c, which arrive as c_a / c_b) and keep the pairs whose `score` over
+    * them is at least `atLeast`. Returns the pair, `score` and the
+    * hydrated payload.
+    *
+    * SemiJoin ([[Rehydration]]; Auto resolves by payload size): the
+    * candidate set is persisted — the stage boundary its three references
+    * (the pair probe and both id-set sides) share, so the signature/DSP scan
+    * behind it runs once — and the payload is reduced ONCE, by a broadcast
+    * semi-join on the union of both sides' ids, into a persisted slice
+    * that both pair sides join. A plain join would plan as a sort-merge
+    * that hash-shuffles AND sorts the whole payload column to serve a
+    * dup-rate-sized candidate set (it filled the sandbox disk at sf1); a
+    * reduction per pair side would scan the payload twice. Only candidate
+    * rows' payload ever reaches a join. Candidate sets too large to
+    * broadcast whole have the storage-bucketed fallback
+    * ClipTable.readForKeys (per-bucket broadcasts over dir-pruned bucket
+    * reads). Direct: the pair set is referenced once — no persist, one
+    * payload pass. */
+  private def hydrateVerify(pairs: DataFrame, payload: DataFrame,
+      strategy: Rehydration, score: Column, atLeast: Double): DataFrame = {
+    val direct = choosesDirect(payload, strategy)
+    val cands = if (direct) pairs else persistCandidates(pairs)
+    val rows = if (direct) payload else persistCandidates(payload.join(
+      broadcast(cands.select(col("id_a").as("id"))
+        .unionByName(cands.select(col("id_b").as("id"))).distinct()),
+      Seq("id"), "leftsemi"))
+    def side(s: String) = rows.select(rows.columns.toSeq.map(c => col(c).as(s"${c}_$s")): _*)
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn("score", score)
+      .filter(col("score") >= atLeast)
+  }
+
+  /** MinHash band keys: the k-minhash signature split into `bands` bands
+    * of k/bands rows, one (id, band, bhash) row per band. Document text
+    * never rides the LSH candidate shuffle (at 100 TB that is `bands`×
+    * copies of the corpus through one exchange); texts are joined back
+    * by id afterwards. */
+  private def minhashBands(df: DataFrame, textCol: String, idCol: String,
+                           k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // Band on (id, bhash) ONLY — document text must never ride the LSH
-    // candidate shuffle (at 100 TB that is `bands`× copies of the corpus
-    // through one exchange); texts are joined back by id afterwards.
-    val banded = df
-      .select(col(idCol).as("id"), min_hash(col(textCol), lit(k)).as("sig"))
+    df.select(col(idCol).as("id"), min_hash(col(textCol), lit(k)).as("sig"))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(slice(col("sig"), b * r + 1, lit(r)), b))).as(Seq("band", "bhash")))
-    // GroupBy-bucket pairing instead of a banded self-join: one min_hash
-    // scan of the corpus (the join form signed every document twice and
-    // re-evaluated the signature in inferred IsNotNull filters — see
-    // audioNearDupShift), and the per-bucket pair semantics are identical.
-    banded.groupBy(col("band"), col("bhash"))
-      .agg(collect_list(col("id")).as("xs"))
-      .select(col("bhash"), explode(col("xs")).as("id_a"), col("xs"))
-      .select(col("id_a"), explode(filter(col("xs"), y =>
-        col("bhash").isNotNull && col("id_a") < y)).as("id_b"))
-      .distinct()
   }
+
+  /** MinHash-LSH candidate pairs: same band-hash => candidate. Returns
+    * (id_a, id_b) with id_a < id_b. */
+  def minhashLsh(df: DataFrame, textCol: String, idCol: String,
+                 k: Int = 32, bands: Int = 16): DataFrame =
+    bucketPairs(minhashBands(df, textCol, idCol, k, bands), Seq("band", "bhash"), Seq("id"))
+      .select("id_a", "id_b").distinct()
 
   /** MinHash-LSH near-dup detection with exact n-gram-Jaccard verification.
     * Verification touches only the deduplicated LSH candidate PAIRS: texts
-    * are rehydrated by two id-joins after the candidate set is distinct, so
-    * the only exchanges carrying text are keyed by id (size O(corpus)), not
+    * are rehydrated by id after the candidate set is distinct, so the
+    * only exchanges carrying text are keyed by id (size O(corpus)), not
     * by band (size O(corpus x bands)).
     *
     * PRECONDITION: `idCol` must be unique per row (duplicate ids would
@@ -151,116 +259,40 @@ object Dedup {
     * `jaccard` double column / bands=8 default must update. */
   def nearDupJaccard(df: DataFrame, textCol: String, idCol: String,
                      threshold: Double = 0.7, k: Int = 32, bands: Int = 16,
-                     rehydration: Rehydration = Rehydration.Auto): DataFrame = {
-    val texts = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .dropDuplicates("id")
-    val direct = choosesDirect(texts, rehydration)
-    // SemiJoin: materialized stage boundary + broadcast semi-join
-    // reduction — only candidate rows' text ever reaches a join (a direct
-    // join at corpus scale shuffles+sorts the whole text column for a
-    // dup-rate-sized pair set), and without the persist the three
-    // references below would re-run the signature scan. Direct: the pair
-    // set is referenced once, so no persist and one corpus pass total
-    // (see [[Rehydration]] for the trade and the cache lifecycle).
-    val pairs0 = minhashLsh(df, textCol, idCol, k, bands)
-    val pairs = if (direct) pairs0 else persistCandidates(pairs0)
-    // r7: semi path reduces ONCE on both sides' ids (one corpus pass, not
-    // one per side — the audioNearDupShift one-pass-hydration rationale)
-    val hydrated = if (direct) texts else persistCandidates(
-      texts.join(broadcast(pairs.select(col("id_a").as("id"))
-          .unionByName(pairs.select(col("id_b").as("id"))).distinct()),
-        Seq("id"), "leftsemi"))
-    def side(s: String, out: String) =
-      hydrated.select(col("id").as(s), col("text").as(out))
-    pairs
-      .join(side("id_a", "text_a"), "id_a")
-      .join(side("id_b", "text_b"), "id_b")
-      .withColumn("jaccard", jaccard_sim(col("text_a"), col("text_b")))
-      .filter(col("jaccard") >= threshold)
+                     rehydration: Rehydration = Rehydration.Auto): DataFrame =
+    jaccardVerified(minhashLsh(df, textCol, idCol, k, bands),
+      df.select(col(idCol).as("id"), col(textCol).as("text")).dropDuplicates("id"),
+      threshold, rehydration)
+
+  private def jaccardVerified(pairs: DataFrame, texts: DataFrame,
+                              threshold: Double, strategy: Rehydration): DataFrame =
+    hydrateVerify(pairs, texts, strategy, jaccard_sim(col("text_a"), col("text_b")), threshold)
       .select(col("id_a"), col("id_b"),
-        floor(col("jaccard") * 1e4).cast("long").as("jaccard_x1e4"))
-  }
+        floor(col("score") * 1e4).cast("long").as("jaccard_x1e4"))
 
   /** INCREMENTAL near-dup: the pairs a DELTA introduces against an
     * existing corpus — the append-only case (a daily ingest batch checked
     * against everything already ingested) where re-pairing corpus x
     * corpus would redo quadratic work for a sliver of new rows. The
-    * corpus pays ONE signature scan; candidates come from joining the
-    * banded buckets against the BROADCAST banded delta (delta-sized,
-    * never corpus-sized), so corpus-corpus pairs cannot form. The verify
-    * stage is [[nearDupJaccard]]'s exact-Jaccard on rehydrated candidate
-    * texts (always the semi-join reduction: the corpus here is by
-    * definition the big side). On a corpus whose every duplicate involves
-    * the delta, the output equals the batch operator's — exactly what the
-    * d8 oracle states. */
+    * corpus pays ONE signature scan; candidates come from [[deltaPairs]]
+    * over the banded buckets (the broadcast side is delta-sized, never
+    * corpus-sized), delta-delta pairs included. The verify stage is
+    * [[nearDupJaccard]]'s exact Jaccard, with the same Auto rehydration
+    * (a tiny corpus takes the direct join, a real one the semi-join
+    * reduction; output identical either way). On a corpus whose every
+    * duplicate involves the delta, the output equals the batch
+    * operator's — exactly what the d8 oracle states. */
   def nearDupJaccardIncremental(corpus: DataFrame, delta: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.7,
       k: Int = 32, bands: Int = 16): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    def banded(df: DataFrame) = df
-      .select(col(idCol).as("id"), min_hash(col(textCol), lit(k)).as("sig"))
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * r + 1, lit(r)), b)))
-          .as(Seq("band", "bhash")))
-    val db = banded(delta)
-    val cands0 = banded(corpus).unionByName(db)
-      .join(broadcast(db.withColumnRenamed("id", "id_d")), Seq("band", "bhash"))
-      .filter(col("id") =!= col("id_d"))
-      // delta-delta pairs arise in both join orders: normalize + distinct
-      .select(least(col("id"), col("id_d")).as("id_a"),
-        greatest(col("id"), col("id_d")).as("id_b"))
-      .distinct()
-    val texts = corpus.select(col(idCol).as("id"), col(textCol).as("text"))
-      .unionByName(delta.select(col(idCol).as("id"), col(textCol).as("text")))
-      .dropDuplicates("id")
-    // r7: the Rehydration.Auto discipline, extended to the incremental
-    // path — a tiny corpus (fixture scale) takes the DIRECT join (no
-    // persist, no broadcast id set; the pair set is referenced once), a
-    // real corpus takes the semi-join reduction with ONE-PASS hydration
-    // (one corpus text scan for both pair sides instead of one per
-    // side — see audioNearDupShift). Output identical either way, like
-    // nearDupJaccard's own Auto switch.
-    val direct = choosesDirect(texts, Rehydration.Auto)
-    val cands = if (direct) cands0 else persistCandidates(cands0)
-    val hydrated = if (direct) texts else persistCandidates(
-      texts.join(broadcast(cands.select(col("id_a").as("id"))
-          .unionByName(cands.select(col("id_b").as("id"))).distinct()),
-        Seq("id"), "leftsemi"))
-    def side(s: String, out: String) =
-      hydrated.select(col("id").as(s), col("text").as(out))
-    cands
-      .join(side("id_a", "text_a"), "id_a")
-      .join(side("id_b", "text_b"), "id_b")
-      .withColumn("jaccard", jaccard_sim(col("text_a"), col("text_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        floor(col("jaccard") * 1e4).cast("long").as("jaccard_x1e4"))
+    val db = minhashBands(delta, textCol, idCol, k, bands)
+    def texts(df: DataFrame) = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    jaccardVerified(
+      deltaPairs(minhashBands(corpus, textCol, idCol, k, bands), db, db, Seq("band", "bhash")),
+      texts(corpus).unionByName(texts(delta)).dropDuplicates("id"),
+      threshold, Rehydration.Auto)
   }
 
-  /** Duplicate-CLUSTER canonicalization: connected components over an
-    * undirected near-dup pair list — every id is assigned the MINIMUM id
-    * reachable through the pair graph, i.e. the canonical representative
-    * a curation pass keeps (pairs alone don't answer "which copy
-    * survives?" once duplicates chain A~B~C).
-    *
-    * Iterative min-label propagation, the standard Spark shape for
-    * components (GraphX/GraphFrames do the same under the hood): each
-    * round joins the edge list with current labels and takes the
-    * neighborhood minimum — O(E) shuffle per round, rounds bounded by the
-    * component diameter (dup clusters are shallow; for DEEP graphs use
-    * [[componentsStar]], whose round count is logarithmic in component
-    * size instead of linear in diameter; `maxIters` guards
-    * pathological chains and non-convergence FAILS loudly rather than
-    * returning a half-propagated labeling). Deterministic: min() over a
-    * set has no ordering sensitivity. Intermediate labels are persisted
-    * per round and unpersisted eagerly.
-    *
-    * Output: (id, canonical_id) for every id that appears in a pair —
-    * rows not in any pair are their own canonical id by definition and
-    * are not emitted (join the corpus with a coalesce to materialize the
-    * full keep-list). */
   /** Quality-aware canonical selection — the step between clustering and
     * dropping that a real pipeline runs: per duplicate cluster
     * ([[components]]/[[componentsStar]] output), keep the member with the
@@ -324,6 +356,28 @@ object Dedup {
     relabeled.unionByName(newRows)
   }
 
+  /** Duplicate-CLUSTER canonicalization: connected components over an
+    * undirected near-dup pair list — every id is assigned the MINIMUM id
+    * reachable through the pair graph, i.e. the canonical representative
+    * a curation pass keeps (pairs alone don't answer "which copy
+    * survives?" once duplicates chain A~B~C).
+    *
+    * Iterative min-label propagation, the standard Spark shape for
+    * components (GraphX/GraphFrames do the same under the hood): each
+    * round joins the edge list with current labels and takes the
+    * neighborhood minimum — O(E) shuffle per round, rounds bounded by the
+    * component diameter (dup clusters are shallow; for DEEP graphs use
+    * [[componentsStar]], whose round count is logarithmic in component
+    * size instead of linear in diameter; `maxIters` guards
+    * pathological chains and non-convergence FAILS loudly rather than
+    * returning a half-propagated labeling). Deterministic: min() over a
+    * set has no ordering sensitivity. Intermediate labels are persisted
+    * per round and unpersisted eagerly.
+    *
+    * Output: (id, canonical_id) for every id that appears in a pair —
+    * rows not in any pair are their own canonical id by definition and
+    * are not emitted (join the corpus with a coalesce to materialize the
+    * full keep-list). */
   def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                  maxIters: Int = 25): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -491,36 +545,6 @@ object Dedup {
       df.select(col(idCol).as("id"), sim_hash(col(textCol)).as("sig")),
       maxHamming)
 
-  /** Near-dup pairs over ANY 64-bit signature column (`sigs` = (id, sig))
-    * within `maxHamming` bits — shared by text SimHash (d3), image dHash
-    * (i4) and video frame-hash (v3). The exact hamming filter inside the
-    * group provides precision; candidate generation is complete and never
-    * all-pairs, with the bucketing scheme chosen by radius:
-    *
-    *  - maxHamming <= 4 (SINGLE-CHUNK pigeonhole): buckets are the
-    *    maxHamming+1 chunks of the signature — any pair within hamming h
-    *    differs in at most h chunks, so shares at least one. Chunk width
-    *    >= 12 bits here, so organic (near-uniform) occupancy is n/4096
-    *    per bucket and candidate volume stays ~n²·(h+1)/2^13 — fine.
-    *
-    *  - maxHamming >= 5 (COMBINATION-CHUNK keys, r6 — the i4 scale fix):
-    *    the single-chunk scheme degrades as chunks narrow (at h=8, 9
-    *    chunks of <= 8 bits give only ~2,300 buckets TOTAL, and the 9th
-    *    chunk has width ZERO — a degenerate bucket holding the whole
-    *    corpus, i.e. organic candidate growth is literally n²/2). Split
-    *    the signature into c = maxHamming+4 chunks instead and key on
-    *    every 4-SUBSET of chunk values: a pair within hamming h differs
-    *    in at most h chunks, so shares >= c-h = 4 identical chunks, so
-    *    some 4-subset key matches — recall stays pigeonhole-complete.
-    *    Keys carry 4*(64/c) >= 21 bits (h=8: ~2.6M values per combo), so
-    *    expected organic candidate volume drops from ~n²/2 to
-    *    ~C(c,4)·n²/2^22 (h=8: ~1e-4·n², a >5000x cut), at the price of
-    *    C(c,4) emissions per row (h=8: 495) — a LINEAR-in-n shuffle of
-    *    tiny (id, sig, key) rows, the right trade at any corpus size.
-    *    Occupancy/volume math is pinned by HashNearDupScaleSpec.
-    *
-    * One signature scan, one key-shuffle of (id, sig) rows — the payload
-    * the signature came from never rides anything. */
   /** The candidate-key columns for a given radius — shared by the batch
     * pairing, the stored key table ([[hashKeys]]) and the incremental
     * path. See [[hashNearDup]] for the scheme and its scale math. */
@@ -572,78 +596,64 @@ object Dedup {
     * a corpus whose candidate keys are already materialized
     * ([[hashKeys]], stored at ingest). The corpus pays ONE scan of its
     * stored key table (zero key recomputation, zero decode); candidates
-    * come from joining it against the BROADCAST chunk-keyed delta
-    * (delta-sized), so corpus-corpus pairs cannot form. Delta-internal
-    * pairs come from the batch operator over the delta alone. On a
-    * corpus whose every qualifying pair touches the delta the output
-    * equals the batch operator's (spec-pinned, and the v4 oracle states
-    * it on planted video twins).
+    * come from [[deltaPairs]] against the BROADCAST chunk-keyed delta
+    * (delta-sized), delta-delta pairs included, with the exact hamming
+    * filter on the joined signatures. On a corpus whose every qualifying
+    * pair touches the delta the output equals the batch operator's
+    * (spec-pinned, and the v4 oracle states it on planted video twins).
     *
     * CONTRACT: `corpusKeys` must be MATERIALIZED columns (a stored
     * table / checkpoint) — the same inferred-IsNotNull rationale as
     * [[audioNearDupIncremental]]'s fingerprint contract. */
   def hashNearDupIncremental(corpusKeys: DataFrame, deltaSigs: DataFrame,
                              maxHamming: Int = 3): DataFrame = {
-    val delta = deltaSigs.select(col("id"), col("sig")).localCheckpoint(true)
-    val dKeys = hashKeys(delta, maxHamming)
-      .select(col("id").as("id_d"), col("sig").as("sig_d"), col("chunk"), col("ckey"))
-    val cross = corpusKeys
-      .join(broadcast(dKeys), Seq("chunk", "ckey"))
-      .filter(col("id") =!= col("id_d"))
-      .select(least(col("id"), col("id_d")).as("id_a"),
-        greatest(col("id"), col("id_d")).as("id_b"),
-        bit_count(col("sig").bitwiseXOR(col("sig_d"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    cross.unionByName(hashNearDup(delta, maxHamming)).distinct()
+    // referenced twice (union side + broadcast side): materialize once
+    val dKeys = hashKeys(deltaSigs.select(col("id"), col("sig")).localCheckpoint(true),
+      maxHamming)
+    val hamming = bit_count(col("sig").bitwiseXOR(col("sig_d"))).cast("int")
+    deltaPairs(corpusKeys.select("id", "sig", "chunk", "ckey"), dKeys, dKeys,
+      Seq("chunk", "ckey"), keep = hamming <= maxHamming,
+      extra = Seq(hamming.as("hamming")))
   }
 
+  /** Near-dup pairs over ANY 64-bit signature column (`sigs` = (id, sig))
+    * within `maxHamming` bits — shared by text SimHash (d3), image dHash
+    * (i4) and video frame-hash (v3). The exact hamming filter inside the
+    * group provides precision; candidate generation is complete and never
+    * all-pairs, with the bucketing scheme chosen by radius:
+    *
+    *  - maxHamming <= 4 (SINGLE-CHUNK pigeonhole): buckets are the
+    *    maxHamming+1 chunks of the signature — any pair within hamming h
+    *    differs in at most h chunks, so shares at least one. Chunk width
+    *    >= 12 bits here, so organic (near-uniform) occupancy is n/4096
+    *    per bucket and candidate volume stays ~n²·(h+1)/2^13 — fine.
+    *
+    *  - maxHamming >= 5 (COMBINATION-CHUNK keys, r6 — the i4 scale fix):
+    *    the single-chunk scheme degrades as chunks narrow (at h=8, 9
+    *    chunks of <= 8 bits give only ~2,300 buckets TOTAL, and the 9th
+    *    chunk has width ZERO — a degenerate bucket holding the whole
+    *    corpus, i.e. organic candidate growth is literally n²/2). Split
+    *    the signature into c = maxHamming+4 chunks instead and key on
+    *    every 4-SUBSET of chunk values: a pair within hamming h differs
+    *    in at most h chunks, so shares >= c-h = 4 identical chunks, so
+    *    some 4-subset key matches — recall stays pigeonhole-complete.
+    *    Keys carry 4*(64/c) >= 21 bits (h=8: ~2.6M values per combo), so
+    *    expected organic candidate volume drops from ~n²/2 to
+    *    ~C(c,4)·n²/2^22 (h=8: ~1e-4·n², a >5000x cut), at the price of
+    *    C(c,4) emissions per row (h=8: 495) — a LINEAR-in-n shuffle of
+    *    tiny (id, sig, key) rows, the right trade at any corpus size.
+    *    Occupancy/volume math is pinned by HashNearDupScaleSpec.
+    *
+    * One signature scan, one key-shuffle of (id, sig) rows — the payload
+    * the signature came from never rides anything. `salts` > 1 spreads
+    * hot buckets (exact-dup images, boilerplate text) over cells with an
+    * identical pair set — see [[bucketPairs]]. */
   def hashNearDup(sigs: DataFrame, maxHamming: Int = 3,
-                  salts: Int = 1): DataFrame = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    val chunked = hashKeys(sigs, maxHamming)
-    // GroupBy-bucket pairing (single signature scan — see minhashLsh).
-    // `salts` > 1 engages hot-bucket CELL pairing — a corpus with many
-    // identical signatures (exact-dup images, boilerplate text) funnels
-    // one (chunk, ckey) bucket into a single task; the cell construction
-    // spreads it over salts(salts+1)/2 tasks with a provably identical
-    // pair set (see audioNearDupShift, same scheme, AudioSkewSpec).
-    val pairs =
-      if (salts == 1)
-        chunked.groupBy(col("chunk"), col("ckey"))
-          .agg(collect_list(struct(col("id"), col("sig"))).as("xs"))
-          .select(col("ckey"), explode(col("xs")).as("x"), col("xs"))
-          .select(col("x"), explode(filter(col("xs"), y =>
-            col("ckey").isNotNull && col("x.id") < y("id"))).as("y"))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-            bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("int").as("hamming"))
-      else {
-        val withCells = chunked
-          .withColumn("_s", pmod(hash(col("id")), lit(salts)).cast("int"))
-          .withColumn("_cell", explode(concat(
-            transform(sequence(col("_s"), lit(salts - 1)),
-              j => struct(col("_s").as("a"), j.as("b"))),
-            transform(
-              when(col("_s") > 0, sequence(lit(0), col("_s") - 1))
-                .otherwise(array().cast("array<int>")),
-              i => struct(i.as("a"), col("_s").as("b"))))))
-          .withColumn("_ca", col("_cell.a"))
-          .withColumn("_cb", col("_cell.b"))
-        withCells.groupBy(col("chunk"), col("ckey"), col("_ca"), col("_cb"))
-          .agg(collect_list(struct(col("id"), col("sig"), col("_s"))).as("xs"))
-          .select(col("ckey"), col("_ca"), col("_cb"),
-            explode(col("xs")).as("x"), col("xs"))
-          .filter(col("x._s") === col("_ca"))
-          .select(col("x"), explode(filter(col("xs"), y =>
-            col("ckey").isNotNull &&
-              y("_s") === col("_cb") &&
-              (col("_ca") =!= col("_cb") || col("x.id") < y("id")))).as("y"))
-          .select(least(col("x.id"), col("y.id")).as("id_a"),
-            greatest(col("x.id"), col("y.id")).as("id_b"),
-            bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("int").as("hamming"))
-      }
-    pairs.distinct().filter(col("hamming") <= maxHamming)
-  }
+                  salts: Int = 1): DataFrame =
+    bucketPairs(hashKeys(sigs, maxHamming), Seq("chunk", "ckey"), Seq("id", "sig"), salts)
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("int").as("hamming"))
+      .distinct().filter(col("hamming") <= maxHamming)
 
   /** Embedding near-dup via quantized cosine over MULTI-TABLE hyperplane-
     * LSH buckets: `nTables` independent tables of `nBits` hyperplanes;
@@ -660,37 +670,15 @@ object Dedup {
     // PRECONDITION: idCol unique per row (see nearDupJaccard) — defended
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .dropDuplicates("id")
-    val direct = choosesDirect(vecs, rehydration)
-    val banded = vecs.select(col("id"),
-      posexplode(vec_lsh_buckets(col("v"), lit(nBits), lit(nTables)))
-        .as(Seq("table", "bucket")))
-    // GroupBy-bucket pairing (single vec_lsh_buckets scan — see minhashLsh).
-    val pairs0 = banded.groupBy(col("table"), col("bucket"))
-      .agg(collect_list(col("id")).as("xs"))
-      .select(col("bucket"), explode(col("xs")).as("id_a"), col("xs"))
-      .select(col("id_a"), explode(filter(col("xs"), y =>
-        col("bucket").isNotNull && col("id_a") < y)).as("id_b"))
-      .distinct()
-    // SemiJoin: only candidate rows' vectors reach a join, the persist is
-    // the stage boundary the three references share. Direct: one pass, no
-    // persist. See [[Rehydration]] for the switch and cache lifecycle.
-    // r7: the semi path reduces ONCE on the union of both sides' ids and
-    // persists the hydrated slice (one payload scan, not one per side —
-    // the audioNearDupShift one-pass-hydration rationale).
-    val pairs = if (direct) pairs0 else persistCandidates(pairs0)
-    val hydrated = if (direct) vecs else persistCandidates(
-      vecs.join(broadcast(pairs.select(col("id_a").as("id"))
-          .unionByName(pairs.select(col("id_b").as("id"))).distinct()),
-        Seq("id"), "leftsemi"))
-    def side(s: String, out: String) =
-      hydrated.select(col("id").as(s), col("v").as(out))
-    pairs
-      .join(side("id_a", "v_a"), "id_a")
-      .join(side("id_b", "v_b"), "id_b")
-      .withColumn("cos", qcosine_sim(col("v_a"), col("v_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), floor(col("cos") * 1e6).as("cos_x1e6"))
+    val pairs = bucketPairs(embeddingBuckets(vecs, "v", "id", nBits, nTables),
+      Seq("table", "bucket"), Seq("id")).select("id_a", "id_b").distinct()
+    cosineVerified(pairs, vecs, threshold, rehydration)
   }
+
+  private def cosineVerified(pairs: DataFrame, vecs: DataFrame,
+                             threshold: Double, strategy: Rehydration): DataFrame =
+    hydrateVerify(pairs, vecs, strategy, qcosine_sim(col("v_a"), col("v_b")), threshold)
+      .select(col("id_a"), col("id_b"), floor(col("score") * 1e6).as("cos_x1e6"))
 
   /** The exploded hyperplane-LSH bucket table of a vector set:
     * (id, table, bucket) — stored next to the vectors at ingest (the
@@ -706,11 +694,11 @@ object Dedup {
     * (text d8, audio c20, hash v4, embeddings here): a DELTA of new
     * vectors pairs against a corpus whose LSH buckets are already
     * materialized ([[embeddingBuckets]]). One stored-bucket scan on the
-    * corpus, candidates from the BROADCAST bucketed delta (delta-sized,
-    * corpus-corpus pairs cannot form), exact quantized-cosine verify on
-    * vectors rehydrated by broadcast semi-join reduction, delta-internal
-    * pairs via the batch operator. Same output schema as
-    * [[embeddingNearDup]].
+    * corpus, candidates from [[deltaPairs]] against the BROADCAST
+    * bucketed delta (delta-sized, corpus-corpus pairs cannot form,
+    * delta-delta pairs included), exact quantized-cosine verify on
+    * vectors rehydrated with [[embeddingNearDup]]'s Auto switch. Same
+    * output schema as [[embeddingNearDup]].
     *
     * CONTRACT: `corpusBuckets` must be MATERIALIZED columns (stored
     * table / checkpoint) — the audioNearDupIncremental rationale. */
@@ -720,38 +708,12 @@ object Dedup {
     val delta = delta0.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint(true)
     val dBuckets = embeddingBuckets(delta, "v", "id", nBits, nTables)
-      .withColumnRenamed("id", "id_d")
-    val cross = corpusBuckets
-      .join(broadcast(dBuckets), Seq("table", "bucket"))
-      .filter(col("id") =!= col("id_d"))
-      .select(least(col("id"), col("id_d")).as("id_a"),
-        greatest(col("id"), col("id_d")).as("id_b"))
-      .distinct()
-      // eager: the two broadcast id-set subtrees below would otherwise
-      // race the cache fill (the audioNearDupIncremental lesson)
-      .localCheckpoint(true)
-    val vecs = corpusVecs.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .unionByName(delta)
-      .dropDuplicates("id")
-    // r7: Rehydration.Auto discipline (see nearDupJaccardIncremental) —
-    // direct join for tiny corpora, semi-join reduction with one-pass
-    // hydration for real ones; output identical either way
-    val hydrated = if (choosesDirect(vecs, Rehydration.Auto)) vecs
-      else persistCandidates(
-        vecs.join(broadcast(cross.select(col("id_a").as("id"))
-            .unionByName(cross.select(col("id_b").as("id"))).distinct()),
-          Seq("id"), "leftsemi"))
-    def side(s: String, out: String) =
-      hydrated.select(col("id").as(s), col("v").as(out))
-    val crossVerified = cross
-      .join(side("id_a", "v_a"), "id_a")
-      .join(side("id_b", "v_b"), "id_b")
-      .withColumn("cos", qcosine_sim(col("v_a"), col("v_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), floor(col("cos") * 1e6).as("cos_x1e6"))
-    crossVerified
-      .unionByName(embeddingNearDup(delta, "v", "id", threshold, nBits, nTables))
-      .distinct()
+    cosineVerified(
+      deltaPairs(corpusBuckets.select("id", "table", "bucket"), dBuckets, dBuckets,
+        Seq("table", "bucket")),
+      corpusVecs.select(col(idCol).as("id"), col(vecCol).as("v"))
+        .unionByName(delta).dropDuplicates("id"),
+      threshold, Rehydration.Auto)
   }
 
   /** AUDIO near-dup: parametric acoustic fingerprints. Each clip is
@@ -762,12 +724,20 @@ object Dedup {
     * integer argmax has enormous noise margin) while the weaker second
     * tone can fall back to the chirp's swept band and jitter by a few Hz
     * across re-encodes — so the
-    * plan joins exactly on (sr, n, f1) (one hash shuffle of tiny
+    * plan buckets exactly on (sr, n, f1) (one hash shuffle of tiny
     * fingerprint rows, Dedup.exact discipline; group sizes are bounded by
     * the key's cardinality) and verifies |Δf2| <= tolHz inside the group.
     * Spectrally-global features (band-energy vectors) provably CANNOT do
     * this: tones 1 Hz apart are identical at any fixed band resolution
     * (measured organic cosine 1.000000 at 64 bands). */
+  def audioNearDup(clips: DataFrame, tolHz: Int = 8,
+                   idCol: String = "clip_id", bytesCol: String = "bytes",
+                   codecCol: String = "codec", srCol: String = "sr_hz"): DataFrame =
+    bucketPairs(audioFingerprints(clips, idCol, bytesCol, codecCol, srCol),
+        Seq("sr", "n", "f1"), Seq("id", "f2"),
+        keep = (x, y) => abs(x("f2") - y("f2")) <= tolHz)
+      .select("id_a", "id_b")
+
   /** TIME-SHIFT-ROBUST audio near-dup: recovers twins with up to `maxTrim`
     * leading samples trimmed (and/or a codec transcode).
     *
@@ -794,9 +764,9 @@ object Dedup {
     *
     * Skew: group sizes are bounded by the (sr, f1, nb, f2b) key
     * cardinality; a corpus of near-identical tones hot-spots one key.
-    * `salts` > 1 engages cell pairing (see the candidate-stage comment) —
-    * identical output, hot group spread over S(S+1)/2 tasks
-    * (AudioSkewSpec: planted one-key corpus, salted == unsalted).
+    * `salts` > 1 engages cell pairing ([[bucketPairs]]) — identical
+    * output, hot group spread over S(S+1)/2 tasks (AudioSkewSpec:
+    * planted one-key corpus, salted == unsalted).
     *
     * The SECOND tone also rides the candidate key as a bucket (width
     * tolHz, adjacent-bucket emission like nb — any |Δf2| <= tolHz pair
@@ -805,138 +775,48 @@ object Dedup {
     * at 10x rows); the f2 bucket divides candidate groups by the second
     * tone's ~137-bucket cardinality while recall stays exact — the
     * in-group filters and the aligned-corr verify are unchanged, so the
-    * OUTPUT is identical, only the pruned candidate volume differs. */
+    * OUTPUT is identical, only the pruned candidate volume differs.
+    *
+    * Rehydration is always the semi-join reduction: the payload is the
+    * BINARY byte column, the fattest in the engine, and the global plan
+    * gate (PlanQualitySpec) forbids un-reduced binary shuffles at every
+    * scale. */
   def audioNearDupShift(clips: DataFrame, maxTrim: Int = 160, tolHz: Int = 16,
                         minCorr: Double = 0.8,
                         idCol: String = "clip_id", bytesCol: String = "bytes",
                         codecCol: String = "codec", srCol: String = "sr_hz",
                         salts: Int = 1): DataFrame = {
-    require(maxTrim >= 0, s"maxTrim must be >= 0, got $maxTrim")
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    val bucketW = math.max(256, maxTrim + 1)
-    val f2W = math.max(tolHz, 1)
-    val fp = clips.select(col(idCol).as("id"), col(srCol).as("sr"),
-      pcm_sample_count(col(bytesCol), col(codecCol)).as("n"),
-      pcm_tone_pair(col(bytesCol), col(codecCol), col(srCol)).as("tones"))
-      .select(col("id"), col("sr"), col("n"),
-        element_at(col("tones"), 1).as("f1"), element_at(col("tones"), 2).as("f2"))
-      .select(col("id"), col("sr"), col("n"), col("f1"), col("f2"),
-        explode(array((col("n") / bucketW).cast("int"),
-          (col("n") / bucketW).cast("int") + 1)).as("nb"))
-      .select(col("id"), col("sr"), col("n"), col("f1"), col("f2"), col("nb"),
-        explode(array((col("f2") / f2W).cast("int"),
-          (col("f2") / f2W).cast("int") + 1)).as("f2b"))
-    // Candidate pairing as groupBy-bucket + in-group pair generation, NOT a
-    // fingerprint self-join (ADVICE r3). A self-join runs the
-    // pcm_tone_pair DSP scan — the dominant per-clip cost — once per
-    // side, and its equi-keys make Catalyst infer IsNotNull constraints
-    // that re-evaluate the kernel a second time per row INSIDE a filter
-    // below each side (measured 4x total kernel cost). The groupBy form
-    // scans the corpus once, shuffles only tiny fingerprint rows with no
-    // inferred constraint filters, and pairs within each bucket (the
-    // bucket IS the LSH bucket — group sizes carry the same documented
-    // skew bound as the join's key groups). Null keys: a null n/f2 makes
-    // the lambda predicate null (dropped, matching the join's null-key
-    // semantics); null sr/f1 are guarded explicitly on the cheap
-    // materialized group-key columns.
-    // The candidate pair set is MATERIALIZED (persist) because the verify
-    // stage references it three times (the pair probe + two broadcast id
-    // sets): without a stage boundary each reference would re-run the
-    // whole fingerprint pipeline including the DSP scan. This is the
-    // natural two-phase shape of a petabyte near-dup job — candidates are
-    // a stage output (a scratch table in a production pipeline); the set
-    // is dup-rate-sized, so caching it is cheap at any corpus size.
-    // Cache lifecycle: see [[Rehydration]] (shared note). This operator
-    // always uses the semi-join reduction — its payload is the BINARY
-    // byte column, the fattest in the engine, and the global plan gate
-    // (PlanQualitySpec) structurally forbids un-reduced binary shuffles
-    // at every scale.
-    // `salts` > 1 engages the HOT-KEY path (the Salting discipline, wired
-    // end-to-end for pairing): a near-constant-tone corpus concentrates
-    // one (sr, f1, nb, f2b) key, and the single-cell groupBy would
-    // collect that whole group into ONE task. Cell pairing spreads it:
-    // each row (salt s = hash(id) mod S) is replicated into the S cells
-    // {(s, j): j >= s} ∪ {(i, s): i < s}, the group key gains (cellA,
-    // cellB), and within cell (a, b) pairs are generated with x from
-    // salt a and y from salt b (triangular by id when a == b). Every
-    // unordered pair lands in EXACTLY one cell — (min(sa,sb),
-    // max(sa,sb)) — so the pair set is IDENTICAL to the unsalted plan
-    // (spec-asserted) while a hot group of m rows is spread over
-    // S(S+1)/2 tasks of ~2m/S rows each. Cost when engaged: S× the
-    // (tiny) fingerprint shuffle volume — the payload never rides it.
-    val candsRaw =
-      if (salts == 1)
-        fp.groupBy(col("sr"), col("f1"), col("nb"), col("f2b"))
-          .agg(collect_list(struct(col("id"), col("n"), col("f2"))).as("xs"))
-          .select(col("sr"), col("f1"), explode(col("xs")).as("x"), col("xs"))
-          .select(col("x"), explode(filter(col("xs"), y =>
-            col("sr").isNotNull && col("f1").isNotNull &&
-              col("x.id") < y("id") &&
-              abs(col("x.n") - y("n")) <= maxTrim &&
-              abs(col("x.f2") - y("f2")) <= tolHz)).as("y"))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      else {
-        val fpS = fp
-          .withColumn("_s", pmod(hash(col("id")), lit(salts)).cast("int"))
-          .withColumn("_cell", explode(concat(
-            transform(sequence(col("_s"), lit(salts - 1)),
-              j => struct(col("_s").as("a"), j.as("b"))),
-            transform(
-              when(col("_s") > 0, sequence(lit(0), col("_s") - 1))
-                .otherwise(array().cast("array<int>")),
-              i => struct(i.as("a"), col("_s").as("b"))))))
-          .withColumn("_ca", col("_cell.a"))
-          .withColumn("_cb", col("_cell.b"))
-        fpS.groupBy(col("sr"), col("f1"), col("nb"), col("f2b"),
-            col("_ca"), col("_cb"))
-          .agg(collect_list(struct(col("id"), col("n"), col("f2"), col("_s"))).as("xs"))
-          .select(col("sr"), col("f1"), col("_ca"), col("_cb"),
-            explode(col("xs")).as("x"), col("xs"))
-          .filter(col("x._s") === col("_ca")) // x takes the left role
-          .select(col("x"), explode(filter(col("xs"), y =>
-            col("sr").isNotNull && col("f1").isNotNull &&
-              y("_s") === col("_cb") &&
-              (col("_ca") =!= col("_cb") || col("x.id") < y("id")) &&
-              abs(col("x.n") - y("n")) <= maxTrim &&
-              abs(col("x.f2") - y("f2")) <= tolHz)).as("y"))
-          .select(least(col("x.id"), col("y.id")).as("id_a"),
-            greatest(col("x.id"), col("y.id")).as("id_b"))
-      }
-    val cands = persistCandidates(candsRaw.distinct())
-    // Rehydration via broadcast SEMI-JOIN REDUCTION, not a direct join of
-    // the candidate set against the corpus: a plain join plans as a
-    // sort-merge that hash-shuffles AND sorts the ENTIRE byte column to
-    // serve a tiny candidate set (measured: filled the sandbox disk with
-    // spill at sf1 — at 100 TB it is a corpus-sized shuffle per side).
-    // Broadcasting the candidate ID set (ids only, tiny) filters the
-    // payload in its scan stage; only the ~|cands| surviving rows' bytes
-    // ever reach a join. For candidate sets too large to broadcast whole,
-    // the storage-bucketed (SPJ-style) fallback is IMPLEMENTED as
-    // ClipTable.readForKeys — per-bucket broadcasts of |cands|/numBuckets
-    // each over dir-pruned bucket reads; candidate sets here are
-    // dup-rate-sized by design, so the single broadcast is the default.
-    val payload = clips.select(col(idCol).as("id"),
-      col(bytesCol).as("pbytes"), col(codecCol).as("pcodec"))
-    // ONE-PASS hydration (r7): the former per-side semi-join reduction
-    // evaluated the payload subtree once per pair side — two full scans
-    // of the fattest column in the engine to serve one dup-rate-sized
-    // candidate set. Reduce ONCE on the union of both sides' ids and
-    // persist the (tiny) hydrated slice; both sides then join against
-    // cached blocks. Same rows reach the verify kernel — output
-    // identical — at half the payload-scan cost (guide §2.4).
-    val ids = cands.select(col("id_a").as("id"))
-      .unionByName(cands.select(col("id_b").as("id"))).distinct()
-    val hydrated = persistCandidates(
-      payload.join(broadcast(ids), Seq("id"), "leftsemi"))
-    cands
-      .join(hydrated.select(col("id").as("id_a"),
-        col("pbytes").as("bytes_a"), col("pcodec").as("codec_a")), "id_a")
-      .join(hydrated.select(col("id").as("id_b"),
-        col("pbytes").as("bytes_b"), col("pcodec").as("codec_b")), "id_b")
-      .filter(pcm_aligned_corr(col("bytes_a"), col("codec_a"),
-        col("bytes_b"), col("codec_b")) >= minCorr)
-      .select(col("id_a"), col("id_b"))
+    val fp = shiftBuckets(audioFingerprints(clips, idCol, bytesCol, codecCol, srCol),
+      maxTrim, tolHz, 0, 1)
+    val pairs = bucketPairs(fp, Seq("sr", "f1", "nb", "f2b"), Seq("id", "n", "f2"), salts,
+        (x, y) => abs(x("n") - y("n")) <= maxTrim && abs(x("f2") - y("f2")) <= tolHz)
+      .select("id_a", "id_b").distinct()
+    corrVerified(pairs, clips.select(col(idCol).as("id"),
+      col(bytesCol).as("bytes"), col(codecCol).as("codec")), minCorr)
+      .select("id_a", "id_b")
   }
+
+  /** The shift-robust candidate keys of a fingerprint table (id, sr, n,
+    * f1, f2): duration bucket nb (width > maxTrim) and second-tone bucket
+    * f2b (width tolHz), each emitted at every bucket offset in
+    * `offsets`. Keys and fields leave through ONE generator, so the
+    * IsNotNull filters Catalyst infers from a join on them (and from its
+    * |Δ| filters) stay above it instead of re-running a tone kernel
+    * below it (the r4 inferred-constraint tax). */
+  private def shiftBuckets(fp: DataFrame, maxTrim: Int, tolHz: Int,
+                           offsets: Int*): DataFrame = {
+    require(maxTrim >= 0, s"maxTrim must be >= 0, got $maxTrim")
+    val nb = (col("n") / math.max(256, maxTrim + 1)).cast("int")
+    val f2b = (col("f2") / math.max(tolHz, 1)).cast("int")
+    fp.select(col("id"), col("sr"), explode(array((for (i <- offsets; j <- offsets)
+        yield struct(col("n"), col("f1"), col("f2"), (nb + i).as("nb"), (f2b + j).as("f2b"))): _*))
+        .as("k"))
+      .select("id", "sr", "k.*")
+  }
+
+  private def corrVerified(pairs: DataFrame, payload: DataFrame, minCorr: Double): DataFrame =
+    hydrateVerify(pairs, payload, Rehydration.SemiJoin,
+      pcm_aligned_corr(col("bytes_a"), col("codec_a"), col("bytes_b"), col("codec_b")), minCorr)
 
   /** Ingest-time acoustic fingerprint table: (id, sr, n, f1, f2) — ONE
     * DSP scan per clip, ever. A pipeline stores this next to the bytes at
@@ -956,21 +836,19 @@ object Dedup {
     * corpus): a DELTA of new clips checked against an existing corpus
     * whose fingerprints are already materialized ([[audioFingerprints]]).
     * The corpus pays ZERO DSP this run — its (id, sr, n, f1, f2) rows
-    * join as-is. Bucket adjacency is ONE-SIDED: the corpus keeps a single
-    * primary (nb, f2b) bucket per clip and only the small delta emits the
-    * 3x3 adjacent buckets {b-1, b, b+1} on BOTH axes — the corpus twin's
-    * primary bucket can sit on EITHER side of the delta's (a delta clip
-    * longer than its corpus twin across a bucket edge has n_c/W =
-    * n_d/W - 1, and symmetrically for f2), so one-sided {b, b+1}
-    * emission silently missed the longer-delta direction (ADVICE r5,
-    * high; regression pinned by CurationPipelineSpec's longer-delta
-    * case). Any pair within (maxTrim, tolHz) now shares a key while the
-    * corpus side stays one row per clip (and the bucketed delta
-    * broadcasts — the candidate join is delta-sized, 9 rows per clip).
-    * Delta-internal pairs come from the batch operator over the delta
-    * alone. Verify is the family's exact aligned cross-correlation with
-    * bytes rehydrated by broadcast semi-join reduction — only candidate
-    * rows' bytes are ever read off the corpus.
+    * join as-is; the delta is fingerprinted once and the pairs come from
+    * [[audioNearDupAgainst]].
+    *
+    * The delta is referenced several times (its fingerprints and its
+    * payload side) — it is materialized ONCE, eagerly: a lazy persist
+    * still races when the verify stage's broadcast subtrees evaluate
+    * concurrently (each broadcast job is a future; two of them can both
+    * compute the un-filled cache from scratch, re-running whatever
+    * produced the delta — measured 3x cost on c20's in-query twin
+    * construction). localCheckpoint(eager=true) is the iterative-
+    * algorithm idiom ([[components]]); delta-sized by contract (a
+    * micro-batch / daily ingest), so the blocks are small at any corpus
+    * scale.
     *
     * CONTRACT: `corpusFp` must be MATERIALIZED columns (a table read /
     * checkpoint), which is what "fingerprints stored at ingest" means. A
@@ -983,90 +861,39 @@ object Dedup {
       minCorr: Double = 0.8, idCol: String = "clip_id",
       bytesCol: String = "bytes", codecCol: String = "codec",
       srCol: String = "sr_hz"): DataFrame = {
-    require(maxTrim >= 0, s"maxTrim must be >= 0, got $maxTrim")
-    // The delta is referenced several times below (its fingerprints, its
-    // payload side, and the delta-internal batch pass) — materialize it
-    // ONCE, eagerly: a lazy persist still races when the verify stage's
-    // broadcast subtrees evaluate concurrently (each broadcast job is a
-    // future; two of them can both compute the un-filled cache from
-    // scratch, re-running whatever produced the delta — measured 3x cost
-    // on c20's in-query twin construction). localCheckpoint(eager=true)
-    // is the iterative-algorithm idiom ([[components]]): one job, then
-    // every reference reads materialized blocks. Delta-sized by contract
-    // (a micro-batch / daily ingest), so the blocks are small at any
-    // corpus scale.
     val delta = delta0.localCheckpoint(true)
-    val bucketW = math.max(256, maxTrim + 1)
-    val f2W = math.max(tolHz, 1)
-    val cFp = corpusFp.select(col("id"), col("sr"), col("n"), col("f1"), col("f2"),
-      (col("n") / bucketW).cast("int").as("nb"),
-      (col("f2") / f2W).cast("int").as("f2b"))
-    val dFp = audioFingerprints(delta, idCol, bytesCol, codecCol, srCol)
-      .select(col("id").as("id_d"), col("sr"), col("n").as("n_d"),
-        col("f1"), col("f2").as("f2_d"))
-      .withColumn("nb", explode(array((col("n_d") / bucketW).cast("int") - 1,
-        (col("n_d") / bucketW).cast("int"),
-        (col("n_d") / bucketW).cast("int") + 1)))
-      .withColumn("f2b", explode(array((col("f2_d") / f2W).cast("int") - 1,
-        (col("f2_d") / f2W).cast("int"),
-        (col("f2_d") / f2W).cast("int") + 1)))
-    val cross = cFp.join(broadcast(dFp), Seq("sr", "f1", "nb", "f2b"))
-      .filter(col("id") =!= col("id_d") &&
-        abs(col("n") - col("n_d")) <= maxTrim &&
-        abs(col("f2") - col("f2_d")) <= tolHz)
-      .select(least(col("id"), col("id_d")).as("id_a"),
-        greatest(col("id"), col("id_d")).as("id_b"))
-      .distinct()
-      // eager for the same reason as the delta: the two broadcast id-set
-      // subtrees below would otherwise race the cache fill and re-run the
-      // corpus-fingerprint join each
-      .localCheckpoint(true)
-    // verify the cross pairs on rehydrated bytes (semi-join reduction:
-    // only candidate rows' bytes leave either scan), then add the
-    // delta-internal pairs from the batch operator over the small delta
-    val payload = corpusClips.select(col(idCol).as("id"),
-        col(bytesCol).as("pbytes"), col(codecCol).as("pcodec"))
-      .unionByName(delta.select(col(idCol).as("id"),
-        col(bytesCol).as("pbytes"), col(codecCol).as("pcodec")))
-    // one-pass hydration on the union of both sides' ids — see
-    // audioNearDupShift (identical rows reach the verify, one corpus
-    // payload scan instead of two)
-    val ids = cross.select(col("id_a").as("id"))
-      .unionByName(cross.select(col("id_b").as("id"))).distinct()
-    val hydrated = persistCandidates(
-      payload.join(broadcast(ids), Seq("id"), "leftsemi"))
-    val crossVerified = cross
-      .join(hydrated.select(col("id").as("id_a"),
-        col("pbytes").as("bytes_a"), col("pcodec").as("codec_a")), "id_a")
-      .join(hydrated.select(col("id").as("id_b"),
-        col("pbytes").as("bytes_b"), col("pcodec").as("codec_b")), "id_b")
-      .filter(pcm_aligned_corr(col("bytes_a"), col("codec_a"),
-        col("bytes_b"), col("codec_b")) >= minCorr)
-      .select(col("id_a"), col("id_b"))
-    crossVerified.unionByName(
-        audioNearDupShift(delta, maxTrim, tolHz, minCorr,
-          idCol, bytesCol, codecCol, srCol))
-      .distinct()
+    def payload(df: DataFrame) =
+      df.select(col(idCol).as("id"), col(bytesCol).as("bytes"), col(codecCol).as("codec"))
+    audioNearDupAgainst(corpusFp, audioFingerprints(delta, idCol, bytesCol, codecCol, srCol),
+      payload(corpusClips).unionByName(payload(delta)), maxTrim, tolHz, minCorr)
+      .select("id_a", "id_b")
   }
 
-  def audioNearDup(clips: DataFrame, tolHz: Int = 8,
-                   idCol: String = "clip_id", bytesCol: String = "bytes",
-                   codecCol: String = "codec", srCol: String = "sr_hz"): DataFrame = {
-    val fp = clips.select(col(idCol).as("id"), col(srCol).as("sr"),
-      pcm_sample_count(col(bytesCol), col(codecCol)).as("n"),
-      pcm_tone_pair(col(bytesCol), col(codecCol), col(srCol)).as("tones"))
-      .select(col("id"), col("sr"), col("n"),
-        element_at(col("tones"), 1).as("f1"), element_at(col("tones"), 2).as("f2"))
-    // GroupBy-bucket pairing, one scan + one fingerprint shuffle — see the
-    // audioNearDupShift comment for why this beats a fingerprint self-join
-    // (ADVICE r3: single DSP scan, no inferred-constraint re-evaluation).
-    fp.groupBy(col("sr"), col("n"), col("f1"))
-      .agg(collect_list(struct(col("id"), col("f2"))).as("xs"))
-      .select(col("sr"), col("n"), col("f1"), explode(col("xs")).as("x"), col("xs"))
-      .select(col("x"), explode(filter(col("xs"), y =>
-        col("sr").isNotNull && col("n").isNotNull && col("f1").isNotNull &&
-          col("x.id") < y("id") &&
-          abs(col("x.f2") - y("f2")) <= tolHz)).as("y"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+  /** The pairs a delta with fingerprints `deltaFp` introduces against a
+    * corpus with fingerprints `corpusFp` (both (id, sr, n, f1, f2)),
+    * verified on `payload` = (id, bytes, codec, any further columns) of
+    * corpus ∪ delta. Returns the verified pairs with both sides' payload
+    * columns (c_a, c_b).
+    * Bucket adjacency is ONE-SIDED: the corpus and the delta union side
+    * keep a single primary (nb, f2b) bucket per clip and only the
+    * broadcast delta probe emits the 3x3 adjacent buckets {b-1, b, b+1}
+    * on BOTH axes. A twin's primary bucket can sit on EITHER side of the
+    * probe's (a delta clip longer than its corpus twin across a bucket
+    * edge has n_c/W = n_d/W - 1, and symmetrically for f2), so one-sided
+    * {b, b+1} emission silently missed the longer-delta direction
+    * (ADVICE r5, high; pinned by CurationPipelineSpec and AudioDedupSpec).
+    * Any pair within (maxTrim, tolHz) therefore shares a key, whether its
+    * partner is in the corpus or in the delta, while the corpus side
+    * stays one row per clip. */
+  private[graft] def audioNearDupAgainst(corpusFp: DataFrame, deltaFp: DataFrame,
+      payload: DataFrame, maxTrim: Int = 160, tolHz: Int = 16,
+      minCorr: Double = 0.8): DataFrame = {
+    def keys(fp: DataFrame, offsets: Int*) =
+      shiftBuckets(fp.select("id", "sr", "n", "f1", "f2"), maxTrim, tolHz, offsets: _*)
+    corrVerified(
+      deltaPairs(keys(corpusFp, 0), keys(deltaFp, 0), keys(deltaFp, -1, 0, 1),
+        Seq("sr", "f1", "nb", "f2b"),
+        keep = abs(col("n") - col("n_d")) <= maxTrim && abs(col("f2") - col("f2_d")) <= tolHz),
+      payload, minCorr)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.Windows
+import graft.operators.{Dedup, Windows}
 
 /** The streaming CEP engine: clip stream -> decode/extract -> watermarked
   * event-time windows -> exactly-once MERGE sink (ClipTable).
@@ -81,8 +81,9 @@ object ClipStreamJob {
     * are KEPT — the benign direction, caught downstream by the batch
     * near-dup), while organic collisions must now also match f2 within
     * the bucket. For guaranteed-lossless dedup use `Dedup.audioNearDup*`,
-    * whose exact correlation verify has no false drops at any scale. */
-  /** `shiftRobust`: additionally drop re-uploads whose leading samples
+    * whose exact correlation verify has no false drops at any scale.
+    *
+    * `shiftRobust`: additionally drop re-uploads whose leading samples
     * were TRIMMED (the c15 attack, on ingest). Streaming state can hold
     * only ONE key per row (no adjacent-bucket emission like the batch
     * detector — exploding copies would change stream cardinality), so the
@@ -203,27 +204,27 @@ object ClipStreamJob {
         col("u_transcript").isNotNull.as("updated"))
   }
 
-  /** Run any streaming DataFrame into an exactly-once ClipTable MERGE with
-    * checkpoint-resume. Returns the started query.
-    *
-    * Incremental compaction runs between micro-batches once more than
-    * `maxDeltas` MOR deltas accumulate, bounding the reader's latest-wins
-    * window on a long-running stream (the Iceberg `rewrite_data_files`
-    * maintenance analog). Replay-safe: a batch replayed after its delta
-    * was folded re-writes the same rows, and the latest-batch-wins reader
-    * resolves base-vs-delta copies of one batch to identical data. */
   /** EXACT-VERIFY incremental dedup stream: each micro-batch is checked
     * against everything already ingested via the decode-once fingerprint
-    * discipline ([[graft.operators.Dedup.audioNearDupIncremental]] — the
-    * sink table carries (sr_hz, n_samples, f1, f2) columns written at
-    * ingest, so the corpus is never re-decoded), and batch rows whose
-    * audio near-duplicates an existing clip (trim/transcode robust, exact
-    * aligned-correlation verified) are DROPPED before the exactly-once
-    * MERGE. Contrast [[audioDedupStream]]: that stage is fingerprint-
-    * EQUALITY in bounded watermark state (cheap, first line of defense);
-    * this one is the full candidates-plus-verify semantics with unbounded
-    * lookback, priced like a real pipeline would run it — per batch,
-    * O(delta) DSP + a fingerprint-table join + candidate-only byte reads.
+    * discipline ([[graft.operators.Dedup.audioNearDupIncremental]]'s
+    * candidates-plus-verify path — the sink table carries (sr_hz,
+    * n_samples, f1, f2) columns written at ingest, so the corpus is never
+    * re-decoded), and batch rows whose audio near-duplicates an existing
+    * clip or an earlier row of the same batch (trim/transcode robust,
+    * exact aligned-correlation verified) are DROPPED before the
+    * exactly-once MERGE. Contrast [[audioDedupStream]]: that stage is
+    * fingerprint-EQUALITY in bounded watermark state (cheap, first line
+    * of defense); this one is the full candidates-plus-verify semantics
+    * with unbounded lookback, priced like a real pipeline would run it —
+    * per batch, O(delta) DSP + a fingerprint-table join + candidate-only
+    * byte reads.
+    *
+    * Each batch clip is fingerprinted ONCE: the batch is materialized
+    * with its fingerprint columns (one job, which also runs the stateful
+    * upstream exactly once), and the candidate join and the merged
+    * n_samples/f1/f2 columns both read them. An empty table reads
+    * schema-less, so the first batch pairs against the empty slice of
+    * itself — the same path, no emptiness job.
     *
     * Replay-safe: a replayed batch re-checks against the table, its
     * survivors re-merge idempotently (same keys, same batch id), and
@@ -237,57 +238,45 @@ object ClipStreamJob {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        // two references below (dedup probe + merge): persist so the
-        // stateful upstream executes once per batch
-        val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val existing = table.read(spark)
-          val survivors =
-            if (existing.isEmpty) batch
-            else {
-              val deltaIds = batch.select(col("clip_id"))
-              // replay guard: rows of THIS batch already in the table
-              // must not self-match — exclude them from the corpus side
-              val corpus = existing.join(broadcast(deltaIds), Seq("clip_id"),
-                "left_anti")
-              val fp = corpus.select(col("clip_id").as("id"), col("sr_hz").as("sr"),
-                col("n_samples").as("n"), col("f1"), col("f2"))
-              val pairs = graft.operators.Dedup.audioNearDupIncremental(
-                fp, corpus, batch, minCorr = minCorr)
-              // FIRST-ARRIVAL-WINS drop rule: the corpus side never drops
-              // (it was first); a corpus-batch pair drops its batch end,
-              // a batch-batch pair drops its larger id (ids normalized
-              // id_a < id_b, so: drop id_b when both are batch rows, else
-              // drop whichever end is the batch row).
-              val aInB = deltaIds.withColumnRenamed("clip_id", "id_a")
-                .withColumn("_a_in", lit(true))
-              val bInB = deltaIds.withColumnRenamed("clip_id", "id_b")
-                .withColumn("_b_in", lit(true))
-              val drops = pairs
-                .join(broadcast(aInB), Seq("id_a"), "left")
-                .join(broadcast(bInB), Seq("id_b"), "left")
-                .select(when(col("_a_in").isNotNull && col("_b_in").isNotNull,
-                    col("id_b"))
-                  .when(col("_a_in").isNotNull, col("id_a"))
-                  .otherwise(col("id_b")).as("clip_id"))
-                .distinct()
-              batch.join(broadcast(drops), Seq("clip_id"), "left_anti")
-            }
-          val withFp = survivors
-            .withColumn("n_samples", graft.functions.GraftFunctions
-              .pcm_sample_count(col("bytes"), col("codec")))
-            .withColumn("tones", graft.functions.GraftFunctions
-              .pcm_tone_pair(col("bytes"), col("codec"), col("sr_hz")))
-            .withColumn("f1", element_at(col("tones"), 1))
-            .withColumn("f2", element_at(col("tones"), 2))
-            .drop("tones")
-          table.merge(withFp, batchId)
-        } finally batch.unpersist()
+        // the whole row rides as the fingerprint's id; eager, so every
+        // reader below (and the stateful upstream) sees one materialization
+        val batch = Dedup.audioFingerprints(
+            batch0.withColumn("_row", struct(col("*"))), idCol = "_row")
+          .select(col("id.*"), col("n").as("n_samples"), col("f1"), col("f2"))
+          .localCheckpoint(true)
+        val existing = table.read(batch.sparkSession)
+        // replay guard: rows of THIS batch already in the table must not
+        // self-match — exclude them from the corpus side
+        val corpus =
+          if (existing.columns.isEmpty) batch.limit(0)
+          else existing.join(broadcast(batch.select("clip_id")), Seq("clip_id"), "left_anti")
+        def fp(d: DataFrame) = d.select(col("clip_id").as("id"), col("sr_hz").as("sr"),
+          col("n_samples").as("n"), col("f1"), col("f2"))
+        def payload(d: DataFrame, fresh: Boolean) =
+          d.select(col("clip_id").as("id"), col("bytes"), col("codec"), lit(fresh).as("fresh"))
+        Dedup.withCandidates {
+          // FIRST-ARRIVAL-WINS drop rule: the corpus end of a pair never
+          // drops (it was first); a batch-batch pair drops its larger id
+          // (ids are normalized id_a < id_b)
+          val drops = Dedup.audioNearDupAgainst(fp(corpus), fp(batch),
+              payload(corpus, fresh = false).unionByName(payload(batch, fresh = true)),
+              minCorr = minCorr)
+            .select(when(col("fresh_b"), col("id_b")).otherwise(col("id_a")).as("clip_id"))
+          table.merge(batch.join(broadcast(drops), Seq("clip_id"), "left_anti"), batchId)
+        }
         ()
       }
       .start()
 
+  /** Run any streaming DataFrame into an exactly-once ClipTable MERGE with
+    * checkpoint-resume. Returns the started query.
+    *
+    * Incremental compaction runs between micro-batches once more than
+    * `maxDeltas` MOR deltas accumulate, bounding the reader's latest-wins
+    * window on a long-running stream (the Iceberg `rewrite_data_files`
+    * maintenance analog). Replay-safe: a batch replayed after its delta
+    * was folded re-writes the same rows, and the latest-batch-wins reader
+    * resolves base-vs-delta copies of one batch to identical data. */
   def runToTable(df: DataFrame, table: ClipTable, checkpointDir: String,
                  trigger: Trigger = Trigger.AvailableNow(),
                  outputMode: String = "append",

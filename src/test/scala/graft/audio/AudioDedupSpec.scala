@@ -139,6 +139,46 @@ class AudioDedupSpec extends AnyFunSuite {
     assert(got == want, s"missing: ${want.diff(got)}, extra: ${got.diff(want)}")
   }
 
+  test("audioNearDupIncremental: delta-internal twins (one across a bucket edge) == batch on delta-touching pairs") {
+    // The delta's own twin pairs come out of the same candidate join as
+    // its corpus twins (the delta's primary buckets ride the union side):
+    // a delta holding BOTH ends of a trimmed+transcoded pair — one whose
+    // lengths straddle a 256-sample duration-bucket edge, one that does
+    // not — plus twins of corpus rows must give exactly the batch
+    // operator's pairs over corpus ∪ delta that touch the delta.
+    import spark.implicits._
+    val bucketW = 256
+    def straddles(r: graft.fixtures.ClipRow) = {
+      val n = AudioCodec.sampleCount(r.bytes.length, r.codec)
+      (n - 160) / bucketW < n / bucketW
+    }
+    def twin(r: graft.fixtures.ClipRow) = {
+      val target = if (r.codec == "ulaw") "alaw" else "ulaw"
+      (r.clip_id + "-s",
+        AudioCodec.transcode(trimBytes(r.bytes, r.codec, 160), r.codec, target),
+        target, r.sr_hz)
+    }
+    def own(r: graft.fixtures.ClipRow) = (r.clip_id, r.bytes, r.codec, r.sr_hz)
+    val (inCorpus, fresh) = rows.splitAt(N / 2)
+    val edge = fresh.find(straddles)
+    val inner = fresh.find(r => !straddles(r))
+    assert(edge.nonEmpty && inner.nonEmpty, "fixture lost its straddling/inner clips")
+    val internal = Seq(edge.get, inner.get)
+    val corpus = inCorpus.map(own).toDF("clip_id", "bytes", "codec", "sr_hz")
+    val delta = (inCorpus.filter(r => r.clip_id.drop(5).toInt % 10 == 3).map(twin) ++
+      internal.flatMap(r => Seq(own(r), twin(r)))).toDF("clip_id", "bytes", "codec", "sr_hz")
+    val fp = Dedup.audioFingerprints(corpus).localCheckpoint(true)
+    val got = Dedup.audioNearDupIncremental(fp, corpus, delta)
+      .as[(String, String)].collect().toSet
+    val deltaIds = delta.select("clip_id").as[String].collect().toSet
+    val want = Dedup.audioNearDupShift(corpus.unionByName(delta))
+      .as[(String, String)].collect().toSet
+      .filter(p => deltaIds(p._1) || deltaIds(p._2))
+    assert(internal.map(r => (r.clip_id, r.clip_id + "-s")).toSet.subsetOf(got),
+      s"delta-internal pair lost: $got")
+    assert(got == want, s"missing: ${want.diff(got)}, extra: ${got.diff(want)}")
+  }
+
   test("audioNearDup recovers exactly the planted twin pairs from bytes alone") {
     import spark.implicits._
     val base = rows.toDF()

@@ -121,9 +121,13 @@ class StreamingDedupSpec extends AnyFunSuite {
       AudioCodec.transcode(java.util.Arrays.copyOfRange(of, 320, of.length),
         "pcm16", "ulaw")
     try {
-      val a = pcm(1); val b = pcm(2); val c = pcm(3); val d = pcm(4)
+      val a = pcm(1); val b = pcm(2); val c = pcm(3); val d = pcm(4); val e = pcm(5)
+      // batch 1 (empty table): a twin pair inside the very first batch
+      // (e1 survives, e2 drops) — dedup runs before anything is stored
       in.addData(AudioEvt("a", a, "pcm16", 8000, ts(1)),
-        AudioEvt("b", b, "pcm16", 8000, ts(2)))
+        AudioEvt("b", b, "pcm16", 8000, ts(2)),
+        AudioEvt("e1", e, "pcm16", 8000, ts(3)),
+        AudioEvt("e2", twin(e), "ulaw", 8000, ts(4)))
       q.processAllAvailable()
       // batch 2: a's re-upload (vs the TABLE), a fresh clip, and a
       // batch-internal twin pair (d1 survives, d2 drops)
@@ -137,7 +141,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       in.addData(AudioEvt("b-re", twin(b), "ulaw", 8000, ts(2000)))
       q.processAllAvailable()
       val ids = table.read(spark).select("clip_id").as[String].collect().toSet
-      assert(ids == Set("a", "b", "c", "d1"), ids.toString)
+      assert(ids == Set("a", "b", "c", "d1", "e1"), ids.toString)
       // the decode-once discipline: fingerprints persisted at ingest
       val cols = table.read(spark).columns.toSet
       assert(Set("n_samples", "f1", "f2").subsetOf(cols), cols.toString)
