@@ -206,7 +206,7 @@ object Dedup {
     * ClipTable.readForKeys (per-bucket broadcasts over dir-pruned bucket
     * reads). Direct: the pair set is referenced once — no persist, one
     * payload pass. */
-  private def hydrateVerify(pairs: DataFrame, payload: DataFrame,
+  private[graft] def hydrateVerify(pairs: DataFrame, payload: DataFrame,
       strategy: Rehydration, score: Column, atLeast: Double): DataFrame = {
     val direct = choosesDirect(payload, strategy)
     val cands = if (direct) pairs else persistCandidates(pairs)
@@ -814,9 +814,14 @@ object Dedup {
       .select("id", "sr", "k.*")
   }
 
+  /** The verify score of every audio near-dup pair hydrated with (bytes,
+    * codec): normalized cross-correlation aligned at the length
+    * difference. */
+  private[graft] def alignedCorr: Column =
+    pcm_aligned_corr(col("bytes_a"), col("codec_a"), col("bytes_b"), col("codec_b"))
+
   private def corrVerified(pairs: DataFrame, payload: DataFrame, minCorr: Double): DataFrame =
-    hydrateVerify(pairs, payload, Rehydration.SemiJoin,
-      pcm_aligned_corr(col("bytes_a"), col("codec_a"), col("bytes_b"), col("codec_b")), minCorr)
+    hydrateVerify(pairs, payload, Rehydration.SemiJoin, alignedCorr, minCorr)
 
   /** Ingest-time acoustic fingerprint table: (id, sr, n, f1, f2) — ONE
     * DSP scan per clip, ever. A pipeline stores this next to the bytes at
@@ -837,7 +842,7 @@ object Dedup {
     * whose fingerprints are already materialized ([[audioFingerprints]]).
     * The corpus pays ZERO DSP this run — its (id, sr, n, f1, f2) rows
     * join as-is; the delta is fingerprinted once and the pairs come from
-    * [[audioNearDupAgainst]].
+    * [[audioCandidatesAgainst]].
     *
     * The delta is referenced several times (its fingerprints and its
     * payload side) — it is materialized ONCE, eagerly: a lazy persist
@@ -864,16 +869,15 @@ object Dedup {
     val delta = delta0.localCheckpoint(true)
     def payload(df: DataFrame) =
       df.select(col(idCol).as("id"), col(bytesCol).as("bytes"), col(codecCol).as("codec"))
-    audioNearDupAgainst(corpusFp, audioFingerprints(delta, idCol, bytesCol, codecCol, srCol),
-      payload(corpusClips).unionByName(payload(delta)), maxTrim, tolHz, minCorr)
+    corrVerified(audioCandidatesAgainst(corpusFp,
+        audioFingerprints(delta, idCol, bytesCol, codecCol, srCol), maxTrim, tolHz),
+      payload(corpusClips).unionByName(payload(delta)), minCorr)
       .select("id_a", "id_b")
   }
 
-  /** The pairs a delta with fingerprints `deltaFp` introduces against a
-    * corpus with fingerprints `corpusFp` (both (id, sr, n, f1, f2)),
-    * verified on `payload` = (id, bytes, codec, any further columns) of
-    * corpus ∪ delta. Returns the verified pairs with both sides' payload
-    * columns (c_a, c_b).
+  /** The candidate pairs (id_a, id_b) a delta with fingerprints `deltaFp`
+    * introduces against a corpus with fingerprints `corpusFp` (both (id,
+    * sr, n, f1, f2)), before any payload is read.
     * Bucket adjacency is ONE-SIDED: the corpus and the delta union side
     * keep a single primary (nb, f2b) bucket per clip and only the
     * broadcast delta probe emits the 3x3 adjacent buckets {b-1, b, b+1}
@@ -885,15 +889,12 @@ object Dedup {
     * Any pair within (maxTrim, tolHz) therefore shares a key, whether its
     * partner is in the corpus or in the delta, while the corpus side
     * stays one row per clip. */
-  private[graft] def audioNearDupAgainst(corpusFp: DataFrame, deltaFp: DataFrame,
-      payload: DataFrame, maxTrim: Int = 160, tolHz: Int = 16,
-      minCorr: Double = 0.8): DataFrame = {
+  private[graft] def audioCandidatesAgainst(corpusFp: DataFrame, deltaFp: DataFrame,
+      maxTrim: Int = 160, tolHz: Int = 16): DataFrame = {
     def keys(fp: DataFrame, offsets: Int*) =
       shiftBuckets(fp.select("id", "sr", "n", "f1", "f2"), maxTrim, tolHz, offsets: _*)
-    corrVerified(
-      deltaPairs(keys(corpusFp, 0), keys(deltaFp, 0), keys(deltaFp, -1, 0, 1),
-        Seq("sr", "f1", "nb", "f2b"),
-        keep = abs(col("n") - col("n_d")) <= maxTrim && abs(col("f2") - col("f2_d")) <= tolHz),
-      payload, minCorr)
+    deltaPairs(keys(corpusFp, 0), keys(deltaFp, 0), keys(deltaFp, -1, 0, 1),
+      Seq("sr", "f1", "nb", "f2b"),
+      keep = abs(col("n") - col("n_d")) <= maxTrim && abs(col("f2") - col("f2_d")) <= tolHz)
   }
 }

@@ -205,31 +205,43 @@ object ClipStreamJob {
   }
 
   /** EXACT-VERIFY incremental dedup stream: each micro-batch is checked
-    * against everything already ingested via the decode-once fingerprint
-    * discipline ([[graft.operators.Dedup.audioNearDupIncremental]]'s
-    * candidates-plus-verify path — the sink table carries (sr_hz,
+    * against everything already ingested, and batch rows whose audio
+    * near-duplicates an existing clip or an earlier row of the same batch
+    * (trim/transcode robust, exact aligned-correlation verified) are
+    * DROPPED before the exactly-once MERGE. Contrast [[audioDedupStream]]:
+    * that stage is fingerprint-EQUALITY in bounded watermark state (cheap,
+    * first line of defense); this one is the full candidates-plus-verify
+    * semantics with unbounded lookback. The sink carries (sr_hz,
     * n_samples, f1, f2) columns written at ingest, so the corpus is never
-    * re-decoded), and batch rows whose audio near-duplicates an existing
-    * clip or an earlier row of the same batch (trim/transcode robust,
-    * exact aligned-correlation verified) are DROPPED before the
-    * exactly-once MERGE. Contrast [[audioDedupStream]]: that stage is
-    * fingerprint-EQUALITY in bounded watermark state (cheap, first line
-    * of defense); this one is the full candidates-plus-verify semantics
-    * with unbounded lookback, priced like a real pipeline would run it —
-    * per batch, O(delta) DSP + a fingerprint-table join + candidate-only
-    * byte reads.
+    * re-decoded.
     *
-    * Each batch clip is fingerprinted ONCE: the batch is materialized
-    * with its fingerprint columns (one job, which also runs the stateful
-    * upstream exactly once), and the candidate join and the merged
-    * n_samples/f1/f2 columns both read them. An empty table reads
-    * schema-less, so the first batch pairs against the empty slice of
-    * itself — the same path, no emptiness job.
+    * Each micro-batch runs three batch-sized steps, each ending in a
+    * driver-side collect, instead of one lazy dedup-and-write plan:
+    *
+    *  1. FINGERPRINT: the batch is fingerprinted once and checkpointed
+    *     eagerly (one job, which also runs the stateful upstream exactly
+    *     once); its clip_ids are collected.
+    *  2. CANDIDATES: [[graft.operators.Dedup.audioCandidatesAgainst]]
+    *     pairs the batch's fingerprints against the sink's fingerprint
+    *     columns (no payload bytes) and the pair ids are collected. An
+    *     empty table reads schema-less, so the first batch pairs against
+    *     the empty slice of itself — the same path, no emptiness job.
+    *  3. VERIFY (only when there are pairs): the sink is read back
+    *     filtered to the corpus-side candidate ids — a predicate on the MOR
+    *     key, which Catalyst pushes below the latest-wins window, so only
+    *     candidate rows' bytes are shuffled — and joined with the batch's
+    *     candidate rows through the Direct verify (nothing persisted).
+    *
+    * Every collected set is bounded by the batch: candidate pairs are at
+    * most batch rows x bucket fan-out. FIRST ARRIVAL WINS: the corpus end
+    * of a pair never drops (it was first); a batch-batch pair drops its
+    * larger id. MOR deltas are folded by [[ClipTable.compactIfNeeded]]
+    * after each merge, as in [[runToTable]].
     *
     * Replay-safe: a replayed batch re-checks against the table, its
-    * survivors re-merge idempotently (same keys, same batch id), and
-    * rows it already merged are NOT self-matched (the delta's ids are
-    * excluded from the corpus side for that batch). */
+    * survivors re-merge idempotently (same keys, same batch id), and rows
+    * it already merged are NOT self-matched (the batch's ids are excluded
+    * from the corpus side). */
   def runDedupedToTable(df: DataFrame, table: ClipTable, checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
                         minCorr: Double = 0.8): StreamingQuery =
@@ -238,32 +250,42 @@ object ClipStreamJob {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+        val spark = batch0.sparkSession
+        import spark.implicits._
         // the whole row rides as the fingerprint's id; eager, so every
         // reader below (and the stateful upstream) sees one materialization
         val batch = Dedup.audioFingerprints(
             batch0.withColumn("_row", struct(col("*"))), idCol = "_row")
           .select(col("id.*"), col("n").as("n_samples"), col("f1"), col("f2"))
           .localCheckpoint(true)
-        val existing = table.read(batch.sparkSession)
+        val batchIds = batch.select("clip_id").as[String].collect().toSet
+        val existing = table.read(spark)
         // replay guard: rows of THIS batch already in the table must not
-        // self-match — exclude them from the corpus side
+        // self-match — exclude them from the corpus side (a local relation:
+        // broadcasting it starts no job)
         val corpus =
           if (existing.columns.isEmpty) batch.limit(0)
-          else existing.join(broadcast(batch.select("clip_id")), Seq("clip_id"), "left_anti")
+          else existing.join(broadcast(batchIds.toSeq.toDF("clip_id")), Seq("clip_id"), "left_anti")
         def fp(d: DataFrame) = d.select(col("clip_id").as("id"), col("sr_hz").as("sr"),
           col("n_samples").as("n"), col("f1"), col("f2"))
-        def payload(d: DataFrame, fresh: Boolean) =
-          d.select(col("clip_id").as("id"), col("bytes"), col("codec"), lit(fresh).as("fresh"))
-        Dedup.withCandidates {
-          // FIRST-ARRIVAL-WINS drop rule: the corpus end of a pair never
-          // drops (it was first); a batch-batch pair drops its larger id
-          // (ids are normalized id_a < id_b)
-          val drops = Dedup.audioNearDupAgainst(fp(corpus), fp(batch),
-              payload(corpus, fresh = false).unionByName(payload(batch, fresh = true)),
-              minCorr = minCorr)
-            .select(when(col("fresh_b"), col("id_b")).otherwise(col("id_a")).as("clip_id"))
-          table.merge(batch.join(broadcast(drops), Seq("clip_id"), "left_anti"), batchId)
+        val candidates = Dedup.audioCandidatesAgainst(fp(corpus), fp(batch))
+        val pairs = candidates.as[(String, String)].collect()
+        val drops = if (pairs.isEmpty) Set.empty[String] else {
+          val (fresh, stored) = pairs.flatMap(p => Seq(p._1, p._2)).distinct.partition(batchIds)
+          def payload(d: DataFrame, ids: Seq[String]) = d.filter(col("clip_id").isin(ids: _*))
+            .select(col("clip_id").as("id"), col("bytes"), col("codec"))
+          val rows =
+            if (stored.isEmpty) payload(batch, fresh)
+            else payload(existing, stored).unionByName(payload(batch, fresh))
+          Dedup.hydrateVerify(pairs.toSeq.toDF("id_a", "id_b"), rows,
+              Dedup.Rehydration.Direct, Dedup.alignedCorr, minCorr)
+            .select("id_a", "id_b").as[(String, String)].collect()
+            // FIRST-ARRIVAL-WINS drop rule: the corpus end of a pair never
+            // drops; a batch-batch pair drops its larger id (id_a < id_b)
+            .map { case (a, b) => if (batchIds(b)) b else a }.toSet
         }
+        table.merge(batch.filter(!col("clip_id").isin(drops.toSeq: _*)), batchId)
+        table.compactIfNeeded(spark)
         ()
       }
       .start()

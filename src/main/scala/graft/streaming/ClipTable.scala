@@ -167,7 +167,10 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
 
   private def repairKeysDir: Path = Paths.get(root, "_repairs")
 
-  private def conflictsWithRepairs(spark: SparkSession, incoming: DataFrame,
+  /** `incoming` is by-name: the MOR path passes a read-back of its delta,
+    * which costs a listing and a schema-inference job, so it must not be
+    * built while `_repairs/` is empty. */
+  private def conflictsWithRepairs(spark: SparkSession, incoming: => DataFrame,
                                    batchId: Long): Boolean = {
     if (batchId >= ClipTable.RepairBand) return false
     if (!nonEmptyDir(repairKeysDir)) return false
