@@ -16,6 +16,8 @@ import graft.fixtures.ClipGen
   *
   * Run: `sbt "runMain graft.BenchExtra [prefix[,prefix...]] [k]"`.
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+  * A query whose k runs all fail prints FAILED instead of a time, and the
+  * main then exits non-zero.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -89,14 +91,20 @@ object BenchExtra {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      val ts = try (1 to k).map(_ => once())
-        catch { case e: Throwable =>
-          println(s"[benchextra] $name FAILED: ${e.getMessage}"); Seq(-1.0) }
-      println(f"[benchextra] $name: min=${ts.min}%.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}")
-      name -> ts.min
+      // each run on its own: a failed run is reported and left out, never
+      // recorded as a timing
+      val ts = (1 to k).flatMap { r =>
+        try Some(once())
+        catch { case e: Exception =>
+          println(s"[benchextra] $name run $r FAILED: ${e.getMessage}"); None }
+      }
+      val best = if (ts.isEmpty) "FAILED" else f"${ts.min}%.3f"
+      println(s"[benchextra] $name: min=$best  runs=${ts.map(t => f"$t%.3f").mkString(",")}")
+      name -> best
     }
     println("[benchextra] summary: " +
-      results.map { case (n, t) => f"$n=$t%.3f" }.mkString(" "))
+      results.map { case (n, t) => s"$n=$t" }.mkString(" "))
     spark.stop()
+    if (results.exists(_._2 == "FAILED")) sys.exit(1)
   }
 }

@@ -138,10 +138,10 @@ object HashCombKeysKernel {
   /** Per-radius scheme cache: (chunk offsets, chunk masks, 4-subsets). */
   private final class Scheme(val offs: Array[Int], val masks: Array[Long],
                              val combos: Array[Array[Int]])
-  private val schemes = new Array[Scheme](32)
+  private val schemes = new java.util.concurrent.atomic.AtomicReferenceArray[Scheme](32)
 
   private def scheme(maxHamming: Int): Scheme = {
-    val cached = schemes(maxHamming)
+    val cached = schemes.get(maxHamming)
     if (cached != null) return cached
     val c = maxHamming + 4
     val base = 64 / c
@@ -159,7 +159,7 @@ object HashCombKeysKernel {
     }
     val combos = (0 until c).combinations(4).map(_.toArray).toArray
     val s = new Scheme(offs, masks, combos)
-    schemes.synchronized { schemes(maxHamming) = s }
+    schemes.set(maxHamming, s) // racing builders publish equal schemes
     s
   }
 

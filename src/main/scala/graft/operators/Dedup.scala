@@ -295,7 +295,7 @@ object Dedup {
 
   /** Quality-aware canonical selection — the step between clustering and
     * dropping that a real pipeline runs: per duplicate cluster
-    * ([[components]]/[[componentsStar]] output), keep the member with the
+    * ([[components]] output), keep the member with the
     * HIGHEST quality score (ties -> lowest id), not the lowest id. Two
     * bounded shuffles on the cluster label (per-cluster argmax + the
     * mapping join); quality rides a plain id join, so any scoring column
@@ -336,7 +336,7 @@ object Dedup {
       .select(coalesce(col(idA + "_l"), col(idA)).as("id_a"),
         coalesce(col(idB + "_l"), col(idB)).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-      .localCheckpoint(true) // referenced by components' rounds AND below
+      .localCheckpoint(true) // referenced by the emptiness probe AND components
     // all new pairs internal to existing clusters: nothing to relabel
     if (quotientPairs.isEmpty) return labels
     val q = components(quotientPairs, maxIters = maxIters)
@@ -356,23 +356,35 @@ object Dedup {
     relabeled.unionByName(newRows)
   }
 
+  /** Small-graph bound of [[components]]: a pair graph with at most this
+    * many distinct edges is collected and labeled on the driver. 2^18
+    * edges of two ids each stay a few tens of MB of driver heap; the dup
+    * graphs of every fixture are thousands of edges. */
+  private val DriverComponentsMaxEdges: Long = 1L << 18
+
   /** Duplicate-CLUSTER canonicalization: connected components over an
     * undirected near-dup pair list — every id is assigned the MINIMUM id
-    * reachable through the pair graph, i.e. the canonical representative
-    * a curation pass keeps (pairs alone don't answer "which copy
+    * reachable through the pair graph, in Spark's ordering of the id type
+    * (UTF-8 bytes for strings), i.e. the canonical representative a
+    * curation pass keeps (pairs alone don't answer "which copy
     * survives?" once duplicates chain A~B~C).
     *
-    * Iterative min-label propagation, the standard Spark shape for
-    * components (GraphX/GraphFrames do the same under the hood): each
-    * round joins the edge list with current labels and takes the
-    * neighborhood minimum — O(E) shuffle per round, rounds bounded by the
-    * component diameter (dup clusters are shallow; for DEEP graphs use
-    * [[componentsStar]], whose round count is logarithmic in component
-    * size instead of linear in diameter; `maxIters` guards
-    * pathological chains and non-convergence FAILS loudly rather than
-    * returning a half-propagated labeling). Deterministic: min() over a
-    * set has no ordering sensitivity. Intermediate labels are persisted
-    * per round and unpersisted eagerly.
+    * One prefix, one branch. The prefix checkpoints the oriented
+    * (hi > lo), distinct edge set; its edge count rides that job through
+    * an Observation. Then:
+    *  - at most [[DriverComponentsMaxEdges]] edges: one collect and a
+    *    union-find on the driver ([[driverComponents]]) — one job where a
+    *    Spark round costs several;
+    *  - more: star contraction ([[componentsStar]]), O(log n) rounds
+    *    whatever the component diameter. `maxIters` bounds those rounds,
+    *    and non-convergence FAILS loudly rather than returning a
+    *    half-contracted labeling.
+    * Both branches land the same labeling (spec-pinned on a 64-deep chain
+    * and the real near-dup graph) and are deterministic under
+    * partitioning.
+    *
+    * Self-pairs (id_a == id_b) are ignored: an id seen only in
+    * self-pairs is not emitted.
     *
     * Output: (id, canonical_id) for every id that appears in a pair —
     * rows not in any pair are their own canonical id by definition and
@@ -380,69 +392,77 @@ object Dedup {
     * full keep-list). */
   def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                  maxIters: Int = 25): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .persist(lvl)
-    // Each round's plan references the previous labels TWICE (the
-    // neighbor join and the convergence compare), so the LOGICAL PLAN
-    // doubles per round — persist caches data but not lineage, and by
-    // round ~25 plan analysis alone OOMs. localCheckpoint materializes
-    // AND truncates lineage each round (the standard iterative-graph
-    // idiom; block-manager storage, ContextCleaner reclaims superseded
-    // rounds when their references drop).
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      // the convergence count rides the CHECKPOINT JOB itself via an
-      // Observation (CollectMetrics): one job per round total, where the
-      // r4 form paid a second (cached-scan count) job per round. The
-      // eager localCheckpoint is a Dataset action, so the observed
-      // metric is complete when it returns.
-      val obs = org.apache.spark.sql.Observation(s"components-round-$i")
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label")).as("_changed"))
-        .observe(obs, sum(when(col("_changed"), 1L).otherwise(0L)).as("n_changed"))
-        .localCheckpoint(true)
-      changed = obs.get("n_changed") match {
-        case null => 0L // empty round (no labels at all)
-        case n: java.lang.Long => n.longValue()
-        case other => other.toString.toLong
-      }
-      labels = next.drop("_changed")
-      i += 1
-    }
-    edges.unpersist()
-    require(changed == 0,
-      s"components did not converge in $maxIters rounds — component diameter exceeds the bound; raise maxIters")
-    labels.select(col("id"), col("label").as("canonical_id"))
+    val (orig, edges, sig) = orientedEdges(pairs, idA, idB)
+    if (sig._1 <= DriverComponentsMaxEdges) driverComponents(edges)
+    else starRounds(orig, edges, sig, maxIters)
   }
 
-  /** Connected components in O(log n)-ish ROUNDS: alternating
-    * large-star / small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014 — public algorithm,
-    * re-derived here on DataFrames). Same output contract as
-    * [[components]]: (id, canonical_id = minimum id reachable) for every
-    * id appearing in a pair.
-    *
-    * Why a second shape: [[components]] (min-label propagation) pays one
-    * O(E) round per unit of component DIAMETER — the right trade for dup
-    * clusters, which are shallow, and cheaper per round (one join). A
-    * graph with deep chains (link graphs, session stitching, transitive
-    * reference closure) makes diameter the bottleneck at 10^12 edges;
-    * star contraction converges in O(log^2 n) rounds worst-case
-    * (O(log n) observed) regardless of diameter, at ~2x the per-round
-    * shuffle cost. Pick by graph shape; both are loud on non-convergence.
+  /** The large-graph branch of [[components]] run unconditionally, so d6
+    * and the specs exercise star contraction on small graphs too. */
+  private[graft] def componentsStar(pairs: DataFrame, idA: String = "id_a",
+      idB: String = "id_b", maxIters: Int = 25): DataFrame = {
+    val (orig, edges, sig) = orientedEdges(pairs, idA, idB)
+    starRounds(orig, edges, sig, maxIters)
+  }
+
+  /** The shared prefix of [[components]]: the non-self pairs as (a, b),
+    * and the (hi, lo) edge checkpoint with its signature. */
+  private def orientedEdges(pairs: DataFrame, idA: String, idB: String)
+      : (DataFrame, DataFrame, (Long, Long)) = {
+    val orig = pairs
+      .select(col(idA).as("a"), col(idB).as("b"))
+      .filter(col("a") =!= col("b"))
+    val (edges, sig) = edgeCheckpoint(orig.select(
+      greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo")), 0)
+    (orig, edges, sig)
+  }
+
+  /** Distinct (hi, lo) edges, eagerly checkpointed, with their signature
+    * (count, XOR of per-edge hashes) riding the checkpoint job through an
+    * Observation — zero extra jobs. The checkpoint also truncates
+    * lineage, so a star round's plan never grows with the round count. */
+  private def edgeCheckpoint(edges: DataFrame, round: Int): (DataFrame, (Long, Long)) = {
+    val obs = org.apache.spark.sql.Observation(s"components-$round")
+    val cp = edges.distinct()
+      .observe(obs, count(lit(1)).as("n_edges"),
+        expr("bit_xor(xxhash64(hi, lo))").as("x_edges"))
+      .localCheckpoint(true)
+    def l(v: Any): Long = v match {
+      case null => 0L
+      case n: java.lang.Long => n.longValue()
+      case other => other.toString.toLong
+    }
+    (cp, (l(obs.get("n_edges")), l(obs.get("x_edges"))))
+  }
+
+  /** Small branch of [[components]]: collect the edges and union-find
+    * them on the driver, then let Spark take the `min` id of each union-find
+    * root, so the canonical id follows Spark's ordering of the id type,
+    * never the JVM's. */
+  private def driverComponents(edges: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.HashMap[Any, Any]()
+    def find(v0: Any): Any = {
+      var v = parent.getOrElseUpdate(v0, v0)
+      while (parent(v) != v) { parent(v) = parent(parent(v)); v = parent(v) }
+      v
+    }
+    edges.collect().foreach(e => parent(find(e.get(0))) = find(e.get(1)))
+    val rows = parent.keys.toSeq.map(v => org.apache.spark.sql.Row(v, find(v)))
+    val id = edges.schema("hi")
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType(Seq(id.copy(name = "id"), id.copy(name = "_root"))))
+      .select(col("id"), min(col("id"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy("_root"))
+        .as("canonical_id"))
+  }
+
+  /** Large branch of [[components]]: alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014 — public algorithm, re-derived here on
+    * DataFrames). It converges in O(log^2 n) rounds worst-case (O(log n)
+    * observed) regardless of component diameter, so deep chains (link
+    * graphs, session stitching, transitive reference closure) cost no
+    * more rounds than shallow dup clusters.
     *
     * Each round (edges kept oriented hi > lo, distinct):
     *  - large-star: every node u connects its LARGER neighbors to
@@ -452,41 +472,16 @@ object Dedup {
     * Both steps preserve connectivity and never create self-edges; the
     * unique fixed point is disjoint stars centered at component minima.
     *
-    * Convergence is detected by an edge-set signature (count + XOR of
-    * per-edge hashes, riding the round's localCheckpoint action via
-    * Observation — zero extra jobs), and then PROVEN by a final
-    * certificate: every id carries exactly one label and every ORIGINAL
-    * pair's endpoints agree — a labeling that passes is a single star per
-    * component, centered at the component min (the min can never be a
-    * leaf: it would have to be the `hi` of an oriented edge). A signature
-    * collision or an early stop cannot slip through the certificate. */
-  def componentsStar(pairs: DataFrame, idA: String = "id_a",
-                     idB: String = "id_b", maxIters: Int = 25): DataFrame = {
-    val orig = pairs
-      .select(col(idA).as("a"), col(idB).as("b"))
-      .filter(col("a") =!= col("b"))
-    def sigOf(i: Int): (org.apache.spark.sql.Observation,
-        Column, Column) = {
-      val obs = org.apache.spark.sql.Observation(s"components-star-$i")
-      (obs, count(lit(1)).as("n_edges"),
-        expr("bit_xor(xxhash64(hi, lo))").as("x_edges"))
-    }
-    def readSig(obs: org.apache.spark.sql.Observation): (Long, Long) = {
-      def l(v: Any): Long = v match {
-        case null => 0L
-        case n: java.lang.Long => n.longValue()
-        case other => other.toString.toLong
-      }
-      (l(obs.get("n_edges")), l(obs.get("x_edges")))
-    }
-    val (obs0, n0, x0) = sigOf(0)
-    var edges = orig
-      .select(greatest(col("a"), col("b")).as("hi"),
-        least(col("a"), col("b")).as("lo"))
-      .distinct()
-      .observe(obs0, n0, x0)
-      .localCheckpoint(true)
-    var sig = readSig(obs0)
+    * Convergence is detected by the edge-set signature of
+    * [[edgeCheckpoint]], and then PROVEN by a final certificate: every id
+    * carries exactly one label and every ORIGINAL pair's endpoints agree
+    * — a labeling that passes is a single star per component, centered at
+    * the component min (the min can never be a leaf: it would have to be
+    * the `hi` of an oriented edge). A signature collision or an early
+    * stop cannot slip through the certificate. */
+  private def starRounds(orig: DataFrame, edges0: DataFrame, sig0: (Long, Long),
+                         maxIters: Int): DataFrame = {
+    var (edges, sig) = (edges0, sig0)
     var prev = (-1L, -1L)
     var i = 0
     while (sig != prev && i < maxIters) {
@@ -507,13 +502,13 @@ object Dedup {
         .filter(col("lo") =!= col("m"))
         .select(col("lo").as("hi"), col("m").as("lo"))
         .union(smins.select(col("hi"), col("m").as("lo")))
-      val (obs, n, x) = sigOf(i + 1)
-      edges = small.distinct().observe(obs, n, x).localCheckpoint(true)
-      sig = readSig(obs)
+      val (next, nextSig) = edgeCheckpoint(small, i + 1)
+      edges = next
+      sig = nextSig
       i += 1
     }
     require(sig == prev,
-      s"componentsStar did not converge in $maxIters rounds; raise maxIters")
+      s"components did not converge in $maxIters star rounds; raise maxIters")
     val labels = edges.select(col("hi").as("id"), col("lo").as("label"))
       .union(edges.select(col("lo").as("id"), col("lo").as("label")))
       .distinct()
@@ -527,7 +522,7 @@ object Dedup {
       .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
       .filter(col("la") =!= col("lb")).count()
     require(nMulti == 0 && nSplit == 0,
-      s"componentsStar certificate failed ($nMulti multi-labeled ids, " +
+      s"components star certificate failed ($nMulti multi-labeled ids, " +
         s"$nSplit split pairs) — converged state is not a star labeling")
     // the persist only serves the certificate's two jobs; the caller's
     // action recomputes labels from the CHECKPOINTED star edges (one tiny

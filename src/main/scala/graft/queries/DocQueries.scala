@@ -294,7 +294,8 @@ object DocQueries {
     }),
 
     // Duplicate-CLUSTER canonicalization: connected components over the
-    // near-dup pair graph (iterative min-label propagation) — the
+    // near-dup pair graph (driver union-find at this size, star
+    // contraction past Dedup's small-graph bound) — the
     // keep-list primitive a curation pass consumes once duplicates chain
     // A~B~C. Oracled against a DuckDB RECURSIVE transitive closure over
     // the SAME exact pair set d2 oracles.
@@ -319,10 +320,11 @@ object DocQueries {
         .orderBy("id")
     }),
 
-    // Same canonicalization, computed by alternating large-star/small-star
-    // contraction (O(log n) rounds vs min-label's O(diameter) — the deep-
-    // graph variant) against the SAME RECURSIVE-closure oracle: both
-    // algorithms must land the identical (id, min-reachable-id) labeling.
+    // Same canonicalization, forced onto components' large-graph branch:
+    // alternating large-star/small-star contraction (O(log n) rounds
+    // whatever the diameter), so this fixture-sized graph still covers it
+    // against the SAME RECURSIVE-closure oracle: both branches must land
+    // the identical (id, min-reachable-id) labeling.
     "d6_dup_clusters_star" -> ((s, dir) => {
       val pairs = Dedup.nearDupJaccard(augmented(s, dir), "text", "doc_id",
         threshold = 0.5, k = 32, bands = 16)
@@ -580,8 +582,8 @@ object DocQueries {
   // documents table ever gains micro-docs.
   // RECURSIVE transitive closure over the SAME exact pair set d2 oracles:
   // every node's canonical id = the minimum id reachable through the dup
-  // graph — shared by d5 (min-label propagation) and d6 (star
-  // contraction), which must both match it exactly.
+  // graph — shared by d5 (components' driver union-find) and d6 (its
+  // star contraction branch), which must both match it exactly.
   private lazy val dupClustersOracleSql: String =
     s"""WITH RECURSIVE $augmentedSql,
        |${tokSql("aug")},
@@ -681,8 +683,8 @@ object DocQueries {
          |ORDER BY id_a, id_b""".stripMargin,
     // RECURSIVE transitive closure over the SAME exact pair set d2
     // oracles: every node's canonical id = the minimum id reachable
-    // through the dup graph — must equal the engine's iterative min-label
-    // propagation exactly.
+    // through the dup graph — must equal the engine's connected
+    // components exactly.
     "d5_dup_clusters" -> dupClustersOracleSql,
     "d7_keep_best" ->
       s"""WITH RECURSIVE $augmentedSql,
@@ -703,8 +705,8 @@ object DocQueries {
          |           PARTITION BY label ORDER BY ql DESC, id) = 1)
          |SELECT q.id, b.keep_id FROM q JOIN best b USING (label)
          |ORDER BY q.id""".stripMargin,
-    // d6 runs the star-contraction algorithm against the SAME closure
-    // oracle — an independent SQL derivation both engine algorithms must
+    // d6 runs the star-contraction branch against the SAME closure
+    // oracle — an independent SQL derivation both engine branches must
     // match exactly.
     "d6_dup_clusters_star" -> dupClustersOracleSql,
     "d3_neardup_simhash" ->

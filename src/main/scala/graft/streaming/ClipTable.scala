@@ -62,12 +62,16 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * reading the old table and re-merging into a fresh root. */
   private def formatFile: Path = Paths.get(root, "_format")
   private val formatId = s"v2 keyDelim=nul buckets=$numBuckets keys=${keyCols.mkString(",")}"
+  /** Refuses a table whose marker names another format; true when the
+    * marker exists. */
+  private def checkFormat(): Boolean = Files.exists(formatFile) && {
+    val have = Files.readString(formatFile).trim
+    require(have == formatId,
+      s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
+    true
+  }
   private def checkOrStampFormat(): Unit = {
-    if (Files.exists(formatFile)) {
-      val have = Files.readString(formatFile).trim
-      require(have == formatId,
-        s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
-    } else {
+    if (!checkFormat()) {
       val hasData = nonEmptyDir(dataDir) || nonEmptyDir(compactedDir) ||
         nonEmptyDir(Paths.get(root, "delta")) || baseVersions.nonEmpty
       require(!hasData,
@@ -572,13 +576,7 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
       case Some(e) => incoming.unionByName(e, allowMissingColumns = true)
       case None => incoming
     }
-    // latest-batch-wins per key; ties within a batch keep one row
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_batch_id").desc, col("_part_id").desc)
-    val merged = unioned
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
+    val merged = morDedup(unioned)
 
     // Stage each touched bucket, then swap (rename = atomic per dir).
     val staging = Paths.get(root, s"_staging-$batchId")
@@ -719,11 +717,7 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * versions), or None for an empty table — shared by [[read]] (resolve
     * to latest) and [[readAsOf]] (cut first, then resolve). */
   private def readRawOpt(spark: SparkSession): Option[DataFrame] = {
-    if (Files.exists(formatFile)) {
-      val have = Files.readString(formatFile).trim
-      require(have == formatId,
-        s"table at $root was written with incompatible format '$have' (this reader: '$formatId')")
-    }
+    checkFormat()
     synchronized { if (mergeOnRead) recoverCompaction() else recoverSwaps() }
     val live = new scala.collection.mutable.ArrayBuffer[String]
     live ++= listDir(dataDir)
@@ -751,8 +745,9 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     Some(spark.read.option("mergeSchema", "true").parquet(live.toSeq: _*))
   }
 
-  /** Latest-batch-wins dedupe per key — the MOR resolution shared by
-    * read() and compact(). */
+  /** Latest-batch-wins dedupe per key (ties within a batch keep one row)
+    * — the resolution shared by read(), compact() and the copy-on-write
+    * merge. */
   private def morDedup(raw: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)

@@ -181,11 +181,12 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("components: chains collapse to the min id; clusters stay separate") {
     // a 5-node chain (diameter test: the min must walk the whole chain),
     // a triangle, an isolated pair — all in one pair list
-    val pairs = Seq(
+    val idPairs = Seq(
       (2L, 1L), (2L, 3L), (4L, 3L), (5L, 4L), // chain 1-2-3-4-5
       (10L, 11L), (11L, 12L), (10L, 12L),     // triangle
       (20L, 21L)                              // pair
-    ).toDF("id_a", "id_b")
+    )
+    val pairs = idPairs.toDF("id_a", "id_b")
     val got = Dedup.components(pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
@@ -194,44 +195,53 @@ class PipelineOpsSpec extends AnyFunSuite {
     val again = Dedup.components(pairs.repartition(7))
       .as[(Long, Long)].collect().toMap
     assert(again == got)
-    // a diameter beyond maxIters fails loudly instead of returning a
-    // half-propagated labeling
+    // String ids: the same topology, plus a pair whose minimum differs
+    // between Spark's UTF-8 byte order ("\uFF21" < the emoji) and the
+    // JVM's UTF-16 String.compareTo (the emoji's surrogate sorts first)
+    def s(i: Long) = f"n$i%02d"
+    val emoji = "\uD83D\uDE00"
+    val strPairs = (idPairs.map { case (a, b) => (s(a), s(b)) } :+
+      (emoji, "\uFF21")).toDF("id_a", "id_b")
+    val strGot = Dedup.components(strPairs).as[(String, String)].collect().toMap
+    assert(strGot == got.map { case (k, v) => s(k) -> s(v) } ++
+      Map(emoji -> "\uFF21", "\uFF21" -> "\uFF21"))
+    assert(Dedup.componentsStar(strPairs).as[(String, String)].collect().toMap == strGot)
+    // a 29-chain labels fully; star contraction on it with a round budget
+    // too small fails loudly instead of returning a half-contracted labeling
     val longChain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.components(longChain, maxIters = 3).collect()
-    }
-    assert(Dedup.components(longChain, maxIters = 40)
+    assert(Dedup.components(longChain)
       .as[(Long, Long)].collect().forall(_._2 == 1L))
+    intercept[IllegalArgumentException] {
+      Dedup.componentsStar(longChain, maxIters = 2).collect()
+    }
   }
 
-  test("components: convergence count rides the checkpoint job (1 job/round)") {
-    // r4 paid 2 ACTIONS per round (eager localCheckpoint + a cached-scan
-    // count()); the Observation now carries the changed-count on the
-    // checkpoint action itself. Raw Spark-job counts are AQE-stage
-    // granular (one propagation round materializes several query-stage
-    // jobs), so the crisp regression guard is: components must run ZERO
-    // `count` actions — counted via a QueryExecutionListener, which fires
-    // once per Dataset action with its name.
-    val counts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        if (funcName == "count") counts.incrementAndGet()
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+  test("components: a 29-chain costs a bounded number of Spark jobs") {
+    // a per-round algorithm pays jobs per unit of chain diameter (154 jobs
+    // here for a one-round-per-unit propagation); the driver union-find
+    // branch is the edge checkpoint, one collect and the caller's own
+    // action (5 jobs) whatever the diameter. Jobs are counted by a
+    // local-property tag so no other work in the session is counted.
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec") == "cc29"))
+          jobs.incrementAndGet()
     }
-    spark.listenerManager.register(l)
+    val longChain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec", "cc29")
     try {
-      val longChain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val got = Dedup.components(longChain, maxIters = 40)
-        .as[(Long, Long)].collect()
-      assert(got.forall(_._2 == 1L))
-      Thread.sleep(1500) // listener bus is async
-      assert(counts.get() == 0, s"components ran ${counts.get()} count " +
-        s"actions over ~29 rounds — the per-round convergence count is back")
-    } finally spark.listenerManager.unregister(l)
+      val got = Dedup.components(longChain, maxIters = 40).as[(Long, Long)].collect()
+      assert(got.length == 30 && got.forall(_._2 == 1L))
+    } finally {
+      sc.setLocalProperty("graft.spec", null)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get() > 0 && jobs.get() <= 8,
+      s"components ran ${jobs.get()} jobs on a 29-chain; per-round work is back")
   }
 
   test("componentsStar: same labeling as components; log rounds on a deep chain") {
@@ -249,18 +259,20 @@ class PipelineOpsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(again == got)
     // the algorithmic claim, asserted through the loud-convergence guard:
-    // a 64-node chain is diameter 63 (min-label needs 63 rounds — the
-    // existing components test shows maxIters=3 fails a 29-chain), but
-    // star contraction must finish within 10 rounds (~log2 + slack)
+    // a 64-node chain is diameter 63, but star contraction must finish
+    // within 10 rounds (~log2 + slack); the public entry point (driver
+    // union-find at this size) lands the same labeling
     val chain64 = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val starLabels = Dedup.componentsStar(chain64, maxIters = 10)
       .as[(Long, Long)].collect()
     assert(starLabels.length == 64 && starLabels.forall(_._2 == 1L))
-    assert(Dedup.components(chain64, maxIters = 70)
+    assert(Dedup.components(chain64)
       .as[(Long, Long)].collect().toMap == starLabels.toMap)
-    // self-pairs are dropped, not self-edges in the contraction
+    // self-pairs are ignored on both branches
     val selfy = Seq((7L, 7L), (8L, 9L)).toDF("id_a", "id_b")
     assert(Dedup.componentsStar(selfy).as[(Long, Long)].collect().toMap ==
+      Map(8L -> 8L, 9L -> 8L))
+    assert(Dedup.components(selfy).as[(Long, Long)].collect().toMap ==
       Map(8L -> 8L, 9L -> 8L))
   }
 
