@@ -16,13 +16,15 @@ import graft.fixtures.ClipGen
   *
   * Run: `sbt "runMain graft.BenchExtra [prefix[,prefix...]] [k]"`.
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+  * SPARK_GRAFT_CPUS defaults to the JVM's available processors.
   * A query whose k runs all fail prints FAILED instead of a time, and the
   * main then exits non-zero.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val filter = if (args.nonEmpty) args(0) else "all"
     // clamp like the frozen Bench's best-of-k depths: k < 1 would run a
     // query zero times and crash on ts.min after the warm-up work

@@ -201,11 +201,8 @@ object Dedup {
     * that hash-shuffles AND sorts the whole payload column to serve a
     * dup-rate-sized candidate set (it filled the sandbox disk at sf1); a
     * reduction per pair side would scan the payload twice. Only candidate
-    * rows' payload ever reaches a join. Candidate sets too large to
-    * broadcast whole have the storage-bucketed fallback
-    * ClipTable.readForKeys (per-bucket broadcasts over dir-pruned bucket
-    * reads). Direct: the pair set is referenced once — no persist, one
-    * payload pass. */
+    * rows' payload ever reaches a join. Direct: the pair set is
+    * referenced once — no persist, one payload pass. */
   private[graft] def hydrateVerify(pairs: DataFrame, payload: DataFrame,
       strategy: Rehydration, score: Column, atLeast: Double): DataFrame = {
     val direct = choosesDirect(payload, strategy)

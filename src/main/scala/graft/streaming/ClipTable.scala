@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   * reproduces the two Iceberg properties the north rule needs, behind a
   * small API a real catalog could replace:
   *
-  *   1. **Partition-scoped copy-on-write MERGE by key** — the reference's
-  *      idempotent upsert sink (`/root/reference/storage/mongo.go:48-77`:
-  *      deterministic key, re-runs overwrite rather than duplicate). A
-  *      batch only rewrites the hash-buckets it touches — at 10^12-row
-  *      scale a micro-batch merge is O(touched partitions), never O(table).
+  *   1. **Merge-on-read MERGE by key** — the reference's idempotent
+  *      upsert sink (dataflowkit `storage/mongo.go:48-77`: deterministic
+  *      key, re-runs overwrite rather than duplicate). A batch writes one
+  *      delta and reads nothing back, so a micro-batch merge is O(batch),
+  *      never O(table); readers resolve latest-wins per key over the
+  *      latest compacted base plus the unfolded deltas, and compaction
+  *      bounds how many deltas that is.
   *   2. **Replay idempotence by construction** — `foreachBatch` may replay
   *      a batch after failure; merge keeps the newest row per key
   *      (latest-batch-wins on `_batch_id`), so re-merging the same data is
@@ -24,19 +26,24 @@ import org.apache.spark.sql.functions._
   *      markers under `_commits/` record batch completion for
   *      observability/lineage, not gating.
   *
-  * Layout: `<root>/data/bucket=<b>/merged-<batchId>.parquet` (+ per-batch
-  * commit markers under `<root>/_commits/`). Readers list only live files.
+  * Layout: one `<root>/delta/batch=<batchId>/` per merge, one
+  * `<root>/compacted-v<N>/` per compaction (files clustered by the
+  * `_bucket` hash column), per-batch commit markers under
+  * `<root>/_commits/`. Readers list only live files. Merge-on-read is the
+  * only layout: `mergeOnRead` accepts just `true` and stays so callers
+  * that name it keep compiling.
   */
 final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int = 16,
-    mergeOnRead: Boolean = false, gcGraceMs: Long = 300000L,
+    mergeOnRead: Boolean = true, gcGraceMs: Long = 300000L,
     leaseTimeoutMs: Long = 600000L, repairConflictPolicy: String = "fail") {
+  require(mergeOnRead,
+    "the copy-on-write layout (mergeOnRead = false) was removed; merge-on-read is the only layout")
   require(Seq("fail", "warn").contains(repairConflictPolicy),
     s"repairConflictPolicy must be 'fail' or 'warn', got '$repairConflictPolicy'")
 
   private def dataDir: Path = Paths.get(root, "data")
   private def commitsDir: Path = Paths.get(root, "_commits")
   private def deltaDir(batchId: Long): Path = Paths.get(root, "delta", s"batch=$batchId")
-  private def bucketDir(b: Int): Path = dataDir.resolve(s"bucket=$b")
 
   /** List a directory eagerly, closing the stream (Files.list holds an FD
     * until closed — a leak under sub-second triggers where recovery runs
@@ -62,13 +69,21 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * reading the old table and re-merging into a fresh root. */
   private def formatFile: Path = Paths.get(root, "_format")
   private val formatId = s"v2 keyDelim=nul buckets=$numBuckets keys=${keyCols.mkString(",")}"
-  /** Refuses a table whose marker names another format; true when the
-    * marker exists. */
-  private def checkFormat(): Boolean = Files.exists(formatFile) && {
-    val have = Files.readString(formatFile).trim
-    require(have == formatId,
-      s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
-    true
+  /** Refuses a table this build cannot read: a marker naming another
+    * format, or files under `data/` — the copy-on-write layout of older
+    * builds, which the merge-on-read reader would silently read as empty.
+    * True when the marker exists. */
+  private def checkFormat(): Boolean = {
+    val marked = Files.exists(formatFile)
+    if (marked) {
+      val have = Files.readString(formatFile).trim
+      require(have == formatId,
+        s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
+    }
+    require(!nonEmptyDir(dataDir),
+      s"table at $root holds copy-on-write files under data/, a layout this build no longer " +
+        "reads; re-merge into a fresh root")
+    marked
   }
   private def checkOrStampFormat(): Unit = {
     if (!checkFormat()) {
@@ -88,11 +103,13 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
   private def bucketOf = pmod(crc32(keyExpr), lit(numBuckets)).cast("int")
 
   /** Exactly-once MERGE of `batch` into the table, keyed by `keyCols`,
-    * latest `_batch_id` wins.
+    * latest `_batch_id` wins: one delta write per batch (a single job, no
+    * existing-data read, no renames); readers dedupe latest-batch-wins.
     *
-    * Replay-safe WITHOUT a skip guard: re-merging the same batch is a
-    * fixed point (same keys, same `_batch_id`, latest-wins dedupe), which
-    * is exactly the reference's idempotency mechanism — deterministic keys
+    * Replay-safe WITHOUT a skip guard: the per-batch delta dir is
+    * OVERWRITTEN on replay, so re-merging the same batch is a fixed point
+    * (same dir, same keys, same `_batch_id`). That is exactly the
+    * reference's idempotency mechanism — deterministic keys
     * + upsert (`/root/reference/scrape/scrape.go:604`,
     * `/root/reference/storage/mongo.go:48-77`). Skipping the work on
     * replay would also skip the stateful upstream of the foreachBatch
@@ -102,50 +119,26 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     val spark = batch.sparkSession
     checkOrStampFormat()
     Files.createDirectories(commitsDir)
-    val incoming0 = batch
+    batch
       .withColumn("_batch_id", lit(batchId))
       .withColumn("_part_id", spark_partition_id()) // per-partition lineage
       .withColumn("_bucket", bucketOf)
-
-    if (mergeOnRead) {
-      // MERGE-ON-READ: one delta write per batch — the cheapest possible
-      // sink path (single job, no existing-data read, no renames). The
-      // per-batch delta dir is OVERWRITTEN on replay (same batchId =>
-      // same dir => fixed point); readers dedupe latest-batch-wins.
-      incoming0.write.mode(SaveMode.Overwrite).parquet(deltaDir(batchId).toString)
-      // Repair-contract check AFTER the write, on a read-back of the
-      // just-written delta: checking the batch plan directly would
-      // execute the stateful upstream a second time (state stores would
-      // re-commit within one batch). On conflict under 'fail' the delta
-      // is removed before throwing — MOR readers list delta dirs
-      // unconditionally, so leaving it would expose the stale rows the
-      // contract exists to prevent.
-      if (conflictsWithRepairs(spark,
-          spark.read.parquet(deltaDir(batchId).toString), batchId)) {
-        if (repairConflictPolicy == "fail") {
-          deleteRecursively(deltaDir(batchId))
-          failRepairConflict(batchId)
-        } else warnRepairConflict(batchId)
-      }
-      commit(batchId)
-      return
+      .write.mode(SaveMode.Overwrite).parquet(deltaDir(batchId).toString)
+    // Repair-contract check AFTER the write, on a read-back of the
+    // just-written delta: checking the batch plan directly would
+    // execute the stateful upstream a second time (state stores would
+    // re-commit within one batch). On conflict under 'fail' the delta
+    // is removed before throwing — readers list delta dirs
+    // unconditionally, so leaving it would expose the stale rows the
+    // contract exists to prevent.
+    if (conflictsWithRepairs(spark,
+        spark.read.parquet(deltaDir(batchId).toString), batchId)) {
+      if (repairConflictPolicy == "fail") {
+        deleteRecursively(deltaDir(batchId))
+        failRepairConflict(batchId)
+      } else warnRepairConflict(batchId)
     }
-
-    Files.createDirectories(dataDir)
-    // COPY-ON-WRITE path. Persist: merge needs two actions (touched-buckets
-    // scan + write); in foreachBatch the batch plan contains the STATEFUL
-    // upstream — running it twice would re-commit state stores within one
-    // batch (correctness hazard + double work).
-    val incoming = incoming0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // persisted => the conflict check is a cached-block scan, and on
-      // 'fail' the table has not been touched yet
-      if (conflictsWithRepairs(spark, incoming, batchId)) {
-        if (repairConflictPolicy == "fail") failRepairConflict(batchId)
-        else warnRepairConflict(batchId)
-      }
-      mergePersisted(spark, incoming, batchId)
-    } finally incoming.unpersist()
+    commit(batchId)
   }
 
   // ------------------------------------------------- repair-key tracking
@@ -171,7 +164,7 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
 
   private def repairKeysDir: Path = Paths.get(root, "_repairs")
 
-  /** `incoming` is by-name: the MOR path passes a read-back of its delta,
+  /** `incoming` is by-name: merge passes a read-back of its delta,
     * which costs a listing and a schema-inference job, so it must not be
     * built while `_repairs/` is empty. */
   private def conflictsWithRepairs(spark: SparkSession, incoming: => DataFrame,
@@ -195,8 +188,8 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
         s"for those keys are superseded by the repair band (stale reads)")
 
   /** Highest batch id this table has committed (repairs included); -1 for
-    * an empty table. Commit markers are the source of truth — both merge
-    * paths write one. */
+    * an empty table. Commit markers are the source of truth — every merge
+    * writes one. */
   def maxCommittedBatchId(): Long = {
     val ids = listDir(commitsDir).flatMap { p =>
       val n = p.getFileName.toString
@@ -482,7 +475,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * superseded sources unscheduled — read() then sees base+delta
     * overlap, which latest-batch-wins resolves identically. */
   def compact(spark: SparkSession): Unit = synchronized {
-    if (!mergeOnRead) return
     recoverCompaction() // legacy _compact-trash from a pre-versioned crash
     val gcSet = gcScheduledRels
     val base = latestBase.filterNot(p => gcSet.contains(relOf(p)))
@@ -518,28 +510,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     }
   }
 
-  /** Crash recovery for the COW bucket swap: the swap is two renames
-    * (live -> _trash, staged -> live); a crash between them leaves the
-    * bucket dir missing with its content parked in `_trash-<batch>-<b>`.
-    * Restore any such bucket before merging or reading (the replayed batch
-    * then re-merges over the restored data — idempotent by latest-wins).
-    * Completed swaps (live dir present and non-empty) just drop their
-    * leftover trash; stale `_staging-*` dirs from crashed runs are removed
-    * on the next merge of the same batch (SaveMode.Overwrite). */
-  private def recoverSwaps(): Unit = {
-    listDir(Paths.get(root)).foreach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith("_trash-")) {
-        val b = name.substring(name.lastIndexOf('-') + 1).toInt
-        val dst = bucketDir(b)
-        if (!nonEmptyDir(dst)) {
-          deleteRecursively(dst)
-          Files.move(p, dst, StandardCopyOption.ATOMIC_MOVE)
-        } else deleteRecursively(p)
-      }
-    }
-  }
-
   /** Incremental maintenance policy: fold deltas into the compacted base
     * once more than `maxDeltas` accumulate. Bounds the MOR reader's
     * latest-wins window to O(base + maxDeltas·batch) without requiring
@@ -548,7 +518,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * compaction ran. Call from a maintenance hook or between batches (it
     * is synchronized with merge/read on this instance). */
   def compactIfNeeded(spark: SparkSession, maxDeltas: Int = 16): Boolean = synchronized {
-    if (!mergeOnRead) return false
     // only UNFOLDED deltas count toward the threshold — GC-scheduled ones
     // are already in the latest base and merely await their grace window
     val gcSet = gcScheduledRels
@@ -557,138 +526,33 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     else { gcSweep(); false }
   }
 
-  private def mergePersisted(spark: SparkSession, incoming: DataFrame,
-                             batchId: Long): Unit = {
-    recoverSwaps()
-    // Which buckets does this batch touch? (bounded by numBuckets)
-    val touched = incoming.select("_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) { commit(batchId); return }
-
-    val existingDirs = touched.map(bucketDir).filter(Files.exists(_))
-    val existing: Option[DataFrame] =
-      if (existingDirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true") // evolved buckets
-        .parquet(existingDirs.map(_.toString).toIndexedSeq: _*)
-        .withColumn("_bucket", bucketOf))
-
-    val unioned = existing match {
-      case Some(e) => incoming.unionByName(e, allowMissingColumns = true)
-      case None => incoming
-    }
-    val merged = morDedup(unioned)
-
-    // Stage each touched bucket, then swap (rename = atomic per dir).
-    val staging = Paths.get(root, s"_staging-$batchId")
-    deleteRecursively(staging)
-    merged
-      .repartition(touched.length.max(1), col("_bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("_bucket")
-      .parquet(staging.toString)
-    touched.foreach { b =>
-      val src = staging.resolve(s"_bucket=$b")
-      val dst = bucketDir(b)
-      val trash = Paths.get(root, s"_trash-$batchId-$b")
-      if (Files.exists(dst)) Files.move(dst, trash, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      else Files.createDirectories(dst) // bucket emptied by merge (unlikely)
-      deleteRecursively(trash)
-    }
-    deleteRecursively(staging)
-    commit(batchId)
-  }
-
   private def commit(batchId: Long): Unit =
     Files.writeString(commitsDir.resolve(s"batch-$batchId"),
       java.time.Instant.now().toString)
 
-  /** Storage-bucketed (SPJ-style) candidate rehydration — the fallback for
-    * key sets beyond a single broadcast's ceiling (the last documented
-    * scale limit of the near-dup family: Dedup's semi-join reduction
-    * broadcasts the WHOLE candidate id set, fine to ~10^8 ids, not past).
-    * This table's layout already partitions by `bucket = crc32(key) %
-    * numBuckets`, so the join can be bucket-ALIGNED the way an Iceberg
-    * storage-partitioned join would: for each bucket, read ONLY that
-    * bucket's directory (file pruning, no table-wide scan) and semi-join
-    * it against ONLY that bucket's slice of the key set (an explicit
-    * broadcast of |keys|/numBuckets rows). No corpus-wide exchange exists
-    * anywhere in the plan — each per-bucket broadcast is numBuckets times
-    * smaller than the whole key set, so the viable key-set size scales
-    * linearly with numBuckets (spec: BucketedRehydrationSpec proves plan
-    * shape and output identity with auto-broadcast disabled).
-    *
-    * Returns the table rows whose key tuple appears in `keys` (COW layout
-    * only — MOR deltas are not bucket-partitioned until compaction folds
-    * them; compact first or read() + filter). `keys` is persisted here
-    * (referenced once per bucket); lifecycle follows the caller, as with
-    * Dedup's candidate stage. */
   /** POINT lookup — the primary-key GET a serving layer runs against the
-    * sink: resolve the key's hash bucket DRIVER-side (the same
-    * CRC32-of-NUL-joined-keys as the write path) and touch only
-    * bucket-sized data. COW: read exactly the one `bucket=<b>` directory.
-    * MOR: the `_bucket = b` predicate file-prunes via parquet min/max
-    * stats (compaction repartitions by bucket, so each base file holds
-    * one bucket) before latest-wins resolution. O(bucket) I/O instead of
-    * O(table) either way. */
+    * sink: [[read]] restricted to one key tuple. The key predicate is on
+    * the latest-wins window's partition columns, so filtering the row
+    * versions before resolution gives the same rows; it reaches the
+    * parquet scan and can skip row groups by min/max stats, but it prunes
+    * no files: the scan still lists and opens every live base and delta
+    * file. An empty table returns the schema-less frame, as [[read]]
+    * does. */
   def lookup(spark: SparkSession, keyValues: Seq[String]): DataFrame = {
     require(keyValues.length == keyCols.length,
       s"expected ${keyCols.length} key values (${keyCols.mkString(",")}), " +
         s"got ${keyValues.length}")
-    val crc = new java.util.zip.CRC32()
-    crc.update(keyValues.mkString("\u0000")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val b = java.lang.Long.remainderUnsigned(crc.getValue, numBuckets.toLong).toInt
-    val keyFilter = keyCols.zip(keyValues)
-      .map { case (c, v) => col(c) === v }.reduce(_ && _)
-    if (!mergeOnRead) {
-      val dir = bucketDir(b)
-      if (!nonEmptyDir(dir)) {
-        // MISS with an empty key bucket: still return the TABLE schema
-        // (read from any populated bucket, limit 0 — the optimizer folds
-        // it to an empty LocalRelation, no I/O) so callers selecting
-        // columns on a miss don't hit AnalysisException (ADVICE r5).
-        // Only a fully-empty table degrades to the schema-less frame,
-        // same as read().
-        (0 until numBuckets).map(bucketDir).find(nonEmptyDir) match {
-          case None => spark.emptyDataFrame
-          case Some(d) =>
-            spark.read.option("mergeSchema", "true").parquet(d.toString)
-              .limit(0).filter(keyFilter)
-        }
-      }
-      else spark.read.option("mergeSchema", "true").parquet(dir.toString)
-        .filter(keyFilter)
-    } else {
-      read(spark).filter(col("_bucket") === b).filter(keyFilter)
+    readRawOpt(spark).fold(spark.emptyDataFrame) { raw =>
+      morDedup(raw.filter(keyCols.zip(keyValues)
+        .map { case (c, v) => col(c) === v }.reduce(_ && _)))
     }
   }
 
-  def readForKeys(spark: SparkSession, keys: DataFrame): DataFrame = {
-    require(!mergeOnRead,
-      "readForKeys needs the bucket-partitioned COW layout (MOR deltas are unbucketed)")
-    synchronized { recoverSwaps() }
-    val keyed = keys.select(keyCols.map(col): _*).distinct()
-      .withColumn("_kbucket", bucketOf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parts = (0 until numBuckets).flatMap { b =>
-      val dir = bucketDir(b)
-      if (!nonEmptyDir(dir)) None
-      else Some(
-        spark.read.option("mergeSchema", "true").parquet(dir.toString)
-          .join(broadcast(keyed.filter(col("_kbucket") === b).drop("_kbucket")),
-            keyCols, "leftsemi"))
-    }
-    if (parts.isEmpty) spark.emptyDataFrame
-    else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Current table contents (lineage columns included). MOR readers merge
-    * the compacted base with all deltas, latest-batch-wins per key. */
-  def read(spark: SparkSession): DataFrame = readRawOpt(spark) match {
-    case None => spark.emptyDataFrame
-    case Some(raw) => if (!mergeOnRead) raw else morDedup(raw)
-  }
+  /** Current table contents (lineage columns included): the latest
+    * compacted base merged with all unfolded deltas, latest-batch-wins per
+    * key. */
+  def read(spark: SparkSession): DataFrame =
+    readRawOpt(spark).fold(spark.emptyDataFrame)(morDedup)
 
   /** TIME-TRAVEL read (the Iceberg snapshot-read analog): the table as of
     * batch `maxBatchId` — row versions written by batches <= the cut,
@@ -697,57 +561,45 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * plain min/max-prunable predicate on the scan (per-batch delta dirs
     * skip entirely).
     *
-    * Exactness contract: on an uncompacted MOR table the snapshot is
-    * exact for ANY cut (all row versions still exist). Compaction — like
-    * Iceberg snapshot expiry — collapses superseded versions, and a COW
-    * merge does the same at write time; after either, an as-of read
-    * returns each key's oldest SURVIVING version at-or-below the cut and
-    * drops keys whose surviving version is newer. Repair-band batches
-    * (ClipTable.RepairBand+) sit above every stream epoch, so a
-    * stream-time cut naturally reads the pre-repair state. */
+    * Exactness contract: on an uncompacted table the snapshot is exact
+    * for ANY cut (all row versions still exist). Compaction — like
+    * Iceberg snapshot expiry — collapses superseded versions; after it,
+    * an as-of read returns each key's newest SURVIVING version
+    * at-or-below the cut and drops keys whose surviving versions are all
+    * newer. Repair-band batches (ClipTable.RepairBand+) sit above every
+    * stream epoch, so a stream-time cut naturally reads the pre-repair
+    * state. */
   def readAsOf(spark: SparkSession, maxBatchId: Long): DataFrame =
-    readRawOpt(spark) match {
-      case None => spark.emptyDataFrame
-      case Some(raw) =>
-        val cut = raw.filter(col("_batch_id") <= maxBatchId)
-        if (!mergeOnRead) cut else morDedup(cut)
-    }
+    readRawOpt(spark).fold(spark.emptyDataFrame)(raw =>
+      morDedup(raw.filter(col("_batch_id") <= maxBatchId)))
 
   /** Live files as one un-resolved DataFrame (all surviving row
     * versions), or None for an empty table — shared by [[read]] (resolve
-    * to latest) and [[readAsOf]] (cut first, then resolve). */
+    * to latest), [[lookup]] and [[readAsOf]] (cut first, then resolve). */
   private def readRawOpt(spark: SparkSession): Option[DataFrame] = {
     checkFormat()
-    synchronized { if (mergeOnRead) recoverCompaction() else recoverSwaps() }
-    val live = new scala.collection.mutable.ArrayBuffer[String]
-    live ++= listDir(dataDir)
-      .filter(d => d.getFileName.toString.startsWith("bucket=") && nonEmptyDir(d))
-      .map(_.toString)
-    if (mergeOnRead) {
-      // latest base + unfolded deltas; GC-scheduled dirs are excluded
-      // (their content is in the latest base) but stay on disk through
-      // the grace window for readers that already resolved their files
-      val gcSet = gcScheduledRels
-      latestBase.filterNot(p => gcSet.contains(relOf(p)))
-        .foreach(b => live += b.toString)
-      live ++= deltaBatchDirs
-        .filterNot(d => gcSet.contains(relOf(d))).map(_.toString)
-    }
+    synchronized { recoverCompaction() }
+    // latest base + unfolded deltas; GC-scheduled dirs are excluded
+    // (their content is in the latest base) but stay on disk through
+    // the grace window for readers that already resolved their files
+    val gcSet = gcScheduledRels
+    val live = (latestBase.toSeq ++ deltaBatchDirs)
+      .filterNot(p => gcSet.contains(relOf(p))).map(_.toString)
     if (live.isEmpty) return None
     // mergeSchema: batches may evolve the schema (add columns) — without
     // it the parquet reader takes ONE file's schema and silently drops
-    // the others' new columns (COW unions by name on merge; MOR reads the
-    // heterogeneous base+delta set directly, so the union happens here).
+    // the others' new columns (the heterogeneous base+delta set is read
+    // directly, so the union by name happens here).
     // Cost note: schema merging reads every file footer at plan time; the
     // file count is bounded by compaction (base + <= maxDeltas deltas) so
     // this stays O(buckets + deltas), not O(history). A real Iceberg
     // catalog tracks the schema in table metadata and skips this walk.
-    Some(spark.read.option("mergeSchema", "true").parquet(live.toSeq: _*))
+    Some(spark.read.option("mergeSchema", "true").parquet(live: _*))
   }
 
   /** Latest-batch-wins dedupe per key (ties within a batch keep one row)
-    * — the resolution shared by read(), compact() and the copy-on-write
-    * merge. */
+    * — the resolution shared by read(), readAsOf(), lookup() and
+    * compact(). */
   private def morDedup(raw: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)

@@ -17,8 +17,7 @@ object CrashStreamChild {
     require(args.length == 3, "usage: CrashStreamChild <liveDir> <tableDir> <ckptDir>")
     val live = args(0); val tableDir = args(1); val ckpt = args(2)
     val spark = GraftSession.create("local[2]", 2, "graft-crash-child")
-    val table = ClipTable(tableDir, Seq("w_start_ms", "codec", "sr_hz"),
-      numBuckets = 2, mergeOnRead = true)
+    val table = ClipTable(tableDir, Seq("w_start_ms", "codec", "sr_hz"), numBuckets = 2)
     val q = ClipStreamJob.runToTable(
       ClipStreamJob.tumblingCounts(
         ClipStreamJob.readClipStream(spark, live, maxFilesPerTrigger = 1)),

@@ -133,8 +133,7 @@ object KillSoak {
     require(fin.exitValue() == 0, s"final child failed (${fin.exitValue()}): " +
       new String(Files.readAllBytes(logDir.resolve("final.out"))).takeRight(2000))
 
-    val table = ClipTable(tableDir, Seq("w_start_ms", "codec", "sr_hz"),
-      numBuckets = 2, mergeOnRead = true)
+    val table = ClipTable(tableDir, Seq("w_start_ms", "codec", "sr_hz"), numBuckets = 2)
     val got = table.read(spark)
       .select("w_start_ms", "codec", "sr_hz", "n_clips", "sum_dur_ms")
       .orderBy("w_start_ms", "codec", "sr_hz").collect().map(_.toSeq).toSeq

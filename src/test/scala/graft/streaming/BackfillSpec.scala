@@ -56,52 +56,48 @@ class BackfillSpec extends AnyFunSuite {
   }
 
   test("schema evolution: a later batch adds a column, both modes keep it") {
-    // MOR reads the heterogeneous base+delta file set directly — without
-    // mergeSchema the reader took one file's schema and silently dropped
-    // the new column; COW unions by name at merge time. Old rows read
+    // The reader reads the heterogeneous base+delta file set directly —
+    // without mergeSchema it took one file's schema and silently dropped
+    // the new column. Old rows read
     // NULL for the new column, evolved rows keep their value, and
     // compaction preserves the evolved schema.
-    for (mor <- Seq(true, false)) {
-      val dir = Files.createTempDirectory(s"tbl-evolve-$mor").toString
-      val t = ClipTable(dir, Seq("k"), numBuckets = 2, mergeOnRead = mor,
-        gcGraceMs = 0L)
-      t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
-      t.merge(Seq(("b", 20, "en"), ("c", 30, "de")).toDF("k", "v", "lang"), 1)
-      def check(tab: ClipTable): Unit = {
-        val got = tab.read(spark).select("k", "v", "lang")
-          .as[(String, Int, Option[String])].collect()
-          .map(r => r._1 -> ((r._2, r._3))).toMap
-        assert(got == Map("a" -> (1, None), "b" -> (20, Some("en")),
-          "c" -> (30, Some("de"))), s"mor=$mor: $got")
-      }
-      check(t)
-      if (mor) { t.compact(spark); check(t) }
+    val dir = Files.createTempDirectory("tbl-evolve").toString
+    val t = ClipTable(dir, Seq("k"), numBuckets = 2, gcGraceMs = 0L)
+    t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
+    t.merge(Seq(("b", 20, "en"), ("c", 30, "de")).toDF("k", "v", "lang"), 1)
+    def check(tab: ClipTable): Unit = {
+      val got = tab.read(spark).select("k", "v", "lang")
+        .as[(String, Int, Option[String])].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      assert(got == Map("a" -> (1, None), "b" -> (20, Some("en")),
+        "c" -> (30, Some("de"))), got.toString)
     }
+    check(t)
+    t.compact(spark)
+    check(t)
   }
 
   test("stream-band merge to a repaired key fails loudly (both modes)") {
     // ADVICE r4 (medium): the 'only repair behind the watermark' contract
     // was documented but unenforced — a violating stream write yielded
     // silently stale reads. Now it aborts the batch (default policy).
-    for (mor <- Seq(true, false)) {
-      val dir = Files.createTempDirectory(s"tbl-guard-$mor").toString
-      val t = ClipTable(dir, Seq("k"), numBuckets = 2, mergeOnRead = mor)
-      t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
-      t.repair(Seq(("b", 20)).toDF("k", "v"))
-      assert(rows(t) == Map("a" -> 1, "b" -> 20))
-      // stream write to the repaired key: loud failure, table unchanged
-      val e = intercept[IllegalStateException] {
-        t.merge(Seq(("b", 999), ("c", 3)).toDF("k", "v"), 1)
-      }
-      assert(e.getMessage.contains("repair"))
-      assert(rows(t) == Map("a" -> 1, "b" -> 20), s"mor=$mor leaked stale rows")
-      // untouched keys still merge normally
-      t.merge(Seq(("c", 3)).toDF("k", "v"), 2)
-      assert(rows(t) == Map("a" -> 1, "b" -> 20, "c" -> 3))
-      // re-running the repair itself stays legal (repair-band skips the check)
-      t.repair(Seq(("b", 21)).toDF("k", "v"))
-      assert(rows(t) == Map("a" -> 1, "b" -> 21, "c" -> 3))
+    val dir = Files.createTempDirectory("tbl-guard").toString
+    val t = ClipTable(dir, Seq("k"), numBuckets = 2)
+    t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
+    t.repair(Seq(("b", 20)).toDF("k", "v"))
+    assert(rows(t) == Map("a" -> 1, "b" -> 20))
+    // stream write to the repaired key: loud failure, table unchanged
+    val e = intercept[IllegalStateException] {
+      t.merge(Seq(("b", 999), ("c", 3)).toDF("k", "v"), 1)
     }
+    assert(e.getMessage.contains("repair"))
+    assert(rows(t) == Map("a" -> 1, "b" -> 20), "leaked stale rows")
+    // untouched keys still merge normally
+    t.merge(Seq(("c", 3)).toDF("k", "v"), 2)
+    assert(rows(t) == Map("a" -> 1, "b" -> 20, "c" -> 3))
+    // re-running the repair itself stays legal (repair-band skips the check)
+    t.repair(Seq(("b", 21)).toDF("k", "v"))
+    assert(rows(t) == Map("a" -> 1, "b" -> 21, "c" -> 3))
   }
 
   test("warn policy proceeds; repair still wins the tiebreak") {
@@ -116,8 +112,8 @@ class BackfillSpec extends AnyFunSuite {
     assert(rows(t) == Map("a" -> 10, "b" -> 2))
   }
 
-  test("repair supersedes bad stream rows in a COW table too") {
-    val dir = Files.createTempDirectory("tbl-repair-cow").toString
+  test("repair supersedes bad stream rows") {
+    val dir = Files.createTempDirectory("tbl-repair-bad").toString
     val t = ClipTable(dir, Seq("k"), numBuckets = 2)
     t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
     t.merge(Seq(("b", 999)).toDF("k", "v"), 1) // a corrupted update

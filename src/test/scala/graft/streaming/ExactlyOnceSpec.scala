@@ -36,30 +36,6 @@ class ExactlyOnceSpec extends AnyFunSuite {
     assert(t.read(spark).columns.toSet.intersect(Set("_batch_id", "_part_id")).size == 2)
   }
 
-  test("crash between the two swap renames is recovered, no data loss") {
-    // The COW swap is (live -> _trash, staged -> live). Simulate a crash
-    // after the first rename: the bucket dir is gone, its rows parked in
-    // _trash-<batch>-<b>. Both read() and the replayed merge must restore
-    // the bucket first (regression for the silent-loss window).
-    val dir = Files.createTempDirectory("tbl-crash").toString
-    val t = ClipTable(dir, Seq("k"), numBuckets = 1) // one bucket = bucket 0
-    t.merge(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0)
-    // simulate: batch 1's swap moved live out but crashed before moving in
-    val bucket = java.nio.file.Paths.get(dir, "data", "bucket=0")
-    val trash = java.nio.file.Paths.get(dir, "_trash-1-0")
-    java.nio.file.Files.move(bucket, trash)
-    // read() alone restores the parked bucket
-    assert(t.read(spark).select("k", "v").as[(String, Int)].collect().toMap ==
-      Map("a" -> 1, "b" -> 2))
-    // crash again, then the REPLAYED merge of batch 1 must see the old rows
-    java.nio.file.Files.move(bucket, trash)
-    t.merge(Seq(("a", 10), ("c", 3)).toDF("k", "v"), 1)
-    assert(t.read(spark).select("k", "v").as[(String, Int)].collect().toMap ==
-      Map("a" -> 10, "b" -> 2, "c" -> 3))
-    // completed swaps just drop leftover trash
-    assert(!java.nio.file.Files.exists(trash))
-  }
-
   test("compaction is crash-safe and defers deletion through the GC grace window") {
     // compact() publishes `compacted-v<N>` with ONE atomic rename and only
     // SCHEDULES superseded sources for deletion (grace-period GC): every
@@ -226,42 +202,23 @@ class ExactlyOnceSpec extends AnyFunSuite {
       .apply("s") == 42)
     assert(asOf(t, 2L)("s") == 2)
     assert(asOf(t, ClipTable.RepairBand + 99)("s") == 42)
-
-    // COW: the merge collapses versions at write time — same
-    // surviving-version semantics as a compacted MOR table
-    val cdir = Files.createTempDirectory("tbl-asof-cow").toString
-    val c = ClipTable(cdir, Seq("k"), numBuckets = 2)
-    c.merge(Seq(("a", 0), ("s", 0)).toDF("k", "v"), 0)
-    c.merge(Seq(("s", 1)).toDF("k", "v"), 1)
-    assert(asOf(c, 0L) == Map("a" -> 0))
-    assert(asOf(c, 1L) == Map("a" -> 0, "s" -> 1))
   }
 
   test("lookup: point read touches one bucket, agrees with the full read") {
-    for (mor <- Seq(false, true)) {
-      val dir = Files.createTempDirectory(s"tbl-lookup-$mor").toString
-      val t = ClipTable(dir, Seq("k"), numBuckets = 4, mergeOnRead = mor,
-        gcGraceMs = 0L)
-      (0 until 3).foreach(b =>
-        t.merge((0 until 40).map(i => (s"k$i", i + b * 100)).toDF("k", "v"), b))
-      if (mor) t.compact(spark) // bucket-clustered base files
-      val full = t.read(spark).select("k", "v").as[(String, Int)]
-        .collect().toMap
-      for (k <- Seq("k0", "k17", "k39")) {
-        val got = t.lookup(spark, Seq(k)).select("k", "v")
-          .as[(String, Int)].collect()
-        assert(got.toSeq == Seq((k, full(k))), s"mor=$mor key=$k")
-      }
-      assert(t.lookup(spark, Seq("missing")).isEmpty)
-      if (!mor) {
-        // COW: the lookup's resolved files all live in ONE bucket dir
-        val files = t.lookup(spark, Seq("k17")).inputFiles
-        val dirs = files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-        assert(dirs.length == 1 && dirs.head.contains("bucket="),
-          dirs.mkString(","))
-      }
-      intercept[IllegalArgumentException](t.lookup(spark, Seq("a", "b")))
+    val dir = Files.createTempDirectory("tbl-lookup").toString
+    val t = ClipTable(dir, Seq("k"), numBuckets = 4, gcGraceMs = 0L)
+    (0 until 3).foreach(b =>
+      t.merge((0 until 40).map(i => (s"k$i", i + b * 100)).toDF("k", "v"), b))
+    t.compact(spark) // bucket-clustered base files
+    val full = t.read(spark).select("k", "v").as[(String, Int)]
+      .collect().toMap
+    for (k <- Seq("k0", "k17", "k39")) {
+      val got = t.lookup(spark, Seq(k)).select("k", "v")
+        .as[(String, Int)].collect()
+      assert(got.toSeq == Seq((k, full(k))), s"key=$k")
     }
+    assert(t.lookup(spark, Seq("missing")).isEmpty)
+    intercept[IllegalArgumentException](t.lookup(spark, Seq("a", "b")))
   }
 
   test("lookup miss keeps the table schema even when the key's bucket is empty") {
@@ -298,6 +255,19 @@ class ExactlyOnceSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir, "_format"), "v1 keyDelim=space")
     intercept[IllegalArgumentException] { t.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
     intercept[IllegalArgumentException] { t.read(spark) }
+
+    // A copy-on-write root from an older build: bucket files under data/
+    // next to a valid v2 marker. The merge-on-read reader would see it as
+    // empty, so both read and merge must refuse it.
+    val cowDir = Files.createTempDirectory("tbl-cow").toString
+    val cow = ClipTable(cowDir, Seq("k"), numBuckets = 2)
+    cow.merge(Seq(("a", 1)).toDF("k", "v"), 0) // stamps the v2 marker
+    Seq(("a", 1)).toDF("k", "v").write
+      .parquet(java.nio.file.Paths.get(cowDir, "data", "bucket=0").toString)
+    intercept[IllegalArgumentException] { cow.read(spark) }
+    intercept[IllegalArgumentException] { cow.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
+    // and no handle can ask for that layout any more
+    intercept[IllegalArgumentException] { ClipTable(cowDir, Seq("k"), mergeOnRead = false) }
   }
 
   test("compactIfNeeded folds deltas once past the threshold, rows stable") {
