@@ -11,6 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * manifest `{Requests, Responses, Took}`, `/root/reference/scrape/
   * scrape.go:257-268`, becomes a queryable metrics table): one JSONL row
   * per micro-batch with rows, rates, state-store size and watermark lag.
+  * The state ledger fields are summed over the trigger's state operators
+  * (0 when it has none): `state_commit_ms` (`commitTimeMs`),
+  * `state_changelog_commit_ms` (RocksDB's
+  * `rocksdbChangeLogWriterCommitLatencyMs`) and
+  * `rows_dropped_by_watermark` (`numRowsDroppedByWatermark`).
   * Readable back as a DataFrame via [[MetricsListener.read]].
   */
 final class MetricsListener(path: String, promPath: Option[String] = None)
@@ -46,6 +51,11 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
     val p = e.progress
     val stateRows = p.stateOperators.map(_.numRowsTotal).sum
     val stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum
+    val stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum
+    val changelogCommitMs = p.stateOperators.map(o =>
+      Option(o.customMetrics.get("rocksdbChangeLogWriterCommitLatencyMs"))
+        .map(_.longValue).getOrElse(0L)).sum
+    val droppedByWatermark = p.stateOperators.map(_.numRowsDroppedByWatermark).sum
     val watermark = Option(p.eventTime.get("watermark")).getOrElse("")
     val eventMax = Option(p.eventTime.get("max")).getOrElse("")
     val durations = {
@@ -67,7 +77,10 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
         s""""processed_rows_per_sec":${safe(p.processedRowsPerSecond)},""" +
         s""""state_rows":$stateRows,"state_bytes":$stateBytes,""" +
         s""""durations_ms":$durations,""" +
-        s""""watermark":"$watermark","event_time_max":"$eventMax"}""" + "\n"
+        s""""watermark":"$watermark","event_time_max":"$eventMax",""" +
+        s""""state_commit_ms":$stateCommitMs,""" +
+        s""""state_changelog_commit_ms":$changelogCommitMs,""" +
+        s""""rows_dropped_by_watermark":$droppedByWatermark}""" + "\n"
     Files.write(Paths.get(path), line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     promPath.foreach(writeProm(_, p, stateRows, stateBytes, watermark, eventMax))

@@ -35,18 +35,23 @@ class MetricsExporterSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"))
       val q = agg.writeStream.format("memory").queryName("mx")
         .outputMode("update").start()
-      val nBatches = 3
+      // three on-time batches, then one whose first row is behind the
+      // watermark (61 s max event time - 10 s) and is dropped
+      val batches = (0 until 3).map(b => Seq(("a", ts(b * 30)), ("b", ts(b * 30 + 1)))) :+
+        Seq(("a", ts(0)), ("c", ts(90)))
+      val nBatches = batches.length
       try {
-        (0 until nBatches).foreach { b =>
-          in.addData(("a", ts(b * 30)), ("b", ts(b * 30 + 1)))
+        batches.foreach { rows =>
+          in.addData(rows: _*)
           q.processAllAvailable()
         }
       } finally q.stop()
+      val progress = q.recentProgress
       // spark fires listener events asynchronously; drain
       spark.streams.resetTerminated()
       var waited = 0
       def lines() = Files.readAllLines(Paths.get(jsonl))
-      while (lines().size < nBatches && waited < 100) { Thread.sleep(100); waited += 1 }
+      while (lines().size < progress.length && waited < 100) { Thread.sleep(100); waited += 1 }
 
       val m = MetricsListener.read(spark, jsonl)
         .filter(col("num_input_rows") > 0)
@@ -58,6 +63,45 @@ class MetricsExporterSpec extends AnyFunSuite {
       assert(m.forall(_.getLong(1) == 2L))
       assert(m.forall(_.getLong(2) > 0L), "state size missing")
       assert(m.exists(_.getString(3).nonEmpty), "watermark missing")
+
+      // state ledger fields: each is the progress event's figure summed
+      // over the state operators, and only the late batch drops a row
+      def ledgerOf(p: org.apache.spark.sql.streaming.StreamingQueryProgress) = {
+        val ops = p.stateOperators.toSeq
+        (ops.map(_.commitTimeMs).sum,
+          ops.map(o => Option(o.customMetrics.get("rocksdbChangeLogWriterCommitLatencyMs"))
+            .map(_.longValue).getOrElse(0L)).sum,
+          ops.map(_.numRowsDroppedByWatermark).sum)
+      }
+      val ledger = MetricsListener.read(spark, jsonl)
+        .filter(col("num_input_rows") > 0)
+        .select("batch_id", "state_commit_ms", "state_changelog_commit_ms",
+          "rows_dropped_by_watermark")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      val dataProgress = progress.filter(_.numInputRows > 0)
+      assert(ledger == dataProgress.map(p => p.batchId -> ledgerOf(p)).toMap)
+      assert(dataProgress.forall(p =>
+        p.stateOperators.exists(_.customMetrics.containsKey(
+          "rocksdbChangeLogWriterCommitLatencyMs"))), "changelog metric absent")
+      assert(ledger.toSeq.sortBy(_._1).map(_._2._3) == Seq(0L, 0L, 0L, 1L),
+        s"rows dropped by watermark: $ledger")
+
+      // the pre-ledger keys stay as they were, in the same order, and the
+      // ledger fields follow them
+      val oldKeys = Seq("query_id", "batch_id", "timestamp", "num_input_rows",
+        "input_rows_per_sec", "processed_rows_per_sec", "state_rows",
+        "state_bytes", "durations_ms", "watermark", "event_time_max")
+      val ledgerKeys = Seq("state_commit_ms", "state_changelog_commit_ms",
+        "rows_dropped_by_watermark")
+      val topKeys = """(?:^\{|,)"([a-z_]+)":""".r
+      Files.readAllLines(Paths.get(jsonl)).forEach { line =>
+        val keys = topKeys.findAllMatchIn(line.replaceAll("\\{[^{}]*\\}", "{}"))
+          .map(_.group(1)).toSeq
+        assert(keys == oldKeys ++ ledgerKeys, s"key set changed: $keys")
+        assert(line.contains("\"durations_ms\":{\"") &&
+          line.contains("\"triggerExecution\":"), s"durations_ms changed: $line")
+      }
 
       // prom snapshot: well-formed exposition text with the manifest
       // gauges (Requests/Responses/Took analogs + state + watermark lag)

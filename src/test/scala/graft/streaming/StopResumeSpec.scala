@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,5 +68,41 @@ class StopResumeSpec extends AnyFunSuite {
       .select("w_start_ms", "codec", "sr_hz", "n_clips", "sum_dur_ms")
       .orderBy("w_start_ms", "codec", "sr_hz").collect().map(_.toSeq).toSeq
     assert(got == expected)
+  }
+
+  test("checkpoint file manager: FileSystem-based, atomic create contract") {
+    val dir = Files.createTempDirectory("ckpt-fm")
+    val cancelDir = Files.createDirectory(dir.resolve("cancel"))
+    val fm = CheckpointFileManager.create(new Path(dir.toUri),
+      spark.sessionState.newHadoopConf())
+    assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager], fm.getClass.getName)
+
+    val f = new Path(dir.resolve("1").toUri)
+    def write(content: String, overwrite: Boolean): Unit = {
+      val out = fm.createAtomic(f, overwriteIfPossible = overwrite)
+      out.write(content.getBytes("UTF-8"))
+      out.close()
+    }
+    def read(): String = {
+      val in = fm.open(f)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write("v1", overwrite = false)
+    assert(read() == "v1")
+    // a second create without overwrite is refused and keeps the old file:
+    // the offset and commit logs rely on this to detect a concurrent writer
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](write("v2", overwrite = false))
+    assert(read() == "v1")
+    write("v3", overwrite = true)
+    assert(read() == "v3", "overwrite kept the old file: is `file:` served by a " +
+      "FileSystem whose rename refuses an existing target?")
+
+    val g = new Path(cancelDir.resolve("1").toUri)
+    val out = fm.createAtomic(g, overwriteIfPossible = true)
+    out.write("v4".getBytes("UTF-8"))
+    out.cancel()
+    assert(!fm.exists(g))
+    val left = Files.list(cancelDir)
+    try assert(left.count() == 0, "cancel left a file behind") finally left.close()
   }
 }
