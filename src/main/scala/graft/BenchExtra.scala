@@ -23,8 +23,7 @@ import graft.fixtures.ClipGen
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val cpus = GraftSession.hostCpus
     val filter = if (args.nonEmpty) args(0) else "all"
     // clamp like the frozen Bench's best-of-k depths: k < 1 would run a
     // query zero times and crash on ts.min after the warm-up work

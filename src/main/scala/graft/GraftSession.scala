@@ -80,6 +80,11 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
 
+  /** Local CPU count for the tools: `SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors. */
+  def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def create(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
     val s = builder(master, shufflePartitions, appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -110,7 +110,7 @@ object ClipGen {
       Persons.transcript(Persons.all(personIdx)), personIdx)
   }
 
-  /** Reference PCM for a clip — what DecodePcm must match at SNR >= 30 dB. */
+  /** Reference PCM for a clip — what decode_pcm must match at SNR >= 30 dB. */
   def referencePcm(idx: Long): Array[Float] = {
     val h = AudioSynth.mix64(0xC11F_5EEDL + idx)
     val sr = srFor(AudioSynth.mix64(h + 2))

@@ -1,12 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's scalar filter registry, re-expressed as Catalyst columns
   * with *exact* semantics (`/root/reference/scrape/scrape.go:87-132`):
@@ -15,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `capitalize`: Go `strings.Title` parity (F4) — title-case every
   *     letter that follows a non-letter; the REST of each word is left
   *     untouched (Spark's `initcap` lowercases it, and splits only on
-  *     whitespace — not parity). Custom expression below.
+  *     whitespace — not parity). The `go_title` kernel (Kernels.GoTitle).
   *   - `regex`: compile param; auto-wrap in one capture group if none;
   *     error if >1 group; all group-1 matches joined `"m1;m2;…;"` (note
   *     the TRAILING `;` after every match); no match -> `""` (F5,
@@ -83,7 +78,7 @@ object DfkFilters {
       case "trim"       => trim(_)
       case "lowercase"  => lower(_)
       case "uppercase"  => upper(_)
-      case "capitalize" => c => GraftFunctions.toColumn(GoTitle(GraftFunctions.toExpr(c)))
+      case "capitalize" => Kernels.GoTitle(_)
       case "regex" =>
         val pat = normalizeRegex(param)
         c => {
@@ -101,20 +96,4 @@ object DfkFilters {
   def chain(filters: Seq[(String, String)]): Column => Column =
     filters.map { case (n, p) => filter(n, p) }
       .foldLeft(identity[Column] _)((acc, f) => acc.andThen(f))
-}
-
-/** Codegen-friendly Go strings.Title parity expression (F4). */
-case class GoTitle(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "go_title"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"go_title expects string, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(DfkFilters.goTitle(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.DfkFilters.goTitle($c.toString()));")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }

@@ -1,0 +1,178 @@
+package graft.functions
+
+import java.lang.reflect.{InvocationTargetException, Method}
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One SQL kernel, declared once (see [[Kernels]] for every declaration):
+  * its SQL name, input types, result type, the static JVM method that
+  * computes it, and the Scala-side constants passed after the column
+  * arguments (Int or Double). [[KernelCall]] derives the type check,
+  * interpreted eval, codegen and nullability from it.
+  *
+  * Calling convention of `target` (`pkg.Object.method`, called through
+  * the object's static forwarder): one parameter per input, then one per
+  * constant. A string input arrives as `String`, binary as `byte[]`,
+  * int / bigint / double as the primitive, an array as `ArrayData`. The
+  * result maps back by its JVM type: a primitive array other than
+  * `byte[]` becomes an `UnsafeArrayData`, a `String` a `UTF8String`; a
+  * boxed number or an `InternalRow` may be null, which makes the kernel
+  * nullable and a null result SQL NULL. Anything else passes through.
+  *
+  * Declarations are case-class values, so two calls of one kernel with
+  * equal constants are equal expressions: CSE and `semanticEquals` merge
+  * them. */
+final case class Kernel(name: String, inputs: Seq[Kernel.In], result: DataType,
+                        target: String, consts: Seq[Any] = Nil) {
+
+  /** This kernel applied to columns. */
+  def apply(args: Column*): Column =
+    GraftFunctions.toColumn(KernelCall(this, args.map(GraftFunctions.toExpr).toIndexedSeq))
+
+  /** The same kernel with other Scala-side constants (e.g. `nBands`). */
+  def withConsts(cs: Any*): Kernel = copy(consts = cs.toList)
+
+  /** The target, resolved once per declaration value. */
+  @transient lazy val method: Method = {
+    val dot = target.lastIndexOf('.')
+    val params = inputs.map(in => Kernel.jvmClass(in.dataType)) ++ consts.map {
+      case _: Int => classOf[Int]
+      case _: Double => classOf[Double]
+      case c => throw new IllegalArgumentException(s"$name: unsupported constant $c")
+    }
+    Class.forName(target.take(dot)).getMethod(target.drop(dot + 1), params: _*)
+  }
+
+  /** True when the target may return null (a boxed number or a row). */
+  @transient lazy val returnsNull: Boolean = {
+    val rt = method.getReturnType
+    rt == classOf[InternalRow] || classOf[java.lang.Number].isAssignableFrom(rt)
+  }
+
+  /** The target's result as a Catalyst value. */
+  private[functions] def toCatalyst(r: Any): Any = r match {
+    case a: Array[Int] => UnsafeArrayData.fromPrimitiveArray(a)
+    case a: Array[Long] => UnsafeArrayData.fromPrimitiveArray(a)
+    case a: Array[Float] => UnsafeArrayData.fromPrimitiveArray(a)
+    case a: Array[Double] => UnsafeArrayData.fromPrimitiveArray(a)
+    case s: String => UTF8String.fromString(s)
+    case other => other
+  }
+}
+
+object Kernel {
+  /** One input: its Catalyst type (an array type matches any
+    * `containsNull`), and whether it must be a foldable literal. */
+  final case class In(dataType: DataType, literal: Boolean = false) {
+    def accepts(e: Expression): Boolean = ((dataType, e.dataType) match {
+      case (ArrayType(want, _), ArrayType(got, _)) => want == got
+      case (want, got) => want == got
+    }) && (!literal || e.foldable)
+    override def toString: String =
+      dataType.simpleString + (if (literal) " literal" else "")
+  }
+
+  private def jvmClass(t: DataType): Class[_] = t match {
+    case BinaryType => classOf[Array[Byte]]
+    case StringType => classOf[String]
+    case IntegerType => classOf[Int]
+    case LongType => classOf[Long]
+    case DoubleType => classOf[Double]
+    case _: ArrayType => classOf[ArrayData]
+    case other => throw new IllegalArgumentException(s"unsupported kernel input type $other")
+  }
+}
+
+/** A call of a declared [[Kernel]]: the one Catalyst expression behind
+  * every kernel. Codegen emits the direct static call (no boxing, no
+  * argument array, no reference object), so it stays inside whole-stage
+  * codegen; interpreted eval calls the same method through the cached
+  * `java.lang.reflect.Method`, as Spark's `StaticInvoke` does. Null in,
+  * null out: any null argument makes the result null without a call. */
+case class KernelCall(kernel: Kernel, children: IndexedSeq[Expression]) extends Expression {
+
+  override def prettyName: String = kernel.name
+  override def dataType: DataType = kernel.result
+  override def nullable: Boolean = kernel.returnsNull || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  /** Plan strings print the constants after the children; `sql` (and so
+    * auto-generated column names) prints only the children. */
+  override def flatArguments: Iterator[Any] = children.iterator ++ kernel.consts.iterator
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.length == kernel.inputs.length &&
+        kernel.inputs.zip(children).forall { case (in, c) => in.accepts(c) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${kernel.name} expects (${kernel.inputs.mkString(", ")}), got " +
+        children.map(c => c.dataType.simpleString + (if (c.foldable) " literal" else ""))
+          .mkString("(", ", ", ")"))
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length + kernel.consts.length)
+    var i = 0
+    while (i < children.length) {
+      children(i).eval(input) match {
+        case null => return null
+        case s: UTF8String => args(i) = s.toString
+        case v => args(i) = v.asInstanceOf[AnyRef]
+      }
+      i += 1
+    }
+    kernel.consts.foreach { c => args(i) = c.asInstanceOf[AnyRef]; i += 1 }
+    try kernel.toCatalyst(kernel.method.invoke(null, args: _*))
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val args = gens.zip(children).map { case (g, c) =>
+      if (c.dataType == StringType) s"${g.value}.toString()" else g.value.toString
+    } ++ kernel.consts.map {
+      case d: Double => s"${d}D"
+      case c => c.toString
+    }
+    val call = s"${kernel.target}(${args.mkString(", ")})"
+    val rt = kernel.method.getReturnType
+    val javaType = CodeGenerator.javaType(dataType)
+    val default = CodeGenerator.defaultValue(dataType)
+    val result =
+      if (rt.isArray && rt != classOf[Array[Byte]])
+        s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray($call);"
+      else if (rt == classOf[String])
+        s"${ev.value} = ${classOf[UTF8String].getName}.fromString($call);"
+      else if (kernel.returnsNull && rt != classOf[InternalRow])
+        s"""${rt.getName} ${ev.value}_boxed = $call;
+           |${ev.isNull} = ${ev.value}_boxed == null;
+           |${ev.value} = ${ev.isNull} ? $default : ${ev.value}_boxed.${javaType}Value();""".stripMargin
+      else if (kernel.returnsNull)
+        s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+      else s"${ev.value} = $call;"
+    if (nullable) {
+      // one nested null check per nullable argument, innermost the call
+      val body = gens.zip(children).foldRight(s"${ev.isNull} = false;\n$result") {
+        case ((g, c), inner) => s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull.toString)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = $default;
+        $body""")
+    } else {
+      ev.copy(code = code"""
+        ${gens.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $default;
+        $result""", isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+}

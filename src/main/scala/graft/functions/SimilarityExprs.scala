@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
-/** Embedding similarity kernels as native Catalyst expressions.
+/** Embedding similarity kernels (declared in [[Kernels]]).
   *
   * Two variants:
   *  - `cosine_sim` — plain float32 cosine with double accumulation: the
@@ -112,15 +108,6 @@ object VectorOps {
   }
 }
 
-private[functions] trait FloatVecBinary extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<float>, array<float>), got ($l, $r)")
-  }
-}
-
-/** cosine_sim(array<float>, array<float>) -> double */
 /** Combination-chunk candidate keys for wide-radius hash near-dup (the
   * maxHamming >= 5 scheme of Dedup.hashKeys): the 64-bit signature is
   * split into c = maxHamming+4 chunks and every 4-subset of chunk values
@@ -180,92 +167,4 @@ object HashCombKeysKernel {
     }
     out
   }
-}
-
-/** `hash_comb_keys(sig) -> array<bigint>` — see [[HashCombKeysKernel]]. */
-case class HashCombKeys(child: Expression, maxHamming: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hash_comb_keys expects bigint, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hash_comb_keys"
-  override def nullSafeEval(sig: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      HashCombKeysKernel.keys(sig.asInstanceOf[Long], maxHamming))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.functions.HashCombKeysKernel.keys($s, $maxHamming));")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class CosineSim(left: Expression, right: Expression) extends FloatVecBinary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorOps.cosine($a, $b);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** qcosine_sim(array<float>, array<float>) -> double (exact/quantized) */
-case class QCosineSim(left: Expression, right: Expression) extends FloatVecBinary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "qcosine_sim"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.qcosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorOps.qcosine($a, $b);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** vec_lsh_buckets(array<float>, nBits, nTables) -> array<int> — one packed
-  * hyperplane-bucket code per LSH table (multi-table amplification). */
-case class VecLshBuckets(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "vec_lsh_buckets"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), IntegerType, IntegerType)
-        if second.foldable && third.foldable => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"vec_lsh_buckets expects (array<float>, int literal, int literal), got ($a, $b, $c)")
-    }
-  override def nullSafeEval(v: Any, nBits: Any, nTables: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      VectorOps.hyperplaneBuckets(v.asInstanceOf[ArrayData],
-        nBits.asInstanceOf[Int], nTables.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, b, t) =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.functions.VectorOps.hyperplaneBuckets($v, $b, $t));")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** vec_lsh_bucket(array<float>, nBits) -> int */
-case class VecLshBucket(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "vec_lsh_bucket"
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"vec_lsh_bucket expects (array<float>, int literal), got ($l, $r)")
-  }
-  override def nullSafeEval(a: Any, n: Any): Any =
-    VectorOps.hyperplaneBucket(a.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, n) =>
-      s"${ev.value} = graft.functions.VectorOps.hyperplaneBucket($a, $n);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
 }

@@ -1,17 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 import graft.audio.AudioSynth.{hash64, mix64}
 
 /** Text-analysis primitives for the training-data pipeline operators:
-  * language-ID, SimHash, MinHash and winnowing fingerprints — all native
-  * Catalyst expressions (single pass, codegen'd via static calls; no UDF
-  * serialization, no boxing) so they hold up in a 100 TB scan stage.
+  * language-ID, SimHash, MinHash and winnowing fingerprints — the bodies
+  * of native Catalyst kernels (see [[Kernels]]; single pass, codegen'd via
+  * static calls, no UDF serialization, no boxing) so they hold up in a
+  * 100 TB scan stage.
   */
 object TextOps {
 
@@ -231,7 +226,7 @@ object TextOps {
     h
   }
 
-  /** Unsigned `portableHash64 mod n` — see [[PortableBucket]]. */
+  /** Unsigned `portableHash64 mod n` — see [[Kernels.PortableBucket]]. */
   def portableBucket(s: String, n: Int): Int = {
     require(n >= 1, s"bucket count must be >= 1, got $n")
     java.lang.Long.remainderUnsigned(portableHash64(s), n.toLong).toInt
@@ -388,158 +383,4 @@ object TextOps {
       res
     }
   }
-}
-
-/** rel_url(base, rel) -> string — resolve a relative URL against a base
-  * (the reference's RelUrl, `/root/reference/utils/utils.go:41-53`, used
-  * for href/src/path attr resolution). null-safe; malformed inputs return
-  * the relative string unchanged (the reference logs and continues). */
-case class RelUrl(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "rel_url"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rel_url expects (string, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(base: Any, rel: Any): Any =
-    UTF8String.fromString(TextOps.relUrl(base.toString, rel.toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, r) =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.TextOps.relUrl($b.toString(), $r.toString()));")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** lang_id(text) -> string */
-case class LangId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_id"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"lang_id expects string, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(TextOps.langId(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.TextOps.langId($c.toString()));")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** lang_id_ngram(text) -> string — the Cavnar-Trenkle trigram-profile
-  * variant (see TextOps.langIdNgram); same output domain as lang_id. */
-case class LangIdNgram(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_id_ngram"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"lang_id_ngram expects string, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(TextOps.langIdNgram(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.TextOps.langIdNgram($c.toString()));")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** jaccard_sim(a, b) -> double — exact word-3-gram shingle Jaccard (the
-  * verify stage of MinHash-LSH near-dup). Native expression so the verify
-  * stays inside whole-stage codegen (it runs only on candidate pairs, but
-  * a UDF there would still box two full texts per row). */
-case class JaccardSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "jaccard_sim"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sim expects (string, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextOps.jaccard(a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextOps.jaccard(" +
-        s"$a.toString(), $b.toString(), 3);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** `portable_bucket(s, n)` -> int — unsigned `portableHash64(s) mod n`,
-  * bit-identical to DuckDB's `md5_number_lower(s) % n` (UBIGINT
-  * arithmetic). The deterministic, partition-independent assignment
-  * primitive behind train/val/test splitting: a pure function of the
-  * row's id — stable across cluster sizes, replays, and engines. */
-case class PortableBucket(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "portable_bucket"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType &&
-        right.dataType == org.apache.spark.sql.types.IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"portable_bucket expects (string, int), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(s: Any, n: Any): Any =
-    TextOps.portableBucket(s.asInstanceOf[UTF8String].toString, n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n) =>
-      s"${ev.value} = graft.functions.TextOps.portableBucket($s.toString(), $n);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** sim_hash(text) -> long */
-case class SimHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sim_hash"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"sim_hash expects string, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    java.lang.Long.valueOf(TextOps.simHash(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.simHash($c.toString());")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** min_hash(text, k) -> array<long> (k from a foldable int literal) */
-case class MinHashSig(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "min_hash"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.foldable &&
-      right.dataType == org.apache.spark.sql.types.IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("min_hash expects (string, int literal)")
-  override def nullSafeEval(t: Any, k: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      TextOps.minHash(t.asInstanceOf[UTF8String].toString, k.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, k) =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.functions.TextOps.minHash($t.toString(), $k, 3));")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** winnow_fp(text) -> array<long> (selected fingerprint set, sorted) */
-case class WinnowFingerprint(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fp"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"winnow_fp expects string, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      TextOps.winnowFingerprint(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.functions.TextOps.winnowFingerprint($c.toString(), 4));")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }

@@ -165,11 +165,11 @@ object ImageMeta {
 
   /** Mean BT.601 luma of ANY supported payload: netpbm via the fused
     * raster pass (no pixel array), compressed formats via the JDK decoder.
-    * NaN when undecodable (the expression layer maps NaN to SQL null). */
-  def lumaMeanAny(bytes: Array[Byte]): Double =
+    * Null when undecodable (SQL null in `image_luma_mean`). */
+  def lumaMeanAny(bytes: Array[Byte]): java.lang.Double =
     detect(bytes) match {
       case "pgm" | "ppm" => ImageCodec.lumaMean(bytes)
-      case "unknown" => Double.NaN
+      case "unknown" => null
       case _ => JdkImageCodec.decode(bytes) match {
         case Some(img) =>
           val gray = ImageCodec.toLuma(img)
@@ -177,7 +177,7 @@ object ImageMeta {
           var i = 0
           while (i < gray.pixels.length) { acc += gray.pixels(i); i += 1 }
           acc / gray.pixels.length
-        case None => Double.NaN
+        case None => null
       }
     }
 }

@@ -568,9 +568,7 @@ object Dedup {
       s"maxHamming must be in [0, 31], got $maxHamming")
     val keysArray =
       if (maxHamming <= 4) array(hashKeyCols(maxHamming): _*)
-      else graft.functions.GraftFunctions.toColumn(
-        graft.functions.HashCombKeys(
-          graft.functions.GraftFunctions.toExpr(col("sig")), maxHamming))
+      else graft.functions.Kernels.hashCombKeys(maxHamming)(col("sig"))
     // NULL signatures (a hash kernel's null for a corrupt payload)
     // contribute NO candidate keys at either radius — normalized
     // explicitly because the two branches would otherwise disagree (the

@@ -1,11 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Size
+import org.apache.spark.sql.catalyst.expressions.{Literal, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.StringType
 
-import graft.functions.{DecodePcm, PcmBandEnergies, PcmSampleCount, PcmTone, ToneBandEnergies}
+import graft.functions.{GraftFunctions, KernelCall, Kernels}
 
 /** Optimizer rule: elide full PCM decodes whose result is only counted.
   *
@@ -19,13 +20,13 @@ import graft.functions.{DecodePcm, PcmBandEnergies, PcmSampleCount, PcmTone, Ton
 object DecodeElision extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case Size(DecodePcm(bytes, codec, _), legacy) if !legacy =>
-        PcmSampleCount(bytes, codec)
+      case Size(KernelCall(Kernels.DecodePcm, Seq(bytes, codec, _)), legacy) if !legacy =>
+        KernelCall(Kernels.PcmSampleCount, IndexedSeq(bytes, codec))
     }
 }
 
 /** Optimizer rule: fuse `pcm_band_energies(pcm_tone(sr, f, n), 'pcm16',
-  * srB)` into the single [[ToneBandEnergies]] kernel — skips encoding the
+  * srB)` into the single `tone_band_energies` kernel — skips encoding the
   * synthesized samples to a pcm16 byte array and re-parsing them (one
   * allocation + two full passes per row), with bit-identical output (the
   * fused kernel quantizes each sample through the same floatToShort /
@@ -36,11 +37,12 @@ object DecodeElision extends Rule[LogicalPlan] {
 object ToneBandFusion extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case PcmBandEnergies(PcmTone(sr, f, n),
-          org.apache.spark.sql.catalyst.expressions.Literal(codec, t), srB, nBands)
-          if t == org.apache.spark.sql.types.StringType && codec != null &&
+      case KernelCall(bands, Seq(KernelCall(Kernels.PcmTone, Seq(sr, f, n)),
+          Literal(codec, StringType), srB))
+          if bands.name == Kernels.PcmBandEnergies.name && codec != null &&
             codec.toString == graft.audio.AudioCodec.Pcm16 =>
-        ToneBandEnergies(sr, f, n, srB, nBands)
+        KernelCall(Kernels.ToneBandEnergies.withConsts(bands.consts: _*),
+          IndexedSeq(sr, f, n, srB))
     }
 }
 
@@ -52,12 +54,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => DecodeElision)
     e.injectOptimizerRule(_ => ToneBandFusion)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("decode_pcm"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DecodePcm].getName, "decode_pcm"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DecodePcm(es(0), es(1), es(2))))
+    GraftFunctions.sqlFunctions.foreach { case (name, className, build) =>
+      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(className, name), build))
+    }
     // TVF surface: SELECT * FROM clip_cards('<clips parquet dir>') — the
     // reference's "cards" payload as a SQL table function (selector
     // extraction applied to the clip table at the given path). The path

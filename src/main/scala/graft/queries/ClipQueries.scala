@@ -140,7 +140,7 @@ object ClipQueries {
     }),
 
     // Decode-dependent stats via the fused Catalyst pcm_rms expression
-    // (decode + reduce in one codegen'd pass — see graft.functions.PcmRms;
+    // (decode + reduce in one codegen'd pass — see graft.functions.Kernels.PcmRms;
     // the unfused decode_pcm + higher-order aggregate computes the same
     // value ~10x slower and is covered by the test suite). ORACLED (r6,
     // closing the last no_oracle rows) by the planted-contract

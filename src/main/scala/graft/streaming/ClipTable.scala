@@ -41,7 +41,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
   require(Seq("fail", "warn").contains(repairConflictPolicy),
     s"repairConflictPolicy must be 'fail' or 'warn', got '$repairConflictPolicy'")
 
-  private def dataDir: Path = Paths.get(root, "data")
   private def commitsDir: Path = Paths.get(root, "_commits")
   private def deltaDir(batchId: Long): Path = Paths.get(root, "delta", s"batch=$batchId")
 
@@ -70,9 +69,10 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
   private def formatFile: Path = Paths.get(root, "_format")
   private val formatId = s"v2 keyDelim=nul buckets=$numBuckets keys=${keyCols.mkString(",")}"
   /** Refuses a table this build cannot read: a marker naming another
-    * format, or files under `data/` — the copy-on-write layout of older
-    * builds, which the merge-on-read reader would silently read as empty.
-    * True when the marker exists. */
+    * format, or files in a directory of an older build's layout, which
+    * this reader would silently skip — `data/` (copy-on-write), or the
+    * pre-versioned merge-on-read base `compacted/` and its swap trash
+    * `_compact-trash/`. True when the marker exists. */
   private def checkFormat(): Boolean = {
     val marked = Files.exists(formatFile)
     if (marked) {
@@ -80,15 +80,15 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
       require(have == formatId,
         s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
     }
-    require(!nonEmptyDir(dataDir),
-      s"table at $root holds copy-on-write files under data/, a layout this build no longer " +
-        "reads; re-merge into a fresh root")
+    for (old <- Seq("data", "compacted", "_compact-trash"))
+      require(!nonEmptyDir(Paths.get(root, old)),
+        s"table at $root holds files under $old/, a layout this build no longer " +
+          "reads; re-merge into a fresh root")
     marked
   }
   private def checkOrStampFormat(): Unit = {
     if (!checkFormat()) {
-      val hasData = nonEmptyDir(dataDir) || nonEmptyDir(compactedDir) ||
-        nonEmptyDir(Paths.get(root, "delta")) || baseVersions.nonEmpty
+      val hasData = nonEmptyDir(Paths.get(root, "delta")) || baseVersions.nonEmpty
       require(!hasData,
         s"table at $root predates the _format marker (round-1 layout); re-merge into a fresh root")
       Files.createDirectories(Paths.get(root))
@@ -227,8 +227,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     id
   }
 
-  private def compactedDir: Path = Paths.get(root, "compacted")
-
   // ---------------------------------------------------------- compaction
   //
   // VERSIONED bases + grace-period GC (the Iceberg snapshot-expiry
@@ -255,12 +253,7 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
       else None
     }.sortBy(_._1)
 
-  /** Pre-versioned layout's single `compacted` dir, still readable. */
-  private def legacyBase: Option[Path] =
-    Some(compactedDir).filter(p => listDir(p).exists(_.toString.endsWith(".parquet")))
-
-  private def latestBase: Option[Path] =
-    baseVersions.lastOption.map(_._2).orElse(legacyBase)
+  private def latestBase: Option[Path] = baseVersions.lastOption.map(_._2)
 
   private def deltaBatchDirs: Seq[Path] =
     listDir(Paths.get(root, "delta"))
@@ -475,7 +468,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * superseded sources unscheduled — read() then sees base+delta
     * overlap, which latest-batch-wins resolves identically. */
   def compact(spark: SparkSession): Unit = synchronized {
-    recoverCompaction() // legacy _compact-trash from a pre-versioned crash
     val gcSet = gcScheduledRels
     val base = latestBase.filterNot(p => gcSet.contains(relOf(p)))
     val deltas = deltaBatchDirs.filterNot(p => gcSet.contains(relOf(p)))
@@ -492,22 +484,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
       StandardCopyOption.ATOMIC_MOVE)
     gcScheduleAll(base.toSeq ++ deltas)
     gcSweep()
-  }
-
-  private def compactTrash: Path = Paths.get(root, "_compact-trash")
-
-  /** Crash recovery for the compaction swap: a leftover `_compact-trash`
-    * with a missing/empty compacted dir means the crash hit between the
-    * two renames — restore the old base (its deltas were not yet deleted,
-    * so base+deltas is still the complete table). A non-empty compacted
-    * dir means the swap finished; drop the trash. */
-  private def recoverCompaction(): Unit = {
-    if (!Files.exists(compactTrash)) return
-    if (nonEmptyDir(compactedDir)) deleteRecursively(compactTrash)
-    else {
-      deleteRecursively(compactedDir)
-      Files.move(compactTrash, compactedDir, StandardCopyOption.ATOMIC_MOVE)
-    }
   }
 
   /** Incremental maintenance policy: fold deltas into the compacted base
@@ -578,7 +554,6 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * to latest), [[lookup]] and [[readAsOf]] (cut first, then resolve). */
   private def readRawOpt(spark: SparkSession): Option[DataFrame] = {
     checkFormat()
-    synchronized { recoverCompaction() }
     // latest base + unfolded deltas; GC-scheduled dirs are excluded
     // (their content is in the latest base) but stay on disk through
     // the grace window for readers that already resolved their files

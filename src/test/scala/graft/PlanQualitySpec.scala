@@ -353,7 +353,7 @@ class PlanQualitySpec extends AnyFunSuite {
       nodes.foreach {
         case _: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => ()
         case node => node.expressions.foreach(_.foreach {
-          case _: graft.functions.PcmTonePair => n += 1
+          case k: graft.functions.KernelCall if k.kernel.name == "pcm_tone_pair" => n += 1
           case _ => ()
         })
       }
@@ -384,6 +384,11 @@ class PlanQualitySpec extends AnyFunSuite {
       }
       n
     }
+    def isKernel(name: String)(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e match {
+        case k: graft.functions.KernelCall => k.kernel.name == name
+        case _ => false
+      }
     val c18 = SparkEntry.queries("c18_segments")(spark, sf)
     val c19 = SparkEntry.queries("c19_strip_silence")(spark, sf)
     // The corpus is a 2-branch Union (organic + gapped): the contract is
@@ -392,9 +397,9 @@ class PlanQualitySpec extends AnyFunSuite {
     // into EACH branch (c19's collapsed Projects) — both are the fused
     // single-pass plan; anything else (0, or >branches) is a regression.
     assert(Set(1, 2).contains(
-      sites(c18, _.isInstanceOf[graft.functions.PcmSegments])))
+      sites(c18, isKernel("pcm_segments"))))
     assert(Set(1, 2).contains(
-      sites(c19, _.isInstanceOf[graft.functions.PcmStripSilence])))
+      sites(c19, isKernel("pcm_strip_silence"))))
     for ((df, name) <- Seq((c18, "c18"), (c19, "c19"))) {
       val offending = allPlanNodes(df.queryExecution).collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -417,7 +422,7 @@ class PlanQualitySpec extends AnyFunSuite {
       allPlanNodes(df.queryExecution).foreach {
         case _: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => ()
         case node => node.expressions.foreach(_.foreach {
-          case _: graft.functions.PcmTonePair => n += 1
+          case k: graft.functions.KernelCall if k.kernel.name == "pcm_tone_pair" => n += 1
           case _ => ()
         })
       }

@@ -1,6 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.{AnalysisException, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -95,5 +101,123 @@ class DecodePcmSpec extends AnyFunSuite {
       clips.select(decode_pcm(col("transcript"), col("codec"), col("sr_hz"))).collect()
     }
     assert(e.getMessage.contains("decode_pcm") || e.getMessage.contains("DATATYPE"))
+  }
+
+  test("every kernel: interpreted eval == generated code; null in, null out; types checked; SQL resolves") {
+    // One sample argument row per declaration. The table must cover every
+    // declaration, so a new kernel cannot skip this check.
+    val clip = ClipGen.clipRow(3)
+    val (b, c, sr) = (clip.bytes, clip.codec, clip.sr_hz)
+    val wav = graft.audio.AudioMeta.wavWrap(b, c, sr)
+    val img = graft.fixtures.ImageGen.imageRow(1).bytes
+    val vid = graft.fixtures.VideoGen.videoRow(1).bytes
+    // VAD sample: loud tone, silence, quiet tone (frame RMS ~0.07, between
+    // the 0.03 default threshold and a few times it)
+    val loud = graft.audio.AudioSynth.tone(8000, 440000L, 800)
+    val vad = loud ++ new Array[Byte](loud.length) ++ AudioCodec.gain(loud, "pcm16", 0.2)
+    val text = "the cat sat on the mat and the dog ran in the park"
+    val (va, vb) = (Array(0.1f, -0.4f, 0.9f, 0.3f), Array(0.2f, -0.1f, 0.8f, -0.5f))
+    val samples: Map[String, Seq[Any]] = Map(
+      "decode_pcm" -> Seq(b, c, sr), "pcm_sample_count" -> Seq(b, c),
+      "pcm_rms" -> Seq(b, c), "pcm_band_energies" -> Seq(b, c, sr),
+      "pcm_transcode" -> Seq(b, c, "ulaw"), "pcm_resample" -> Seq(b, c, sr, 16000),
+      "pcm_tone_pair" -> Seq(b, c, sr), "pcm_aligned_corr" -> Seq(b, c, b, c),
+      "pcm_gain" -> Seq(b, c, 0.5), "pcm_quality" -> Seq(b, c),
+      "audio_meta" -> Seq(wav), "wav_wrap" -> Seq(b, c, sr), "wav_unwrap" -> Seq(wav),
+      "pcm_segments" -> Seq(vad, "pcm16", 8000), "pcm_strip_silence" -> Seq(vad, "pcm16", 8000),
+      "pcm_tone" -> Seq[Any](8000, 440000L, 800),
+      "tone_band_energies" -> Seq[Any](8000, 440000L, 800, 8000),
+      "ppm_luma_mean" -> Seq(img), "image_meta" -> Seq(img),
+      "image_luma_mean" -> Seq(img), "image_dhash" -> Seq(img),
+      "video_meta" -> Seq(vid), "y4m_temporal_dhash" -> Seq(vid),
+      "y4m_motion_stats" -> Seq(vid),
+      "rel_url" -> Seq("http://a.example/x/y", "../z"), "lang_id" -> Seq(text),
+      "lang_id_ngram" -> Seq(text), "jaccard_sim" -> Seq(text, "the cat sat on the mat"),
+      "portable_bucket" -> Seq(text, 7), "sim_hash" -> Seq(text),
+      "min_hash" -> Seq(text, 4), "winnow_fp" -> Seq(text), "go_title" -> Seq(text),
+      "cosine_sim" -> Seq(va, vb), "qcosine_sim" -> Seq(va, vb),
+      "vec_lsh_bucket" -> Seq(va, 8), "vec_lsh_buckets" -> Seq(va, 8, 3),
+      "hash_comb_keys" -> Seq(0x123456789abcdefL))
+    assert(samples.keySet == Kernels.All.map(_.name).toSet)
+
+    def catalyst(v: Any): Any = v match {
+      case s: String => UTF8String.fromString(s)
+      case a: Array[Float] => org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(a)
+      case other => other
+    }
+    def scalaValue(v: Any, t: DataType): Any = norm(CatalystTypeConverters.convertToScala(v, t))
+    def norm(v: Any): Any = v match {
+      case a: Array[Byte] => a.toSeq
+      case r: Row => r.toSeq.map(norm)
+      case s: Iterable[_] => s.map(norm).toSeq
+      case other => other
+    }
+    def argType(in: Kernel.In): DataType = in.dataType match {
+      case ArrayType(e, _) => ArrayType(e, containsNull = false)
+      case t => t
+    }
+
+    // literal inputs stay literals; the others are bound row columns
+    def call(k: Kernel, values: Seq[Any], nullable: Boolean = true) =
+      KernelCall(k, k.inputs.zip(values).zipWithIndex.map {
+        case ((in, v), i) =>
+          if (in.literal) Literal(catalyst(v), argType(in))
+          else BoundReference(i, argType(in), nullable)
+      }.toIndexedSeq)
+    def generatedValue(e: KernelCall, row: InternalRow): Any = {
+      val out = GenerateUnsafeProjection.generate(Seq(e))(row)
+      scalaValue(if (out.isNullAt(0)) null else out.get(0, e.dataType), e.dataType)
+    }
+
+    for (k <- Kernels.All) {
+      val args = samples(k.name)
+      val e = call(k, args)
+      val row = InternalRow.fromSeq(args.map(catalyst))
+      val interpreted = e.eval(row)
+      assert(interpreted != null, s"${k.name} returned null on a valid sample")
+      // generated code with nullable and with non-nullable arguments
+      for (gen <- Seq(e, call(k, args, nullable = false)))
+        assert(scalaValue(interpreted, k.result) == generatedValue(gen, row),
+          s"${k.name}: interpreted and generated results differ")
+      // null in, null out, on both paths (the first input is never a literal)
+      val nullRow = InternalRow.fromSeq(null +: args.tail.map(catalyst))
+      assert(e.eval(nullRow) == null, s"${k.name}: eval of a null input")
+      assert(generatedValue(e, nullRow) == null, s"${k.name}: codegen of a null input")
+      // a wrong input type, or a column where a literal is required, fails analysis
+      val lits = k.inputs.zip(args).map { case (in, v) => Literal(catalyst(v), argType(in)) }
+      val wrong = Literal(true) +: lits.tail
+      intercept[AnalysisException](
+        spark.range(1).select(GraftFunctions.toColumn(KernelCall(k, wrong.toIndexedSeq))))
+      k.inputs.zipWithIndex.filter(_._1.literal).foreach { case (_, i) =>
+        intercept[AnalysisException](spark.range(1).select(GraftFunctions.toColumn(
+          KernelCall(k, lits.updated(i, GraftFunctions.toExpr(col("id").cast("int")))
+            .toIndexedSeq))))
+      }
+    }
+
+    // every SQL-surface name resolves through spark.sql
+    GraftFunctions.register(spark)
+    for (k <- Kernels.Sql) {
+      val args = samples(k.name)
+      val view = spark.range(1).select(k.inputs.zip(args).zipWithIndex.map {
+        case ((in, v), i) => GraftFunctions.toColumn(Literal(catalyst(v), argType(in))).as(s"a$i")
+      }: _*)
+      view.createOrReplaceTempView("kernel_args")
+      val sqlArgs = k.inputs.zip(args).zipWithIndex.map {
+        case ((in, v), i) => if (in.literal) v.toString else s"a$i"
+      }
+      val got = spark.sql(s"SELECT ${k.name}(${sqlArgs.mkString(", ")}) FROM kernel_args")
+        .collect().head.get(0)
+      val want = call(k, args).eval(InternalRow.fromSeq(args.map(catalyst)))
+      assert(norm(got) == scalaValue(want, k.result), s"${k.name} via SQL")
+    }
+    val others = GraftFunctions.sqlFunctions.map(_._1).filterNot(Kernels.Sql.map(_.name).toSet)
+    assert(others == Seq("extract_attr"))
+    spark.range(1).select(lit(clip.transcript).as("t")).createOrReplaceTempView("extract_args")
+    assert(spark.sql("SELECT extract_attr(t, 'phone', 'text') FROM extract_args")
+      .head().getSeq[String](0) ==
+      graft.operators.FusedExtract.scanOne(clip.transcript, "phone", "text").toSeq)
+    assert(GraftFunctions.sqlFunctions.map(_._1).distinct.length == 34)
   }
 }

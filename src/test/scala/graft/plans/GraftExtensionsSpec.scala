@@ -86,6 +86,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // SQL function injected too
       assert(s2.sql("SELECT size(decode_pcm(X'0000', 'pcm16', 8000))")
         .head().getInt(0) == 1)
+      // ...and so is the rest of the SQL surface, not only decode_pcm
+      assert(s2.sql("SELECT pcm_rms(X'00400040', 'pcm16')").head().getDouble(0) == 0.5)
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(shared)
       org.apache.spark.sql.SparkSession.setActiveSession(shared)

@@ -266,6 +266,15 @@ class ExactlyOnceSpec extends AnyFunSuite {
       .parquet(java.nio.file.Paths.get(cowDir, "data", "bucket=0").toString)
     intercept[IllegalArgumentException] { cow.read(spark) }
     intercept[IllegalArgumentException] { cow.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
+    // A merge-on-read root from a pre-versioned build: its base sits in
+    // one `compacted/` dir, which this reader no longer lists.
+    val legacyDir = Files.createTempDirectory("tbl-compacted").toString
+    val legacy = ClipTable(legacyDir, Seq("k"), numBuckets = 2)
+    legacy.merge(Seq(("a", 1)).toDF("k", "v"), 0) // stamps the v2 marker
+    Seq(("c", 3)).toDF("k", "v").write
+      .parquet(java.nio.file.Paths.get(legacyDir, "compacted").toString)
+    intercept[IllegalArgumentException] { legacy.read(spark) }
+    intercept[IllegalArgumentException] { legacy.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
     // and no handle can ask for that layout any more
     intercept[IllegalArgumentException] { ClipTable(cowDir, Seq("k"), mergeOnRead = false) }
   }
