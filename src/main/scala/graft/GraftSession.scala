@@ -26,17 +26,30 @@ import org.apache.spark.sql.SparkSession
   *    disk; an HDFS deployment should override
   *    `spark.sql.streaming.checkpointFileManagerClass` on the returned
   *    builder to get Spark's default back.
-  *  - `fs.file.impl = LocalFileSystem`: the bundled hive-exec jar
-  *    registers Hive's `ProxyLocalFileSystem` for `file:`, and its
-  *    `rename` refuses an existing target. Under the FileSystem-based
-  *    manager that turns `createAtomic(f, overwriteIfPossible = true)`
-  *    into a silent no-op when `f` exists, so a re-run batch would keep
-  *    the previous attempt's RocksDB changelog and write a fresh checksum
-  *    sidecar beside it. Hadoop's own `LocalFileSystem` (which the Hive
-  *    class extends, overriding only `rename`) replaces the target.
+  *  - `fs.file.impl = ForkFreeLocalFileSystem`, a subclass of Hadoop's
+  *    `LocalFileSystem`, for two reasons:
+  *    - The bundled hive-exec jar registers Hive's `ProxyLocalFileSystem`
+  *      for `file:`, and its `rename` refuses an existing target. Under
+  *      the FileSystem-based manager that turns `createAtomic(f,
+  *      overwriteIfPossible = true)` into a silent no-op when `f` exists,
+  *      so a re-run batch would keep the previous attempt's RocksDB
+  *      changelog and write a fresh checksum sidecar beside it. Hadoop's
+  *      `LocalFileSystem` (which the Hive class extends, overriding only
+  *      `rename`) replaces the target, and the subclass keeps its rename.
+  *    - Without libhadoop, Hadoop's raw local layer sets the mode of
+  *      every file it creates (the data file and its `.crc`) and of every
+  *      directory it makes by forking `chmod`, a few ms per fork. The
+  *      sink's delta parts, `_SUCCESS`, the offset/commit/source logs and
+  *      the RocksDB changelog and checksum files all pay it. The subclass
+  *      overrides only `setPermission`, as one in-JVM `chmod(2)` that
+  *      leaves the mode GNU `chmod %04o` would: a file gets exactly the
+  *      permission's 10 bits, a directory also keeps its setuid/setgid
+  *      bits. A JDK without the `unix` attribute view falls back to
+  *      Hadoop's command. Neither path fsyncs, so durability is
+  *      unchanged. HDFS and object stores do not use this class.
   *    Hadoop caches one `file:` FileSystem per JVM, so this holds only
   *    when the session's conf creates it first; `StopResumeSpec` checks
-  *    the overwrite on the test session.
+  *    the class, the modes and the overwrite on the test session.
   *  - AQE on: runtime coalescing/skew-join handling.
   *
   * Durability of the FileSystem-based manager against the default, on a
@@ -78,7 +91,7 @@ object GraftSession {
       // per commit (see the durability note above)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
 
   /** Local CPU count for the tools: `SPARK_GRAFT_CPUS`, else the JVM's
     * available processors. */

@@ -164,6 +164,38 @@ object Ivf {
   }
 }
 
+/** An expression whose fields include a constant float table that codegen
+  * passes to the generated code with `addReferenceObj`. As a raw array
+  * field the table would compare by reference and print as `[[F@` plus
+  * its identity hash, which differs between JVM runs and between equal
+  * tables loaded apart. This compares and hashes the fields by content and
+  * prints a table as its shape plus `Arrays.deepHashCode`, e.g.
+  * `float[8][64]#1f2e3d4c`. */
+trait FloatTableExpression extends Expression {
+  private def fields: Array[AnyRef] = productIterator.map(_.asInstanceOf[AnyRef]).toArray
+
+  override protected def stringArgs: Iterator[Any] = productIterator.map {
+    case t: Array[_] =>
+      def dims(x: Any): List[Int] = x match {
+        case a: Array[_] => a.length :: (if (a.isEmpty) Nil else dims(a(0)))
+        case _ => Nil
+      }
+      dims(t).mkString("float[", "][", "]") +
+        f"#${java.util.Arrays.deepHashCode(t.asInstanceOf[Array[AnyRef]])}%08x"
+    case x => x
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case that: FloatTableExpression =>
+      (that eq this) || that.getClass == getClass &&
+        java.util.Arrays.deepEquals(fields, that.fields)
+    case _ => false
+  }
+
+  @transient private lazy val contentHash = java.util.Arrays.deepHashCode(fields)
+  override def hashCode(): Int = contentHash
+}
+
 /** nearest_centroid(vec) -> int — cell id under the embedded (tiny)
   * centroid matrix. Codegen resolves the matrix through
   * `ctx.addReferenceObj`: the object rides the generated plan's serialized
@@ -172,7 +204,7 @@ object Ivf {
   * portable — no process-local registry, no broadcast bookkeeping. The
   * interpreted path reads the same serialized `cents` field. */
 case class NearestCentroid(child: Expression, cents: Array[Array[Float]])
-    extends UnaryExpression {
+    extends UnaryExpression with FloatTableExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -193,7 +225,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Float]])
 /** nearest_centroids(vec) -> array<int> — the nProbe nearest cell ids.
   * Cluster-portable codegen via addReferenceObj (see NearestCentroid). */
 case class NearestCentroids(child: Expression, cents: Array[Array[Float]], nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with FloatTableExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

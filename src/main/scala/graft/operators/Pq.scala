@@ -184,7 +184,7 @@ object Pq {
   * ride the plan via addReferenceObj (cluster-portable, like
   * NearestCentroid). */
 case class PqEncode(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression {
+    extends UnaryExpression with FloatTableExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -205,7 +205,7 @@ case class PqEncode(child: Expression, books: Array[Array[Array[Float]]])
 
 /** `pq_lut(query_vec)` -> array<float> (m*k flattened ADC table). */
 case class PqLut(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression {
+    extends UnaryExpression with FloatTableExpression {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "pq_lut"
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

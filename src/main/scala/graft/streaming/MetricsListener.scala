@@ -14,8 +14,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * The state ledger fields are summed over the trigger's state operators
   * (0 when it has none): `state_commit_ms` (`commitTimeMs`),
   * `state_changelog_commit_ms` (RocksDB's
-  * `rocksdbChangeLogWriterCommitLatencyMs`) and
-  * `rows_dropped_by_watermark` (`numRowsDroppedByWatermark`).
+  * `rocksdbChangeLogWriterCommitLatencyMs`),
+  * `rows_dropped_by_watermark` (`numRowsDroppedByWatermark`),
+  * `state_load_ms` (RocksDB's `rocksdbLoadLatencyMs`), `state_update_ms`
+  * (`allUpdatesTimeMs`) and `state_removal_ms` (`allRemovalsTimeMs`).
   * Readable back as a DataFrame via [[MetricsListener.read]].
   */
 final class MetricsListener(path: String, promPath: Option[String] = None)
@@ -51,11 +53,14 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
     val p = e.progress
     val stateRows = p.stateOperators.map(_.numRowsTotal).sum
     val stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum
+    def custom(key: String): Long = p.stateOperators.map(o =>
+      Option(o.customMetrics.get(key)).map(_.longValue).getOrElse(0L)).sum
     val stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum
-    val changelogCommitMs = p.stateOperators.map(o =>
-      Option(o.customMetrics.get("rocksdbChangeLogWriterCommitLatencyMs"))
-        .map(_.longValue).getOrElse(0L)).sum
+    val changelogCommitMs = custom("rocksdbChangeLogWriterCommitLatencyMs")
     val droppedByWatermark = p.stateOperators.map(_.numRowsDroppedByWatermark).sum
+    val stateLoadMs = custom("rocksdbLoadLatencyMs")
+    val stateUpdateMs = p.stateOperators.map(_.allUpdatesTimeMs).sum
+    val stateRemovalMs = p.stateOperators.map(_.allRemovalsTimeMs).sum
     val watermark = Option(p.eventTime.get("watermark")).getOrElse("")
     val eventMax = Option(p.eventTime.get("max")).getOrElse("")
     val durations = {
@@ -80,7 +85,9 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
         s""""watermark":"$watermark","event_time_max":"$eventMax",""" +
         s""""state_commit_ms":$stateCommitMs,""" +
         s""""state_changelog_commit_ms":$changelogCommitMs,""" +
-        s""""rows_dropped_by_watermark":$droppedByWatermark}""" + "\n"
+        s""""rows_dropped_by_watermark":$droppedByWatermark,""" +
+        s""""state_load_ms":$stateLoadMs,"state_update_ms":$stateUpdateMs,""" +
+        s""""state_removal_ms":$stateRemovalMs}""" + "\n"
     Files.write(Paths.get(path), line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     promPath.foreach(writeProm(_, p, stateRows, stateBytes, watermark, eventMax))

@@ -14,6 +14,14 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Each pair holds one constant-table expression over two equal tables
+    * built apart: they must be one expression to CSE and plan strings. */
+  private def assertSameTable(pairs: Seq[(FloatTableExpression, FloatTableExpression)]): Unit =
+    pairs.foreach { case (a, b) =>
+      assert(a.semanticEquals(b) && a.hashCode == b.hashCode, s"$a vs $b")
+      assert(a.toString == b.toString && !a.toString.contains("[F@"), a.toString)
+    }
+
   // ------------------------------------------------------------- text ops
 
   test("lang_id identifies fixture sentences per language") {
@@ -628,6 +636,12 @@ class PipelineOpsSpec extends AnyFunSuite {
       .asInstanceOf[NearestCentroid]
     val remoteN = roundtrip(NearestCentroids(in, cents, nProbe = 3): AnyRef)
       .asInstanceOf[NearestCentroids]
+    val copy = cents.map(_.clone)
+    assertSameTable(Seq(NearestCentroid(in, cents) -> NearestCentroid(in, copy),
+      NearestCentroid(in, cents) -> remote, NearestCentroids(in, copy, 3) -> remoteN))
+    assert(!NearestCentroids(in, cents, 3).semanticEquals(NearestCentroids(in, cents, 4)))
+    copy(0)(0) += 1f
+    assert(!NearestCentroid(in, cents).semanticEquals(NearestCentroid(in, copy)))
     // GenerateMutableProjection THROWS if codegen fails (no interpreted
     // fallback) — this is the path that broke with a process-local registry
     val proj = GenerateMutableProjection.generate(Seq(remote, remoteN))
@@ -701,6 +715,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     val in = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
     val remote = roundtrip(PqEncode(in, books): AnyRef).asInstanceOf[PqEncode]
+    assertSameTable(Seq(PqEncode(in, books) -> PqEncode(in, books2),
+      PqLut(in, books) -> PqLut(in, books2), PqEncode(in, books2) -> remote))
+    assert(!PqEncode(in, books).semanticEquals(PqLut(in, books)))
     val proj = GenerateMutableProjection.generate(Seq(remote))
     val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](new GenericArrayData(v.map(x => x: Any))))

@@ -68,32 +68,37 @@ class MetricsExporterSpec extends AnyFunSuite {
       // over the state operators, and only the late batch drops a row
       def ledgerOf(p: org.apache.spark.sql.streaming.StreamingQueryProgress) = {
         val ops = p.stateOperators.toSeq
-        (ops.map(_.commitTimeMs).sum,
-          ops.map(o => Option(o.customMetrics.get("rocksdbChangeLogWriterCommitLatencyMs"))
-            .map(_.longValue).getOrElse(0L)).sum,
-          ops.map(_.numRowsDroppedByWatermark).sum)
+        def custom(key: String) = ops.map(o => Option(o.customMetrics.get(key))
+          .map(_.longValue).getOrElse(0L)).sum
+        Seq(ops.map(_.commitTimeMs).sum,
+          custom("rocksdbChangeLogWriterCommitLatencyMs"),
+          ops.map(_.numRowsDroppedByWatermark).sum,
+          custom("rocksdbLoadLatencyMs"),
+          ops.map(_.allUpdatesTimeMs).sum,
+          ops.map(_.allRemovalsTimeMs).sum)
       }
       val ledger = MetricsListener.read(spark, jsonl)
         .filter(col("num_input_rows") > 0)
         .select("batch_id", "state_commit_ms", "state_changelog_commit_ms",
-          "rows_dropped_by_watermark")
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+          "rows_dropped_by_watermark", "state_load_ms", "state_update_ms",
+          "state_removal_ms")
+        .collect().map(r => r.getLong(0) -> (1 to 6).map(r.getLong))
         .toMap
       val dataProgress = progress.filter(_.numInputRows > 0)
       assert(ledger == dataProgress.map(p => p.batchId -> ledgerOf(p)).toMap)
-      assert(dataProgress.forall(p =>
-        p.stateOperators.exists(_.customMetrics.containsKey(
-          "rocksdbChangeLogWriterCommitLatencyMs"))), "changelog metric absent")
-      assert(ledger.toSeq.sortBy(_._1).map(_._2._3) == Seq(0L, 0L, 0L, 1L),
+      for (metric <- Seq("rocksdbChangeLogWriterCommitLatencyMs", "rocksdbLoadLatencyMs"))
+        assert(dataProgress.forall(p =>
+          p.stateOperators.exists(_.customMetrics.containsKey(metric))), s"$metric absent")
+      assert(ledger.toSeq.sortBy(_._1).map(_._2(2)) == Seq(0L, 0L, 0L, 1L),
         s"rows dropped by watermark: $ledger")
 
-      // the pre-ledger keys stay as they were, in the same order, and the
-      // ledger fields follow them
+      // the earlier keys stay as they were, in the same order, and each
+      // later group of ledger fields follows them
       val oldKeys = Seq("query_id", "batch_id", "timestamp", "num_input_rows",
         "input_rows_per_sec", "processed_rows_per_sec", "state_rows",
-        "state_bytes", "durations_ms", "watermark", "event_time_max")
-      val ledgerKeys = Seq("state_commit_ms", "state_changelog_commit_ms",
-        "rows_dropped_by_watermark")
+        "state_bytes", "durations_ms", "watermark", "event_time_max",
+        "state_commit_ms", "state_changelog_commit_ms", "rows_dropped_by_watermark")
+      val ledgerKeys = Seq("state_load_ms", "state_update_ms", "state_removal_ms")
       val topKeys = """(?:^\{|,)"([a-z_]+)":""".r
       Files.readAllLines(Paths.get(jsonl)).forEach { line =>
         val keys = topKeys.findAllMatchIn(line.replaceAll("\\{[^{}]*\\}", "{}"))

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.Trigger
@@ -76,6 +77,26 @@ class StopResumeSpec extends AnyFunSuite {
     val fm = CheckpointFileManager.create(new Path(dir.toUri),
       spark.sessionState.newHadoopConf())
     assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager], fm.getClass.getName)
+
+    // `file:` sets modes in the JVM and leaves what `chmod %04o` leaves
+    val fs = new Path(dir.toUri).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.isInstanceOf[graft.ForkFreeLocalFileSystem], fs.getClass.getName)
+    def octal(s: String) = Integer.parseInt(s, 8)
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & octal("7777")
+    val modes = Files.createDirectory(dir.resolve("modes"))
+    fs.create(new Path(modes.resolve("f").toUri), new FsPermission(octal("640").toShort),
+      false, 4096, 1.toShort, 1L << 20, null).close()
+    for (name <- Seq("f", ".f.crc"))
+      assert(mode(modes.resolve(name)) == octal("640"), f"$name: ${mode(modes.resolve(name))}%o")
+    // a directory keeps its setgid bit, as GNU chmod keeps it for 0755
+    val sgid = Files.createDirectory(modes.resolve("sgid"))
+    Files.setAttribute(sgid, "unix:mode", Integer.valueOf(octal("2775")))
+    assert(fs.mkdirs(new Path(sgid.resolve("child").toUri)))
+    assert((mode(sgid.resolve("child")) & octal("2000")) != 0,
+      f"setgid cleared: ${mode(sgid.resolve("child"))}%o")
+    val sticky = Files.createDirectory(modes.resolve("sticky"))
+    fs.setPermission(new Path(sticky.toUri), new FsPermission(octal("1777").toShort))
+    assert(mode(sticky) == octal("1777"), f"${mode(sticky)}%o")
 
     val f = new Path(dir.resolve("1").toUri)
     def write(content: String, overwrite: Boolean): Unit = {
