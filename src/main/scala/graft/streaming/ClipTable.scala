@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-style table layer over parquet with an exactly-once MERGE.
   *
@@ -26,23 +27,36 @@ import org.apache.spark.sql.functions._
   *      markers under `_commits/` record batch completion for
   *      observability/lineage, not gating.
   *
-  * Layout: one `<root>/delta/batch=<batchId>/` per merge, one
-  * `<root>/compacted-v<N>/` per compaction (files clustered by the
-  * `_bucket` hash column), per-batch commit markers under
-  * `<root>/_commits/`. Readers list only live files. Merge-on-read is the
-  * only layout: `mergeOnRead` accepts just `true` and stays so callers
-  * that name it keep compiling.
+  * Layout under `<root>`:
+  *   - `_format`: the table-format id; a root without it, or with another
+  *     id, is refused.
+  *   - `delta/batch=<batchId>/`: one per merge.
+  *   - `compacted-v<N>/`: one per compaction, files clustered by the
+  *     `_bucket` hash column.
+  *   - `_snapshots/v<N>`: the snapshot log, the only record of the table's
+  *     state. The newest snapshot IS the table: its first line is the
+  *     table schema (Spark JSON), each further line one live directory
+  *     relative to the root — at most one `compacted-v<K>` and the
+  *     unfolded `delta/batch=<id>` dirs. A directory no snapshot names is
+  *     invisible. Every read the table makes of itself is
+  *     `spark.read.schema(s).parquet(dirs)`: no directory walk and no
+  *     footer-merge job.
+  *   - `_commits/batch-<id>`: per-batch commit instants; `_leases/` and
+  *     `_repairs/` (see below).
+  *
+  * Merge-on-read is the only layout: `mergeOnRead` accepts just `true`
+  * and stays so callers that name it keep compiling.
   */
 final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int = 16,
     mergeOnRead: Boolean = true, gcGraceMs: Long = 300000L,
     leaseTimeoutMs: Long = 600000L, repairConflictPolicy: String = "fail") {
+  import ClipTable.Snapshot
   require(mergeOnRead,
     "the copy-on-write layout (mergeOnRead = false) was removed; merge-on-read is the only layout")
   require(Seq("fail", "warn").contains(repairConflictPolicy),
     s"repairConflictPolicy must be 'fail' or 'warn', got '$repairConflictPolicy'")
 
   private def commitsDir: Path = Paths.get(root, "_commits")
-  private def deltaDir(batchId: Long): Path = Paths.get(root, "delta", s"batch=$batchId")
 
   /** List a directory eagerly, closing the stream (Files.list holds an FD
     * until closed — a leak under sub-second triggers where recovery runs
@@ -60,41 +74,35 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     }
   private def nonEmptyDir(p: Path): Boolean = listDir(p).nonEmpty
 
-  /** Table-format fingerprint. v2 = NUL-joined key columns in the bucket
-    * hash (v1, round 1, used a space — same key strings could land in
-    * different buckets across versions, and a merge that re-buckets
-    * existing rows moves only the buckets it touches). Refusing a
+  /** Table-format fingerprint. v3 = the snapshot log; v2 roots (versioned
+    * bases tracked by a GC ledger) and older carry no snapshots, so this
+    * reader would see them as empty. v2 also fixed the bucket hash to
+    * NUL-joined key columns (v1, round 1, used a space). Refusing a
     * mismatched table turns silent row loss into a loud error; migrate by
-    * reading the old table and re-merging into a fresh root. */
+    * reading the old table with its own build and re-merging into a fresh
+    * root. */
   private def formatFile: Path = Paths.get(root, "_format")
-  private val formatId = s"v2 keyDelim=nul buckets=$numBuckets keys=${keyCols.mkString(",")}"
+  private val formatId = s"v3 snapshots keyDelim=nul buckets=$numBuckets keys=${keyCols.mkString(",")}"
   /** Refuses a table this build cannot read: a marker naming another
-    * format, or files in a directory of an older build's layout, which
-    * this reader would silently skip — `data/` (copy-on-write), or the
-    * pre-versioned merge-on-read base `compacted/` and its swap trash
-    * `_compact-trash/`. True when the marker exists. */
-  private def checkFormat(): Boolean = {
-    val marked = Files.exists(formatFile)
-    if (marked) {
+    * format, or a root that holds anything but leases and no marker (every
+    * layout since round 1 stamps one before its first write). True when
+    * the marker exists. */
+  private def checkFormat(): Boolean =
+    if (Files.exists(formatFile)) {
       val have = Files.readString(formatFile).trim
       require(have == formatId,
         s"table at $root was written with incompatible format '$have' (this build: '$formatId')")
+      true
+    } else {
+      require(listDir(Paths.get(root)).forall(_.getFileName.toString == "_leases"),
+        s"table at $root holds files but no _format marker (round-1 layout); re-merge into a fresh root")
+      false
     }
-    for (old <- Seq("data", "compacted", "_compact-trash"))
-      require(!nonEmptyDir(Paths.get(root, old)),
-        s"table at $root holds files under $old/, a layout this build no longer " +
-          "reads; re-merge into a fresh root")
-    marked
-  }
-  private def checkOrStampFormat(): Unit = {
+  private def checkOrStampFormat(): Unit =
     if (!checkFormat()) {
-      val hasData = nonEmptyDir(Paths.get(root, "delta")) || baseVersions.nonEmpty
-      require(!hasData,
-        s"table at $root predates the _format marker (round-1 layout); re-merge into a fresh root")
       Files.createDirectories(Paths.get(root))
       Files.writeString(formatFile, formatId)
     }
-  }
 
   def committed(batchId: Long): Boolean =
     Files.exists(commitsDir.resolve(s"batch-$batchId"))
@@ -104,7 +112,8 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
 
   /** Exactly-once MERGE of `batch` into the table, keyed by `keyCols`,
     * latest `_batch_id` wins: one delta write per batch (a single job, no
-    * existing-data read, no renames); readers dedupe latest-batch-wins.
+    * existing-data read), then a snapshot naming it; readers dedupe
+    * latest-batch-wins.
     *
     * Replay-safe WITHOUT a skip guard: the per-batch delta dir is
     * OVERWRITTEN on replay, so re-merging the same batch is a fixed point
@@ -114,30 +123,35 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * `/root/reference/storage/mongo.go:48-77`). Skipping the work on
     * replay would also skip the stateful upstream of the foreachBatch
     * plan, which Spark's state-store commit tracking (rightly) rejects —
-    * a replayed batch must re-commit its state versions. */
+    * a replayed batch must re-commit its state versions.
+    *
+    * Order: delta write, repair-conflict check, snapshot publish, commit
+    * marker. A crash before the publish leaves a delta no snapshot names:
+    * invisible, and overwritten by the replay. */
   def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
     val spark = batch.sparkSession
     checkOrStampFormat()
     Files.createDirectories(commitsDir)
-    batch
+    val delta = batch
       .withColumn("_batch_id", lit(batchId))
       .withColumn("_part_id", spark_partition_id()) // per-partition lineage
       .withColumn("_bucket", bucketOf)
-      .write.mode(SaveMode.Overwrite).parquet(deltaDir(batchId).toString)
+    val rel = s"delta/batch=$batchId"
+    val dir = Paths.get(root, rel).toString
+    delta.write.mode(SaveMode.Overwrite).parquet(dir)
+    // what the parquet reader infers for the written files
+    val schema = ClipTable.nullable(delta.schema).asInstanceOf[StructType]
     // Repair-contract check AFTER the write, on a read-back of the
     // just-written delta: checking the batch plan directly would
     // execute the stateful upstream a second time (state stores would
-    // re-commit within one batch). On conflict under 'fail' the delta
-    // is removed before throwing — readers list delta dirs
-    // unconditionally, so leaving it would expose the stale rows the
-    // contract exists to prevent.
-    if (conflictsWithRepairs(spark,
-        spark.read.parquet(deltaDir(batchId).toString), batchId)) {
-      if (repairConflictPolicy == "fail") {
-        deleteRecursively(deltaDir(batchId))
-        failRepairConflict(batchId)
-      } else warnRepairConflict(batchId)
+    // re-commit within one batch). On conflict under 'fail' nothing is
+    // published, so the delta stays invisible.
+    if (conflictsWithRepairs(spark, spark.read.schema(schema).parquet(dir), batchId)) {
+      if (repairConflictPolicy == "fail") failRepairConflict(batchId)
+      warnRepairConflict(batchId)
     }
+    publish(s => s.copy(schema = ClipTable.unionByName(s.schema, schema),
+      dirs = if (s.dirs.contains(rel)) s.dirs else s.dirs :+ rel))
     commit(batchId)
   }
 
@@ -164,9 +178,8 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
 
   private def repairKeysDir: Path = Paths.get(root, "_repairs")
 
-  /** `incoming` is by-name: merge passes a read-back of its delta,
-    * which costs a listing and a schema-inference job, so it must not be
-    * built while `_repairs/` is empty. */
+  /** `incoming` is by-name: merge passes a read-back of its delta, which
+    * must not be built while `_repairs/` is empty. */
   private def conflictsWithRepairs(spark: SparkSession, incoming: => DataFrame,
                                    batchId: Long): Boolean = {
     if (batchId >= ClipTable.RepairBand) return false
@@ -227,165 +240,87 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     id
   }
 
-  // ---------------------------------------------------------- compaction
-  //
-  // VERSIONED bases + grace-period GC (the Iceberg snapshot-expiry
-  // analog). compact() publishes the folded table as a NEW directory
-  // `compacted-v<N>` with one atomic rename — no live file or directory
-  // is ever renamed or deleted at publish time — and only SCHEDULES the
-  // superseded sources (previous base + folded deltas) for deletion.
-  // Physical deletion happens `gcGraceMs` later, so a reader that
-  // resolved file paths just before the compaction can still execute its
-  // plan (Spark reads lazily; deleting resolved files under it was a
-  // FileNotFoundException race). Overlap during the window is harmless:
-  // the MOR reader is latest-batch-wins idempotent, so base-vs-delta
-  // copies of a batch dedupe to identical rows. `gcGraceMs` must exceed
-  // the longest expected reader latency; 0 = delete eagerly
-  // (single-threaded tests / benchmarks).
+  // ------------------------------------------------------ snapshot log
 
-  private def baseVersions: Seq[(Int, Path)] =
-    listDir(Paths.get(root)).flatMap { p =>
+  private def snapshotsDir: Path = Paths.get(root, "_snapshots")
+  private def snapshotFile(id: Long): Path = snapshotsDir.resolve(s"v$id")
+  private def snapshotIds: Seq[Long] =
+    listDir(snapshotsDir).flatMap { p =>
       val n = p.getFileName.toString
-      if (n.startsWith("compacted-v") && n.length > 11 &&
-          n.drop(11).forall(_.isDigit) &&
-          listDir(p).exists(_.toString.endsWith(".parquet")))
-        Some(n.drop(11).toInt -> p)
-      else None
-    }.sortBy(_._1)
+      if (n.startsWith("v")) n.drop(1).toLongOption else None
+    }.sorted
+  private def loadSnapshot(id: Long): Snapshot = {
+    val lines = Files.readString(snapshotFile(id)).linesIterator.filter(_.nonEmpty).toSeq
+    Snapshot(id, DataType.fromJson(lines.head).asInstanceOf[StructType], lines.tail)
+  }
+  private def latest: Option[Snapshot] = snapshotIds.lastOption.map(loadSnapshot)
 
-  private def latestBase: Option[Path] = baseVersions.lastOption.map(_._2)
-
-  private def deltaBatchDirs: Seq[Path] =
-    listDir(Paths.get(root, "delta"))
-      .filter(d => d.getFileName.toString.startsWith("batch=") && nonEmptyDir(d))
-
-  // GC ledger: one marker file per superseded directory (filename =
-  // base64url of the root-relative path, content = the FENCE EPOCH the
-  // schedule was stamped with — see the epoch-fence comment below; a
-  // just-created marker briefly holds "PENDING" until its epoch is
-  // claimed, and a scheduler crash in that window is healed by the next
-  // sweep).
-  private def gcDir: Path = Paths.get(root, "_gc")
-  private def relOf(p: Path): String =
-    Paths.get(root).toAbsolutePath.normalize
-      .relativize(p.toAbsolutePath.normalize).toString
-  private def gcKey(rel: String): String =
-    java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(
-      rel.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private def gcRelOfKey(name: String): Option[String] =
-    scala.util.Try(new String(java.util.Base64.getUrlDecoder.decode(name),
-      java.nio.charset.StandardCharsets.UTF_8)).toOption
-
-  /** Every scheduled root-relative path, PENDING markers included — the
-    * read()/compact() exclusion set. A marker excludes its directory the
-    * moment the FILE exists, before any epoch is assigned: the fence
-    * argument below needs "marker visible => later listings never resolve
-    * the directory". */
-  private def gcScheduledRels: Set[String] =
-    listDir(gcDir).flatMap(f => gcRelOfKey(f.getFileName.toString)).toSet
-
-  /** Ledger entries: (rel, path, fence epoch — None while PENDING, marker
-    * storage mtime). Only finalized entries are sweep-eligible. */
-  private def gcEntries: Seq[(String, Path, Option[Long], Long)] =
-    listDir(gcDir).flatMap { f =>
-      gcRelOfKey(f.getFileName.toString).flatMap { rel =>
-        scala.util.Try {
-          val epoch = Files.readString(f).trim.toLongOption
-          (rel, Paths.get(root).resolve(rel), epoch,
-            Files.getLastModifiedTime(f).toMillis)
-        }.toOption
-      }
+  /** Publish `change` of the newest snapshot as the next one (a no-op
+    * change publishes nothing). The snapshot is written to a temp file and
+    * claimed as `v<N>` with `createLink`, an exclusive atomic create — not
+    * a rename, which silently replaces an existing target. A writer that
+    * loses `v<N>` re-reads the newest snapshot, rebases its change and
+    * retries. */
+  @annotation.tailrec
+  private def publish(change: Snapshot => Snapshot): Unit = {
+    val cur = latest.getOrElse(Snapshot(-1L, new StructType(), Nil))
+    val next = change(cur).copy(id = cur.id + 1)
+    if (next.copy(id = cur.id) != cur) {
+      Files.createDirectories(snapshotsDir)
+      val tmp = snapshotsDir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
+      Files.writeString(tmp, next.render)
+      val won = try { Files.createLink(snapshotFile(next.id), tmp); true }
+        catch { case _: FileAlreadyExistsException => false }
+        finally Files.delete(tmp)
+      if (!won) publish(change)
     }
-
-  // ---------------------------------------------------- GC epoch fence
-  //
-  // "Did this reader resolve its file list before that GC schedule?" used
-  // to be decided by comparing System.currentTimeMillis() stamps written
-  // by DIFFERENT processes — fine on one host, silently wrong under
-  // cross-host clock skew (a reader whose clock runs ahead of the
-  // compactor's looks like it acquired after the schedule, loses the
-  // fence, and can have resolved files deleted under it). The order is
-  // now LOGICAL: a fence epoch counter advanced by atomic-exclusive file
-  // creation (`_epoch/e<N>` — Files.createFile fails if the name exists,
-  // so two processes can never both claim epoch N). Leases and schedule
-  // markers are stamped with claimed epochs, and the sweep's blocking
-  // rule is pure integer order: a live lease with epoch <= a marker's
-  // epoch blocks that marker. No clock anywhere in the ordering.
-  //
-  // Why the rule is sound (two-phase schedule): gcScheduleAll creates
-  // every marker FILE (content PENDING) before claiming the schedule's
-  // epoch S. Take any leased reader. If its listing happened after the
-  // marker existed, read() excluded the directory — the reader never
-  // resolved it and needs no protection. If its listing happened before,
-  // then its lease epoch E (claimed before the listing) was claimed
-  // before S, so E < S and the sweep blocks. There is no interleaving in
-  // which a reader resolves the directory yet holds E > S.
-  //
-  // Wall time survives ONLY inside age computations (grace window,
-  // crashed-lease expiry) and there it is ONE clock — the storage
-  // system's: file mtimes compared against the mtime of a probe file the
-  // sweep just wrote. Two readings of the same clock, never two clocks.
-  private def epochDir: Path = Paths.get(root, "_epoch")
-  private def currentEpoch: Long =
-    listDir(epochDir).flatMap { f =>
-      val n = f.getFileName.toString
-      if (n.startsWith("e")) n.drop(1).toLongOption else None
-    }.foldLeft(0L)(math.max)
-
-  /** Claim the next fence epoch (atomic across processes). Stale counter
-    * files below the claim are pruned best-effort — only the max matters,
-    * and the claimed file itself is never pruned by its claimant. */
-  private def advanceEpoch(): Long = {
-    Files.createDirectories(epochDir)
-    var claimed = -1L
-    while (claimed < 0) {
-      val next = currentEpoch + 1
-      try { Files.createFile(epochDir.resolve(s"e$next")); claimed = next }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    listDir(epochDir).foreach { f =>
-      f.getFileName.toString.drop(1).toLongOption
-        .filter(_ < claimed).foreach(_ => Files.deleteIfExists(f))
-    }
-    claimed
   }
 
-  /** Schedule directories for deletion under ONE fence epoch — two-phase
-    * (all marker files first, then one epoch claim, then finalize) per
-    * the soundness argument above. Already-scheduled paths are skipped;
-    * PENDING leftovers from a crashed scheduler are finalized by the
-    * next sweep. */
-  private def gcScheduleAll(paths: Seq[Path]): Unit = {
-    Files.createDirectories(gcDir)
-    val fresh = paths.map(p => gcDir.resolve(gcKey(relOf(p))))
-      .filterNot(Files.exists(_))
-    if (fresh.isEmpty) return
-    fresh.foreach(f => Files.writeString(f, "PENDING"))
-    val epoch = advanceEpoch()
-    fresh.foreach(f => Files.writeString(f, epoch.toString))
+  /** The snapshot's live dirs as one un-resolved DataFrame. Named dirs
+    * that no longer exist are skipped (physical loss reads as missing
+    * rows, which `repair` restores). Directories, not files, are passed:
+    * 16 base files plus the deltas would cross Spark's 32-path threshold
+    * for a parallel listing job. */
+  private def scan(spark: SparkSession, s: Snapshot): DataFrame = {
+    val dirs = s.dirs.map(Paths.get(root, _)).filter(Files.isDirectory(_)).map(_.toString)
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
+    else spark.read.schema(s.schema).parquet(dirs: _*)
   }
 
-  /** The storage clock: mtime of a probe file written now. Grace and
-    * lease-expiry ages are differences between readings of THIS clock. */
-  private def storageNow(): Long = {
-    Files.createDirectories(gcDir)
-    val probe = gcDir.resolve(".clock") // '.' is not base64url: never a ledger entry
-    Files.writeString(probe, "")
-    Files.getLastModifiedTime(probe).toMillis
-  }
-
-  // ------------------------------------------------------- reader leases
+  // ------------------------------------------------- snapshot expiry
   //
-  // The grace window alone is TIME-based: a reader slower than gcGraceMs
-  // could still lose resolved files. Leases make GC deterministic for
-  // arbitrarily slow readers: `readLeased()` claims a fence epoch and
-  // registers a lease file BEFORE resolving the file list, and the sweep
-  // refuses to delete a superseded directory while any lease with epoch
-  // <= the directory's schedule epoch is held. Leases claimed after the
-  // schedule never block it — read() excludes GC-scheduled dirs, so those
-  // readers never resolved it. A crashed reader's lease expires once its
-  // file's storage age exceeds `leaseTimeoutMs` (falling back to
-  // time-based semantics) so a dead process cannot block GC forever.
+  // The Iceberg `expire_snapshots` analog, and the only deletion path.
+  // A superseded base or folded delta stays on disk while any retained
+  // snapshot names it, so a reader that resolved its files from an older
+  // snapshot can still execute its plan (Spark reads lazily). The sweep
+  // retains:
+  //   (a) the newest snapshot;
+  //   (b) every snapshot with id >= the smallest live lease;
+  //   (c) every snapshot superseded less than `gcGraceMs` ago.
+  // It deletes the dirs named only by the other snapshots, then those
+  // snapshot files, and runs only when a superseded snapshot exists.
+  //
+  // Why leases are sound: a lease records the newest snapshot id L
+  // BEFORE its reader resolves the newest snapshot R, so L <= R. The
+  // sweep reads the newest snapshot M BEFORE it lists leases, and only
+  // snapshots below M are candidates. If the listing saw the lease, every
+  // snapshot >= L is retained, R among them. If it did not, the lease was
+  // written after the listing, so R was resolved after M existed: R >= M,
+  // and M is retained (a) while anything newer is not a candidate. Either
+  // way R's dirs survive. No clock enters the lease order — ids only.
+  //
+  // Ages — the grace window (c) and crashed-lease expiry — are measured
+  // on ONE clock, the storage system's: a snapshot is superseded at the
+  // mtime of the next snapshot, and a lease is as old as its file's
+  // mtime, both against the mtime of a probe file the sweep writes. Two
+  // readings of the same clock, never two hosts' clocks. An unleased
+  // reader resolved its snapshot before the next one was published, so
+  // its files live at least `gcGraceMs` past its resolution; 0 = expire
+  // eagerly (single-threaded tests / benchmarks).
+  //
+  // Writers and the sweep of one table run serialized (every mutating
+  // method is synchronized on the instance).
+
   private def leasesDir: Path = Paths.get(root, "_leases")
 
   /** Handle for a leased read — `release()` when the consuming action is
@@ -394,96 +329,86 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     def release(): Unit = Files.deleteIfExists(file)
   }
 
-  /** Claim a fence epoch and register it as a lease; subsequent GC
-    * schedules will not physically delete directories this reader may
-    * have resolved until release() or lease expiry. */
+  /** Register a lease on the newest snapshot id: no snapshot from it on
+    * expires until release() or lease expiry (`leaseTimeoutMs` on the
+    * storage clock, so a dead process cannot block expiry forever). */
   def acquireLease(): ReadLease = synchronized {
     Files.createDirectories(leasesDir)
     val f = leasesDir.resolve(s"lease-${java.util.UUID.randomUUID()}")
-    Files.writeString(f, advanceEpoch().toString)
+    Files.writeString(f, snapshotIds.lastOption.getOrElse(-1L).toString)
     new ReadLease(f)
   }
 
   /** read() under a lease: the returned DataFrame's resolved files are
-    * protected from compaction GC until the lease is released (or times
-    * out). The caller must release() after its terminal action. */
+    * protected from expiry until the lease is released (or times out).
+    * The caller must release() after its terminal action. */
   def readLeased(spark: SparkSession): (DataFrame, ReadLease) = {
     val lease = acquireLease()
     (read(spark), lease)
   }
 
-  /** Fence epochs of live leases. Expiry is on the storage clock (lease
-    * file mtime vs the sweep's probe mtime); expired files are dropped
-    * (best-effort) so a crashed reader can't pin GC. */
-  private def activeLeaseEpochs(storageNowMs: Long): Seq[Long] =
+  /** Snapshot ids of live leases; expired lease files are dropped
+    * (best-effort) so a crashed reader can't pin expiry. */
+  private def liveLeases(now: Long): Seq[Long] =
     listDir(leasesDir).flatMap { f =>
       val live = scala.util.Try(
-        storageNowMs - Files.getLastModifiedTime(f).toMillis <= leaseTimeoutMs
-      ).getOrElse(false)
+        now - Files.getLastModifiedTime(f).toMillis <= leaseTimeoutMs).getOrElse(false)
       scala.util.Try(Files.readString(f).trim.toLong).toOption match {
-        case Some(e) if live => Some(e)
+        case Some(id) if live => Some(id)
         case Some(_) => Files.deleteIfExists(f); None
         case None => None // unreadable/foreign file: ignore, never blocks
       }
     }
 
-  private def gcSweep(): Unit = {
-    // Heal PENDING markers left by a scheduler crash between the two
-    // phases: claim one epoch for all of them. Extant leases were claimed
-    // earlier, so they carry smaller epochs and still block — exactly the
-    // conservative direction. Healing precedes the probe so the healed
-    // markers' mtimes are at-or-before `now` (age >= 0: with grace 0 the
-    // same sweep can collect them).
-    val pending = gcEntries.collect { case (rel, _, None, _) => rel }
-    if (pending.nonEmpty) {
-      val epoch = advanceEpoch()
-      pending.foreach(rel =>
-        Files.writeString(gcDir.resolve(gcKey(rel)), epoch.toString))
-    }
-    val now = storageNow()
-    val leases = activeLeaseEpochs(now)
-    gcEntries.foreach { case (rel, p, epochOpt, mtime) =>
-      epochOpt.foreach { e =>
-        val leased = leases.exists(_ <= e)
-        if (now - mtime >= gcGraceMs && !leased) {
-          deleteRecursively(p)
-          Files.deleteIfExists(gcDir.resolve(gcKey(rel)))
-        }
-      }
-    }
+  private def sweep(): Unit = {
+    val ids = snapshotIds // the newest snapshot, read before the leases
+    if (ids.size < 2) return
+    val probe = Files.createTempFile(snapshotsDir, ".clock-", "")
+    val now = try Files.getLastModifiedTime(probe).toMillis finally Files.delete(probe)
+    val minLease = liveLeases(now).foldLeft(ids.last)(math.min)
+    val expired = ids.zip(ids.tail).takeWhile { case (id, next) =>
+      id < minLease && now - Files.getLastModifiedTime(snapshotFile(next)).toMillis >= gcGraceMs
+    }.map(_._1)
+    if (expired.isEmpty) return
+    val kept = ids.drop(expired.size).flatMap(loadSnapshot(_).dirs).toSet
+    expired.flatMap(loadSnapshot(_).dirs).distinct.filterNot(kept)
+      .foreach(d => deleteRecursively(Paths.get(root, d)))
+    expired.foreach(id => Files.delete(snapshotFile(id)))
     val dp = Paths.get(root, "delta")
     if (Files.exists(dp) && listDir(dp).isEmpty) Files.delete(dp)
   }
 
-  /** Run a GC sweep now (maintenance hook / deterministic tests). */
-  def gcNow(): Unit = synchronized { gcSweep() }
+  /** Run a snapshot-expiry sweep now (maintenance hook / deterministic
+    * tests). */
+  def gcNow(): Unit = synchronized { sweep() }
+
+  // ---------------------------------------------------------- compaction
 
   /** Fold the current table (latest base + unfolded deltas) into a new
     * base version — the maintenance operation an Iceberg
     * `rewrite_data_files` would run (lineage columns kept as data
-    * columns). Crash-safe by construction: the only mutation of live
-    * state is one atomic rename of the complete staging dir to
-    * `compacted-v<N>`; a crash before it leaves an orphan staging dir
-    * (discarded here on the next run), a crash after it leaves the
-    * superseded sources unscheduled — read() then sees base+delta
-    * overlap, which latest-batch-wins resolves identically. */
+    * columns). The fold is staged, moved to `compacted-v<N>` with one
+    * atomic rename, then published as a snapshot naming the new base plus
+    * any deltas merged since the fold read its snapshot. A crash before
+    * the move leaves a staging dir, one between the move and the publish
+    * an unpublished `compacted-v<N>`; the next compaction discards both.
+    * The superseded sources go with snapshot expiry. */
   def compact(spark: SparkSession): Unit = synchronized {
-    val gcSet = gcScheduledRels
-    val base = latestBase.filterNot(p => gcSet.contains(relOf(p)))
-    val deltas = deltaBatchDirs.filterNot(p => gcSet.contains(relOf(p)))
-    if (base.isEmpty && deltas.isEmpty) { gcSweep(); return }
-    val current = morDedup( // mergeSchema: deltas may have evolved columns
-      spark.read.option("mergeSchema", "true")
-        .parquet((base.toSeq ++ deltas).map(_.toString): _*))
-    val staging = Paths.get(root, "_compact-staging")
-    deleteRecursively(staging)
-    current.repartition(numBuckets, col("_bucket"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val next = baseVersions.lastOption.map(_._1 + 1).getOrElse(0)
-    Files.move(staging, Paths.get(root, s"compacted-v$next"),
-      StandardCopyOption.ATOMIC_MOVE)
-    gcScheduleAll(base.toSeq ++ deltas)
-    gcSweep()
+    latest.foreach { s =>
+      val published = s.base.fold(-1)(_.drop(11).toInt)
+      listDir(Paths.get(root)).filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("compacted-v") && n.drop(11).toIntOption.exists(_ > published)
+      }.foreach(deleteRecursively)
+      val staging = Paths.get(root, "_compact-staging")
+      deleteRecursively(staging)
+      morDedup(scan(spark, s)).repartition(numBuckets, col("_bucket"))
+        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val base = s"compacted-v${published + 1}"
+      Files.move(staging, Paths.get(root, base), StandardCopyOption.ATOMIC_MOVE)
+      publish(cur => cur.copy(dirs = base +: cur.deltas.filterNot(s.dirs.contains)))
+    }
+    sweep()
   }
 
   /** Incremental maintenance policy: fold deltas into the compacted base
@@ -494,12 +419,8 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * compaction ran. Call from a maintenance hook or between batches (it
     * is synchronized with merge/read on this instance). */
   def compactIfNeeded(spark: SparkSession, maxDeltas: Int = 16): Boolean = synchronized {
-    // only UNFOLDED deltas count toward the threshold — GC-scheduled ones
-    // are already in the latest base and merely await their grace window
-    val gcSet = gcScheduledRels
-    val n = deltaBatchDirs.count(d => !gcSet.contains(relOf(d)))
-    if (n > maxDeltas) { compact(spark); true }
-    else { gcSweep(); false }
+    if (latest.exists(_.deltas.size > maxDeltas)) { compact(spark); true }
+    else { sweep(); false }
   }
 
   private def commit(batchId: Long): Unit =
@@ -511,9 +432,8 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * the latest-wins window's partition columns, so filtering the row
     * versions before resolution gives the same rows; it reaches the
     * parquet scan and can skip row groups by min/max stats, but it prunes
-    * no files: the scan still lists and opens every live base and delta
-    * file. An empty table returns the schema-less frame, as [[read]]
-    * does. */
+    * no files: the scan still opens every live base and delta file. An
+    * empty table returns the schema-less frame, as [[read]] does. */
   def lookup(spark: SparkSession, keyValues: Seq[String]): DataFrame = {
     require(keyValues.length == keyCols.length,
       s"expected ${keyCols.length} key values (${keyCols.mkString(",")}), " +
@@ -549,27 +469,12 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     readRawOpt(spark).fold(spark.emptyDataFrame)(raw =>
       morDedup(raw.filter(col("_batch_id") <= maxBatchId)))
 
-  /** Live files as one un-resolved DataFrame (all surviving row
+  /** The newest snapshot as one un-resolved DataFrame (all surviving row
     * versions), or None for an empty table — shared by [[read]] (resolve
     * to latest), [[lookup]] and [[readAsOf]] (cut first, then resolve). */
   private def readRawOpt(spark: SparkSession): Option[DataFrame] = {
     checkFormat()
-    // latest base + unfolded deltas; GC-scheduled dirs are excluded
-    // (their content is in the latest base) but stay on disk through
-    // the grace window for readers that already resolved their files
-    val gcSet = gcScheduledRels
-    val live = (latestBase.toSeq ++ deltaBatchDirs)
-      .filterNot(p => gcSet.contains(relOf(p))).map(_.toString)
-    if (live.isEmpty) return None
-    // mergeSchema: batches may evolve the schema (add columns) — without
-    // it the parquet reader takes ONE file's schema and silently drops
-    // the others' new columns (the heterogeneous base+delta set is read
-    // directly, so the union by name happens here).
-    // Cost note: schema merging reads every file footer at plan time; the
-    // file count is bounded by compaction (base + <= maxDeltas deltas) so
-    // this stays O(buckets + deltas), not O(history). A real Iceberg
-    // catalog tracks the schema in table metadata and skips this walk.
-    Some(spark.read.option("mergeSchema", "true").parquet(live: _*))
+    latest.map(scan(spark, _))
   }
 
   /** Latest-batch-wins dedupe per key (ties within a batch keep one row)
@@ -595,4 +500,32 @@ object ClipTable {
     * against every stream write and repair delta dirs never collide with
     * stream delta dirs. */
   val RepairBand: Long = 1L << 40
+
+  /** One entry of the snapshot log: the table schema and its live dirs,
+    * relative to the root (at most one `compacted-v<K>`, then deltas). */
+  private final case class Snapshot(id: Long, schema: StructType, dirs: Seq[String]) {
+    def base: Option[String] = dirs.find(_.startsWith("compacted-v"))
+    def deltas: Seq[String] = dirs.filterNot(base.contains)
+    def render: String = (schema.json +: dirs).mkString("", "\n", "\n")
+  }
+
+  /** `have` plus the columns of `add` it lacks, appended by name — the
+    * union the parquet reader's `mergeSchema` takes over file footers. A
+    * column whose type changes is refused. */
+  private def unionByName(have: StructType, add: StructType): StructType = {
+    add.fields.foreach(f => have.find(_.name == f.name).foreach(g =>
+      require(g.dataType == f.dataType, s"column ${f.name} changes type from " +
+        s"${g.dataType.simpleString} to ${f.dataType.simpleString}")))
+    StructType(have.fields ++ add.fields.filterNot(f => have.fieldNames.contains(f.name)))
+  }
+
+  /** `t` with every field, element and value nullable: the schema the
+    * parquet reader reports for files written with schema `t`. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

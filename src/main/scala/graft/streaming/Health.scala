@@ -119,7 +119,7 @@ object Health {
       case Some(l) => Probe("watermark_lag", l <= maxWatermarkLagMs, s"lag ${l}ms")
     }
     val sink = try {
-      table.read(spark).schema // format-marker check + listing, no job
+      table.read(spark).schema // format-marker check + snapshot, no job
       Probe("sink_readable", ok = true, "schema resolved")
     } catch { case e: Throwable =>
       Probe("sink_readable", ok = false,

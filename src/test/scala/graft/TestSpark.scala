@@ -6,6 +6,28 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = graft.GraftSession.create("local[4]", 4, "graft-test")
 
+  /** `body`'s result and the number of Spark jobs it starts on the
+    * calling thread (its jobs carry a fresh job group; other threads' jobs
+    * are not counted). */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobs counted by a test")
+    val result = try body finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (result, jobs.get)
+  }
+
   /** Write `df` as `nSlices` files in event-time order with strictly
     * increasing mtimes, so the file stream source replays a TIME-ORDERED
     * stream (the north rule's "same input stream + watermark" presumes

@@ -72,9 +72,15 @@ class BackfillSpec extends AnyFunSuite {
       assert(got == Map("a" -> (1, None), "b" -> (20, Some("en")),
         "c" -> (30, Some("de"))), got.toString)
     }
+    // the snapshot's schema is what the parquet reader's mergeSchema
+    // infers over the same live dirs: nullable, same field order
+    def inferred(dirs: String*) = spark.read.option("mergeSchema", "true")
+      .parquet(dirs.map(java.nio.file.Paths.get(dir, _).toString): _*).schema
     check(t)
+    assert(t.read(spark).schema == inferred("delta/batch=0", "delta/batch=1"))
     t.compact(spark)
     check(t)
+    assert(t.read(spark).schema == inferred("compacted-v0"))
   }
 
   test("stream-band merge to a repaired key fails loudly (both modes)") {

@@ -34,6 +34,12 @@ class ExactlyOnceSpec extends AnyFunSuite {
     assert(got == Map("a" -> 10, "b" -> 2, "c" -> 3))
     // lineage columns present
     assert(t.read(spark).columns.toSet.intersect(Set("_batch_id", "_part_id")).size == 2)
+    // building the read plans starts no Spark job: the schema and the
+    // live dirs come from the snapshot, not from a footer merge
+    val (_, jobs) = TestSpark.jobsStartedBy {
+      t.read(spark); t.lookup(spark, Seq("a")); t.readAsOf(spark, 0L)
+    }
+    assert(jobs == 0, s"building read, lookup and readAsOf started $jobs Spark job(s)")
   }
 
   test("compaction is crash-safe and defers deletion through the GC grace window") {
@@ -123,55 +129,66 @@ class ExactlyOnceSpec extends AnyFunSuite {
       .as[(String, Int)].collect().toMap == truth + ("k9" -> 9))
   }
 
-  test("epoch-fenced GC: post-schedule leases never block; PENDING markers heal") {
-    // The lease/schedule order is a LOGICAL fence epoch (atomic file
-    // creation), not a cross-process wall-clock comparison — this test
-    // pins the order semantics the fence must provide.
-    val dir = Files.createTempDirectory("tbl-fence").toString
+  test("snapshot expiry: leases pin snapshot ids; an unpublished base is discarded") {
+    // A lease records the newest snapshot id before its reader resolves
+    // the table, and expiry keeps every snapshot from the smallest live
+    // lease on. The order is snapshot ids, never a clock.
+    val dir = Files.createTempDirectory("tbl-expiry").toString
     val t = ClipTable(dir, Seq("k"), numBuckets = 2, mergeOnRead = true,
       gcGraceMs = 0L)
     (0 until 3).foreach(i => t.merge(Seq((s"k$i", i)).toDF("k", "v"), i))
 
-    // a lease whose epoch was claimed BEFORE the schedule blocks it...
+    // a lease taken BEFORE the compaction blocks the sweep...
     val (_, early) = t.readLeased(spark)
     t.compact(spark)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "delta")),
-      "pre-schedule lease lost the fence")
+      "pre-compaction lease lost its snapshot")
     early.release()
-    // ...but a lease claimed AFTER the schedule must NOT block the sweep
-    // even while HELD: read() excluded the scheduled dirs from its
-    // resolution, so it has no claim on them, and its fence epoch is
-    // above the markers'.
+    // ...but a lease taken AFTER it must NOT block the sweep even while
+    // HELD: it pins the compacted snapshot, which names none of the
+    // folded deltas.
     val (lateDf, late) = t.readLeased(spark)
     t.gcNow()
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "delta")),
-      "post-schedule lease blocked a sweep it never had a claim on")
+      "post-compaction lease blocked a sweep it never had a claim on")
     assert(lateDf.select("k", "v").as[(String, Int)].collect().toMap ==
       Map("k0" -> 0, "k1" -> 1, "k2" -> 2))
     late.release()
 
-    // Scheduler crash healing: a marker left as PENDING (crash between
-    // marker-file write and epoch claim) excludes its dir from reads
-    // immediately, and the next sweep finalizes (assigns an epoch) and
-    // collects it in one pass.
-    val dir2 = Files.createTempDirectory("tbl-pending").toString
+    // Compaction crash between the atomic move and the snapshot publish:
+    // a `compacted-v<N>` no snapshot names is invisible, and the next
+    // compaction discards it before it writes its own base there.
+    val dir2 = Files.createTempDirectory("tbl-unpublished").toString
     val t2 = ClipTable(dir2, Seq("k"), numBuckets = 2, mergeOnRead = true,
       gcGraceMs = 0L)
     t2.merge(Seq(("a", 1)).toDF("k", "v"), 0)
+    t2.compact(spark) // publishes compacted-v0
+    val orphan = java.nio.file.Paths.get(dir2, "compacted-v1")
+    Seq(("a", 99, 5L, 0, 0)).toDF("k", "v", "_batch_id", "_part_id", "_bucket")
+      .write.parquet(orphan.toString)
+    def rows2 = t2.read(spark).select("k", "v").as[(String, Int)].collect().toMap
+    assert(rows2 == Map("a" -> 1), "unpublished base is visible")
     t2.merge(Seq(("b", 2)).toDF("k", "v"), 1)
-    val gc = java.nio.file.Paths.get(dir2, "_gc")
-    java.nio.file.Files.createDirectories(gc)
-    val key = java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString("delta/batch=0".getBytes("UTF-8"))
-    java.nio.file.Files.writeString(gc.resolve(key), "PENDING")
-    assert(t2.read(spark).select("k", "v").as[(String, Int)].collect().toMap ==
-      Map("b" -> 2), "PENDING marker did not exclude its dir from read()")
-    t2.gcNow()
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir2, "delta", "batch=0")),
-      "healed PENDING marker was not swept")
-    assert(!java.nio.file.Files.exists(gc.resolve(key)),
-      "marker not cleared after sweep")
+    t2.compact(spark)
+    assert(rows2 == Map("a" -> 1, "b" -> 2))
+    assert(spark.read.parquet(orphan.toString).select("k", "v").as[(String, Int)]
+      .collect().toMap == Map("a" -> 1, "b" -> 2), "orphan base was not discarded")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir2, "compacted-v0")))
+  }
+
+  test("two writers on one root: a writer that loses a snapshot id rebases, no batch is lost") {
+    // Each handle publishes `_snapshots/v<N>` with an exclusive create; the
+    // loser of an id re-reads the newest snapshot and retries on top of it.
+    val dir = Files.createTempDirectory("tbl-writers").toString
+    val handles = Seq.fill(2)(ClipTable(dir, Seq("k"), numBuckets = 2))
+    handles.head.merge(Seq(("seed", 0)).toDF("k", "v"), 1000L) // stamps _format
+    val writers = handles.zipWithIndex.map { case (t, w) =>
+      new Thread(() => (0 until 8).foreach(i =>
+        t.merge(Seq((s"w$w-$i", i)).toDF("k", "v"), w * 100L + i)))
+    }
+    writers.foreach(_.start()); writers.foreach(_.join())
+    val got = handles.head.read(spark).select("k").as[String].collect().toSet
+    assert(got == (for (w <- 0 until 2; i <- 0 until 8) yield s"w$w-$i").toSet + "seed")
   }
 
   test("readAsOf: exact snapshots pre-compaction; surviving-version semantics after") {
@@ -256,23 +273,25 @@ class ExactlyOnceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { t.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
     intercept[IllegalArgumentException] { t.read(spark) }
 
-    // A copy-on-write root from an older build: bucket files under data/
-    // next to a valid v2 marker. The merge-on-read reader would see it as
-    // empty, so both read and merge must refuse it.
+    // Older builds' roots carry the v2 marker, which names no snapshot
+    // log: a copy-on-write root (bucket files under data/) and a
+    // pre-versioned merge-on-read root (its base in one `compacted/` dir).
+    // This reader would see either as empty, so read and merge refuse
+    // both through the marker.
+    def stampV2(root: String): Unit = java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(root, "_format"), "v2 keyDelim=nul buckets=2 keys=k")
     val cowDir = Files.createTempDirectory("tbl-cow").toString
     val cow = ClipTable(cowDir, Seq("k"), numBuckets = 2)
-    cow.merge(Seq(("a", 1)).toDF("k", "v"), 0) // stamps the v2 marker
     Seq(("a", 1)).toDF("k", "v").write
       .parquet(java.nio.file.Paths.get(cowDir, "data", "bucket=0").toString)
+    stampV2(cowDir)
     intercept[IllegalArgumentException] { cow.read(spark) }
     intercept[IllegalArgumentException] { cow.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
-    // A merge-on-read root from a pre-versioned build: its base sits in
-    // one `compacted/` dir, which this reader no longer lists.
     val legacyDir = Files.createTempDirectory("tbl-compacted").toString
     val legacy = ClipTable(legacyDir, Seq("k"), numBuckets = 2)
-    legacy.merge(Seq(("a", 1)).toDF("k", "v"), 0) // stamps the v2 marker
     Seq(("c", 3)).toDF("k", "v").write
       .parquet(java.nio.file.Paths.get(legacyDir, "compacted").toString)
+    stampV2(legacyDir)
     intercept[IllegalArgumentException] { legacy.read(spark) }
     intercept[IllegalArgumentException] { legacy.merge(Seq(("b", 2)).toDF("k", "v"), 1) }
     // and no handle can ask for that layout any more

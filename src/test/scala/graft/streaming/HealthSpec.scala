@@ -108,7 +108,10 @@ class HealthSpec extends AnyFunSuite {
     try {
       in.addData(("a", new Timestamp(1704067200000L)))
       q.processAllAvailable()
-      val (status, probes) = Health.check(spark, q, table, ckpt)
+      // the sink probe reads the table's snapshot: no Spark job
+      val ((status, probes), jobs) =
+        TestSpark.jobsStartedBy(Health.check(spark, q, table, ckpt))
+      assert(jobs == 0, s"Health.check started $jobs Spark job(s)")
       assert(status == Health.Ok, probes.filterNot(_.ok).toString)
       assert(probes.map(_.name).toSet == Set("query_active", "progress_fresh",
         "watermark_lag", "sink_readable", "checkpoint_writable"))
