@@ -11,7 +11,7 @@ import graft.image.{SpsWriter, Y4mCodec}
   * the multimodal corpus: uncompressed YUV4MPEG2 payloads (real decode
   * path) interleaved with structurally valid H.264 Annex-B streams (SPS +
   * PPS + SEI — header-sniffable like real-world video; not decodable, as
-  * compressed-video pixel decode is stubbed engine-wide). Ground truth by
+  * the engine has no compressed-video pixel decoder). Ground truth by
   * id arithmetic (the i2 discipline):
   *
   *   container   = idx % 2  -> {y4m, h264}

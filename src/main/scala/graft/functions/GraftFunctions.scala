@@ -73,13 +73,11 @@ object GraftFunctions {
     K.VecLshBuckets(v, nBits, nTables)
 
   /** The SQL surface — (name, implementing class, builder) for every
-    * function SQL sees: the [[Kernels.Sql]] kernels plus `extract_attr`.
-    * [[register]] and `graft.plans.GraftExtensions` both install it. */
+    * [[Kernels.Sql]] kernel. [[register]] and `graft.plans.GraftExtensions`
+    * both install it. */
   val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] =
     K.Sql.map(k => (k.name, classOf[KernelCall].getName,
-      (es: Seq[Expression]) => KernelCall(k, es.toIndexedSeq): Expression)) :+
-      (("extract_attr", classOf[graft.operators.ExtractAttr].getName,
-        (es: Seq[Expression]) => graft.operators.ExtractAttr(es(0), es(1), es(2))))
+      (es: Seq[Expression]) => KernelCall(k, es.toIndexedSeq): Expression))
 
   /** Register graft functions for SQL use in this session. Idempotent. A
     * name the session already maps to the same class (a session built

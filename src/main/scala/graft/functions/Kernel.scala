@@ -15,23 +15,29 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One SQL kernel, declared once (see [[Kernels]] for every declaration):
   * its SQL name, input types, result type, the static JVM method that
   * computes it, and the Scala-side constants passed after the column
-  * arguments (Int or Double). [[KernelCall]] derives the type check,
-  * interpreted eval, codegen and nullability from it.
+  * arguments (Int, Double or a [[Kernel.FloatTable]]). [[KernelCall]]
+  * derives the type check, interpreted eval, codegen and nullability from
+  * it.
   *
   * Calling convention of `target` (`pkg.Object.method`, called through
   * the object's static forwarder): one parameter per input, then one per
   * constant. A string input arrives as `String`, binary as `byte[]`,
-  * int / bigint / double as the primitive, an array as `ArrayData`. The
-  * result maps back by its JVM type: a primitive array other than
-  * `byte[]` becomes an `UnsafeArrayData`, a `String` a `UTF8String`; a
-  * boxed number or an `InternalRow` may be null, which makes the kernel
-  * nullable and a null result SQL NULL. Anything else passes through.
+  * int / bigint / double as the primitive, an array as `ArrayData`; a
+  * float-table constant as the `float[][]` or `float[][][]` it wraps
+  * (codegen passes it with `addReferenceObj`, so it rides the serialized
+  * plan to every executor). The result maps back by its JVM type: a
+  * primitive array other than `byte[]` becomes an `UnsafeArrayData`, a
+  * `String` a `UTF8String`; a boxed number or an `InternalRow` may be
+  * null, which makes the kernel nullable and a null result SQL NULL, and
+  * so may a primitive array when the declaration sets `nullableResult`.
+  * Anything else passes through.
   *
   * Declarations are case-class values, so two calls of one kernel with
   * equal constants are equal expressions: CSE and `semanticEquals` merge
-  * them. */
+  * them (a float table compares by content). */
 final case class Kernel(name: String, inputs: Seq[Kernel.In], result: DataType,
-                        target: String, consts: Seq[Any] = Nil) {
+                        target: String, consts: Seq[Any] = Nil,
+                        nullableResult: Boolean = false) {
 
   /** This kernel applied to columns. */
   def apply(args: Column*): Column =
@@ -46,15 +52,18 @@ final case class Kernel(name: String, inputs: Seq[Kernel.In], result: DataType,
     val params = inputs.map(in => Kernel.jvmClass(in.dataType)) ++ consts.map {
       case _: Int => classOf[Int]
       case _: Double => classOf[Double]
+      case t: Kernel.FloatTable => t.data.getClass
       case c => throw new IllegalArgumentException(s"$name: unsupported constant $c")
     }
     Class.forName(target.take(dot)).getMethod(target.drop(dot + 1), params: _*)
   }
 
-  /** True when the target may return null (a boxed number or a row). */
+  /** True when the target may return null (a boxed number, a row, or a
+    * declared nullable array). */
   @transient lazy val returnsNull: Boolean = {
     val rt = method.getReturnType
-    rt == classOf[InternalRow] || classOf[java.lang.Number].isAssignableFrom(rt)
+    nullableResult || rt == classOf[InternalRow] ||
+      classOf[java.lang.Number].isAssignableFrom(rt)
   }
 
   /** The target's result as a Catalyst value. */
@@ -78,6 +87,35 @@ object Kernel {
     }) && (!literal || e.foldable)
     override def toString: String =
       dataType.simpleString + (if (literal) " literal" else "")
+  }
+
+  /** A constant float table (`float[][]` or `float[][][]`: centroids, PQ
+    * codebooks). Equal, hashed and printed by content, as a raw array
+    * would compare by reference and print as `[[F@` plus an identity hash
+    * that differs between JVMs and between equal tables loaded apart; it
+    * prints as its shape plus `Arrays.deepHashCode`, e.g.
+    * `float[8][64]#1f2e3d4c`. */
+  final class FloatTable private (val data: Array[_ <: AnyRef]) extends Serializable {
+    @transient private lazy val hash =
+      java.util.Arrays.deepHashCode(data.asInstanceOf[Array[AnyRef]])
+    override def hashCode: Int = hash
+    override def equals(o: Any): Boolean = o match {
+      case t: FloatTable => (t eq this) || java.util.Arrays.deepEquals(
+        data.asInstanceOf[Array[AnyRef]], t.data.asInstanceOf[Array[AnyRef]])
+      case _ => false
+    }
+    override def toString: String = {
+      def dims(x: Any): List[Int] = x match {
+        case a: Array[_] => a.length :: (if (a.isEmpty) Nil else dims(a(0)))
+        case _ => Nil
+      }
+      dims(data).mkString("float[", "][", "]") + f"#$hash%08x"
+    }
+  }
+
+  object FloatTable {
+    def apply(t: Array[Array[Float]]): FloatTable = new FloatTable(t)
+    def apply(t: Array[Array[Array[Float]]]): FloatTable = new FloatTable(t)
   }
 
   private def jvmClass(t: DataType): Class[_] = t match {
@@ -127,7 +165,10 @@ case class KernelCall(kernel: Kernel, children: IndexedSeq[Expression]) extends 
       }
       i += 1
     }
-    kernel.consts.foreach { c => args(i) = c.asInstanceOf[AnyRef]; i += 1 }
+    kernel.consts.foreach { c =>
+      args(i) = c match { case t: Kernel.FloatTable => t.data; case v => v.asInstanceOf[AnyRef] }
+      i += 1
+    }
     try kernel.toCatalyst(kernel.method.invoke(null, args: _*))
     catch { case e: InvocationTargetException => throw e.getCause }
   }
@@ -138,15 +179,22 @@ case class KernelCall(kernel: Kernel, children: IndexedSeq[Expression]) extends 
       if (c.dataType == StringType) s"${g.value}.toString()" else g.value.toString
     } ++ kernel.consts.map {
       case d: Double => s"${d}D"
+      case t: Kernel.FloatTable =>
+        ctx.addReferenceObj("table", t.data, t.data.getClass.getCanonicalName)
       case c => c.toString
     }
     val call = s"${kernel.target}(${args.mkString(", ")})"
     val rt = kernel.method.getReturnType
     val javaType = CodeGenerator.javaType(dataType)
     val default = CodeGenerator.defaultValue(dataType)
+    val fromArray = s"${classOf[UnsafeArrayData].getName}.fromPrimitiveArray"
     val result =
-      if (rt.isArray && rt != classOf[Array[Byte]])
-        s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray($call);"
+      if (rt.isArray && rt != classOf[Array[Byte]] && kernel.returnsNull)
+        s"""${rt.getCanonicalName} ${ev.value}_arr = $call;
+           |${ev.isNull} = ${ev.value}_arr == null;
+           |if (!${ev.isNull}) ${ev.value} = $fromArray(${ev.value}_arr);""".stripMargin
+      else if (rt.isArray && rt != classOf[Array[Byte]])
+        s"${ev.value} = $fromArray($call);"
       else if (rt == classOf[String])
         s"${ev.value} = ${classOf[UTF8String].getName}.fromString($call);"
       else if (kernel.returnsNull && rt != classOf[InternalRow])

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 import graft.audio.AudioCodec
-import graft.functions.Kernel.In
+import graft.functions.Kernel.{FloatTable, In}
 
 /** Every scalar kernel of the engine, one declaration each: the engine's
   * name -> function table (the reference's filter registry,
@@ -25,6 +25,7 @@ object Kernels {
   private val dbl = In(DoubleType)
   private val vec = In(ArrayType(FloatType))
   private val ints = ArrayType(IntegerType, containsNull = false)
+  private val floats = ArrayType(FloatType, containsNull = false)
   private val longs = ArrayType(LongType, containsNull = false)
   private val doubles = ArrayType(DoubleType, containsNull = false)
   private def row(fields: (String, DataType)*): StructType =
@@ -42,8 +43,8 @@ object Kernels {
     * `sr_hz` is part of the logical signature (a decode must know its
     * clock) but byte->float companding is rate-independent for these
     * codecs. */
-  val DecodePcm = Kernel("decode_pcm", Seq(bin, str, int),
-    ArrayType(FloatType, containsNull = false), "graft.functions.PcmCalls.decode")
+  val DecodePcm = Kernel("decode_pcm", Seq(bin, str, int), floats,
+    "graft.functions.PcmCalls.decode")
 
   /** `pcm_sample_count(bytes, codec) -> int` — sample count without
     * decoding (cheap length math; used for pushdown-friendly stats
@@ -256,6 +257,21 @@ object Kernels {
   val Y4mMotionStats = Kernel("y4m_motion_stats", Seq(bin), doubles,
     "graft.image.Y4mCodec.motionStats")
 
+  /** `image_thumb(bytes) -> array<float>` — the `outW` x `outH`
+    * (default 8 x 8) bilinear luma thumbnail of ANY supported image
+    * payload (netpbm direct; JPEG/PNG/GIF/BMP via the JDK decoder), the
+    * image feature of [[graft.operators.Multimodal]]. Null when
+    * undecodable. */
+  val ImageThumb = Kernel("image_thumb", Seq(bin), floats,
+    "graft.image.ImageMeta.thumbnailAny", consts = Seq(8, 8), nullableResult = true)
+
+  /** `y4m_frame_means(bytes) -> array<float>` — mean luma of every
+    * `stride`-th frame (default 4) of a YUV4MPEG2 payload (see
+    * graft.image.Y4mCodec.sampleFrameMeans), the video feature of
+    * [[graft.operators.Multimodal]]. Null when not a well-formed y4m. */
+  val Y4mFrameMeans = Kernel("y4m_frame_means", Seq(bin), floats,
+    "graft.image.Y4mCodec.frameMeansOrNull", consts = Seq(4), nullableResult = true)
+
   // -------------------------------------------------------------- text
 
   /** `rel_url(base, rel) -> string` — resolve a relative URL against a
@@ -306,6 +322,14 @@ object Kernels {
     * `capitalize` filter (F4; see DfkFilters.goTitle). */
   val GoTitle = Kernel("go_title", Seq(str), StringType, "graft.functions.DfkFilters.goTitle")
 
+  /** `extract_attr(text, tag, attr) -> array<string>` — the SQL-facing
+    * scalar form of the extraction semantics (`SELECT
+    * extract_attr(transcript, 'phone', 'text') ...`): the same scanner,
+    * document order and 0/1/N array as the spec-compiled plan (see
+    * graft.operators.FusedExtract). */
+  val ExtractAttr = Kernel("extract_attr", Seq(str, str, str),
+    ArrayType(StringType, containsNull = false), "graft.operators.FusedExtract.extractAttr")
+
   // -------------------------------------------------------- similarity
 
   /** `cosine_sim(array<float>, array<float>) -> double` — float32 cosine
@@ -334,17 +358,52 @@ object Kernels {
   def hashCombKeys(maxHamming: Int): Kernel = Kernel("hash_comb_keys", Seq(long), longs,
     "graft.functions.HashCombKeysKernel.keys", consts = Seq(maxHamming))
 
+  /** `nearest_centroid(vec) -> int` — the L2-nearest cell under the
+    * centroid table `cents` (ties -> lowest index): IVF cell assignment,
+    * see [[graft.operators.Ivf]]. */
+  def nearestCentroid(cents: Array[Array[Float]]): Kernel =
+    Kernel("nearest_centroid", Seq(vec), IntegerType, "graft.operators.Ivf.cellOf",
+      consts = Seq(FloatTable(cents)))
+
+  /** `nearest_centroids(vec) -> array<int>` — the `nProbe` nearest cells,
+    * ascending by distance: the IVF query probe. */
+  def nearestCentroids(cents: Array[Array[Float]], nProbe: Int): Kernel =
+    Kernel("nearest_centroids", Seq(vec), ints, "graft.operators.Ivf.probesOf",
+      consts = Seq(FloatTable(cents), nProbe))
+
+  /** `pq_encode(vec) -> array<int>` — per-block code indices under the PQ
+    * codebooks `books`; see [[graft.operators.Pq]]. */
+  def pqEncode(books: Array[Array[Array[Float]]]): Kernel =
+    Kernel("pq_encode", Seq(vec), ints, "graft.operators.Pq.encodeOf",
+      consts = Seq(FloatTable(books)))
+
+  /** `pq_lut(vec) -> array<float>` — the query's flattened m*k ADC lookup
+    * table under `books`. */
+  def pqLut(books: Array[Array[Array[Float]]]): Kernel =
+    Kernel("pq_lut", Seq(vec), floats, "graft.operators.Pq.lutOf",
+      consts = Seq(FloatTable(books)))
+
+  /** `pq_adc(codes, lut) -> float` — the ADC distance: m table lookups. */
+  val PqAdc = Kernel("pq_adc", Seq(In(ArrayType(IntegerType)), vec), FloatType,
+    "graft.operators.Pq.adcOf")
+
   /** The kernels SQL sees, with their default constants. */
   val Sql: Seq[Kernel] = Seq(DecodePcm, PcmSampleCount, PcmRms, PcmBandEnergies,
     AudioMeta, WavUnwrap, WavWrap, PcmSegments, PcmStripSilence, PcmTranscode,
     PcmResample, PcmTonePair, PcmGain, PcmQuality, PpmLumaMean, Y4mMotionStats,
     ImageMeta, ImageLumaMean, VideoMeta, ImageDhash, PcmAlignedCorr, LangId,
     LangIdNgram, RelUrl, SimHash, JaccardSim, PortableBucket, MinHash, WinnowFp,
-    CosineSim, QCosineSim, VecLshBucket, VecLshBuckets)
+    CosineSim, QCosineSim, VecLshBucket, VecLshBuckets, ExtractAttr)
 
-  /** Every declaration: the SQL ones plus those only Scala calls. */
-  val All: Seq[Kernel] =
-    Sql ++ Seq(PcmTone, ToneBandEnergies, Y4mTemporalDhash, GoTitle, hashCombKeys(8))
+  /** Every declaration: the SQL ones plus those only Scala calls (a
+    * per-table declaration over a small sample table). */
+  val All: Seq[Kernel] = {
+    val cents = Array(Array(0f, 0f, 0f, 0f), Array(0.2f, -0.3f, 0.8f, 0.1f), Array(1f, 1f, 1f, 1f))
+    val books = Array(Array(Array(0f, 0f), Array(0.2f, -0.3f)), Array(Array(0.8f, 0.1f), Array(-1f, 1f)))
+    Sql ++ Seq(PcmTone, ToneBandEnergies, Y4mTemporalDhash, GoTitle, hashCombKeys(8),
+      ImageThumb, Y4mFrameMeans, nearestCentroid(cents), nearestCentroids(cents, 2),
+      pqEncode(books), pqLut(books), PqAdc)
+  }
 }
 
 /** Entry points for the three audio kernels whose SQL signature is not

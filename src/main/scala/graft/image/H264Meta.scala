@@ -4,7 +4,7 @@ package graft.image
   * [[ImageMeta]]: a 100 TB video column is H.264 inside containers, and
   * dimensions/profile/level must come out of the BYTES without a decoder
   * (which this environment genuinely lacks — the JDK ships no video
-  * codec, so pixel decode stays stubbed; header metadata does not).
+  * codec, so there is no pixel decode; header metadata needs none).
   *
   * Implements, from the public specification (ITU-T H.264 §7.3.2.1.1):
   *  - Annex-B NAL walk (00 00 01 / 00 00 00 01 start codes) to the first
@@ -197,8 +197,8 @@ object H264Meta {
   * branches, frame cropping) so planted-dimension tables exercise every
   * parser path. Emits a full Annex-B stream: SPS + PPS stub + filler
   * NALs — header-sniffable like real-world video, not decodable (no
-  * entropy-coded slices; pixel decode for compressed video is stubbed
-  * engine-wide). */
+  * entropy-coded slices; the engine has no compressed-video pixel
+  * decoder). */
 object SpsWriter {
 
   private final class BitWriter {

@@ -3,12 +3,11 @@ package graft.image
 /** Pure-JVM image codec for UNCOMPRESSED formats (netpbm: P5 grayscale
   * PGM / P6 RGB PPM, the interchange format of every imaging toolchain).
   *
-  * The sandbox has no image libraries, which is why Multimodal's
-  * compressed-codec path is stubbed — but uncompressed formats need no
-  * library at all, so the image modality is REAL end-to-end for
-  * PGM/PPM payloads: header parse, raster decode (8- and 16-bit),
-  * BT.601 luma, bilinear resize, histogram features. A JPEG/PNG decoder
-  * would slot in front of [[decode]] without touching anything else.
+  * Uncompressed formats need no library at all, so the image modality is
+  * REAL end-to-end for PGM/PPM payloads: header parse, raster decode (8-
+  * and 16-bit), BT.601 luma, bilinear resize, histogram features.
+  * Compressed formats decode through [[JdkImageCodec]] into the same
+  * [[Image]].
   *
   * Pixels are row-major, channel-interleaved floats in [0, 1].
   */

@@ -180,4 +180,16 @@ object ImageMeta {
         case None => null
       }
     }
+
+  /** `outW` x `outH` bilinear luma thumbnail of ANY supported payload:
+    * netpbm by its magic, otherwise the JDK decoder. Null when neither
+    * decodes it (SQL null in `image_thumb`). */
+  def thumbnailAny(bytes: Array[Byte], outW: Int, outH: Int): Array[Float] = {
+    val netpbm =
+      if (ImageCodec.magicOf(bytes).isEmpty) None
+      else scala.util.Try(ImageCodec.decode(bytes)).toOption
+    netpbm.orElse(JdkImageCodec.decode(bytes))
+      .map(img => ImageCodec.resizeBilinear(ImageCodec.toLuma(img), outW, outH).pixels)
+      .orNull
+  }
 }

@@ -6,8 +6,9 @@ package graft.image
   * closes the image half of the compressed-codec gap behind
   * [[graft.operators.Multimodal]] — the analog of the reference's render
   * path handling arbitrary real-world content
-  * (`/root/reference/fetch/fetcher.go:284-373`). Video (H.264 etc.)
-  * remains stubbed: the JDK ships no video codecs.
+  * (`/root/reference/fetch/fetcher.go:284-373`). Compressed video (H.264
+  * etc.) has no decoder: the JDK ships no video codecs, and Multimodal
+  * gives such payloads a null feature.
   *
   * Output is normalized to [[ImageCodec.Image]] (row-major floats in
   * [0, 1]) so everything downstream — luma, resize, histogram — is shared

@@ -5,8 +5,8 @@ package graft.image
   * speak it), and like netpbm it needs no library: a text header
   * (`YUV4MPEG2 W<w> H<h> F<n>:<d> [C<colorspace> ...]`) followed by
   * `FRAME\n`-delimited raw planar YUV payloads. So the VIDEO modality is
-  * real end-to-end for y4m payloads; only compressed codecs (H.264 etc.)
-  * remain stubbed in Multimodal.
+  * real end-to-end for y4m payloads; compressed codecs (H.264 etc.) have
+  * no decoder here, and Multimodal gives them a null feature.
   *
   * Supported colorspaces: C420 (default, and its C420jpeg/C420paldv
   * variants — same plane sizes), C422, C444, Cmono. Luma values are
@@ -142,7 +142,8 @@ object Y4mCodec {
   }
 
   /** Mean luma of every `stride`-th frame, one pass (the video feature
-    * vector in Multimodal — frame SAMPLING, not full decode). */
+    * vector in Multimodal — frame SAMPLING, not full decode). Throws on
+    * non-y4m or truncated payloads. */
   def sampleFrameMeans(bytes: Array[Byte], stride: Int): Array[Float] = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
     val meta = parseMeta(bytes)
@@ -165,6 +166,12 @@ object Y4mCodec {
     }
     out.toArray
   }
+
+  /** [[sampleFrameMeans]] for the `y4m_frame_means` kernel (null = not a
+    * well-formed y4m). */
+  def frameMeansOrNull(bytes: Array[Byte], stride: Int): Array[Float] =
+    try sampleFrameMeans(bytes, stride)
+    catch { case scala.util.control.NonFatal(_) => null }
 
   /** TEMPORAL perceptual signature for video near-dup (v3): per-bit
     * MAJORITY vote over the dHashes of every `stride`-th frame's luma

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -85,9 +85,10 @@ object FusedExtract {
     out.map(_.toArray)
   }
 
-  /** Single (tag, attr) variant for the SQL-facing extract_attr function. */
-  def scanOne(block: String, tag: String, attr: String): Array[String] =
-    scan(block, Seq((tag, Seq(attr))))(0)
+  /** Single (tag, attr) variant: the target of the `extract_attr` kernel
+    * (graft.functions.Kernels.ExtractAttr). */
+  def extractAttr(block: String, tag: String, attr: String): ArrayData =
+    new GenericArrayData(scan(block, Seq((tag, Seq(attr))))(0).map(UTF8String.fromString(_): Any))
 
   def stripTags(s: String): String = {
     if (s.indexOf('<') < 0) return s
@@ -103,26 +104,6 @@ object FusedExtract {
     }
     sb.toString
   }
-}
-
-/** extract_attr(text, tag, attr) -> array<string> — the SQL-facing scalar
-  * form of the extraction semantics (`SELECT extract_attr(transcript,
-  * 'phone', 'text') ...`). Same scanner, same document-order and
-  * 0/1/N-array behavior as the spec-compiled plan. */
-case class ExtractAttr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(first, second, third).forall(_.dataType == StringType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("extract_attr expects (string, string, string)")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_attr"
-  override def nullSafeEval(t: Any, tag: Any, attr: Any): Any =
-    new GenericArrayData(FusedExtract.scanOne(t.toString, tag.toString, attr.toString)
-      .map(s => UTF8String.fromString(s): Any))
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }
 
 /** extract_fields(block) -> struct<name_attr: array<string>, ...> */

@@ -1,16 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
-import graft.functions.GraftFunctions
-import graft.functions.GraftFunctions._
+import graft.functions.Kernels
 
 /** IVF (inverted-file) ANN — the k-means coarse-quantizer scale path that
   * real vector stores (FAISS IVF-Flat) use, beside the hyperplane-LSH
@@ -19,9 +13,10 @@ import graft.functions.GraftFunctions._
   *  1. `fit`: deterministic Lloyd k-means on a BOUNDED sample (driver-side
   *     by design — coarse-quantizer training is O(sample · nList · iters),
   *     independent of corpus size; the 10^12-row corpus never moves).
-  *  2. assignment: `NearestCentroid`, a native expression holding the
-  *     (tiny) centroid matrix — one codegen'd scan pass, no shuffle, no
-  *     UDF boxing.
+  *  2. assignment: the `nearest_centroid` kernel declared over the (tiny)
+  *     centroid matrix (`Kernels.nearestCentroid`; the matrix rides the
+  *     serialized plan as a table constant) — one codegen'd scan pass, no
+  *     shuffle, no UDF boxing.
   *  3. `ivfKnn`: queries probe their `nProbe` nearest cells; only same-cell
   *     candidates are scored (exact quantized cosine), top-k per query.
   *     Expected scored fraction ~ nProbe/nList of the corpus.
@@ -109,14 +104,15 @@ object Ivf {
     d2s.sorted.take(nProbe).map(_._2).toArray
   }
 
-  private def vecOf(a: ArrayData): Array[Float] = a.toFloatArray()
+  /** Kernel targets of `nearest_centroid(s)` (see [[Kernels.nearestCentroid]]). */
+  def cellOf(v: ArrayData, cents: Array[Array[Float]]): Int = nearestIdx(v.toFloatArray(), cents)
+  def probesOf(v: ArrayData, cents: Array[Array[Float]], nProbe: Int): Array[Int] =
+    nearestIdxs(v.toFloatArray(), cents, nProbe)
 
-  def cellCol(v: org.apache.spark.sql.Column, cents: Array[Array[Float]]): org.apache.spark.sql.Column =
-    GraftFunctions.toColumn(NearestCentroid(GraftFunctions.toExpr(v), cents))
+  def cellCol(v: Column, cents: Array[Array[Float]]): Column = Kernels.nearestCentroid(cents)(v)
 
-  def probeCol(v: org.apache.spark.sql.Column, cents: Array[Array[Float]],
-               nProbe: Int): org.apache.spark.sql.Column =
-    GraftFunctions.toColumn(NearestCentroids(GraftFunctions.toExpr(v), cents, nProbe))
+  def probeCol(v: Column, cents: Array[Array[Float]], nProbe: Int): Column =
+    Kernels.nearestCentroids(cents, nProbe)(v)
 
   /** IVF-Flat ANN: corpus assigned to its cell (one scan), queries probe
     * `nProbe` cells, exact quantized-cosine re-rank inside the probed
@@ -162,86 +158,4 @@ object Ivf {
       .select("query_id", "cand_id")
     Similarity.scoreTopK(cands, q, c, k, broadcastQueries = false)
   }
-}
-
-/** An expression whose fields include a constant float table that codegen
-  * passes to the generated code with `addReferenceObj`. As a raw array
-  * field the table would compare by reference and print as `[[F@` plus
-  * its identity hash, which differs between JVM runs and between equal
-  * tables loaded apart. This compares and hashes the fields by content and
-  * prints a table as its shape plus `Arrays.deepHashCode`, e.g.
-  * `float[8][64]#1f2e3d4c`. */
-trait FloatTableExpression extends Expression {
-  private def fields: Array[AnyRef] = productIterator.map(_.asInstanceOf[AnyRef]).toArray
-
-  override protected def stringArgs: Iterator[Any] = productIterator.map {
-    case t: Array[_] =>
-      def dims(x: Any): List[Int] = x match {
-        case a: Array[_] => a.length :: (if (a.isEmpty) Nil else dims(a(0)))
-        case _ => Nil
-      }
-      dims(t).mkString("float[", "][", "]") +
-        f"#${java.util.Arrays.deepHashCode(t.asInstanceOf[Array[AnyRef]])}%08x"
-    case x => x
-  }
-
-  override def equals(o: Any): Boolean = o match {
-    case that: FloatTableExpression =>
-      (that eq this) || that.getClass == getClass &&
-        java.util.Arrays.deepEquals(fields, that.fields)
-    case _ => false
-  }
-
-  @transient private lazy val contentHash = java.util.Arrays.deepHashCode(fields)
-  override def hashCode(): Int = contentHash
-}
-
-/** nearest_centroid(vec) -> int — cell id under the embedded (tiny)
-  * centroid matrix. Codegen resolves the matrix through
-  * `ctx.addReferenceObj`: the object rides the generated plan's serialized
-  * `references` array to every executor JVM (the same mechanism built-in
-  * expressions use for Literal maps etc.), so the expression is cluster-
-  * portable — no process-local registry, no broadcast bookkeeping. The
-  * interpreted path reads the same serialized `cents` field. */
-case class NearestCentroid(child: Expression, cents: Array[Array[Float]])
-    extends UnaryExpression with FloatTableExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "nearest_centroid"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"nearest_centroid expects array<float>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    Ivf.nearestIdx(v.asInstanceOf[ArrayData].toFloatArray(), cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "float[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.operators.Ivf.nearestIdx($v.toFloatArray(), $centsRef);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** nearest_centroids(vec) -> array<int> — the nProbe nearest cell ids.
-  * Cluster-portable codegen via addReferenceObj (see NearestCentroid). */
-case class NearestCentroids(child: Expression, cents: Array[Array[Float]], nProbe: Int)
-    extends UnaryExpression with FloatTableExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "nearest_centroids"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"nearest_centroids expects array<float>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      Ivf.nearestIdxs(v.asInstanceOf[ArrayData].toFloatArray(), cents, nProbe))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "float[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.operators.Ivf.nearestIdxs($v.toFloatArray(), " +
-        s"$centsRef, $nProbe));")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }

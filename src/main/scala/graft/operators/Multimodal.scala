@@ -1,30 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
+import graft.audio.AudioCodec
 import graft.audio.AudioSynth.mix64
+import graft.functions.GraftFunctions.{pcm_band_energies, wav_unwrap}
+import graft.functions.Kernels
 
 /** Multimodal asset plumbing: opaque `binary` payloads + typed metadata,
-  * processed in partition-batches.
+  * one feature vector per asset.
   *
-  * Audio is this engine's fully-REAL modality (native decode/filterbank
-  * expressions in graft.functions). Images are REAL end-to-end for BOTH
-  * uncompressed netpbm (P5/P6 — graft.image.ImageCodec) and compressed
-  * JPEG/PNG/GIF/BMP (graft.image.JdkImageCodec: javax.imageio, part of
-  * the JDK — no external jars; plus the library-free header-metadata walk
-  * in graft.image.ImageMeta). Video is REAL for uncompressed YUV4MPEG2
-  * (graft.image.Y4mCodec: header parse, frame walk, luma sampling); only
-  * COMPRESSED video codecs (H.264/VP9...) remain STUBBED behind
-  * deterministic fakes — the JDK ships no video decoder and this
-  * environment has no codec jars. The Spark plumbing (schema, batching,
-  * partition-parallel transform, metadata handling) is identical either
-  * way, and a real H.264 decoder drops into [[MediaKernels]] without
-  * touching the plan.
+  * Every modality decodes for real or not at all. Audio runs the native
+  * decode/filterbank kernels; images decode as netpbm (P5/P6,
+  * graft.image.ImageCodec) or JPEG/PNG/GIF/BMP (graft.image.JdkImageCodec,
+  * `javax.imageio` from the JDK); video decodes as uncompressed YUV4MPEG2
+  * (graft.image.Y4mCodec). A payload that no decoder claims (compressed
+  * video, FLAC/MP3/Ogg audio, corrupt bytes) gets a null `feature`.
   *
-  * The transform runs via `mapPartitions` on a typed Dataset — the Scala
-  * analog of `mapInPandas`: one JVM-side batch per partition, no per-row
-  * UDF dispatch.
+  * The dispatch is one `select` of `when(kind)` branches over declared
+  * kernels (the reference's per-kind fetch dispatch): codegen'd Catalyst
+  * expressions, not a typed closure per row.
   */
 object Multimodal {
 
@@ -40,110 +37,40 @@ object Multimodal {
   final case class MediaFeature(
       asset_id: String,
       kind: String,
-      feature: Array[Float],  // fixed-size feature vector
-      out_width: Int,
+      feature: Array[Float],  // fixed-size feature vector; null when undecodable
+      out_width: Int,         // 0 when feature is null
       out_height: Int,
       n_sampled_frames: Int)
 
-  /** STUB decode kernels — deterministic fakes keyed by content hash,
-    * now reached only by compressed VIDEO payloads and image payloads no
-    * real path claims (corrupt / exotic formats). Replace the video body
-    * with a real codec call (jcodec / ffmpeg bindings) when available;
-    * signatures and the surrounding plan stay unchanged. */
-  object MediaKernels {
-    /** ??? in spirit for unclaimed formats: "decodes" to a deterministic
-      * pseudo-pixel stream. JPEG/PNG/GIF/BMP no longer land here (see
-      * [[graft.image.JdkImageCodec]]). */
-    def decodeImageStub(bytes: Array[Byte], w: Int, h: Int): Array[Float] = {
-      val seed = bytes.foldLeft(0xBEEFL)((a, b) => mix64(a ^ (b & 0xFFL)))
-      Array.tabulate(math.min(64, w * h))(i =>
-        (java.lang.Long.remainderUnsigned(mix64(seed + i), 256L)) / 255.0f)
-    }
-
-    /** Resize stub: averages the fake pixel stream into the target grid. */
-    def resizeStub(pixels: Array[Float], outW: Int, outH: Int): Array[Float] = {
-      val out = new Array[Float](math.min(64, outW * outH))
-      var i = 0
-      while (i < out.length) { out(i) = pixels(i % pixels.length); i += 1 }
-      out
-    }
-
-    /** Frame-sample stub: picks every `stride`-th deterministic frame
-      * signature from the byte stream. */
-    def sampleFramesStub(bytes: Array[Byte], nFrames: Int, stride: Int): Array[Long] =
-      (0 until nFrames by stride).map(f =>
-        mix64(bytes.length.toLong * 31 + f)).toArray
-  }
-
-  /** Partition-batched feature extraction over a media asset table. */
+  /** Per-kind feature extraction over a media asset table:
+    *  - audio: 8 filterbank band energies. A mono WAV payload unwraps with
+    *    its container header authoritative for (codec, sr); a raw payload
+    *    uses its `codec` at 8 kHz.
+    *  - image: the `outW` x `outH` luma thumbnail.
+    *  - video: the mean luma of every `frameStride`-th y4m frame.
+    * Any other `kind` fails the query. */
   def extractFeatures(assets: Dataset[MediaAsset], outW: Int = 8, outH: Int = 8,
                       frameStride: Int = 4): Dataset[MediaFeature] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.mapPartitions { it =>
-      it.map { a =>
-        a.kind match {
-          case "audio" =>
-            // CONTAINER-aware, same policy as images: a mono WAV payload
-            // unwraps to raw codec bytes with the container header
-            // authoritative for (codec, sr) — the ingestWav semantics;
-            // raw payloads pass through; compressed containers
-            // (flac/mp3/ogg — no decoder in this environment, only
-            // audio_meta parses them) and corrupt payloads fall back to
-            // the stub instead of throwing out of mapPartitions.
-            val (payload, codec, sr) =
-              graft.audio.AudioMeta.wavUnwrap(a.bytes) match {
-                case Some((c, s, p)) => (p, c, s)
-                case None => (a.bytes, a.codec, 8000)
-              }
-            scala.util.Try(
-                graft.audio.AudioCodec.bandEnergies(payload, codec, sr, 8)) match {
-              case scala.util.Success(bands) =>
-                MediaFeature(a.asset_id, a.kind, bands.map(_.toFloat), 0, 0, 0)
-              case scala.util.Failure(_) =>
-                MediaFeature(a.asset_id, a.kind,
-                  MediaKernels.decodeImageStub(a.bytes, 8, 1), 0, 0, 0)
-            }
-          case "image" =>
-            // REAL path for netpbm (direct raster parse) AND compressed
-            // JPEG/PNG/GIF/BMP (JDK decoder); a corrupt payload — or a
-            // format neither path claims, near-certain somewhere in a
-            // 100 TB corpus — falls back to the stub instead of throwing
-            // a whole-job-killing exception out of mapPartitions.
-            val netpbm: Option[graft.image.ImageCodec.Image] =
-              if (graft.image.ImageCodec.magicOf(a.bytes).isEmpty) None
-              else scala.util.Try(graft.image.ImageCodec.decode(a.bytes)).toOption
-            val real: Option[MediaFeature] =
-              netpbm.orElse(graft.image.JdkImageCodec.decode(a.bytes)).map { img =>
-                val thumb = graft.image.ImageCodec.resizeBilinear(
-                  graft.image.ImageCodec.toLuma(img), outW, outH)
-                MediaFeature(a.asset_id, a.kind, thumb.pixels, outW, outH, 1)
-              }
-            real.getOrElse {
-              val px = MediaKernels.decodeImageStub(a.bytes, a.width, a.height)
-              MediaFeature(a.asset_id, a.kind,
-                MediaKernels.resizeStub(px, outW, outH), outW, outH, 1)
-            }
-          case "video" =>
-            // REAL path for uncompressed y4m payloads (frame-sampled luma
-            // means); compressed codecs and corrupt payloads fall back to
-            // the stub, same policy as images.
-            val real: Option[MediaFeature] =
-              if (!graft.image.Y4mCodec.isY4m(a.bytes)) None
-              else scala.util.Try {
-                val means = graft.image.Y4mCodec.sampleFrameMeans(a.bytes, frameStride)
-                MediaFeature(a.asset_id, a.kind, means, a.width, a.height, means.length)
-              }.toOption
-            real.getOrElse {
-              val frames = MediaKernels.sampleFramesStub(a.bytes, a.n_frames, frameStride)
-              MediaFeature(a.asset_id, a.kind,
-                frames.map(f => (java.lang.Long.remainderUnsigned(f, 1000L)) / 1000.0f),
-                a.width, a.height, frames.length)
-            }
-          case other => throw new IllegalArgumentException(s"unknown kind: $other")
-        }
-      }
-    }
+    import assets.sparkSession.implicits._
+    val (kind, wav) = (col("kind"), col("wav"))
+    val codec = coalesce(wav("codec"), col("codec"))
+    val audio = when(codec.isin(AudioCodec.Codecs: _*), pcm_band_energies(
+      coalesce(wav("payload"), col("bytes")), codec, coalesce(wav("sr_hz"), lit(8000)))
+      .cast(ArrayType(FloatType, containsNull = false)))
+    val feature = when(kind === "audio", audio)
+      .when(kind === "image", Kernels.ImageThumb.withConsts(outW, outH)(col("bytes")))
+      .when(kind === "video", Kernels.Y4mFrameMeans.withConsts(frameStride)(col("bytes")))
+      .otherwise(raise_error(format_string("unknown kind: %s", kind)))
+    val decoded = col("feature").isNotNull
+    def ifDecoded(image: Any, video: Any) =
+      when(decoded && kind === "image", image).when(decoded && kind === "video", video).otherwise(0)
+    // one wav_unwrap per row (a header check unless the payload is a WAV)
+    assets.withColumn("wav", wav_unwrap(col("bytes"))).withColumn("feature", feature)
+      .select(col("asset_id"), kind, col("feature"),
+        ifDecoded(outW, col("width")).as("out_width"),
+        ifDecoded(outH, col("height")).as("out_height"),
+        ifDecoded(1, size(col("feature"))).as("n_sampled_frames"))
+      .as[MediaFeature]
   }
 
   /** Deterministic fake asset table for tests/demos. */

@@ -1,15 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
-import graft.functions.GraftFunctions.{toColumn, toExpr}
+import graft.functions.Kernels
 
 /** Product Quantization (Jégou et al., PAMI 2011) — the memory-bound ANN
   * scan of real vector stores (FAISS IVF-PQ): vectors compress to m
@@ -25,7 +21,7 @@ import graft.functions.GraftFunctions.{toColumn, toExpr}
   * candidates, the true top-k is scored on rehydrated vectors with the
   * quantized-integer cosine (engine-exact). Codebooks are deterministic
   * (strided-init Lloyd on the lowest-id sample, like Ivf.fit) and ride
-  * the serialized plan via addReferenceObj — cluster-portable. */
+  * the serialized plan as a kernel table constant — cluster-portable. */
 object Pq {
 
   /** Per-subspace codebooks: books(b)(code) = centroid of sub-vector
@@ -118,12 +114,18 @@ object Pq {
     s
   }
 
-  def encodeCol(v: Column, books: Array[Array[Array[Float]]]): Column =
-    toColumn(PqEncode(toExpr(v), books))
-  def lutCol(v: Column, books: Array[Array[Array[Float]]]): Column =
-    toColumn(PqLut(toExpr(v), books))
-  def adcCol(codes: Column, lutC: Column): Column =
-    toColumn(PqAdc(toExpr(codes), toExpr(lutC)))
+  /** Kernel targets of `pq_encode`, `pq_lut` and `pq_adc` (see
+    * [[Kernels.pqEncode]]). */
+  def encodeOf(v: ArrayData, books: Array[Array[Array[Float]]]): Array[Int] =
+    encode(v.toFloatArray(), books)
+  def lutOf(v: ArrayData, books: Array[Array[Array[Float]]]): Array[Float] =
+    lut(v.toFloatArray(), books)
+  def adcOf(codes: ArrayData, lutArr: ArrayData): Float =
+    adc(codes.toIntArray(), lutArr.toFloatArray())
+
+  def encodeCol(v: Column, books: Array[Array[Array[Float]]]): Column = Kernels.pqEncode(books)(v)
+  def lutCol(v: Column, books: Array[Array[Array[Float]]]): Column = Kernels.pqLut(books)(v)
+  def adcCol(codes: Column, lutC: Column): Column = Kernels.PqAdc(codes, lutC)
 
   /** PQ-ADC ANN: candidates = topC per query by ADC over the compressed
     * codes (the memory-bound scan — floats never join it), exact
@@ -178,68 +180,4 @@ object Pq {
     Similarity.scoreTopK(cands, q,
       corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")), k)
   }
-}
-
-/** `pq_encode(vec)` -> array<int> of per-block code indices; codebooks
-  * ride the plan via addReferenceObj (cluster-portable, like
-  * NearestCentroid). */
-case class PqEncode(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression with FloatTableExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_encode expects array<float>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      Pq.encode(v.asInstanceOf[ArrayData].toFloatArray(), books))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqBooks", books, "float[][][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.operators.Pq.encode($v.toFloatArray(), $ref));")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `pq_lut(query_vec)` -> array<float> (m*k flattened ADC table). */
-case class PqLut(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression with FloatTableExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "pq_lut"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_lut expects array<float>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      Pq.lut(v.asInstanceOf[ArrayData].toFloatArray(), books))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqBooks", books, "float[][][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
-        s".fromPrimitiveArray(graft.operators.Pq.lut($v.toFloatArray(), $ref));")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `pq_adc(codes, lut)` -> float — m table lookups. */
-case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = FloatType
-  override def prettyName: String = "pq_adc"
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(IntegerType, _), ArrayType(FloatType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"pq_adc expects (array<int>, array<float>), got ($l, $r)")
-  }
-  override def nullSafeEval(codes: Any, lutArr: Any): Any =
-    Pq.adc(codes.asInstanceOf[ArrayData].toIntArray(),
-      lutArr.asInstanceOf[ArrayData].toFloatArray())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) =>
-      s"${ev.value} = graft.operators.Pq.adc($c.toIntArray(), $l.toFloatArray());")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
 }

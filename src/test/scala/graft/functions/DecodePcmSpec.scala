@@ -130,19 +130,25 @@ class DecodePcmSpec extends AnyFunSuite {
       "ppm_luma_mean" -> Seq(img), "image_meta" -> Seq(img),
       "image_luma_mean" -> Seq(img), "image_dhash" -> Seq(img),
       "video_meta" -> Seq(vid), "y4m_temporal_dhash" -> Seq(vid),
-      "y4m_motion_stats" -> Seq(vid),
+      "y4m_motion_stats" -> Seq(vid), "image_thumb" -> Seq(img), "y4m_frame_means" -> Seq(vid),
       "rel_url" -> Seq("http://a.example/x/y", "../z"), "lang_id" -> Seq(text),
       "lang_id_ngram" -> Seq(text), "jaccard_sim" -> Seq(text, "the cat sat on the mat"),
       "portable_bucket" -> Seq(text, 7), "sim_hash" -> Seq(text),
       "min_hash" -> Seq(text, 4), "winnow_fp" -> Seq(text), "go_title" -> Seq(text),
       "cosine_sim" -> Seq(va, vb), "qcosine_sim" -> Seq(va, vb),
       "vec_lsh_bucket" -> Seq(va, 8), "vec_lsh_buckets" -> Seq(va, 8, 3),
-      "hash_comb_keys" -> Seq(0x123456789abcdefL))
+      "hash_comb_keys" -> Seq(0x123456789abcdefL),
+      "extract_attr" -> Seq(clip.transcript, "phone", "text"),
+      "nearest_centroid" -> Seq(va), "nearest_centroids" -> Seq(va),
+      "pq_encode" -> Seq(va), "pq_lut" -> Seq(va),
+      "pq_adc" -> Seq(Array(1, 0), Array(0.5f, 0.25f, 2f, 1f)))
     assert(samples.keySet == Kernels.All.map(_.name).toSet)
 
     def catalyst(v: Any): Any = v match {
       case s: String => UTF8String.fromString(s)
       case a: Array[Float] => org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(a)
+      case a: Array[Int] => org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
         .fromPrimitiveArray(a)
       case other => other
     }
@@ -211,13 +217,12 @@ class DecodePcmSpec extends AnyFunSuite {
         .collect().head.get(0)
       val want = call(k, args).eval(InternalRow.fromSeq(args.map(catalyst)))
       assert(norm(got) == scalaValue(want, k.result), s"${k.name} via SQL")
+      // one argument too few or one too many fails analysis
+      for (wrong <- Seq(sqlArgs.init, sqlArgs :+ sqlArgs.last))
+        intercept[AnalysisException](
+          spark.sql(s"SELECT ${k.name}(${wrong.mkString(", ")}) FROM kernel_args"))
     }
-    val others = GraftFunctions.sqlFunctions.map(_._1).filterNot(Kernels.Sql.map(_.name).toSet)
-    assert(others == Seq("extract_attr"))
-    spark.range(1).select(lit(clip.transcript).as("t")).createOrReplaceTempView("extract_args")
-    assert(spark.sql("SELECT extract_attr(t, 'phone', 'text') FROM extract_args")
-      .head().getSeq[String](0) ==
-      graft.operators.FusedExtract.scanOne(clip.transcript, "phone", "text").toSeq)
+    assert(GraftFunctions.sqlFunctions.map(_._1) == Kernels.Sql.map(_.name))
     assert(GraftFunctions.sqlFunctions.map(_._1).distinct.length == 34)
   }
 }

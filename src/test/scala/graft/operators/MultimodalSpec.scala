@@ -40,10 +40,11 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MediaAsset("a-flac", "audio", flac, 0, 0, 0, "unknown"))
       .toDS()
     val f = Multimodal.extractFeatures(assets).collect()
-      .map(x => x.asset_id -> x.feature.toSeq).toMap
-    assert(f("a-wav") == f("a-raw"),
+      .map(x => x.asset_id -> Option(x.feature).map(_.toSeq)).toMap
+    assert(f("a-wav") == f("a-raw") && f("a-raw").exists(_.length == 8),
       "wav-wrapped audio diverged from its raw twin")
-    assert(f("a-flac").length == 8, "compressed container did not fall back")
+    // no FLAC decoder: a null feature, not a made-up vector
+    assert(f("a-flac").isEmpty, s"compressed container got a feature: ${f("a-flac")}")
   }
 
   test("image features use the REAL netpbm path, not the stub") {
@@ -61,12 +62,17 @@ class MultimodalSpec extends AnyFunSuite {
     val direct = ImageCodec.resizeBilinear(
       ImageCodec.toLuma(ImageCodec.decode(gray)), 8, 8).pixels
     assert(f.feature.toSeq == direct.toSeq)
-    // non-netpbm bytes (e.g. a JPEG payload) still flow through the stub
-    val jpegish = Multimodal.MediaAsset("img-jpg", "image",
-      Array[Byte](-1, -40, -1, -32, 1, 2, 3), 64, 48, 1, "jpeg")
-    val Array(s) = Multimodal.extractFeatures(
-      spark.createDataset(Seq(jpegish))).collect()
-    assert(s.feature.length == 64)
+    // bytes no decoder claims (a truncated JPEG, plain text) get a null
+    // feature and no thumbnail dimensions
+    val undecodable = Seq(
+      Multimodal.MediaAsset("img-jpg", "image",
+        Array[Byte](-1, -40, -1, -32, 1, 2, 3), 64, 48, 1, "jpeg"),
+      Multimodal.MediaAsset("img-txt", "image",
+        "not an image".getBytes("US-ASCII"), 64, 48, 1, "ppm"))
+    Multimodal.extractFeatures(spark.createDataset(undecodable)).collect().foreach { s =>
+      assert(s.feature == null && s.out_width == 0 && s.out_height == 0 &&
+        s.n_sampled_frames == 0, s.asset_id)
+    }
   }
 
   test("video features use the REAL y4m path, not the stub") {
@@ -79,11 +85,23 @@ class MultimodalSpec extends AnyFunSuite {
       spark.createDataset(Seq(asset))).collect()
     assert(f.n_sampled_frames == 2) // 8 frames / stride 4
     assert(f.feature.forall(m => math.abs(m - 0.25f) < 2e-3), f.feature.toSeq.toString)
-    // corrupt payload claiming the y4m magic falls back to the stub
-    val corrupt = Multimodal.MediaAsset("vid-bad", "video",
-      "YUV4MPEG2 W4 H4 F25:1 C420\nFRAME\nxx".getBytes("US-ASCII"), 4, 4, 8, "y4m")
-    val Array(sb) = Multimodal.extractFeatures(
-      spark.createDataset(Seq(corrupt))).collect()
-    assert(sb.n_sampled_frames == 2) // stub: 8 frames / stride 4
+    // a corrupt payload claiming the y4m magic, and compressed H.264 (no
+    // decoder), get a null feature and no sampled frames
+    val undecodable = Seq(
+      Multimodal.MediaAsset("vid-bad", "video",
+        "YUV4MPEG2 W4 H4 F25:1 C420\nFRAME\nxx".getBytes("US-ASCII"), 4, 4, 8, "y4m"),
+      Multimodal.MediaAsset("vid-h264", "video",
+        graft.image.SpsWriter.annexB(100, 31, 640, 360), 640, 360, 8, "h264"))
+    Multimodal.extractFeatures(spark.createDataset(undecodable)).collect().foreach { sb =>
+      assert(sb.feature == null && sb.n_sampled_frames == 0 && sb.out_width == 0, sb.asset_id)
+    }
+  }
+
+  test("an unknown kind fails the query instead of yielding a null feature") {
+    val odd = Multimodal.MediaAsset("x-1", "hologram", Array[Byte](1, 2, 3), 1, 1, 1, "raw")
+    val e = intercept[Exception] {
+      Multimodal.extractFeatures(spark.createDataset(Seq(odd))).collect()
+    }
+    assert(e.getMessage.contains("unknown kind: hologram"), e.getMessage)
   }
 }

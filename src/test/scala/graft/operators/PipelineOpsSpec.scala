@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+
 import graft.TestSpark
-import graft.functions.TextOps
+import graft.functions.{KernelCall, Kernels, TextOps}
 
 /** Training-data pipeline operators: language-ID, SimHash, MinHash/LSH,
   * winnowing, dedup and ANN similarity — correctness + recall. */
@@ -14,9 +16,9 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Each pair holds one constant-table expression over two equal tables
+  /** Each pair holds one float-table kernel call over two equal tables
     * built apart: they must be one expression to CSE and plan strings. */
-  private def assertSameTable(pairs: Seq[(FloatTableExpression, FloatTableExpression)]): Unit =
+  private def assertSameTable(pairs: Seq[(Expression, Expression)]): Unit =
     pairs.foreach { case (a, b) =>
       assert(a.semanticEquals(b) && a.hashCode == b.hashCode, s"$a vs $b")
       assert(a.toString == b.toString && !a.toString.contains("[F@"), a.toString)
@@ -632,16 +634,17 @@ class PipelineOpsSpec extends AnyFunSuite {
         .readObject().asInstanceOf[T]
     }
     val in = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
-    val remote = roundtrip(NearestCentroid(in, cents): AnyRef)
-      .asInstanceOf[NearestCentroid]
-    val remoteN = roundtrip(NearestCentroids(in, cents, nProbe = 3): AnyRef)
-      .asInstanceOf[NearestCentroids]
+    def cell(t: Array[Array[Float]]) = KernelCall(Kernels.nearestCentroid(t), IndexedSeq(in))
+    def probe(t: Array[Array[Float]], nProbe: Int) =
+      KernelCall(Kernels.nearestCentroids(t, nProbe), IndexedSeq(in))
+    val remote = roundtrip(cell(cents))
+    val remoteN = roundtrip(probe(cents, 3))
     val copy = cents.map(_.clone)
-    assertSameTable(Seq(NearestCentroid(in, cents) -> NearestCentroid(in, copy),
-      NearestCentroid(in, cents) -> remote, NearestCentroids(in, copy, 3) -> remoteN))
-    assert(!NearestCentroids(in, cents, 3).semanticEquals(NearestCentroids(in, cents, 4)))
+    assertSameTable(Seq(cell(cents) -> cell(copy), cell(cents) -> remote,
+      probe(copy, 3) -> remoteN))
+    assert(!probe(cents, 3).semanticEquals(probe(cents, 4)))
     copy(0)(0) += 1f
-    assert(!NearestCentroid(in, cents).semanticEquals(NearestCentroid(in, copy)))
+    assert(!cell(cents).semanticEquals(cell(copy)))
     // GenerateMutableProjection THROWS if codegen fails (no interpreted
     // fallback) — this is the path that broke with a process-local registry
     val proj = GenerateMutableProjection.generate(Seq(remote, remoteN))
@@ -714,10 +717,12 @@ class PipelineOpsSpec extends AnyFunSuite {
         .readObject().asInstanceOf[T]
     }
     val in = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
-    val remote = roundtrip(PqEncode(in, books): AnyRef).asInstanceOf[PqEncode]
-    assertSameTable(Seq(PqEncode(in, books) -> PqEncode(in, books2),
-      PqLut(in, books) -> PqLut(in, books2), PqEncode(in, books2) -> remote))
-    assert(!PqEncode(in, books).semanticEquals(PqLut(in, books)))
+    def enc(b: Array[Array[Array[Float]]]) = KernelCall(Kernels.pqEncode(b), IndexedSeq(in))
+    def lutOf(b: Array[Array[Array[Float]]]) = KernelCall(Kernels.pqLut(b), IndexedSeq(in))
+    val remote = roundtrip(enc(books))
+    assertSameTable(Seq(enc(books) -> enc(books2), lutOf(books) -> lutOf(books2),
+      enc(books2) -> remote))
+    assert(!enc(books).semanticEquals(lutOf(books)))
     val proj = GenerateMutableProjection.generate(Seq(remote))
     val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](new GenericArrayData(v.map(x => x: Any))))
