@@ -188,11 +188,6 @@ object ClipGen {
 
   private def bucketCol = pmod(crc32(col("clip_id").cast("string")), lit(NumBuckets))
 
-  private def deleteDir(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.delete(_))
-
   /** Generate (or reuse cached) clips + updates tables for `sfDir`.
     * Returns (clipsPath, updatesPath). */
   def ensure(spark: SparkSession, sfDir: String,
@@ -211,7 +206,7 @@ object ClipGen {
     FixtureDirs.withProcessLock(dir) {
     val have = if (Files.exists(marker)) Files.readString(marker).trim else ""
     if (have != want) {
-      deleteDir(Paths.get(clipsPath))
+      FixtureDirs.deleteRecursively(Paths.get(clipsPath))
       val df = clipsDf(spark, n)
         .withColumn("p_codec", col("codec"))
         .withColumn("p_bucket", bucketCol)

@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioSynth.mix64
 import graft.image.ImageCodec
@@ -20,17 +18,13 @@ import graft.image.ImageCodec
   * The engine must recover exactly the planted sets from the BYTES
   * (netpbm decode + luma reduction); the oracle states them from the id.
   */
-object ImageGen {
+object ImageGen extends FixtureTable("images", "images", version = 1,
+    minRows = 100, clipsPerRow = 10) {
 
-  val Version = 1
   val W = 64
   val H = 48
 
   def imageId(idx: Long): String = f"img-$idx%08d"
-
-  /** One image per 10 clips at the same scale factor (min 100). */
-  def imageCountFor(sfDir: String): Long =
-    math.max(100L, ClipGen.clipCountFor(sfDir) / 10)
 
   final case class ImageRow(image_id: String, bytes: Array[Byte],
                             width: Int, height: Int)
@@ -55,40 +49,8 @@ object ImageGen {
     ImageRow(imageId(idx), ImageCodec.encode(ImageCodec.Image(W, H, 3, px)), W, H)
   }
 
-  def imagesDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(n).map(i => imageRow(i)).toDF()
   }
-
-  /** Target directory name encodes the generation key — existence is
-    * validity, so no marker file and no read-check-write race. */
-  def targetName(sfDir: String): String =
-    s"images-v$Version-n${imageCountFor(sfDir)}"
-
-  /** Path the table lives at for this scale (whether or not generated yet)
-    * — the oracle glob and the engine read derive from the same function. */
-  def tablePath(sfDir: String, root: String = "/root/repo/data/images"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  /** Generate (or reuse cached) the image table for `sfDir`; returns its
-    * path. Concurrency-safe: racing sessions write private temp dirs and
-    * one atomic rename publishes (ADVICE r3 — the old marker-after-
-    * Overwrite pattern could expose a partially-rewritten directory). */
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/images"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = imageCountFor(sfDir)
-    val out = FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      imagesDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-    // Best-effort cleanup of the pre-v2-layout unversioned dir + marker.
-    FixtureDirs.deleteRecursively(Paths.get(root, name, "images"))
-    Files.deleteIfExists(Paths.get(root, name, "_gen_version"))
-    out
-  }
-
-  def readImages(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.Paths
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioMeta
 import graft.audio.AudioSynth.mix64
@@ -26,15 +24,12 @@ import graft.audio.AudioSynth.mix64
   *
   * Writer/reader pairs cannot drift silently: AudioMetaSpec pins each
   * format to HAND-DERIVED golden bytes from the public specs. */
-object MixedAudioGen {
+object MixedAudioGen extends FixtureTable("mixedaudio", "mixed_audio",
+    version = 1, minRows = 160, clipsPerRow = 10) {
 
-  val Version = 1
   val OpusPreskip = 312
 
   def audioId(idx: Long): String = f"maud-$idx%08d"
-
-  def audioCountFor(sfDir: String): Long =
-    math.max(160L, ClipGen.clipCountFor(sfDir) / 10)
 
   final case class MixedRow(audio_id: String, bytes: Array[Byte])
 
@@ -165,28 +160,8 @@ object MixedAudioGen {
     page(0x02, 0L, 0, head) ++ page(0x04, preskip + ns, 1, filler(seed, 60))
   }
 
-  def audiosDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(n).map(i => audioRow(i)).toDF()
   }
-
-  def targetName(sfDir: String): String =
-    s"mixedaudio-v$Version-n${audioCountFor(sfDir)}"
-
-  def tablePath(sfDir: String, root: String = "/root/repo/data/mixed_audio"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/mixed_audio"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = audioCountFor(sfDir)
-    FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      audiosDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
-
-  def readAudios(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.Paths
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioSynth.mix64
 import graft.image.{ImageCodec, JdkImageCodec}
@@ -24,14 +22,10 @@ import graft.image.{ImageCodec, JdkImageCodec}
   * codec loss: JPEG quantization / GIF palette shift the MEAN by well
   * under 0.02, an order of magnitude inside the dark/bright thresholds.
   */
-object MixedImageGen {
-
-  val Version = 1
+object MixedImageGen extends FixtureTable("mixed", "mixed_images", version = 1,
+    minRows = 120, clipsPerRow = 10) {
 
   def imageId(idx: Long): String = f"mimg-$idx%08d"
-
-  def imageCountFor(sfDir: String): Long =
-    math.max(120L, ClipGen.clipCountFor(sfDir) / 10)
 
   final case class MixedRow(image_id: String, bytes: Array[Byte])
 
@@ -70,28 +64,8 @@ object MixedImageGen {
     MixedRow(imageId(idx), bytes)
   }
 
-  def imagesDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(n).map(i => imageRow(i)).toDF()
   }
-
-  def targetName(sfDir: String): String =
-    s"mixed-v$Version-n${imageCountFor(sfDir)}"
-
-  def tablePath(sfDir: String, root: String = "/root/repo/data/mixed_images"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/mixed_images"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = imageCountFor(sfDir)
-    FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      imagesDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
-
-  def readImages(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

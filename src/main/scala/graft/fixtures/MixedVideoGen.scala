@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.Paths
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioSynth.mix64
 import graft.image.{SpsWriter, Y4mCodec}
@@ -21,14 +19,10 @@ import graft.image.{SpsWriter, Y4mCodec}
   *   h264 profile = 66 (Baseline) at idx%4==1, 100 (High) at idx%4==3
   *   h264 level   = 30 + (idx % 3) * 10
   */
-object MixedVideoGen {
-
-  val Version = 1
+object MixedVideoGen extends FixtureTable("mixedvid", "mixed_videos", version = 1,
+    minRows = 120, clipsPerRow = 50) {
 
   def videoId(idx: Long): String = f"mvid-$idx%08d"
-
-  def videoCountFor(sfDir: String): Long =
-    math.max(120L, ClipGen.clipCountFor(sfDir) / 50)
 
   final case class MixedVideoRow(video_id: String, bytes: Array[Byte])
 
@@ -49,28 +43,8 @@ object MixedVideoGen {
     MixedVideoRow(videoId(idx), bytes)
   }
 
-  def videosDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(n).map(i => videoRow(i)).toDF()
   }
-
-  def targetName(sfDir: String): String =
-    s"mixedvid-v$Version-n${videoCountFor(sfDir)}"
-
-  def tablePath(sfDir: String, root: String = "/root/repo/data/mixed_videos"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/mixed_videos"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = videoCountFor(sfDir)
-    FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      videosDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
-
-  def readVideos(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

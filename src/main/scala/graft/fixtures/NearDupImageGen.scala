@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.Paths
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioSynth.mix64
 import graft.image.{ImageCodec, JdkImageCodec}
@@ -21,16 +19,13 @@ import graft.image.{ImageCodec, JdkImageCodec}
   * BYTES via `image_dhash` + `Dedup.hashNearDup` (ImageHashSpec measures
   * the margins: twin hamming vs organic hamming are an order of magnitude
   * apart on this content). */
-object NearDupImageGen {
+object NearDupImageGen extends FixtureTable("neardup", "neardup_images",
+    version = 1, minRows = 120, clipsPerRow = 10) {
 
-  val Version = 1
   val W = 96
   val H = 72
 
   def imageId(idx: Long): String = f"nimg-$idx%08d"
-
-  def imageCountFor(sfDir: String): Long =
-    math.max(120L, ClipGen.clipCountFor(sfDir) / 10)
 
   final case class NearDupRow(image_id: String, bytes: Array[Byte])
 
@@ -64,30 +59,10 @@ object NearDupImageGen {
       encode(pixels(idx), formats(((idx + 1) % 4).toInt)))
   }
 
-  def imagesDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     val base = spark.range(n).map(i => baseRow(i))
     val twins = spark.range(n).filter(_ % 10 == 7).map(i => twinRow(i))
     base.union(twins).toDF()
   }
-
-  def targetName(sfDir: String): String =
-    s"neardup-v$Version-n${imageCountFor(sfDir)}"
-
-  def tablePath(sfDir: String, root: String = "/root/repo/data/neardup_images"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/neardup_images"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = imageCountFor(sfDir)
-    FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      imagesDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
-
-  def readImages(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

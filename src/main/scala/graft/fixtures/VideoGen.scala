@@ -1,8 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audio.AudioSynth.mix64
 import graft.image.Y4mCodec
@@ -28,18 +26,14 @@ import graft.image.Y4mCodec
   * '-d' rows are organic-drift content (%20 == 6), so v1's motion
   * thresholds ignore them by construction.
   */
-object VideoGen {
+object VideoGen extends FixtureTable("videos", "videos", version = 2,
+    minRows = 50, clipsPerRow = 50) {
 
-  val Version = 2
   val W = 32
   val H = 24
   val Frames = 16
 
   def videoId(idx: Long): String = f"vid-$idx%08d"
-
-  /** One video per 50 clips at the same scale factor (min 50). */
-  def videoCountFor(sfDir: String): Long =
-    math.max(50L, ClipGen.clipCountFor(sfDir) / 50)
 
   final case class VideoRow(video_id: String, bytes: Array[Byte],
                             width: Int, height: Int, n_frames: Int)
@@ -77,36 +71,10 @@ object VideoGen {
     VideoRow(videoId(idx) + "-d", Y4mCodec.encode(W, H, frames), W, H, Frames - 2)
   }
 
-  def videosDf(spark: SparkSession, n: Long): DataFrame = {
+  def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(n).map(i => videoRow(i))
       .union(spark.range(n).filter(_ % 20 == 6).map(i => twinRow(i)))
       .toDF()
   }
-
-  /** Target directory name encodes the generation key — existence is
-    * validity, so no marker file and no read-check-write race. */
-  def targetName(sfDir: String): String =
-    s"videos-v$Version-n${videoCountFor(sfDir)}"
-
-  def tablePath(sfDir: String, root: String = "/root/repo/data/videos"): String =
-    Paths.get(root, Paths.get(sfDir).getFileName.toString, targetName(sfDir)).toString
-
-  /** Concurrency-safe generate-once (see ImageGen.ensure). */
-  def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/videos"): String = {
-    val name = Paths.get(sfDir).getFileName.toString
-    val n = videoCountFor(sfDir)
-    val out = FixtureDirs.ensureAtomic(Paths.get(root, name), targetName(sfDir)) { tmp =>
-      videosDf(spark, n)
-        .repartition(4)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-    FixtureDirs.deleteRecursively(Paths.get(root, name, "videos"))
-    Files.deleteIfExists(Paths.get(root, name, "_gen_version"))
-    out
-  }
-
-  def readVideos(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, sfDir))
 }

@@ -14,14 +14,11 @@ import graft.functions.GraftFunctions._
   * planted by id arithmetic; the oracle states it from the id. */
 object AudioContainerQueries {
 
-  def mixedAudioGlob(sf: String = "sf0.01"): String =
-    s"${MixedAudioGen.tablePath(sf)}/*.parquet"
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Library-free container metadata across all four formats.
     "a1_audio_meta" -> ((s, dir) => {
-      MixedAudioGen.readAudios(s, dir)
+      MixedAudioGen.read(s, dir)
         .select(col("audio_id"), audio_meta(col("bytes")).as("m"))
         .select(col("audio_id"), col("m.format").as("format"),
           col("m.sr_hz").as("sr_hz"), col("m.channels").as("channels"),
@@ -34,7 +31,7 @@ object AudioContainerQueries {
     // engine's own pipeline out. Stereo WAVs and the compressed formats
     // are null (unwrap is mono-by-contract) and filtered.
     "a2_wav_ingest" -> ((s, dir) => {
-      MixedAudioGen.readAudios(s, dir)
+      MixedAudioGen.read(s, dir)
         .select(col("audio_id"), wav_unwrap(col("bytes")).as("w"))
         .filter(col("w").isNotNull)
         .select(col("audio_id"), col("w.codec").as("codec"),
@@ -51,7 +48,7 @@ object AudioContainerQueries {
          |  SELECT audio_id,
          |    CAST(substr(audio_id, 6, 8) AS INTEGER) % 4 AS fmt,
          |    CAST(substr(audio_id, 6, 8) AS INTEGER) // 4 AS q
-         |  FROM read_parquet('${mixedAudioGlob(sf)}'))
+         |  FROM read_parquet('${MixedAudioGen.glob(sf)}'))
          |SELECT audio_id,
          |  CASE fmt WHEN 0 THEN 'wav' WHEN 1 THEN 'flac'
          |    WHEN 2 THEN 'mp3' ELSE 'ogg' END AS format,
@@ -70,7 +67,7 @@ object AudioContainerQueries {
          |  SELECT audio_id,
          |    CAST(substr(audio_id, 6, 8) AS INTEGER) % 4 AS fmt,
          |    CAST(substr(audio_id, 6, 8) AS INTEGER) // 4 AS q
-         |  FROM read_parquet('${mixedAudioGlob(sf)}'))
+         |  FROM read_parquet('${MixedAudioGen.glob(sf)}'))
          |SELECT audio_id,
          |  CASE q % 3 WHEN 0 THEN 'pcm16' WHEN 1 THEN 'ulaw' ELSE 'alaw' END AS codec,
          |  CASE q % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END AS sr_hz,

@@ -14,21 +14,6 @@ import graft.functions.GraftFunctions._
   * the image column). */
 object ImageQueries {
 
-  /** Driver verifies at sf0.01 (default); Verify derives the actual scale
-    * from its sfDir so oracle and engine always read the same table. The
-    * glob comes from the same tablePath function the engine reads, so the
-    * two sides can never diverge on layout or generation version. */
-  def imagesGlob(sf: String = "sf0.01"): String =
-    s"${ImageGen.tablePath(sf)}/*.parquet"
-  def videosGlob(sf: String = "sf0.01"): String =
-    s"${VideoGen.tablePath(sf)}/*.parquet"
-  def mixedGlob(sf: String = "sf0.01"): String =
-    s"${MixedImageGen.tablePath(sf)}/*.parquet"
-  def mixedVideoGlob(sf: String = "sf0.01"): String =
-    s"${MixedVideoGen.tablePath(sf)}/*.parquet"
-  def nearDupGlob(sf: String = "sf0.01"): String =
-    s"${NearDupImageGen.tablePath(sf)}/*.parquet"
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Image QUALITY flagging from bytes alone: netpbm decode + fused luma
@@ -39,7 +24,7 @@ object ImageQueries {
     // [0.25, 0.75]) can trip neither threshold — equality with the
     // id-arithmetic oracle = recall AND precision 1.0.
     "i1_image_quality" -> ((s, dir) => {
-      ImageGen.readImages(s, dir)
+      ImageGen.read(s, dir)
         .select(col("image_id"), ppm_luma_mean(col("bytes")).as("mean_luma"))
         .select(col("image_id"),
           when(col("mean_luma") <= 0.1, lit("dark"))
@@ -57,7 +42,7 @@ object ImageQueries {
     // the id-stated oracle proves every format's header parse recovers
     // format, dimensions, channels and bit depth exactly.
     "i2_image_meta" -> ((s, dir) => {
-      MixedImageGen.readImages(s, dir)
+      MixedImageGen.read(s, dir)
         .select(col("image_id"), image_meta(col("bytes")).as("m"))
         .select(col("image_id"), col("m.format").as("format"),
           col("m.width").as("width"), col("m.height").as("height"),
@@ -73,7 +58,7 @@ object ImageQueries {
     // (JPEG quantization, GIF palette) moves the mean by < 0.02, an order
     // of magnitude inside the thresholds.
     "i3_compressed_quality" -> ((s, dir) => {
-      MixedImageGen.readImages(s, dir)
+      MixedImageGen.read(s, dir)
         .select(col("image_id"), image_luma_mean(col("bytes")).as("mean_luma"))
         .select(col("image_id"),
           when(col("mean_luma") <= 0.12, lit("dark"))
@@ -94,7 +79,7 @@ object ImageQueries {
     // AND precision 1.0.
     "i4_image_neardup" -> ((s, dir) => {
       graft.operators.Dedup.hashNearDup(
-        NearDupImageGen.readImages(s, dir)
+        NearDupImageGen.read(s, dir)
           .select(col("image_id").as("id"), image_dhash(col("bytes")).as("sig")),
         maxHamming = 8)
         .select(col("id_a"), col("id_b"))
@@ -110,7 +95,7 @@ object ImageQueries {
     // are deliberately non-multiples of 16, so a parser that skips the
     // frame-cropping arithmetic cannot match the oracle.
     "v2_video_meta" -> ((s, dir) => {
-      MixedVideoGen.readVideos(s, dir)
+      MixedVideoGen.read(s, dir)
         .select(col("video_id"), video_meta(col("bytes")).as("m"))
         .select(col("video_id"), col("m.codec").as("codec"),
           col("m.profile_idc").as("profile_idc"),
@@ -131,7 +116,7 @@ object ImageQueries {
     // ~32 apart (margins pinned in Y4mCodecSpec).
     "v3_video_neardup" -> ((s, dir) => {
       graft.operators.Dedup.hashNearDup(
-        VideoGen.readVideos(s, dir)
+        VideoGen.read(s, dir)
           .select(col("video_id").as("id"),
             y4m_temporal_dhash(col("bytes")).as("sig")),
         maxHamming = 8)
@@ -148,7 +133,7 @@ object ImageQueries {
     // the broadcast chunk-keyed delta. Same planted oracle as v3:
     // equality = the incremental path has exact recall and precision.
     "v4_video_neardup_inc" -> ((s, dir) => {
-      val sigs = VideoGen.readVideos(s, dir)
+      val sigs = VideoGen.read(s, dir)
         .select(col("video_id").as("id"),
           y4m_temporal_dhash(col("bytes")).as("sig"))
       // MATERIALIZE the key table, as production would (the c20 contract:
@@ -169,7 +154,7 @@ object ImageQueries {
     // must be recovered from the BYTES; organic drift (~0.02) sits an
     // order of magnitude from both thresholds.
     "v1_video_quality" -> ((s, dir) => {
-      VideoGen.readVideos(s, dir)
+      VideoGen.read(s, dir)
         .select(col("video_id"),
           y4m_motion_stats(col("bytes")).as("m"))
         .select(col("video_id"),
@@ -189,14 +174,14 @@ object ImageQueries {
       s"""SELECT image_id,
          |  CASE WHEN CAST(substr(image_id, 5, 8) AS INTEGER) % 20 = 7
          |    THEN 'dark' ELSE 'bright' END AS verdict
-         |FROM read_parquet('${imagesGlob(sf)}')
+         |FROM read_parquet('${ImageGen.glob(sf)}')
          |WHERE CAST(substr(image_id, 5, 8) AS INTEGER) % 20 IN (7, 17)
          |ORDER BY 1""".stripMargin,
     "v1_video_quality" ->
       s"""SELECT video_id,
          |  CASE WHEN CAST(substr(video_id, 5, 8) AS INTEGER) % 20 = 3
          |    THEN 'static' ELSE 'high_motion' END AS verdict
-         |FROM read_parquet('${videosGlob(sf)}')
+         |FROM read_parquet('${VideoGen.glob(sf)}')
          |WHERE CAST(substr(video_id, 5, 8) AS INTEGER) % 20 IN (3, 13)
          |ORDER BY 1""".stripMargin,
     // The planting rules of MixedImageGen, stated from the id — the
@@ -211,20 +196,20 @@ object ImageQueries {
          |  CASE WHEN CAST(substr(image_id, 6, 8) AS INTEGER) % 6 = 2
          |    THEN 1 ELSE 3 END AS channels,
          |  8 AS bit_depth
-         |FROM read_parquet('${mixedGlob(sf)}')
+         |FROM read_parquet('${MixedImageGen.glob(sf)}')
          |ORDER BY 1""".stripMargin,
     "i3_compressed_quality" ->
       s"""SELECT image_id,
          |  CASE WHEN CAST(substr(image_id, 6, 8) AS INTEGER) % 10 = 4
          |    THEN 'dark' ELSE 'bright' END AS verdict
-         |FROM read_parquet('${mixedGlob(sf)}')
+         |FROM read_parquet('${MixedImageGen.glob(sf)}')
          |WHERE CAST(substr(image_id, 6, 8) AS INTEGER) % 10 IN (4, 9)
          |ORDER BY 1""".stripMargin,
     // NearDupImageGen's planted twin set, stated from the id — the
     // engine recovers it from pixels across codecs.
     "i4_image_neardup" ->
       s"""SELECT image_id AS id_a, image_id || '-t' AS id_b
-         |FROM read_parquet('${nearDupGlob(sf)}')
+         |FROM read_parquet('${NearDupImageGen.glob(sf)}')
          |WHERE image_id NOT LIKE '%-t'
          |  AND CAST(substr(image_id, 6, 8) AS INTEGER) % 10 = 7
          |ORDER BY 1, 2""".stripMargin,
@@ -232,7 +217,7 @@ object ImageQueries {
     // recovers it from the y4m luma planes alone.
     "v3_video_neardup" ->
       s"""SELECT video_id AS id_a, video_id || '-d' AS id_b
-         |FROM read_parquet('${videosGlob(sf)}')
+         |FROM read_parquet('${VideoGen.glob(sf)}')
          |WHERE video_id NOT LIKE '%-d'
          |  AND CAST(substr(video_id, 5, 8) AS INTEGER) % 20 = 6
          |ORDER BY 1, 2""".stripMargin,
@@ -241,7 +226,7 @@ object ImageQueries {
     // own precision property, margins in Y4mCodecSpec)
     "v4_video_neardup_inc" ->
       s"""SELECT video_id AS id_a, video_id || '-d' AS id_b
-         |FROM read_parquet('${videosGlob(sf)}')
+         |FROM read_parquet('${VideoGen.glob(sf)}')
          |WHERE video_id NOT LIKE '%-d'
          |  AND CAST(substr(video_id, 5, 8) AS INTEGER) % 20 = 6
          |ORDER BY 1, 2""".stripMargin,
@@ -259,6 +244,6 @@ object ImageQueries {
          |    END AS level_idc,
          |  160 + (CAST(substr(video_id, 6, 8) AS INTEGER) % 11) * 18 AS width,
          |  90 + (CAST(substr(video_id, 6, 8) AS INTEGER) % 7) * 14 AS height
-         |FROM read_parquet('${mixedVideoGlob(sf)}')
+         |FROM read_parquet('${MixedVideoGen.glob(sf)}')
          |ORDER BY 1""".stripMargin)
 }

@@ -61,73 +61,6 @@ object ClipStreamJob {
   def sessionCounts(clips: DataFrame, watermark: String = "30 seconds"): DataFrame =
     Windows.sessionCounts(clips.withWatermark("event_time", watermark))
 
-  /** CONTENT-keyed streaming dedup: the same audio arriving again under a
-    * different clip_id and/or codec (a transcoded re-upload) is dropped on
-    * ingest by its acoustic fingerprint via `dropDuplicatesWithinWatermark`.
-    * The fingerprint reduction runs in the scan stage, so dedup STATE
-    * holds only the tiny key tuple (never bytes) and is evicted by the
-    * watermark — bounded state at any stream length. First arrival wins
-    * (id-level replay dedup is the sink's job; this is the content level
-    * above it).
-    *
-    * KEY CHOICE — a wrong drop here is permanent data loss, so the key
-    * must err toward KEEPING: (sr, n_samples, f1) alone organically
-    * collides at corpus scale (two distinct clips of equal length and
-    * dominant tone), and unlike the batch detector there is no verify
-    * stage to reject the collision. The key therefore includes the second
-    * tone as a COARSE bucket (width `f2BucketHz`): a G.711 transcode
-    * jitters f2 by only a few Hz, so true re-uploads still collapse
-    * (except the ~jitter/width fraction straddling a bucket edge, which
-    * are KEPT — the benign direction, caught downstream by the batch
-    * near-dup), while organic collisions must now also match f2 within
-    * the bucket. For guaranteed-lossless dedup use `Dedup.audioNearDup*`,
-    * whose exact correlation verify has no false drops at any scale.
-    *
-    * `shiftRobust`: additionally drop re-uploads whose leading samples
-    * were TRIMMED (the c15 attack, on ingest). Streaming state can hold
-    * only ONE key per row (no adjacent-bucket emission like the batch
-    * detector — exploding copies would change stream cardinality), so the
-    * length key coarsens to an `nBucket`-wide bucket: a trim <= maxTrim
-    * maps to the same bucket unless the length straddles a bucket edge
-    * (~trim/nBucket of clips ~= 4% at the defaults) — those are KEPT, the
-    * benign direction, and collapse later in the batch `audioNearDupShift`
-    * pass which has the exact aligned-correlation verify.
-    *
-    * The coarse bucket also WIDENS the irreversible false-DROP surface
-    * (ADVICE r4): two DISTINCT clips sharing (sr_hz, f1, f2b) collide on
-    * the length key whenever their lengths fall in the same `nBucket`-wide
-    * bucket (vs exact-length equality when shiftRobust=false) — a 4096x
-    * larger organic-collision window, and a streaming drop has no verify
-    * stage to reject it. Turn shiftRobust on only when trimmed re-uploads
-    * are an actual ingest threat; for guaranteed-lossless dedup run the
-    * batch detectors instead (exact correlation verify, no false drops).
-    *
-    * CHECKPOINT COMPATIBILITY: the four key columns (sr_hz, nk, f1, f2b)
-    * ARE the dropDuplicatesWithinWatermark state schema — renaming any of
-    * them (r4 renamed n_samples -> nk when shiftRobust landed), changing
-    * their types, or toggling shiftRobust on an existing checkpoint fails
-    * the restart with a state-schema mismatch. Restarting across such a
-    * change needs a fresh checkpoint dir (the sink's id-level MERGE
-    * absorbs the reprocessing). */
-  def audioDedupStream(clips: DataFrame, watermark: String = "30 seconds",
-                       f2BucketHz: Int = 64, shiftRobust: Boolean = false,
-                       nBucket: Int = 4096): DataFrame = {
-    val nKey =
-      if (shiftRobust) (col("n_samples") / nBucket).cast("int")
-      else col("n_samples").cast("int")
-    clips
-      .withColumn("n_samples",
-        graft.functions.GraftFunctions.pcm_sample_count(col("bytes"), col("codec")))
-      .withColumn("fp", graft.functions.GraftFunctions.pcm_tone_pair(
-        col("bytes"), col("codec"), col("sr_hz")))
-      .withColumn("f1", element_at(col("fp"), 1))
-      .withColumn("f2b", (element_at(col("fp"), 2) / f2BucketHz).cast("int"))
-      .withColumn("nk", nKey)
-      .withWatermark("event_time", watermark)
-      .dropDuplicatesWithinWatermark("sr_hz", "nk", "f1", "f2b")
-      .drop("fp", "n_samples", "f1", "f2b", "nk")
-  }
-
   /** NORMALIZE-ON-INGEST: every clip leaves this stage as pcm16 at
     * `targetHz` (mixed-rate corpus -> one model rate, the c17 operation
     * as a stream stage). The polyphase windowed-sinc kernel
@@ -208,12 +141,9 @@ object ClipStreamJob {
     * against everything already ingested, and batch rows whose audio
     * near-duplicates an existing clip or an earlier row of the same batch
     * (trim/transcode robust, exact aligned-correlation verified) are
-    * DROPPED before the exactly-once MERGE. Contrast [[audioDedupStream]]:
-    * that stage is fingerprint-EQUALITY in bounded watermark state (cheap,
-    * first line of defense); this one is the full candidates-plus-verify
-    * semantics with unbounded lookback. The sink carries (sr_hz,
-    * n_samples, f1, f2) columns written at ingest, so the corpus is never
-    * re-decoded.
+    * DROPPED before the exactly-once MERGE, with unbounded lookback. The
+    * sink carries (sr_hz, n_samples, f1, f2) columns written at ingest, so
+    * the corpus is never re-decoded.
     *
     * Each micro-batch runs three batch-sized steps, each ending in a
     * driver-side collect, instead of one lazy dedup-and-write plan:

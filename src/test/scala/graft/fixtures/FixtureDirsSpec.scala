@@ -74,4 +74,24 @@ class FixtureDirsSpec extends AnyFunSuite {
     assert(maxInside.get() == 1, "two threads inside the lock at once")
     assert(generations.get() == 1, s"generated ${generations.get()} times")
   }
+
+  test("FixtureTable.media: six tables with today's directory names and globs") {
+    // (table, root dir under data/, name at sf0.001, name at sf0.01): the
+    // cached tables and the oracle globs depend on these names
+    val expected = Seq(
+      (ImageGen, "images", "images-v1-n100", "images-v1-n500"),
+      (VideoGen, "videos", "videos-v2-n50", "videos-v2-n100"),
+      (MixedImageGen, "mixed_images", "mixed-v1-n120", "mixed-v1-n500"),
+      (MixedVideoGen, "mixed_videos", "mixedvid-v1-n120", "mixedvid-v1-n120"),
+      (NearDupImageGen, "neardup_images", "neardup-v1-n120", "neardup-v1-n500"),
+      (MixedAudioGen, "mixed_audio", "mixedaudio-v1-n160", "mixedaudio-v1-n500"))
+    assert(FixtureTable.media == expected.map(_._1))
+    for ((table, dir, small, big) <- expected; (sf, name) <- Seq("sf0.001" -> small, "sf0.01" -> big)) {
+      assert(table.targetName(sf) == name)
+      assert(table.targetName(s"testdata/$sf") == name)
+      assert(table.defaultRoot.endsWith(s"/data/$dir"))
+      assert(table.tablePath(sf) == Paths.get(table.defaultRoot, sf, name).toString)
+      assert(table.glob(sf) == table.tablePath(sf) + "/*.parquet")
+    }
+  }
 }

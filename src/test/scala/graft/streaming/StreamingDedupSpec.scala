@@ -54,62 +54,6 @@ class StreamingDedupSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("CONTENT dedup: transcoded re-uploads dropped by acoustic fingerprint") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[AudioEvt]
-    val q = ClipStreamJob.audioDedupStream(in.toDF())
-      .writeStream.format("memory").queryName("audio_dedup")
-      .outputMode("append").start()
-    try {
-      val a16 = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(1L), 8000, 8000), "pcm16")
-      val b16 = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(2L), 8000, 8000), "pcm16")
-      // batch 1: two distinct clips pass
-      in.addData(AudioEvt("a", a16, "pcm16", 8000, ts(1)),
-        AudioEvt("b", b16, "pcm16", 8000, ts(2)))
-      q.processAllAvailable()
-      // batch 2: the SAME audio as `a`, re-uploaded under a new id and a
-      // different codec — the G.711 transcode preserves (sr, n, f1), so
-      // the fingerprint key is already in dedup state -> dropped
-      val aUlaw = AudioCodec.transcode(a16, "pcm16", "ulaw")
-      in.addData(AudioEvt("a-reupload", aUlaw, "ulaw", 8000, ts(3)))
-      q.processAllAvailable()
-      // batch 3: a genuinely new clip still passes
-      val c16 = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(3L), 8000, 8000), "pcm16")
-      in.addData(AudioEvt("c", c16, "pcm16", 8000, ts(4)))
-      q.processAllAvailable()
-      val got = spark.table("audio_dedup").select("clip_id").as[String].collect().toSet
-      assert(got == Set("a", "b", "c"), s"got $got")
-    } finally q.stop()
-  }
-
-  test("SHIFT-ROBUST content dedup: trimmed+transcoded re-uploads dropped on ingest") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[AudioEvt]
-    val q = ClipStreamJob.audioDedupStream(in.toDF(), shiftRobust = true)
-      .writeStream.format("memory").queryName("audio_dedup_shift")
-      .outputMode("append").start()
-    try {
-      val a16 = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(7L), 8000, 8000), "pcm16")
-      val b16 = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(8L), 8000, 8000), "pcm16")
-      in.addData(AudioEvt("a", a16, "pcm16", 8000, ts(1)),
-        AudioEvt("b", b16, "pcm16", 8000, ts(2)))
-      q.processAllAvailable()
-      // the c15 attack, on ingest: 160 leading samples trimmed AND
-      // transcoded to ulaw — the exact-length key of the plain dedup
-      // would pass it; the bucketed key must drop it
-      val aTrimUlaw = AudioCodec.transcode(
-        java.util.Arrays.copyOfRange(a16, 320, a16.length), "pcm16", "ulaw")
-      in.addData(AudioEvt("a-trim-reupload", aTrimUlaw, "ulaw", 8000, ts(3)))
-      q.processAllAvailable()
-      // distinct content still passes
-      val c16b = AudioCodec.encode(AudioSynth.synth(AudioSynth.mix64(9L), 8000, 8000), "pcm16")
-      in.addData(AudioEvt("c", c16b, "pcm16", 8000, ts(4)))
-      q.processAllAvailable()
-      val got = spark.table("audio_dedup_shift").select("clip_id").as[String].collect().toSet
-      assert(got == Set("a", "b", "c"), s"got $got")
-    } finally q.stop()
-  }
-
   test("EXACT-VERIFY incremental dedup against the table: first arrival wins") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[AudioEvt]
