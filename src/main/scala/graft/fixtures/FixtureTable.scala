@@ -10,10 +10,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * read the same directory.
   *
   * Layout: `<root>/<sf>/<prefix>-v<version>-n<rows>`, `root` defaulting to
-  * the repo's `data/<dir>`. The directory name encodes the generation key
-  * (version and row count), so existence is validity: there is no marker
-  * file, and [[FixtureDirs.ensureAtomic]] publishes each table with one
-  * atomic rename, so racing sessions never read a partial write.
+  * `data/<dir>` under the working directory (the repo root under sbt). The
+  * directory name encodes the generation key (version and row count), so
+  * existence is validity: there is no marker file, and
+  * [[FixtureDirs.ensureAtomic]] publishes each table with one atomic rename,
+  * so racing sessions never read a partial write.
   *
   * Row count: one row per `clipsPerRow` clips at the same scale factor
   * ([[ClipGen.clipCountFor]]), and at least `minRows`.
@@ -24,7 +25,7 @@ abstract class FixtureTable(prefix: String, dir: String, version: Int,
   /** The table's rows for indices `0 until n`. */
   def rows(spark: SparkSession, n: Long): DataFrame
 
-  val defaultRoot: String = s"/root/repo/data/$dir"
+  val defaultRoot: String = Paths.get("data", dir).toAbsolutePath.toString
 
   private def rowCount(sfDir: String): Long =
     math.max(minRows, ClipGen.clipCountFor(sfDir) / clipsPerRow)
