@@ -27,30 +27,41 @@ import graft.functions.Kernels
   */
 object Ivf {
 
-  /** Deterministic Lloyd k-means over a bounded sample of `df`.
-    * Init = evenly-strided sample rows (no RNG); `iters` fixed. Empty
-    * cells keep their previous centroid. The sample is the `sampleN`
-    * lowest ids — orderBy+limit plans as TakeOrderedAndProject (per-
-    * partition top-N heap + driver merge, no full sort shuffle). A bare
-    * limit() would take whichever partitions answer first, making the
-    * centroids (and every downstream cell assignment) run-order dependent. */
+  /** Deterministic k-means coarse quantizer of `df`: [[lloyd]] over the
+    * [[trainingSample]], `nList` cells. */
   def fit(df: DataFrame, vecCol: String, nList: Int,
           iters: Int = 10, sampleN: Int = 10000,
           idCol: String = "vec_id"): Array[Array[Float]] = {
-    val sample: Array[Array[Float]] = df
-      .orderBy(col(idCol)).limit(sampleN).select(vecCol)
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = trainingSample(df, vecCol, sampleN, idCol)
     require(sample.length >= nList, s"sample ${sample.length} < nList $nList")
-    val dim = sample.head.length
-    var cents = Array.tabulate(nList)(i =>
-      sample((i.toLong * sample.length / nList).toInt).clone())
+    lloyd(sample, nList, iters)
+  }
+
+  /** The bounded training sample of both quantizers (this one and
+    * [[Pq.fit]]): the `sampleN` lowest ids — orderBy+limit plans as
+    * TakeOrderedAndProject (per-partition top-N heap + driver merge, no
+    * full sort shuffle). A bare limit() would take whichever partitions
+    * answer first, making the centroids (and every downstream cell
+    * assignment) run-order dependent. */
+  private[operators] def trainingSample(df: DataFrame, vecCol: String, sampleN: Int,
+                                        idCol: String): Array[Array[Float]] =
+    df.orderBy(col(idCol)).limit(sampleN).select(vecCol)
+      .collect().map(_.getSeq[Float](0).toArray)
+
+  /** Deterministic Lloyd k-means: init = evenly-strided points (no RNG);
+    * `iters` fixed; empty cells keep their previous centroid. */
+  private[operators] def lloyd(points: Array[Array[Float]], k: Int,
+                               iters: Int): Array[Array[Float]] = {
+    val dim = points.head.length
+    val cents = Array.tabulate(k)(i =>
+      points((i.toLong * points.length / k).toInt).clone())
     var it = 0
     while (it < iters) {
-      val sums = Array.fill(nList)(new Array[Double](dim))
-      val counts = new Array[Int](nList)
+      val sums = Array.fill(k)(new Array[Double](dim))
+      val counts = new Array[Int](k)
       var s = 0
-      while (s < sample.length) {
-        val v = sample(s)
+      while (s < points.length) {
+        val v = points(s)
         val c = nearestIdx(v, cents)
         var d = 0
         while (d < dim) { sums(c)(d) += v(d); d += 1 }
@@ -58,7 +69,7 @@ object Ivf {
         s += 1
       }
       var c = 0
-      while (c < nList) {
+      while (c < k) {
         if (counts(c) > 0) {
           val nc = new Array[Float](dim)
           var d = 0
@@ -111,8 +122,30 @@ object Ivf {
 
   def cellCol(v: Column, cents: Array[Array[Float]]): Column = Kernels.nearestCentroid(cents)(v)
 
-  def probeCol(v: Column, cents: Array[Array[Float]], nProbe: Int): Column =
+  def probeCol(v: Column, cents: Array[Array[Float]], nProbe: Int): Column = {
+    require(nProbe >= 1, s"nProbe $nProbe < 1")
     Kernels.nearestCentroids(cents, nProbe)(v)
+  }
+
+  /** (query_id, cell) per probed cell of each (query_id, qv) row, plus
+    * `extra` columns of the query row. */
+  private[operators] def probes(q: DataFrame, cents: Array[Array[Float]], nProbe: Int,
+                                extra: Column*): DataFrame =
+    q.select(Seq(col("query_id"), explode(probeCol(col("qv"), cents, nProbe)).as("cell")) ++
+      extra: _*)
+
+  /** The cell-probe body of [[ivfKnn]], [[ivfKnnBulk]] and [[IvfIndex]]'s
+    * searches: the corpus' (cand_id, cell) rows join the queries'
+    * (query_id, cell) probe rows on cell, then the [[Similarity.scoreTopK]]
+    * re-rank. `broadcastQueries` hints both the probe rows and the query
+    * vectors (bounded query sets) or neither (bulk). No distinct needed: each
+    * candidate has exactly ONE cell and a query's probed cells are
+    * distinct, so a (query, cand) pair can only arise once. */
+  private[operators] def probeKnn(cells: DataFrame, probeRows: DataFrame, q: DataFrame,
+                                  c: DataFrame, k: Int, broadcastQueries: Boolean): DataFrame =
+    Similarity.scoreTopK(Similarity.candPairs(cells.join(
+      if (broadcastQueries) broadcast(probeRows) else probeRows, Seq("cell"))),
+      q, c, k, broadcastQueries)
 
   /** IVF-Flat ANN: corpus assigned to its cell (one scan), queries probe
     * `nProbe` cells, exact quantized-cosine re-rank inside the probed
@@ -122,18 +155,10 @@ object Ivf {
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int,
              cents: Array[Array[Float]], nProbe: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cCell = c.select(col("cand_id"), cellCol(col("cv"), cents).as("cell"))
-    val qCell = q.select(col("query_id"),
-      explode(probeCol(col("qv"), cents, nProbe)).as("cell"))
-    // No distinct needed: each candidate has exactly ONE cell and a query's
-    // probed cells are distinct, so a (query, cand) pair can only arise
-    // once — distinct() here was a wasted extra shuffle.
-    val cands = cCell.join(broadcast(qCell), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    Similarity.scoreTopK(cands, q, c, k)
+    val c = Similarity.candVecs(corpus, idCol, vecCol)
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
+    probeKnn(c.select(col("cand_id"), cellCol(col("cv"), cents).as("cell")),
+      probes(q, cents, nProbe), q, c, k, broadcastQueries = true)
   }
 
   /** Bulk-query IVF-Flat: identical index/probe/re-rank semantics to
@@ -148,14 +173,9 @@ object Ivf {
   def ivfKnnBulk(corpus: DataFrame, queries: DataFrame, k: Int,
                  cents: Array[Array[Float]], nProbe: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cCell = c.select(col("cand_id"), cellCol(col("cv"), cents).as("cell"))
-    val qCell = q.select(col("query_id"),
-      explode(probeCol(col("qv"), cents, nProbe)).as("cell"))
-    val cands = cCell.join(qCell, Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    Similarity.scoreTopK(cands, q, c, k, broadcastQueries = false)
+    val c = Similarity.candVecs(corpus, idCol, vecCol)
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
+    probeKnn(c.select(col("cand_id"), cellCol(col("cv"), cents).as("cell")),
+      probes(q, cents, nProbe), q, c, k, broadcastQueries = false)
   }
 }

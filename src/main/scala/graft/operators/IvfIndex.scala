@@ -116,19 +116,14 @@ object IvfIndex {
   def knn(spark: SparkSession, index: Handle, queries: DataFrame, k: Int,
           nProbe: Int,
           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val qCell = q.select(col("query_id"),
-      explode(Ivf.probeCol(col("qv"), index.cents, nProbe)).as("cell"))
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
+    val qCell = Ivf.probes(q, index.cents, nProbe)
     val probed: Seq[Any] = qCell.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted.toIndexedSeq.map(Int.box(_): Any)
     val cells = spark.read.parquet(index.cellsPath)
       .filter(col("cell").isin(probed: _*))
-    val cands = cells.select(col(idCol).as("cand_id"), col("cell"))
-      .join(broadcast(qCell), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    val c = cells.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    Similarity.scoreTopK(cands, q, c, k)
+    Ivf.probeKnn(cells.select(col(idCol).as("cand_id"), col("cell")), qCell, q,
+      Similarity.candVecs(cells, idCol, vecCol), k, broadcastQueries = true)
   }
 
   /** Bulk (corpus-sized) query sets over the persisted index: no driver
@@ -139,15 +134,10 @@ object IvfIndex {
   def knnBulk(spark: SparkSession, index: Handle, queries: DataFrame, k: Int,
               nProbe: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val qCell = q.select(col("query_id"),
-      explode(Ivf.probeCol(col("qv"), index.cents, nProbe)).as("cell"))
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
     val cells = spark.read.parquet(index.cellsPath)
-    val cands = cells.select(col(idCol).as("cand_id"), col("cell"))
-      .join(qCell, Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    val c = cells.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    Similarity.scoreTopK(cands, q, c, k, broadcastQueries = false)
+    Ivf.probeKnn(cells.select(col(idCol).as("cand_id"), col("cell")),
+      Ivf.probes(q, index.cents, nProbe), q,
+      Similarity.candVecs(cells, idCol, vecCol), k, broadcastQueries = false)
   }
 }

@@ -32,7 +32,7 @@ object LangProfile {
   /** ' ' + collapsed-lowercase-letters + ' ' (single ' ' if no letters) —
     * the Column form of LangProfiles.normalize. */
   private def normText(c: Column): Column = {
-    val collapsed = trim(regexp_replace(lower(c), "[^\\p{L}]+", " "), " ")
+    val collapsed = trim(regexp_replace(lower(c), "[^\\p{L}]+", " "))
     when(collapsed === "", lit(" "))
       .otherwise(concat(lit(" "), collapsed, lit(" ")))
   }

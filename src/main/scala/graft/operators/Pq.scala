@@ -25,49 +25,19 @@ import graft.functions.Kernels
 object Pq {
 
   /** Per-subspace codebooks: books(b)(code) = centroid of sub-vector
-    * block b. Deterministic: same sample/init/iteration discipline as
-    * [[Ivf.fit]], run independently per block. */
+    * block b. Deterministic: [[Ivf.fit]]'s sample and k-means, run
+    * independently per block. */
   def fit(df: DataFrame, vecCol: String, m: Int = 8, k: Int = 16,
           iters: Int = 10, sampleN: Int = 10000,
           idCol: String = "vec_id"): Array[Array[Array[Float]]] = {
-    val sample: Array[Array[Float]] = df
-      .orderBy(col(idCol)).limit(sampleN).select(vecCol)
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = Ivf.trainingSample(df, vecCol, sampleN, idCol)
     require(sample.nonEmpty, "empty sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     require(sample.length >= k, s"sample ${sample.length} < k $k")
     val sub = dim / m
-    Array.tabulate(m) { b =>
-      val block = sample.map(v => java.util.Arrays.copyOfRange(v, b * sub, (b + 1) * sub))
-      var cents = Array.tabulate(k)(i =>
-        block((i.toLong * block.length / k).toInt).clone())
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(k)(new Array[Double](sub))
-        val counts = new Array[Int](k)
-        var s = 0
-        while (s < block.length) {
-          val c = Ivf.nearestIdx(block(s), cents)
-          var d = 0
-          while (d < sub) { sums(c)(d) += block(s)(d); d += 1 }
-          counts(c) += 1
-          s += 1
-        }
-        var c = 0
-        while (c < k) {
-          if (counts(c) > 0) {
-            val nc = new Array[Float](sub)
-            var d = 0
-            while (d < sub) { nc(d) = (sums(c)(d) / counts(c)).toFloat; d += 1 }
-            cents(c) = nc
-          }
-          c += 1
-        }
-        it += 1
-      }
-      cents
-    }
+    Array.tabulate(m)(b => Ivf.lloyd(
+      sample.map(v => java.util.Arrays.copyOfRange(v, b * sub, (b + 1) * sub)), k, iters))
   }
 
   /** Encode a vector: per block, index of the L2-nearest codebook entry. */
@@ -127,11 +97,20 @@ object Pq {
   def lutCol(v: Column, books: Array[Array[Array[Float]]]): Column = Kernels.pqLut(books)(v)
   def adcCol(codes: Column, lutC: Column): Column = Kernels.PqAdc(codes, lutC)
 
-  /** PQ-ADC ANN: candidates = topC per query by ADC over the compressed
-    * codes (the memory-bound scan — floats never join it), exact
-    * quantized-cosine re-rank on rehydrated vectors (same scoreTopK tail
-    * as the LSH/IVF family, so results are engine-exact when topC covers
-    * the true top-k). */
+  /** ADC top-C candidate stage of [[adcKnn]] and [[ivfPqKnn]]: of each
+    * query's non-self (codes, lut) pairs, the `topC` (query_id, cand_id)
+    * with the smallest ADC distance (ties on cand_id). */
+  private def adcTopC(pairs: DataFrame, k: Int, topC: Int): DataFrame = {
+    require(topC >= k, s"topC $topC < k $k")
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc"), col("cand_id"))
+    pairs.filter(Similarity.notSelf)
+      .withColumn("adc", adcCol(col("codes"), col("lut")))
+      .withColumn("_crank", row_number().over(wAdc))
+      .filter(col("_crank") <= topC)
+      .select(col("query_id"), col("cand_id"))
+  }
+
   /** IVF-PQ — the FAISS IVFPQ composition: the coarse quantizer restricts
     * the search to `nProbe` cells (the IVF side), PQ-ADC ranks the probed
     * cells' compressed codes, exact quantized-cosine re-rank on the topC
@@ -143,41 +122,28 @@ object Pq {
                cents: Array[Array[Float]], books: Array[Array[Array[Float]]],
                nProbe: Int, topC: Int = 128,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val c = Similarity.candVecs(corpus, idCol, vecCol)
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
     val codesCells = c.select(col("cand_id"),
       Ivf.cellCol(col("cv"), cents).as("cell"),
       encodeCol(col("cv"), books).as("codes"))
-    val qProbe = q.select(col("query_id"),
-      explode(Ivf.probeCol(col("qv"), cents, nProbe)).as("cell"),
-      lutCol(col("qv"), books).as("lut"))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("cand_id"))
-    val cands = codesCells.join(broadcast(qProbe), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("adc", adcCol(col("codes"), col("lut")))
-      .withColumn("_crank", row_number().over(wAdc))
-      .filter(col("_crank") <= topC)
-      .select(col("query_id"), col("cand_id"))
-    Similarity.scoreTopK(cands, q, c, k)
+    val qProbe = Ivf.probes(q, cents, nProbe, lutCol(col("qv"), books).as("lut"))
+    Similarity.scoreTopK(
+      adcTopC(codesCells.join(broadcast(qProbe), Seq("cell")), k, topC), q, c, k)
   }
 
+  /** PQ-ADC ANN: candidates = topC per query by ADC over the compressed
+    * codes (the memory-bound scan — floats never join it), exact
+    * quantized-cosine re-rank on rehydrated vectors (same scoreTopK tail
+    * as the LSH/IVF family, so results are engine-exact when topC covers
+    * the true top-k). */
   def adcKnn(corpus: DataFrame, queries: DataFrame, k: Int,
              books: Array[Array[Array[Float]]], topC: Int = 128,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val codes = corpus.select(col(idCol).as("cand_id"),
-      encodeCol(col(vecCol), books).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val c = Similarity.candVecs(corpus, idCol, vecCol)
+    val q = Similarity.queryVecs(queries, idCol, vecCol)
+    val codes = c.select(col("cand_id"), encodeCol(col("cv"), books).as("codes"))
     val luts = q.select(col("query_id"), lutCol(col("qv"), books).as("lut"))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("cand_id"))
-    val cands = codes.crossJoin(broadcast(luts))
-      .filter(col("cand_id") =!= col("query_id")) // family convention
-      .withColumn("adc", adcCol(col("codes"), col("lut")))
-      .withColumn("_crank", row_number().over(wAdc))
-      .filter(col("_crank") <= topC)
-      .select(col("query_id"), col("cand_id"))
-    Similarity.scoreTopK(cands, q,
-      corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")), k)
+    Similarity.scoreTopK(adcTopC(codes.crossJoin(broadcast(luts)), k, topC), q, c, k)
   }
 }

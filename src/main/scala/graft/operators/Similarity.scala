@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,83 +12,57 @@ import graft.functions.GraftFunctions._
   *    set against the corpus; one scan, no corpus shuffle, top-k via
   *    per-query window. Scales linearly with corpus size and is the
   *    correctness reference for the ANN path.
-  *  - `lshKnn`: hyperplane-LSH bucketing (the scale path) — queries only
-  *    score candidates in their own bucket, cutting scored pairs by
-  *    ~2^nBits; recall measured against brute force in the test suite.
+  *  - `lshKnnTables`: multi-table hyperplane-LSH bucketing (the scale
+  *    path) — queries only score candidates sharing a bucket in some table.
   *
-  * Scoring uses the int-quantized cosine (bit-identical across engines and
-  * parallelism — see graft.functions.VectorOps); ties break on vec_id.
+  * Every indexed operator of the family (LSH here, [[Ivf]], [[IvfIndex]],
+  * [[Pq]]) has the same two steps: an id-only (query_id, cand_id)
+  * candidate stage, then the one [[scoreTopK]] re-rank. Scoring uses the
+  * int-quantized cosine (bit-identical across engines and parallelism —
+  * see graft.functions.VectorOps); ties break on vec_id.
   */
 object Similarity {
 
   /** Exact top-k: every (query, candidate) pair scored. `queries` must be
     * small enough to broadcast (it is the probe set, not the corpus). */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id"))
-    c.join(broadcast(q), col("cand_id") =!= col("query_id"))
-      .withColumn("score", qcosine_sim(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        floor(col("score") * 1e6).as("score_x1e6"))
-  }
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(candVecs(corpus, idCol, vecCol)
+      .join(broadcast(queryVecs(queries, idCol, vecCol)), notSelf), k)
 
-  /** LSH-bucketed ANN with multi-probe: each query probes every bucket
-    * within hamming distance `radius` of its own bucket code (the standard
-    * multi-probe trick — recall of several independent tables for the
-    * storage cost of one). Scored candidate fraction ~= sum_{i<=radius}
-    * C(nBits,i) / 2^nBits. The corpus side is never re-shuffled per probe —
-    * only the (tiny) broadcast query set fans out. */
-  def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int, nBits: Int = 6,
-             radius: Int = 1,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(radius >= 0 && radius <= 2,
-      s"multi-probe radius $radius not in [0, 2]; for wider recall use lshKnnTables")
-    val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      vec_lsh_bucket(col(vecCol), lit(nBits)).as("bucket0"))
-    // probes: generate the <=radius bit-flip codes DIRECTLY —
-    // O(nBits^radius) per query row, never an enumerate-and-filter over
-    // the full 2^nBits code space. Distinct by construction (flip index
-    // sets differ) => no duplicate candidate pairs.
-    val b0 = col("bucket0")
-    val masks: Seq[Int] = Seq(0) ++
-      (if (radius >= 1) (0 until nBits).map(1 << _) else Nil) ++
-      (if (radius >= 2)
-        for { i <- 0 until nBits - 1; j <- i + 1 until nBits }
-          yield (1 << i) | (1 << j)
-      else Nil)
-    val probes = array(masks.map(m => b0.bitwiseXOR(lit(m))): _*)
-    val q = qBase.select(col("query_id"), col("qv"), explode(probes).as("bucket"))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      vec_lsh_bucket(col(vecCol), lit(nBits)).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("score", qcosine_sim(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        floor(col("score") * 1e6).as("score_x1e6"))
-  }
+  /** The query side of every operator: (query_id, qv). */
+  private[operators] def queryVecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
 
-  /** Shared candidate-scoring tail for the indexed ANN paths (multi-table
-    * LSH and IVF): given a deduped (query_id, cand_id) candidate set,
-    * rehydrate both vectors by id, score with the quantized cosine, and
-    * keep the top-k per query (ties break on cand_id). One definition so
-    * tie-breaking / score scaling / self-match rules cannot drift between
-    * index types. */
+  /** The corpus side of every operator: (cand_id, cv). */
+  private[operators] def candVecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
+
+  /** The family's self-match rule: a query never returns itself. */
+  private[operators] val notSelf: Column = col("cand_id") =!= col("query_id")
+
+  /** The id-only candidate stage of an index join: non-self pairs only. */
+  private[operators] def candPairs(joined: DataFrame): DataFrame =
+    joined.filter(notSelf).select("query_id", "cand_id")
+
+  /** Shared candidate-scoring tail for the indexed ANN paths: given a
+    * deduped (query_id, cand_id) candidate set, rehydrate both vectors by
+    * id, score with the quantized cosine, and keep the top-k per query
+    * (ties break on cand_id). One definition so tie-breaking / score
+    * scaling / self-match rules cannot drift between index types. */
   private[operators] def scoreTopK(cands: DataFrame, q: DataFrame, c: DataFrame,
-                                   k: Int, broadcastQueries: Boolean = true): DataFrame = {
+                                   k: Int, broadcastQueries: Boolean = true): DataFrame =
+    rankTopK(cands
+      .join(if (broadcastQueries) broadcast(q) else q, "query_id")
+      .join(c, "cand_id"), k)
+
+  /** Score (qv, cv) pairs, rank per query and keep ranks <= k: output
+    * (query_id, rank, cand_id, score_x1e6). */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
+    require(k >= 1, s"k $k < 1")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("cand_id"))
-    cands
-      .join(if (broadcastQueries) broadcast(q) else q, "query_id")
-      .join(c, "cand_id")
+    pairs
       .withColumn("score", qcosine_sim(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -106,17 +80,12 @@ object Similarity {
   def lshKnnTables(corpus: DataFrame, queries: DataFrame, k: Int,
                    nBits: Int = 6, nTables: Int = 24,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cB = c.select(col("cand_id"),
-      posexplode(vec_lsh_buckets(col("cv"), lit(nBits), lit(nTables)))
-        .as(Seq("table", "bucket")))
-    val qB = q.select(col("query_id"),
-      posexplode(vec_lsh_buckets(col("qv"), lit(nBits), lit(nTables)))
-        .as(Seq("table", "bucket")))
-    val cands = cB.join(broadcast(qB), Seq("table", "bucket"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id").distinct()
+    val c = candVecs(corpus, idCol, vecCol)
+    val q = queryVecs(queries, idCol, vecCol)
+    def buckets(df: DataFrame, id: String, vec: String): DataFrame = df.select(col(id),
+      posexplode(vec_lsh_buckets(col(vec), lit(nBits), lit(nTables))).as(Seq("table", "bucket")))
+    val cands = candPairs(buckets(c, "cand_id", "cv")
+      .join(broadcast(buckets(q, "query_id", "qv")), Seq("table", "bucket"))).distinct()
     scoreTopK(cands, q, c, k)
   }
 }

@@ -658,22 +658,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH ANN recall vs brute force is usable and never scores cross-bucket") {
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val queries = e.filter($"vec_id" < 20)
-    val brute = Similarity.bruteForceKnn(e, queries, k = 10)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().groupBy(_._1)
-    val lsh = Similarity.lshKnn(e, queries, k = 10, nBits = 4)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().groupBy(_._1)
-    val recalls = brute.keys.toSeq.sorted.map { qid =>
-      val b = brute(qid).map(_._2).toSet
-      val l = lsh.getOrElse(qid, Array.empty[(Long, Long)]).map(_._2).toSet
-      b.intersect(l).size.toDouble / b.size
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.3, s"mean recall@10 = $mean") // 4-bit LSH, 1/16 of pairs scored
-  }
-
   test("PQ: compressed ADC top-k == brute force; deterministic; codegen-portable") {
     val queries = embAug.filter($"vec_id" < 8)
     val books = Pq.fit(embAug, "embedding", m = 8, k = 16)
@@ -744,6 +728,44 @@ class PipelineOpsSpec extends AnyFunSuite {
       books, nProbe = 10, topC = 128)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(again == ivfpq)
+  }
+
+  test("PQ with one block trains the IVF quantizer: one shared k-means") {
+    val books = Pq.fit(embAug, "embedding", m = 1, k = 16)
+    val cents = Ivf.fit(embAug, "embedding", nList = 16)
+    assert(books.length == 1 && books(0).length == cents.length)
+    assert(books(0).zip(cents).forall { case (a, b) => a.sameElements(b) })
+  }
+
+  test("ANN operators reject k < 1, nProbe < 1 and topC < k") {
+    val queries = embAug.filter($"vec_id" < 8)
+    val dir = java.nio.file.Files.createTempDirectory("ivfidx_args").toString
+    val idx = IvfIndex.write(embAug, dir, nList = 8)
+    val books = Pq.fit(embAug, "embedding", m = 8, k = 16)
+    val bad: Seq[(String, () => Any)] = Seq(
+      "brute k=0" -> (() => Similarity.bruteForceKnn(embAug, queries, k = 0)),
+      "lsh k=0" -> (() => Similarity.lshKnnTables(embAug, queries, k = 0)),
+      "ivf k=0" -> (() => Ivf.ivfKnn(embAug, queries, k = 0, idx.cents, nProbe = 2)),
+      "ivf nProbe=0" -> (() => Ivf.ivfKnn(embAug, queries, k = 5, idx.cents, nProbe = 0)),
+      "ivf bulk k=0" -> (() => Ivf.ivfKnnBulk(embAug, queries, k = 0, idx.cents, nProbe = 2)),
+      "ivf bulk nProbe=-1" ->
+        (() => Ivf.ivfKnnBulk(embAug, queries, k = 5, idx.cents, nProbe = -1)),
+      "index k=0" -> (() => IvfIndex.knn(spark, idx, queries, k = 0, nProbe = 2)),
+      "index nProbe=0" -> (() => IvfIndex.knn(spark, idx, queries, k = 5, nProbe = 0)),
+      "index bulk k=0" -> (() => IvfIndex.knnBulk(spark, idx, queries, k = 0, nProbe = 2)),
+      "index bulk nProbe=0" ->
+        (() => IvfIndex.knnBulk(spark, idx, queries, k = 5, nProbe = 0)),
+      "pq k=0" -> (() => Pq.adcKnn(embAug, queries, k = 0, books)),
+      "pq topC<k" -> (() => Pq.adcKnn(embAug, queries, k = 5, books, topC = 3)),
+      "ivfpq k=0" ->
+        (() => Pq.ivfPqKnn(embAug, queries, k = 0, idx.cents, books, nProbe = 2)),
+      "ivfpq nProbe=0" ->
+        (() => Pq.ivfPqKnn(embAug, queries, k = 5, idx.cents, books, nProbe = 0)),
+      "ivfpq topC<k" -> (() =>
+        Pq.ivfPqKnn(embAug, queries, k = 5, idx.cents, books, nProbe = 2, topC = 3)))
+    bad.foreach { case (name, run) =>
+      withClue(name) { intercept[IllegalArgumentException](run()) }
+    }
   }
 
   test("componentsIncremental == full recompute over the union edge set") {
