@@ -188,10 +188,13 @@ object ClipGen {
 
   private def bucketCol = pmod(crc32(col("clip_id").cast("string")), lit(NumBuckets))
 
+  /** Where [[ensure]] keeps each scale's clips + updates by default. */
+  val defaultRoot: String = FixtureDirs.dataRoot.resolve("clips").toString
+
   /** Generate (or reuse cached) clips + updates tables for `sfDir`.
     * Returns (clipsPath, updatesPath). */
   def ensure(spark: SparkSession, sfDir: String,
-             root: String = "/root/repo/data/clips"): (String, String) = {
+             root: String = defaultRoot): (String, String) = {
     val name = Paths.get(sfDir).getFileName.toString
     val dir = Paths.get(root, name)
     val clipsPath = dir.resolve("clips").toString

@@ -21,6 +21,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   */
 object FixtureDirs {
 
+  /** The one root of every generated fixture (clips, updates, media
+    * tables, the IVF index): `data/` under the working directory, the
+    * repo root under sbt, so each checkout reads and writes its own. */
+  val dataRoot: Path = Paths.get("data").toAbsolutePath
+
   /** Generate-once with atomic publish. `write` receives a temp path and
     * must produce the complete directory there. Returns the target path.
     * A generator that CRASHES mid-write leaves an orphan `.tmp-*` dir;

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * read the same directory.
   *
   * Layout: `<root>/<sf>/<prefix>-v<version>-n<rows>`, `root` defaulting to
-  * `data/<dir>` under the working directory (the repo root under sbt). The
+  * `<dir>` under [[FixtureDirs.dataRoot]]. The
   * directory name encodes the generation key (version and row count), so
   * existence is validity: there is no marker file, and
   * [[FixtureDirs.ensureAtomic]] publishes each table with one atomic rename,
@@ -25,7 +25,7 @@ abstract class FixtureTable(prefix: String, dir: String, version: Int,
   /** The table's rows for indices `0 until n`. */
   def rows(spark: SparkSession, n: Long): DataFrame
 
-  val defaultRoot: String = Paths.get("data", dir).toAbsolutePath.toString
+  val defaultRoot: String = FixtureDirs.dataRoot.resolve(dir).toString
 
   private def rowCount(sfDir: String): Long =
     math.max(minRows, ClipGen.clipCountFor(sfDir) / clipsPerRow)

@@ -7,7 +7,7 @@ import graft.image.ImageCodec
 
 /** Deterministic image table — the image-modality slice of the multimodal
   * corpus, with REAL uncompressed PPM payloads (graft.image.ImageCodec).
-  * Generated per scale factor under /root/repo/data/images/<sf>/ so the
+  * Generated per scale factor under data/images/<sf>/ so the
   * DuckDB oracle reads the SAME parquet the engine reads, and ground
   * truth is the id-arithmetic planting rule (the c14/c15/c16 discipline):
   *

@@ -8,7 +8,7 @@ import graft.image.Y4mCodec
 /** Deterministic video table — the video-modality slice of the multimodal
   * corpus, with REAL uncompressed YUV4MPEG2 payloads (graft.image
   * .Y4mCodec). Same discipline as ImageGen: generated per scale factor
-  * under /root/repo/data/videos/<sf>/, the DuckDB oracle reads the SAME
+  * under data/videos/<sf>/, the DuckDB oracle reads the SAME
   * parquet, and ground truth is the id-arithmetic planting rule:
   *
   *   idx % 20 == 3  -> STATIC     (all frames identical; frame-mean

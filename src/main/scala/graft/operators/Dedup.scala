@@ -126,13 +126,13 @@ object Dedup {
     * filters, and has the same per-bucket pair semantics; group sizes
     * carry the bucket key's skew bound.
     *
-    * `salts` > 1 engages hot-bucket CELL pairing (the Salting
-    * discipline): each row (salt s = hash(id) mod S) is replicated into
+    * `salts` > 1 engages hot-bucket CELL pairing (salting the
+    * bucket key): each row (salt s = hash(id) mod S) is replicated into
     * the S cells {(s, j): j >= s} ∪ {(i, s): i < s}, the group key gains
     * the cell (a, b), and within a cell x comes from salt a and y from
     * salt b (triangular by id when a == b). Every unordered pair lands in
     * EXACTLY one cell — (min(sa, sb), max(sa, sb)) — so the pair set is
-    * IDENTICAL to the unsalted plan (SaltingSpec, AudioSkewSpec) while a
+    * IDENTICAL to the unsalted plan (AudioSkewSpec) while a
     * hot group of m rows spreads over S(S+1)/2 tasks of ~2m/S rows each,
     * at S× the (tiny) bucket shuffle volume; the payload never rides it. */
   private def bucketPairs(rows: DataFrame, keys: Seq[String], fields: Seq[String],
@@ -308,49 +308,6 @@ object Dedup {
       .filter(col("_rn") === 1)
       .select(col(labelCol), col("id").as("keep_id"))
     withQ.join(best, labelCol).select(col("id"), col("keep_id"))
-  }
-
-  /** INCREMENTAL cluster maintenance — the companion of the incremental
-    * near-dup operators: fold a batch of NEW pairs into an existing
-    * (id, canonical_id) labeling without re-running components over the
-    * full (corpus-sized) edge set. New edges are projected onto the
-    * QUOTIENT graph — endpoints replaced by their current labels,
-    * unlabeled ids standing for themselves — components runs on that
-    * graph (sized by the TOUCHED clusters plus the delta, never the
-    * corpus), and the relabeling composes back over the old labeling
-    * with one label-keyed join. Because every old canonical is its
-    * cluster's minimum and quotient components takes the min of mins,
-    * the result equals [[components]] over the UNION edge set
-    * (spec-pinned equality on merge/new/join-existing topologies). */
-  def componentsIncremental(labels: DataFrame, newPairs: DataFrame,
-      idA: String = "id_a", idB: String = "id_b",
-      maxIters: Int = 25): DataFrame = {
-    def lab(side: String) = labels
-      .select(col("id").as(side), col("canonical_id").as(side + "_l"))
-    val quotientPairs = newPairs
-      .join(lab(idA), Seq(idA), "left")
-      .join(lab(idB), Seq(idB), "left")
-      .select(coalesce(col(idA + "_l"), col(idA)).as("id_a"),
-        coalesce(col(idB + "_l"), col(idB)).as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-      .localCheckpoint(true) // referenced by the emptiness probe AND components
-    // all new pairs internal to existing clusters: nothing to relabel
-    if (quotientPairs.isEmpty) return labels
-    val q = components(quotientPairs, maxIters = maxIters)
-    val relabeled = labels
-      .join(q.select(col("id").as("canonical_id"),
-        col("canonical_id").as("_newc")), Seq("canonical_id"), "left")
-      .select(col("id"), coalesce(col("_newc"), col("canonical_id")).as("canonical_id"))
-    // ids that first appear in the delta: their quotient node is the id
-    // itself; absent from the quotient result => their own canonical
-    val newIds = newPairs.select(col(idA).as("id"))
-      .unionByName(newPairs.select(col(idB).as("id")))
-      .distinct()
-      .join(labels.select("id"), Seq("id"), "left_anti")
-    val newRows = newIds
-      .join(q, Seq("id"), "left")
-      .select(col("id"), coalesce(col("canonical_id"), col("id")).as("canonical_id"))
-    relabeled.unionByName(newRows)
   }
 
   /** Small-graph bound of [[components]]: a pair graph with at most this

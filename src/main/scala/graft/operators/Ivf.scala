@@ -168,7 +168,7 @@ object Ivf {
     * (corpus-vs-corpus retrieval, bulk embedding joins): broadcasting
     * nProbe× an unbounded query set would OOM every executor. Skew note:
     * a hot cell (over-dense region) concentrates its pairs in one task —
-    * pre-salt the cell key (Salting discipline) or raise nList if a
+    * pre-salt the cell key or raise nList if a
     * corpus is known to be lopsided; AQE skew-join handles moderate skew. */
   def ivfKnnBulk(corpus: DataFrame, queries: DataFrame, k: Int,
                  cents: Array[Array[Float]], nProbe: Int,

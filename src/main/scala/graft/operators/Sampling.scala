@@ -191,7 +191,7 @@ object Sampling {
   /** Skew-safe frequency capping: identical output to [[capPerGroup]],
     * built for corpora where one group holds a huge share of the rows (a
     * single window partition would serialize it onto one task). Two-phase
-    * Salting discipline:
+    * salting:
     *
     *   1. cap within (group, salt) where salt = hash(id) mod `salts` —
     *      spreads a hot group over `salts` parallel window partitions.

@@ -41,22 +41,6 @@ object Windows {
       .select(unix_millis(col("session_window.start")).as("w_start_ms"),
         col("codec"), col("n_clips"))
 
-  /** Tumbling-window DISTINCT-cardinality sketch: per 10 s window, the
-    * HLL register file over transcript tokens ("how much distinct
-    * vocabulary arrived this window"). The streaming shape of the sketch
-    * is the point: state per open window is the FIXED 4 KB register file
-    * — an exact windowed count-distinct would hold every token seen in
-    * state, unbounded in corpus richness. The registers are a pure set
-    * function, so stream == batch bit-for-bit (StreamingParitySpec) and
-    * late/replayed rows are idempotent register maxes. */
-  def tumblingVocabSketch(clips: DataFrame): DataFrame =
-    clips
-      .select(col("event_time"),
-        explode(split(trim(col("transcript")), "\\s+")).as("tok"))
-      .groupBy(window(col("event_time"), "10 seconds"))
-      .agg(graft.functions.GraftFunctions.hll_registers(col("tok")).as("regs"))
-      .select(unix_millis(col("window.start")).as("w_start_ms"), col("regs"))
-
   /** Golden-row aggregation for the extraction pipeline: per (window,
     * codec) the extracted values in deterministic (clip_id) order — the
     * reference's "single list of combined results ... in (page, block) key

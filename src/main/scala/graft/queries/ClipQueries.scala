@@ -12,19 +12,20 @@ import graft.operators.{Extraction, ExtractionSpec, FieldSpec, Windows}
   * in graft.streaming and are verified by the golden/stream-parity suites.
   *
   * Oracle note: the clips table is generated (deterministically) under
-  * /root/repo/data/clips/<sf>/clips as parquet, so the DuckDB oracle reads
-  * it via read_parquet on the same files the Spark side reads. Window math
-  * in the oracles is integer-millisecond (`epoch_ms`) to avoid any
-  * double-precision drift vs Spark's microsecond-integer windows.
+  * `data/clips/<sf>/clips` as parquet ([[ClipGen.ensure]]), so the DuckDB
+  * oracle reads it via read_parquet on the same files the Spark side
+  * reads. Window math in the oracles is integer-millisecond (`epoch_ms`)
+  * to avoid any double-precision drift vs Spark's microsecond-integer
+  * windows.
   */
 object ClipQueries {
 
   /** Driver verifies at sf0.01 — oracle paths are pinned to that scale. */
   val OracleSf = "sf0.01"
   def clipsGlob(sf: String = OracleSf): String =
-    s"/root/repo/data/clips/$sf/clips/*/*/*.parquet"
+    s"${ClipGen.defaultRoot}/$sf/clips/*/*/*.parquet"
   def updatesGlob(sf: String = OracleSf): String =
-    s"/root/repo/data/clips/$sf/updates/*.parquet"
+    s"${ClipGen.defaultRoot}/$sf/updates/*.parquet"
 
   /** One encoded "silence" byte per G.711 codec — the codec's own
     * encode(0) (decodes to |sample| <= 8 of int16 scale, far below any

@@ -495,7 +495,7 @@ object DocQueries {
     val target =
       s"ivf-v${graft.operators.IvfIndex.Version}-n$n-l32"
     val out = graft.fixtures.FixtureDirs.ensureAtomic(
-      Paths.get("/root/repo/data/ivf", name), target) { tmp =>
+      graft.fixtures.FixtureDirs.dataRoot.resolve("ivf").resolve(name), target) { tmp =>
       graft.operators.IvfIndex.write(e, tmp, nList = 32)
     }
     graft.operators.IvfIndex.open(s, out)

@@ -99,23 +99,6 @@ object ClipStreamJob {
       .drop("_w")
   }
 
-  /** SEGMENT-ON-INGEST: explode each clip into its voiced spans (the c18
-    * VAD operator as a stream stage — silence stripping at the door, so
-    * nothing downstream pays for silent audio). Stateless narrow map +
-    * generate: `pcm_segments` runs in the scan stage like every codec
-    * expression, explode emits one row per voiced span — no state, no
-    * shuffle, watermark-agnostic, so stream == batch by construction
-    * (StreamingParitySpec pins it). Downstream key: (clip_id,
-    * seg_start_ms). */
-  def segmentSpans(clips: DataFrame, frameMs: Int = 50,
-                   rmsThreshold: Double = 0.03): DataFrame =
-    clips.select(col("clip_id"), col("codec"), col("sr_hz"), col("event_time"),
-        explode(graft.functions.GraftFunctions.pcm_segments(
-          col("bytes"), col("codec"), col("sr_hz"), frameMs, rmsThreshold))
-          .as("seg"))
-      .select(col("clip_id"), col("codec"), col("sr_hz"), col("event_time"),
-        col("seg.seg_start_ms"), col("seg.seg_end_ms"))
-
   /** Stateful stream-stream LEFT OUTER join of the clip stream with the
     * late transcript-update stream (J1 re-expression): equi-join on
     * clip_id, time-bounded so state can be evicted by the watermark.
@@ -243,39 +226,4 @@ object ClipStreamJob {
         ()
       }
       .start()
-
-  /** Outcome of a [[supervise]]d run: how it ended plus the restart
-    * trail (one classified entry per failed attempt). */
-  final case class SuperviseReport(completed: Boolean, attempts: Int,
-      failures: Seq[(Errors.ErrorClass, String)])
-
-  /** SUPERVISED streaming run — the consumer of the error taxonomy (the
-    * reference classifies fetch errors to decide retry-vs-fail;
-    * `errs/errors.go` + the scraper's retry loop): start the query via
-    * `startQuery`, await termination, and on failure classify the live
-    * StreamingQueryException through [[Errors.classify]] — RESTART (same
-    * checkpoint => exactly-once resume, the CrashKillSpec contract) while
-    * the class is retryable and attempts remain; rethrow terminal
-    * classes immediately (an InvalidSpec retried forever is the real
-    * operational bug this exists to prevent). The restart trail is
-    * returned for the metrics/error manifest. */
-  def supervise(startQuery: () => StreamingQuery,
-                maxRestarts: Int = 3): SuperviseReport = {
-    val failures = scala.collection.mutable.ArrayBuffer[(Errors.ErrorClass, String)]()
-    var attempts = 0
-    while (attempts <= maxRestarts) {
-      attempts += 1
-      val q = startQuery()
-      try {
-        q.awaitTermination()
-        return SuperviseReport(completed = true, attempts, failures.toSeq)
-      } catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-          val cls = Errors.classify(e)
-          failures += ((cls, Option(e.getMessage).getOrElse("")))
-          if (!cls.retryable || attempts > maxRestarts) throw e
-      }
-    }
-    SuperviseReport(completed = false, attempts, failures.toSeq)
-  }
 }

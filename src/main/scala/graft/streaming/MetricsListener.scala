@@ -27,9 +27,8 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
 
   /** Error-manifest line on abnormal termination (r6; the errs taxonomy's
-    * manifest hook — classification of the LIVE throwable happens in
-    * Health.check's query_active probe; the event only carries the
-    * rendered message). Plain-JSONL rows with an `event` field; metric
+    * manifest hook — the event carries only the rendered message, not
+    * the throwable). Plain-JSONL rows with an `event` field; metric
     * readers filter on num_input_rows > 0 and never see them. */
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = synchronized {
     e.exception.foreach { msg =>

@@ -41,10 +41,12 @@ object KillSoak {
     * recompile mid-soak would otherwise rewrite class files under a
     * launching child — observed as NoClassDefFoundError on kill attempt
     * 8 of an early run) + the Spark jar dir (sbt runMain executes in a
-    * classloader, so java.class.path alone is not enough). */
+    * classloader, so java.class.path alone is not enough). The snapshot
+    * is of where this code was loaded from: the classes directory, or the
+    * jar a forked `sbt runMain` packs it into. */
   private def childClasspath: String = sys.env.getOrElse("SOAK_CLASSPATH", {
-    val src = Paths.get("/root/repo/target/scala-2.13/classes")
-    val snap = Files.createTempDirectory("soak-classes")
+    val src = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val snap = Files.createTempDirectory("soak-classes").resolve(src.getFileName)
     val s = Files.walk(src)
     try s.forEach { p =>
       val dst = snap.resolve(src.relativize(p))

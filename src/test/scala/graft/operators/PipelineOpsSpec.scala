@@ -550,73 +550,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("Tuning: helper-chosen parameters meet their target recall on the planted fixture") {
-    // analytic S-curves: monotone in the amplification parameter and
-    // consistent with the stated formula at the endpoints
-    assert(Tuning.minhashRecall(1.0, 32, 8) == 1.0)
-    assert(Tuning.minhashRecall(0.7, 32, 16) > Tuning.minhashRecall(0.7, 32, 8))
-    assert(Tuning.hyperplaneRecall(0.9, 4, 16) > Tuning.hyperplaneRecall(0.9, 4, 8))
-
-    // MinHash: chosen bands must clear the target at the threshold and the
-    // next-more-selective divisor must not (the choice is tight)
-    val bands = Tuning.minhashBandsFor(k = 32, threshold = 0.7, targetRecall = 0.95)
-    assert(Tuning.minhashRecall(0.7, 32, bands) >= 0.95)
-    val tighter = (1 until bands).filter(32 % _ == 0)
-    assert(tighter.forall(b => Tuning.minhashRecall(0.7, 32, b) < 0.95),
-      s"bands=$bands not minimal")
-
-    // Hyperplane LSH: chosen tables recover EVERY planted embedding pair
-    // at the d4 threshold (planted cosines ~0.84-0.9; ask for recall at
-    // threshold 0.8 => per-pair candidate prob >= 0.95, and the exact
-    // verify keeps precision)
-    val nTables = Tuning.hyperplaneTablesFor(nBits = 4, threshold = 0.85,
-      targetRecall = 0.97)
-    assert(Tuning.hyperplaneRecall(0.85, 4, nTables) >= 0.97)
-    val pairs = Dedup.embeddingNearDup(embAug, "embedding", "vec_id",
-      threshold = 0.8, nBits = 4, nTables = nTables)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    import graft.functions.GraftFunctions._
-    val fam = embAug.filter($"vec_id" % 10000 < 8)
-    val a = fam.select($"vec_id".as("id_a"), $"embedding".as("va"))
-    val b = fam.select($"vec_id".as("id_b"), $"embedding".as("vb"))
-    val want = a.join(b, $"id_a" < $"id_b")
-      .filter(qcosine_sim($"va", $"vb") >= 0.8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    // amplified OR-recall 0.97/pair on ~30 pairs: tolerate at most one miss
-    assert(want.diff(pairs).size <= math.max(1, (want.size * 0.03).toInt),
-      s"missed ${want.diff(pairs).size} of ${want.size} planted pairs with $nTables tables")
-
-    // IVF: empirically chosen nProbe recovers the true top-1 for >= 95%
-    // of the sampled queries when actually probing
-    val cents = Ivf.fit(embAug, "embedding", nList = 32)
-    val corpus = embAug.orderBy("vec_id").limit(400)
-      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    val queries = embAug.filter($"vec_id" < 8)
-      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    val nProbe = Tuning.ivfProbesFor(corpus, queries, cents, targetRecall = 0.95)
-    assert(nProbe >= 1 && nProbe <= 32)
-    val hits = queries.count { q =>
-      val probed = Ivf.nearestIdxs(q, cents, nProbe).toSet
-      var best: Array[Float] = null; var bestC = -2.0
-      corpus.foreach { v =>
-        if (!java.util.Arrays.equals(v, q)) {
-          val c = {
-            var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-            while (i < v.length) {
-              dot += q(i).toDouble * v(i); na += q(i).toDouble * q(i)
-              nb += v(i).toDouble * v(i); i += 1
-            }
-            if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
-          }
-          if (c > bestC) { bestC = c; best = v }
-        }
-      }
-      probed.contains(Ivf.nearestIdx(best, cents))
-    }
-    assert(hits >= math.ceil(queries.length * 0.95).toInt,
-      s"nProbe=$nProbe recovered only $hits/${queries.length} true top-1 cells")
-  }
-
   test("NearestCentroid(s) codegen is cluster-portable: serialization-" +
       "roundtripped expressions evaluate via GENERATED code (executor JVM sim)") {
     import org.apache.spark.sql.catalyst.expressions.BoundReference
@@ -766,42 +699,5 @@ class PipelineOpsSpec extends AnyFunSuite {
     bad.foreach { case (name, run) =>
       withClue(name) { intercept[IllegalArgumentException](run()) }
     }
-  }
-
-  test("componentsIncremental == full recompute over the union edge set") {
-    def pairsOf(ps: Seq[(Long, Long)]) = ps.toDF("id_a", "id_b")
-    // old world: {1,2,3} (canon 1), {10,11} (canon 10), {20,21} (canon 20)
-    val oldPairs = pairsOf(Seq((1L,2L), (2L,3L), (10L,11L), (20L,21L)))
-    val labels = Dedup.components(oldPairs)
-    // delta exercises every topology at once:
-    //  - merge two existing clusters          (3,10)
-    //  - brand-new cluster of unseen ids      (100,101)
-    //  - new id joins an existing cluster     (21,200)
-    //  - internal edge (no-op)                (1,3)
-    val delta = pairsOf(Seq((3L,10L), (100L,101L), (21L,200L), (1L,3L)))
-    val inc = Dedup.componentsIncremental(labels, delta)
-      .as[(Long, Long)].collect().toMap
-    val full = Dedup.components(oldPairs.unionByName(delta))
-      .as[(Long, Long)].collect().toMap
-    assert(inc == full, s"inc=$inc full=$full")
-    assert(inc(11L) == 1L && inc(200L) == 20L && inc(100L) == 100L)
-    // no-op delta (all edges internal) returns the labeling unchanged
-    val noop = Dedup.componentsIncremental(labels, pairsOf(Seq((1L,2L))))
-      .as[(Long, Long)].collect().toMap
-    assert(noop == labels.as[(Long, Long)].collect().toMap)
-    // determinism under repartitioning
-    val again = Dedup.componentsIncremental(labels, delta.repartition(5))
-      .as[(Long, Long)].collect().toMap
-    assert(again == inc)
-    // and the real near-dup graph: split d2's pair set in half, fold the
-    // second half incrementally — equal to the full labeling
-    val allPairs = Dedup.nearDupJaccard(docsAug, "text", "doc_id", threshold = 0.5)
-      .select("id_a", "id_b").localCheckpoint(true)
-    val half = allPairs.filter(xxhash64(col("id_a"), col("id_b")) % 2 === 0)
-    val rest = allPairs.exceptAll(half)
-    val incReal = Dedup.componentsIncremental(
-      Dedup.components(half), rest).as[(Long, Long)].collect().toMap
-    val fullReal = Dedup.components(allPairs).as[(Long, Long)].collect().toMap
-    assert(incReal == fullReal)
   }
 }

@@ -129,66 +129,6 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(got == batchExpected)
   }
 
-  test("segment-on-ingest: stream == batch, organic corpus one span per clip") {
-    // The VAD explode must be a pure stateless generate: segment rows
-    // sunk through the exactly-once table equal the batch plan's rows
-    // bit-for-bit, at a smaller-than-input trigger so multiple
-    // micro-batches are exercised.
-    val batchExpected = ClipStreamJob.segmentSpans(spark.read.parquet(inputDir))
-      .select("clip_id", "codec", "sr_hz", "seg_start_ms", "seg_end_ms")
-      .orderBy("clip_id", "seg_start_ms")
-      .collect().map(_.toSeq).toSeq
-    // fixture sanity: organic clips are voiced end-to-end => exactly one
-    // span per clip, starting at 0
-    val nClips = spark.read.parquet(inputDir).count()
-    assert(batchExpected.size == nClips)
-    assert(batchExpected.forall(_(3) == 0))
-
-    val tableDir = Files.createTempDirectory("sink-seg").toString
-    val ckpt = Files.createTempDirectory("ckpt-seg").toString
-    val table = ClipTable(tableDir, Seq("clip_id", "seg_start_ms"), numBuckets = 4)
-    val clips = ClipStreamJob.readClipStream(spark, inputDir, maxFilesPerTrigger = 2)
-    val q = ClipStreamJob.runToTable(
-      ClipStreamJob.segmentSpans(clips), table, ckpt,
-      Trigger.AvailableNow(), outputMode = "append")
-    q.awaitTermination(120000)
-    val got = table.read(spark)
-      .select("clip_id", "codec", "sr_hz", "seg_start_ms", "seg_end_ms")
-      .orderBy("clip_id", "seg_start_ms")
-      .collect().map(_.toSeq).toSeq
-    assert(got == batchExpected)
-  }
-
-  test("windowed HLL sketch: stream register files == batch, fixed state per window") {
-    // The sketch aggregate under incremental streaming state: per-window
-    // register files built across micro-batches (partial buffers merged
-    // through the state store) must equal the batch plan's bit-for-bit —
-    // the register max-merge is exactly what replay/late updates exercise.
-    val sp = spark
-    import sp.implicits._
-    val batchExpected = Windows.tumblingVocabSketch(spark.read.parquet(inputDir))
-      .orderBy("w_start_ms")
-      .as[(Long, Seq[Int])].collect().toSeq
-    assert(batchExpected.nonEmpty && batchExpected.forall(_._2.length == 4096))
-
-    val tableDir = Files.createTempDirectory("sink-hll").toString
-    val ckpt = Files.createTempDirectory("ckpt-hll").toString
-    val table = ClipTable(tableDir, Seq("w_start_ms"), numBuckets = 2)
-    val clips = ClipStreamJob.readClipStream(spark, inputDir, maxFilesPerTrigger = 1)
-    val q = ClipStreamJob.runToTable(
-      Windows.tumblingVocabSketch(clips.withWatermark("event_time", "30 seconds")),
-      table, ckpt, Trigger.AvailableNow(), outputMode = "update")
-    q.awaitTermination(120000)
-    val got = table.read(spark).select("w_start_ms", "regs")
-      .orderBy("w_start_ms")
-      .as[(Long, Seq[Int])].collect().toSeq
-    assert(got == batchExpected)
-    // and the estimates are sane: every window saw a few hundred distinct
-    // tokens, far below the corpus token count
-    val ests = got.map(r => graft.functions.HllSketch.estimate(r._2.toArray))
-    assert(ests.forall(e => e > 10 && e < 100000), ests.take(3).toString)
-  }
-
   test("windowed extraction golden rows: stream == batch, values ordered by clip_id") {
     val spec = graft.queries.ClipQueries.cardsSpec
     val extract = (df: org.apache.spark.sql.DataFrame) =>
