@@ -9,6 +9,9 @@ Usage:
 `<dirA>/<query>_<suffixA>.txt` with `<dirB>/<query>_<suffixB>.txt` and
 masks what differs between two runs of the same plan:
   - expression ids `#<n>` and exchange counters `plan_id=<n>`;
+  - lambda variable names (`lambda x_58#`, `lambda y_59#` become
+    `lambda x_#`, `lambda y_#`): Spark numbers them from one JVM-wide
+    counter, so they depend on which plans the JVM built before;
   - RDD ids and source line numbers of checkpointed RDDs
     (`MapPartitionsRDD[<n>] at localCheckpoint at <File>.scala:<n>`); the
     line moves with any edit of that file.
@@ -24,6 +27,7 @@ import sys
 
 MASKS = [(re.compile(r"#[0-9]+"), "#"),
          (re.compile(r"plan_id=[0-9]+"), "plan_id="),
+         (re.compile(r"(lambda [a-z]+_)[0-9]+"), r"\1"),
          (re.compile(r"RDD\[[0-9]+\]"), "RDD[]"),
          (re.compile(r"\.scala:[0-9]+"), ".scala:")]
 

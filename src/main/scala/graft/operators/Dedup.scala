@@ -174,17 +174,21 @@ object Dedup {
     * suffixed `_d`. Corpus-corpus pairs cannot form, while corpus-delta
     * AND delta-delta pairs both come out of the one join (a delta-delta
     * pair forms in both join orders: normalized + distinct). `keep`
-    * filters the joined rows; `extra` adds output columns. */
+    * filters the joined rows; `extra` adds output columns. `distinct =
+    * false` leaves out the final distinct (and its shuffle): a pair then
+    * comes out once per key it shares, for a caller that dedupes the
+    * collected pairs itself. */
   private def deltaPairs(corpusKeys: DataFrame, deltaKeys: DataFrame,
       probeKeys: DataFrame, on: Seq[String], keep: Column = lit(true),
-      extra: Seq[Column] = Nil): DataFrame =
-    corpusKeys.unionByName(deltaKeys)
+      extra: Seq[Column] = Nil, distinct: Boolean = true): DataFrame = {
+    val pairs = corpusKeys.unionByName(deltaKeys)
       .join(broadcast(probeKeys.select(probeKeys.columns.toSeq.map(c =>
         if (on.contains(c)) col(c) else col(c).as(c + "_d")): _*)), on)
       .filter(col("id") =!= col("id_d") && keep)
       .select(Seq(least(col("id"), col("id_d")).as("id_a"),
         greatest(col("id"), col("id_d")).as("id_b")) ++ extra: _*)
-      .distinct()
+    if (distinct) pairs.distinct() else pairs
+  }
 
   /** The verify stage of every near-dup operator: hydrate each candidate
     * pair (id_a, id_b) with its `payload` rows (id plus payload columns
@@ -736,7 +740,7 @@ object Dedup {
     val fp = shiftBuckets(audioFingerprints(clips, idCol, bytesCol, codecCol, srCol),
       maxTrim, tolHz, 0, 1)
     val pairs = bucketPairs(fp, Seq("sr", "f1", "nb", "f2b"), Seq("id", "n", "f2"), salts,
-        (x, y) => abs(x("n") - y("n")) <= maxTrim && abs(x("f2") - y("f2")) <= tolHz)
+        (x, y) => shiftRule(maxTrim, tolHz)(x(_), y(_)))
       .select("id_a", "id_b").distinct()
     corrVerified(pairs, clips.select(col(idCol).as("id"),
       col(bytesCol).as("bytes"), col(codecCol).as("codec")), minCorr)
@@ -760,6 +764,22 @@ object Dedup {
         .as("k"))
       .select("id", "sr", "k.*")
   }
+
+  /** The in-key filter of the shift-robust candidates: |Δn| <= maxTrim and
+    * |Δf2| <= tolHz between the fingerprint columns `x(c)` and `y(c)`. */
+  private def shiftRule(maxTrim: Int, tolHz: Int)(x: String => Column,
+      y: String => Column): Column =
+    abs(x("n") - y("n")) <= maxTrim && abs(x("f2") - y("f2")) <= tolHz
+
+  /** Whether two fingerprints (fields sr, n, f1, f2 of `x(c)` and `y(c)`)
+    * form a candidate pair of [[audioCandidatesAgainst]]: same (sr, f1) and
+    * [[shiftRule]]. The bucket widths exceed the tolerances, so a pair
+    * within both tolerances always shares a probed (nb, f2b) key: this is
+    * the candidate condition itself, for a caller that re-checks it on
+    * other versions of the same rows. */
+  private[graft] def audioCandidateRule(x: String => Column, y: String => Column,
+      maxTrim: Int = 160, tolHz: Int = 16): Column =
+    x("sr") === y("sr") && x("f1") === y("f1") && shiftRule(maxTrim, tolHz)(x, y)
 
   /** The verify score of every audio near-dup pair hydrated with (bytes,
     * codec): normalized cross-correlation aligned at the length
@@ -835,13 +855,13 @@ object Dedup {
     * (ADVICE r5, high; pinned by CurationPipelineSpec and AudioDedupSpec).
     * Any pair within (maxTrim, tolHz) therefore shares a key, whether its
     * partner is in the corpus or in the delta, while the corpus side
-    * stays one row per clip. */
+    * stays one row per clip. `distinct = false`: see [[deltaPairs]]. */
   private[graft] def audioCandidatesAgainst(corpusFp: DataFrame, deltaFp: DataFrame,
-      maxTrim: Int = 160, tolHz: Int = 16): DataFrame = {
+      maxTrim: Int = 160, tolHz: Int = 16, distinct: Boolean = true): DataFrame = {
     def keys(fp: DataFrame, offsets: Int*) =
       shiftBuckets(fp.select("id", "sr", "n", "f1", "f2"), maxTrim, tolHz, offsets: _*)
     deltaPairs(keys(corpusFp, 0), keys(deltaFp, 0), keys(deltaFp, -1, 0, 1),
       Seq("sr", "f1", "nb", "f2b"),
-      keep = abs(col("n") - col("n_d")) <= maxTrim && abs(col("f2") - col("f2_d")) <= tolHz)
+      keep = shiftRule(maxTrim, tolHz)(col, c => col(c + "_d")), distinct = distinct)
   }
 }

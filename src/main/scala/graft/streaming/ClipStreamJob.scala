@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -18,6 +20,10 @@ import graft.operators.{Dedup, Windows}
   * and ClipTable.merge replaces the idempotent Mongo upsert (K1/T9).
   */
 object ClipStreamJob {
+
+  /** A candidate row's place in the dedup stage's verify: pair index and
+    * side ("a" for the pair's smaller id). */
+  private case class Slot(_p: Int, _side: String)
 
   /** input_hint schema + generated lineage columns. */
   val clipSchema: StructType = StructType(Seq(
@@ -128,33 +134,48 @@ object ClipStreamJob {
     * sink carries (sr_hz, n_samples, f1, f2) columns written at ingest, so
     * the corpus is never re-decoded.
     *
-    * Each micro-batch runs three batch-sized steps, each ending in a
-    * driver-side collect, instead of one lazy dedup-and-write plan:
+    * AQE runs every exchange and every broadcast of a plan as a job of its
+    * own, so each step keeps to at most one of each; a micro-batch runs at
+    * most six jobs:
     *
-    *  1. FINGERPRINT: the batch is fingerprinted once and checkpointed
-    *     eagerly (one job, which also runs the stateful upstream exactly
-    *     once); its clip_ids are collected.
-    *  2. CANDIDATES: [[graft.operators.Dedup.audioCandidatesAgainst]]
-    *     pairs the batch's fingerprints against the sink's fingerprint
-    *     columns (no payload bytes) and the pair ids are collected. An
-    *     empty table reads schema-less, so the first batch pairs against
-    *     the empty slice of itself — the same path, no emptiness job.
-    *  3. VERIFY (only when there are pairs): the sink is read back
-    *     filtered to the corpus-side candidate ids — a predicate on the MOR
-    *     key, which Catalyst pushes below the latest-wins window, so only
-    *     candidate rows' bytes are shuffled — and joined with the batch's
-    *     candidate rows through the Direct verify (nothing persisted).
+    *  1. FINGERPRINT (1 job): the batch is fingerprinted and checkpointed
+    *     eagerly, which also runs the stateful upstream exactly once. Its
+    *     (clip_id, sr_hz, n_samples, f1, f2) rows reach the driver through
+    *     an Observation on that same job.
+    *  2. CANDIDATES (2 jobs: the probe broadcast and the collect):
+    *     [[graft.operators.Dedup.audioCandidatesAgainst]] pairs the sink's
+    *     row versions — fingerprint columns only, read with no latest-wins
+    *     window and so no shuffle — and the batch rows, as a driver-local
+    *     relation, against the broadcast bucketed batch. Sink rows whose id
+    *     is in this batch are left out (the replay guard). The pairs are
+    *     collected and deduped on the driver; there are at most batch rows
+    *     x bucket fan-out of them. An empty sink takes the same path with
+    *     the batch rows alone.
+    *  3. VERIFY (2 jobs: one shuffle and the collect; only when there are
+    *     pairs): each candidate row — every version of a stored id, and the
+    *     batch rows — is read once, tagged with the (pair, side) slots it
+    *     fills, and shuffled once by pair. Inside that partitioning the
+    *     stored versions resolve latest-batch-wins per pair
+    *     ([[ClipTable.morDedup]]), each pair is re-checked against the
+    *     candidate rule on the RESOLVED fingerprints, and the pairs that
+    *     pass are scored by aligned correlation. Only candidate rows' bytes
+    *     are shuffled; no bytes reach the driver.
+    *  4. MERGE (1 job): the surviving batch rows are merged.
     *
-    * Every collected set is bounded by the batch: candidate pairs are at
-    * most batch rows x bucket fan-out. FIRST ARRIVAL WINS: the corpus end
-    * of a pair never drops (it was first); a batch-batch pair drops its
-    * larger id. MOR deltas are folded by [[ClipTable.compactIfNeeded]]
-    * after each merge, as in [[runToTable]].
+    * The raw-version scan is exact: a stored key's resolved row is one of
+    * its versions, so every pair the resolved table forms is found, and
+    * the re-check drops every pair that only a superseded version formed.
+    * The verified pairs, and so the drops, are those of pairing against the
+    * resolved table.
+    *
+    * FIRST ARRIVAL WINS: the corpus end of a pair never drops (it was
+    * first); a batch-batch pair drops its larger id. MOR deltas are folded
+    * by [[ClipTable.compactIfNeeded]] after each merge, as in
+    * [[runToTable]].
     *
     * Replay-safe: a replayed batch re-checks against the table, its
     * survivors re-merge idempotently (same keys, same batch id), and rows
-    * it already merged are NOT self-matched (the batch's ids are excluded
-    * from the corpus side). */
+    * it already merged are NOT self-matched (the replay guard). */
   def runDedupedToTable(df: DataFrame, table: ClipTable, checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
                         minCorr: Double = 0.8): StreamingQuery =
@@ -165,33 +186,57 @@ object ClipStreamJob {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val spark = batch0.sparkSession
         import spark.implicits._
+        val fpCols = Seq("clip_id", "sr_hz", "n_samples", "f1", "f2")
+        val fpSeen = Observation()
         // the whole row rides as the fingerprint's id; eager, so every
         // reader below (and the stateful upstream) sees one materialization
         val batch = Dedup.audioFingerprints(
             batch0.withColumn("_row", struct(col("*"))), idCol = "_row")
           .select(col("id.*"), col("n").as("n_samples"), col("f1"), col("f2"))
+          .observe(fpSeen, collect_list(struct(fpCols.map(col): _*)).as("rows"))
           .localCheckpoint(true)
-        val batchIds = batch.select("clip_id").as[String].collect().toSet
-        val existing = table.read(spark)
-        // replay guard: rows of THIS batch already in the table must not
-        // self-match — exclude them from the corpus side (a local relation:
-        // broadcasting it starts no job)
-        val corpus =
-          if (existing.columns.isEmpty) batch.limit(0)
-          else existing.join(broadcast(batchIds.toSeq.toDF("clip_id")), Seq("clip_id"), "left_anti")
+        val fpRows = fpSeen.get("rows").asInstanceOf[Seq[Row]]
+        val batchIds = fpRows.map(_.getString(0)).toSet
         def fp(d: DataFrame) = d.select(col("clip_id").as("id"), col("sr_hz").as("sr"),
           col("n_samples").as("n"), col("f1"), col("f2"))
-        val candidates = Dedup.audioCandidatesAgainst(fp(corpus), fp(batch))
-        val pairs = candidates.as[(String, String)].collect()
+        // driver-local batch fingerprints: the union side and the probe
+        // read no checkpoint block
+        val local = fp(spark.createDataFrame(fpRows.asJava, StructType(fpCols.map(batch.schema(_)))))
+        val versions = table.readRawOpt(spark)
+        // replay guard: rows of THIS batch already in the table must not
+        // self-match — exclude them from the corpus side
+        val corpus = versions.fold(local.limit(0))(v =>
+          fp(v.filter(!col("clip_id").isin(batchIds.toSeq: _*))))
+        val pairs = Dedup.audioCandidatesAgainst(corpus, local, distinct = false)
+          .as[(String, String)].collect().distinct
         val drops = if (pairs.isEmpty) Set.empty[String] else {
-          val (fresh, stored) = pairs.flatMap(p => Seq(p._1, p._2)).distinct.partition(batchIds)
-          def payload(d: DataFrame, ids: Seq[String]) = d.filter(col("clip_id").isin(ids: _*))
-            .select(col("clip_id").as("id"), col("bytes"), col("codec"))
-          val rows =
-            if (stored.isEmpty) payload(batch, fresh)
-            else payload(existing, stored).unionByName(payload(batch, fresh))
-          Dedup.hydrateVerify(pairs.toSeq.toDF("id_a", "id_b"), rows,
-              Dedup.Rehydration.Direct, Dedup.alignedCorr, minCorr)
+          // each candidate id -> the (pair, side) slots it fills, looked up
+          // in a literal map, which also drops every other row: joining a
+          // local relation would broadcast it, one more job
+          val slots = pairs.toSeq.zipWithIndex
+            .flatMap { case ((a, b), p) => Seq(a -> Slot(p, "a"), b -> Slot(p, "b")) }
+            .groupMap(_._1)(_._2)
+          val (fresh, stored) = slots.partition { case (id, _) => batchIds(id) }
+          def tagged(d: DataFrame, slotsOf: Map[String, Seq[Slot]], lineage: Column*) =
+            d.select(Seq(inline(element_at(typedLit(slotsOf), col("clip_id"))), col("clip_id"),
+              struct(col("clip_id").as("id"), col("sr_hz").as("sr"), col("n_samples").as("n"),
+                col("f1"), col("f2"), col("bytes"), col("codec")).as("r")) ++ lineage: _*)
+          // a batch row is the only version of its id, so any lineage
+          // resolves it; constants keep the generated code the same in
+          // every batch
+          val rows = (if (stored.isEmpty) None
+            else versions.map(tagged(_, stored, col("_batch_id"), col("_part_id")))).toSeq :+
+            tagged(batch, fresh, lit(0L).as("_batch_id"), lit(0).as("_part_id"))
+          def side(s: String) = max(when(col("_side") === s, col("r"))).as(s)
+          // the one shuffle: by pair, which the per-pair resolution and the
+          // pair aggregate both take as it is
+          table.morDedup(rows.reduce(_ unionByName _).repartition(col("_p")), within = Seq("_p"))
+            .groupBy("_p").agg(side("a"), side("b"))
+            .filter(Dedup.audioCandidateRule(c => col(s"a.$c"), c => col(s"b.$c")))
+            .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+              col("a.bytes").as("bytes_a"), col("a.codec").as("codec_a"),
+              col("b.bytes").as("bytes_b"), col("b.codec").as("codec_b"))
+            .filter(Dedup.alignedCorr >= minCorr)
             .select("id_a", "id_b").as[(String, String)].collect()
             // FIRST-ARRIVAL-WINS drop rule: the corpus end of a pair never
             // drops; a batch-batch pair drops its larger id (id_a < id_b)

@@ -448,7 +448,7 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
     * compacted base merged with all unfolded deltas, latest-batch-wins per
     * key. */
   def read(spark: SparkSession): DataFrame =
-    readRawOpt(spark).fold(spark.emptyDataFrame)(morDedup)
+    readRawOpt(spark).fold(spark.emptyDataFrame)(morDedup(_))
 
   /** TIME-TRAVEL read (the Iceberg snapshot-read analog): the table as of
     * batch `maxBatchId` — row versions written by batches <= the cut,
@@ -471,18 +471,21 @@ final case class ClipTable(root: String, keyCols: Seq[String], numBuckets: Int =
 
   /** The newest snapshot as one un-resolved DataFrame (all surviving row
     * versions), or None for an empty table — shared by [[read]] (resolve
-    * to latest), [[lookup]] and [[readAsOf]] (cut first, then resolve). */
-  private def readRawOpt(spark: SparkSession): Option[DataFrame] = {
+    * to latest), [[lookup]] and [[readAsOf]] (cut first, then resolve), and
+    * by the dedup stage of [[ClipStreamJob.runDedupedToTable]]. */
+  private[graft] def readRawOpt(spark: SparkSession): Option[DataFrame] = {
     checkFormat()
     latest.map(scan(spark, _))
   }
 
   /** Latest-batch-wins dedupe per key (ties within a batch keep one row)
     * — the resolution shared by read(), readAsOf(), lookup() and
-    * compact(). */
-  private def morDedup(raw: DataFrame): DataFrame = {
+    * compact(). Columns `within` lead the partition key, so rows that
+    * differ in them resolve apart: a caller whose rows are already
+    * partitioned by `within` resolves them without another shuffle. */
+  private[graft] def morDedup(raw: DataFrame, within: Seq[String] = Nil): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
+      .partitionBy((within ++ keyCols).map(col): _*)
       .orderBy(col("_batch_id").desc, col("_part_id").desc)
     raw.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
