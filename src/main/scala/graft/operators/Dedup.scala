@@ -732,7 +732,7 @@ object Dedup {
     * BINARY byte column, the fattest in the engine, and the global plan
     * gate (PlanQualitySpec) forbids un-reduced binary shuffles at every
     * scale. */
-  def audioNearDupShift(clips: DataFrame, maxTrim: Int = 160, tolHz: Int = 16,
+  def audioNearDupShift(clips: DataFrame, maxTrim: Int = ShiftMaxTrim, tolHz: Int = ShiftTolHz,
                         minCorr: Double = 0.8,
                         idCol: String = "clip_id", bytesCol: String = "bytes",
                         codecCol: String = "codec", srCol: String = "sr_hz",
@@ -746,6 +746,12 @@ object Dedup {
       col(bytesCol).as("bytes"), col(codecCol).as("codec")), minCorr)
       .select("id_a", "id_b")
   }
+
+  /** The default tolerances of the shift-robust audio family: a twin may
+    * be trimmed by up to `ShiftMaxTrim` samples and its second tone may
+    * move by up to `ShiftTolHz` Hz. */
+  val ShiftMaxTrim: Int = 160
+  val ShiftTolHz: Int = 16
 
   /** The shift-robust candidate keys of a fingerprint table (id, sr, n,
     * f1, f2): duration bucket nb (width > maxTrim) and second-tone bucket
@@ -772,14 +778,13 @@ object Dedup {
     abs(x("n") - y("n")) <= maxTrim && abs(x("f2") - y("f2")) <= tolHz
 
   /** Whether two fingerprints (fields sr, n, f1, f2 of `x(c)` and `y(c)`)
-    * form a candidate pair of [[audioCandidatesAgainst]]: same (sr, f1) and
-    * [[shiftRule]]. The bucket widths exceed the tolerances, so a pair
-    * within both tolerances always shares a probed (nb, f2b) key: this is
-    * the candidate condition itself, for a caller that re-checks it on
-    * other versions of the same rows. */
-  private[graft] def audioCandidateRule(x: String => Column, y: String => Column,
-      maxTrim: Int = 160, tolHz: Int = 16): Column =
-    x("sr") === y("sr") && x("f1") === y("f1") && shiftRule(maxTrim, tolHz)(x, y)
+    * form a candidate pair of [[audioCandidatesAgainst]] at its default
+    * tolerances: same (sr, f1) and [[shiftRule]]. The bucket widths exceed
+    * the tolerances, so a pair within both tolerances always shares a
+    * probed (nb, f2b) key: this is the candidate condition itself, for a
+    * caller that re-checks it on other versions of the same rows. */
+  private[graft] def audioCandidateRule(x: String => Column, y: String => Column): Column =
+    x("sr") === y("sr") && x("f1") === y("f1") && shiftRule(ShiftMaxTrim, ShiftTolHz)(x, y)
 
   /** The verify score of every audio near-dup pair hydrated with (bytes,
     * codec): normalized cross-correlation aligned at the length
@@ -829,7 +834,7 @@ object Dedup {
     * kernel-computed, and Catalyst's inferred IsNotNull filters re-run
     * the DSP per key column (measured ~5x on c20's first draft). */
   def audioNearDupIncremental(corpusFp: DataFrame, corpusClips: DataFrame,
-      delta0: DataFrame, maxTrim: Int = 160, tolHz: Int = 16,
+      delta0: DataFrame, maxTrim: Int = ShiftMaxTrim, tolHz: Int = ShiftTolHz,
       minCorr: Double = 0.8, idCol: String = "clip_id",
       bytesCol: String = "bytes", codecCol: String = "codec",
       srCol: String = "sr_hz"): DataFrame = {
@@ -857,7 +862,8 @@ object Dedup {
     * partner is in the corpus or in the delta, while the corpus side
     * stays one row per clip. `distinct = false`: see [[deltaPairs]]. */
   private[graft] def audioCandidatesAgainst(corpusFp: DataFrame, deltaFp: DataFrame,
-      maxTrim: Int = 160, tolHz: Int = 16, distinct: Boolean = true): DataFrame = {
+      maxTrim: Int = ShiftMaxTrim, tolHz: Int = ShiftTolHz,
+      distinct: Boolean = true): DataFrame = {
     def keys(fp: DataFrame, offsets: Int*) =
       shiftBuckets(fp.select("id", "sr", "n", "f1", "f2"), maxTrim, tolHz, offsets: _*)
     deltaPairs(keys(corpusFp, 0), keys(deltaFp, 0), keys(deltaFp, -1, 0, 1),

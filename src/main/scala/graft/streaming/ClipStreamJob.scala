@@ -158,8 +158,10 @@ object ClipStreamJob {
     *     stored versions resolve latest-batch-wins per pair
     *     ([[ClipTable.morDedup]]), each pair is re-checked against the
     *     candidate rule on the RESOLVED fingerprints, and the pairs that
-    *     pass are scored by aligned correlation. Only candidate rows' bytes
-    *     are shuffled; no bytes reach the driver.
+    *     pass are scored by aligned correlation. Batch rows do not resolve:
+    *     an id that comes twice in one batch is scored in each of its rows
+    *     and drops if either passes. Only candidate rows' bytes are
+    *     shuffled; no bytes reach the driver.
     *  4. MERGE (1 job): the surviving batch rows are merged.
     *
     * The raw-version scan is exact: a stored key's resolved row is one of
@@ -175,10 +177,15 @@ object ClipStreamJob {
     *
     * Replay-safe: a replayed batch re-checks against the table, its
     * survivors re-merge idempotently (same keys, same batch id), and rows
-    * it already merged are NOT self-matched (the replay guard). */
+    * it already merged are NOT self-matched (the replay guard).
+    *
+    * The table must be keyed on `clip_id` alone: the verify resolves
+    * stored versions per `clip_id` and carries no other key column. */
   def runDedupedToTable(df: DataFrame, table: ClipTable, checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
-                        minCorr: Double = 0.8): StreamingQuery =
+                        minCorr: Double = 0.8): StreamingQuery = {
+    require(table.keyCols == Seq("clip_id"),
+      s"runDedupedToTable needs a table keyed on clip_id alone, got ${table.keyCols}")
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -221,17 +228,24 @@ object ClipStreamJob {
             d.select(Seq(inline(element_at(typedLit(slotsOf), col("clip_id"))), col("clip_id"),
               struct(col("clip_id").as("id"), col("sr_hz").as("sr"), col("n_samples").as("n"),
                 col("f1"), col("f2"), col("bytes"), col("codec")).as("r")) ++ lineage: _*)
-          // a batch row is the only version of its id, so any lineage
-          // resolves it; constants keep the generated code the same in
-          // every batch
+          // stored versions share _ver (null) and resolve latest-batch-wins;
+          // each batch row has a _ver of its own and stays, so an id that
+          // comes twice in one batch is scored in both rows and drops if
+          // either passes. The lineage expressions are the same in every
+          // batch, and so is the generated code
           val rows = (if (stored.isEmpty) None
-            else versions.map(tagged(_, stored, col("_batch_id"), col("_part_id")))).toSeq :+
-            tagged(batch, fresh, lit(0L).as("_batch_id"), lit(0).as("_part_id"))
-          def side(s: String) = max(when(col("_side") === s, col("r"))).as(s)
+            else versions.map(tagged(_, stored, col("_batch_id"), col("_part_id"),
+              lit(null).cast("long").as("_ver")))).toSeq :+
+            tagged(batch, fresh, lit(0L).as("_batch_id"), lit(0).as("_part_id"),
+              monotonically_increasing_id().as("_ver"))
+          def side(s: String) = collect_list(when(col("_side") === s, col("r"))).as(s)
           // the one shuffle: by pair, which the per-pair resolution and the
           // pair aggregate both take as it is
-          table.morDedup(rows.reduce(_ unionByName _).repartition(col("_p")), within = Seq("_p"))
+          table.morDedup(rows.reduce(_ unionByName _).repartition(col("_p")),
+              within = Seq("_p", "_ver"))
             .groupBy("_p").agg(side("a"), side("b"))
+            .select(explode(col("a")).as("a"), col("b"))
+            .select(col("a"), explode(col("b")).as("b"))
             .filter(Dedup.audioCandidateRule(c => col(s"a.$c"), c => col(s"b.$c")))
             .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
               col("a.bytes").as("bytes_a"), col("a.codec").as("codec_a"),
@@ -247,6 +261,7 @@ object ClipStreamJob {
         ()
       }
       .start()
+  }
 
   /** Run any streaming DataFrame into an exactly-once ClipTable MERGE with
     * checkpoint-resume. Returns the started query.
