@@ -51,6 +51,18 @@ import org.apache.spark.sql.SparkSession
   *    when the session's conf creates it first; `StopResumeSpec` checks
   *    the class, the modes and the overwrite on the test session.
   *  - AQE on: runtime coalescing/skew-join handling.
+  *  - Artifact isolation off: generated classes are compiled once per
+  *    JVM, not once per streaming query. `CodeGenerator`'s class cache is
+  *    keyed by (class loader, code). Each streaming query runs on a cloned
+  *    session with its own UUID, and with isolation on (Spark's default)
+  *    its jobs carry that session's `JobArtifactState`, so the executor
+  *    builds a separate `ExecutorClassLoader` for every query. Every new
+  *    query then misses the cache and Janino recompiles each class
+  *    (25-33 classes, 320-610 ms of compile per query on a 4-vCPU host).
+  *    The engine never adds per-session artifacts (`addArtifact`,
+  *    `addJar`), so isolation protects nothing here. A Spark Connect
+  *    deployment should set `spark.sql.artifact.isolation.enabled` back
+  *    on the returned builder.
   *
   * Durability of the FileSystem-based manager against the default, on a
   * local filesystem:
@@ -92,6 +104,9 @@ object GraftSession {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      // one executor class loader for every session, so a new streaming
+      // query reuses the classes an earlier one compiled (see above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Local CPU count for the tools: `SPARK_GRAFT_CPUS`, else the JVM's
     * available processors. */

@@ -3,7 +3,9 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -18,11 +20,21 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * `rows_dropped_by_watermark` (`numRowsDroppedByWatermark`),
   * `state_load_ms` (RocksDB's `rocksdbLoadLatencyMs`), `state_update_ms`
   * (`allUpdatesTimeMs`) and `state_removal_ms` (`allRemovalsTimeMs`).
+  * The code generation fields are JVM-wide, not per query: the classes
+  * Janino compiled (`codegen_compiles`, the count of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`) and their compile time
+  * (`codegen_compile_ms`, from `CodeGenerator.compileTime`) since this
+  * listener's previous line (its creation, for the first line). Progress
+  * events reach the listener asynchronously, so compiles of anything else
+  * running in the JVM, or of the next trigger, can land on a line.
   * Readable back as a DataFrame via [[MetricsListener.read]].
   */
 final class MetricsListener(path: String, promPath: Option[String] = None)
     extends StreamingQueryListener {
   Files.createDirectories(Paths.get(path).getParent)
+
+  private var compilesSeen = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private var compileNanosSeen = CodeGenerator.compileTime
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
 
@@ -60,6 +72,12 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
     val stateLoadMs = custom("rocksdbLoadLatencyMs")
     val stateUpdateMs = p.stateOperators.map(_.allUpdatesTimeMs).sum
     val stateRemovalMs = p.stateOperators.map(_.allRemovalsTimeMs).sum
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNanos = CodeGenerator.compileTime
+    val codegenCompiles = compiles - compilesSeen
+    val codegenCompileMs = (compileNanos - compileNanosSeen) / 1000000L
+    compilesSeen = compiles
+    compileNanosSeen = compileNanos
     val watermark = Option(p.eventTime.get("watermark")).getOrElse("")
     val eventMax = Option(p.eventTime.get("max")).getOrElse("")
     val durations = {
@@ -86,7 +104,8 @@ final class MetricsListener(path: String, promPath: Option[String] = None)
         s""""state_changelog_commit_ms":$changelogCommitMs,""" +
         s""""rows_dropped_by_watermark":$droppedByWatermark,""" +
         s""""state_load_ms":$stateLoadMs,"state_update_ms":$stateUpdateMs,""" +
-        s""""state_removal_ms":$stateRemovalMs}""" + "\n"
+        s""""state_removal_ms":$stateRemovalMs,""" +
+        s""""codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs}""" + "\n"
     Files.write(Paths.get(path), line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     promPath.foreach(writeProm(_, p, stateRows, stateBytes, watermark, eventMax))

@@ -28,41 +28,36 @@ class MetricsExporterSpec extends AnyFunSuite {
     val prom = dir.resolve("metrics.prom").toString
     val listener = MetricsListener.attachWithExporter(spark, jsonl, prom)
     try {
-      val in = MemoryStream[(String, Timestamp)]
-      val agg = in.toDF().toDF("k", "event_time")
-        .withWatermark("event_time", "10 seconds")
-        .groupBy(window(col("event_time"), "10 seconds"), col("k"))
-        .agg(count(lit(1)).as("n"))
-      val q = agg.writeStream.format("memory").queryName("mx")
-        .outputMode("update").start()
       // three on-time batches, then one whose first row is behind the
       // watermark (61 s max event time - 10 s) and is dropped
       val batches = (0 until 3).map(b => Seq(("a", ts(b * 30)), ("b", ts(b * 30 + 1)))) :+
         Seq(("a", ts(0)), ("c", ts(90)))
       val nBatches = batches.length
-      try {
-        batches.foreach { rows =>
-          in.addData(rows: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      val progress = q.recentProgress
+      // the same query twice over the same batches: the second one reuses
+      // every class the first compiled
+      def run(name: String) = {
+        val in = MemoryStream[(String, Timestamp)]
+        val agg = in.toDF().toDF("k", "event_time")
+          .withWatermark("event_time", "10 seconds")
+          .groupBy(window(col("event_time"), "10 seconds"), col("k"))
+          .agg(count(lit(1)).as("n"))
+        val q = agg.writeStream.format("memory").queryName(name)
+          .outputMode("update").start()
+        try {
+          batches.foreach { rows =>
+            in.addData(rows: _*)
+            q.processAllAvailable()
+          }
+        } finally q.stop()
+        q
+      }
+      val queries = Seq(run("mx"), run("mx2"))
+      val nLines = queries.map(_.recentProgress.length).sum
       // spark fires listener events asynchronously; drain
       spark.streams.resetTerminated()
       var waited = 0
       def lines() = Files.readAllLines(Paths.get(jsonl))
-      while (lines().size < progress.length && waited < 100) { Thread.sleep(100); waited += 1 }
-
-      val m = MetricsListener.read(spark, jsonl)
-        .filter(col("num_input_rows") > 0)
-        .select("batch_id", "num_input_rows", "state_rows", "watermark")
-        .collect()
-      // one line per data-carrying micro-batch, rows/state/watermark set
-      assert(m.length == nBatches, s"expected $nBatches batch lines, got ${m.length}")
-      assert(m.map(_.getLong(0)).distinct.length == nBatches)
-      assert(m.forall(_.getLong(1) == 2L))
-      assert(m.forall(_.getLong(2) > 0L), "state size missing")
-      assert(m.exists(_.getString(3).nonEmpty), "watermark missing")
+      while (lines().size < nLines && waited < 100) { Thread.sleep(100); waited += 1 }
 
       // state ledger fields: each is the progress event's figure summed
       // over the state operators, and only the late batch drops a row
@@ -77,20 +72,45 @@ class MetricsExporterSpec extends AnyFunSuite {
           ops.map(_.allUpdatesTimeMs).sum,
           ops.map(_.allRemovalsTimeMs).sum)
       }
-      val ledger = MetricsListener.read(spark, jsonl)
-        .filter(col("num_input_rows") > 0)
-        .select("batch_id", "state_commit_ms", "state_changelog_commit_ms",
-          "rows_dropped_by_watermark", "state_load_ms", "state_update_ms",
-          "state_removal_ms")
-        .collect().map(r => r.getLong(0) -> (1 to 6).map(r.getLong))
-        .toMap
-      val dataProgress = progress.filter(_.numInputRows > 0)
-      assert(ledger == dataProgress.map(p => p.batchId -> ledgerOf(p)).toMap)
-      for (metric <- Seq("rocksdbChangeLogWriterCommitLatencyMs", "rocksdbLoadLatencyMs"))
-        assert(dataProgress.forall(p =>
-          p.stateOperators.exists(_.customMetrics.containsKey(metric))), s"$metric absent")
-      assert(ledger.toSeq.sortBy(_._1).map(_._2(2)) == Seq(0L, 0L, 0L, 1L),
-        s"rows dropped by watermark: $ledger")
+      for (q <- queries) {
+        val ofQuery = MetricsListener.read(spark, jsonl)
+          .filter(col("query_id") === q.id.toString && col("num_input_rows") > 0)
+        val m = ofQuery
+          .select("batch_id", "num_input_rows", "state_rows", "watermark")
+          .collect()
+        // one line per data-carrying micro-batch, rows/state/watermark set
+        assert(m.length == nBatches, s"expected $nBatches batch lines, got ${m.length}")
+        assert(m.map(_.getLong(0)).distinct.length == nBatches)
+        assert(m.forall(_.getLong(1) == 2L))
+        assert(m.forall(_.getLong(2) > 0L), "state size missing")
+        assert(m.exists(_.getString(3).nonEmpty), "watermark missing")
+
+        val ledger = ofQuery
+          .select("batch_id", "state_commit_ms", "state_changelog_commit_ms",
+            "rows_dropped_by_watermark", "state_load_ms", "state_update_ms",
+            "state_removal_ms")
+          .collect().map(r => r.getLong(0) -> (1 to 6).map(r.getLong))
+          .toMap
+        val dataProgress = q.recentProgress.filter(_.numInputRows > 0)
+        assert(ledger == dataProgress.map(p => p.batchId -> ledgerOf(p)).toMap)
+        for (metric <- Seq("rocksdbChangeLogWriterCommitLatencyMs", "rocksdbLoadLatencyMs"))
+          assert(dataProgress.forall(p =>
+            p.stateOperators.exists(_.customMetrics.containsKey(metric))), s"$metric absent")
+        assert(ledger.toSeq.sortBy(_._1).map(_._2(2)) == Seq(0L, 0L, 0L, 1L),
+          s"rows dropped by watermark: $ledger")
+      }
+
+      // code generation fields: JVM-wide deltas, never negative; a steady
+      // trigger of the second query compiles no class
+      val codegen = MetricsListener.read(spark, jsonl)
+        .select("query_id", "batch_id", "num_input_rows", "codegen_compiles",
+          "codegen_compile_ms")
+        .collect()
+      assert(codegen.forall(r => r.getLong(3) >= 0L && r.getLong(4) >= 0L), codegen.toSeq)
+      val steady = codegen.filter(r => r.getString(0) == queries(1).id.toString &&
+        r.getLong(1) >= 1L && r.getLong(2) > 0L)
+      assert(steady.nonEmpty && steady.exists(_.getLong(3) == 0L),
+        s"steady triggers of the second query: ${steady.toSeq}")
 
       // the earlier keys stay as they were, in the same order, and each
       // later group of ledger fields follows them
@@ -98,7 +118,8 @@ class MetricsExporterSpec extends AnyFunSuite {
         "input_rows_per_sec", "processed_rows_per_sec", "state_rows",
         "state_bytes", "durations_ms", "watermark", "event_time_max",
         "state_commit_ms", "state_changelog_commit_ms", "rows_dropped_by_watermark")
-      val ledgerKeys = Seq("state_load_ms", "state_update_ms", "state_removal_ms")
+      val ledgerKeys = Seq("state_load_ms", "state_update_ms", "state_removal_ms",
+        "codegen_compiles", "codegen_compile_ms")
       val topKeys = """(?:^\{|,)"([a-z_]+)":""".r
       Files.readAllLines(Paths.get(jsonl)).forEach { line =>
         val keys = topKeys.findAllMatchIn(line.replaceAll("\\{[^{}]*\\}", "{}"))
@@ -120,8 +141,10 @@ class MetricsExporterSpec extends AnyFunSuite {
       }
       // the snapshot is the LAST trigger's state — which may be a
       // zero-row watermark-advance batch after the final data batch, so
-      // compare against the max batch id across ALL JSONL lines
+      // compare against the max batch id across ALL the second query's
+      // JSONL lines
       val allBatches = MetricsListener.read(spark, jsonl)
+        .filter(col("query_id") === queries(1).id.toString)
         .select("batch_id").as[Long].collect()
       val lastLine = text.linesIterator
         .find(_.startsWith("graft_batch_id{")).get
