@@ -63,6 +63,22 @@ import org.apache.spark.sql.SparkSession
   *    `addJar`), so isolation protects nothing here. A Spark Connect
   *    deployment should set `spark.sql.artifact.isolation.enabled` back
   *    on the returned builder.
+  *  - `parallelPartitionDiscovery.threshold=1024`: a file list of up to
+  *    1024 paths is listed on the driver, not by a Spark job. On every
+  *    trigger `FileStreamSource.getBatch` builds a new file index over the
+  *    files the source has just chosen, on the source's own session, so
+  *    above Spark's default of 32 paths each data trigger ran a "Listing
+  *    leaf files" job over files it had already listed. At 34 files per
+  *    trigger on a 4-vCPU host that put `getBatch` at 307 ms; listed on the
+  *    driver it takes 23 ms (traced drain_windows, seed 9601), and the
+  *    drain's clips/s went up 1.47x together with the no-data skip of
+  *    `ClipStreamJob.runToTable`. 1024 is above the 128 files per trigger
+  *    of the frozen Bench's sustained phase and above the 384-file sf0.1
+  *    clip glob, so batch reads of the clip table list on the driver too
+  *    (their plans are unchanged). An HDFS or
+  *    object-store deployment, where each listing is a round trip, should
+  *    set `spark.sql.sources.parallelPartitionDiscovery.threshold` back to
+  *    32 on the returned builder.
   *
   * Durability of the FileSystem-based manager against the default, on a
   * local filesystem:
@@ -107,6 +123,8 @@ object GraftSession {
       // one executor class loader for every session, so a new streaming
       // query reuses the classes an earlier one compiled (see above)
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // list a trigger's files on the driver, not in a job (see above)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
 
   /** Local CPU count for the tools: `SPARK_GRAFT_CPUS`, else the JVM's
     * available processors. */
